@@ -111,19 +111,9 @@ def extract_and_score(spark: SparkSession, transcripts: DataFrame,
                                           threshold=threshold)
     if not cross_turn_k:
         return fused
-    # r5: the cross-turn window runs as ONE fused streaming
-    # mapInPandas (pairing + scoring + exact linking in the same
-    # Python worker — was three chained stages with token_ids paying
-    # an extra Arrow round-trip, then two broadcast joins), unioned
-    # with the shuffle-free intra pass. Measured on local[32]: this
-    # union shape beats the single-scan alternative
-    # (score.extract_and_score_conv_fused — one scan, one tokenize,
-    # but ALL Python work serialized into the post-shuffle stage) by
-    # ~25% because the two passes are independent stages Spark
-    # overlaps; prefer conv_fused only when the SCAN dominates (very
-    # wide rows / remote object store), not when extraction CPU does.
-    # All three surfaces are equivalence-pinned in
-    # tests/test_extract_score.py.
+    # two independent stages Spark overlaps: measured ~25% faster on
+    # local[32] than one scan that tokenizes each turn once but puts
+    # ALL extraction CPU after the conv-keyed shuffle.
     # clustered_input: the caller vouches the storage layout contains
     # each conversation in one scan partition (conv-bucketed write /
     # Iceberg bucket(conv_id)); the cross-turn pass then runs with NO

@@ -30,7 +30,7 @@ partition layouts, unlike ``monotonically_increasing_id``.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -128,12 +128,37 @@ def node_features(norms: DataFrame, feature: str = "char",
     return d.withColumn("node", F.xxhash64("norm"))
 
 
+def _feature_chunks(feats: list, max_feats: int):
+    """Row chunks for the vectorized reduceat passes (minhash,
+    simhash): yields (row, end, flat, offsets, lens) where rows
+    [row, end) hold at most ``max_feats`` features in total (a single
+    larger row gets a chunk of its own), ``flat`` is their
+    concatenated features, ``offsets`` each row's start in ``flat``
+    and ``lens`` each row's feature count. Bounds the per-chunk
+    (features × lanes) temp matrix."""
+    lens = np.fromiter((len(f) for f in feats), dtype=np.int64,
+                       count=len(feats))
+    row = 0
+    while row < len(feats):
+        end = row
+        total = 0
+        while end < len(feats) and (total == 0
+                                    or total + lens[end] <= max_feats):
+            total += lens[end]
+            end += 1
+        offsets = np.zeros(end - row, dtype=np.int64)
+        np.cumsum(lens[row:end - 1] if end - row > 1 else [],
+                  out=offsets[1:])
+        yield row, end, np.concatenate(feats[row:end]), offsets, \
+            lens[row:end]
+        row = end
+
+
 def _minhash_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """Vectorized minhash over pre-hashed feature arrays: one
     (total_features, H) universal-hash matrix per chunk, per-row min
-    via ``np.minimum.reduceat`` — no per-row Python, no string ops
-    (the round-1 per-norm crc32 loop was the B-side of the dedup
-    hotspot). Chunked so the temp matrix stays ≤ ~64 MB."""
+    via ``np.minimum.reduceat`` — no per-row Python, no string ops.
+    Chunked so the temp matrix stays ≤ ~64 MB."""
     a, b = _perm_coeffs()
     au = a.astype(np.uint64)
     bu = b.astype(np.uint64)
@@ -146,25 +171,12 @@ def _minhash_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             continue
         feats = [np.asarray(f, dtype=np.int64).view(np.uint64)
                  for f in pdf["f"]]
-        lens = np.fromiter((len(f) for f in feats), dtype=np.int64,
-                           count=len(feats))
         sigs = np.empty((len(feats), spec.MINHASH_H), dtype=np.int64)
-        row = 0
-        while row < len(feats):
-            end = row
-            total = 0
-            while end < len(feats) and (total == 0
-                                        or total + lens[end] <= max_feats):
-                total += lens[end]
-                end += 1
-            flat = np.concatenate(feats[row:end])
+        for row, end, flat, offsets, _ in _feature_chunks(feats,
+                                                          max_feats):
             h = (flat[:, None] * au[None, :] + bu[None, :]) % m64
-            offsets = np.zeros(end - row, dtype=np.int64)
-            np.cumsum(lens[row:end - 1] if end - row > 1 else [],
-                      out=offsets[1:])
             sigs[row:end] = np.minimum.reduceat(
                 h, offsets, axis=0).astype(np.int64)
-            row = end
         yield pd.DataFrame({"node": pdf["node"],
                             "sig": list(sigs)})
 
@@ -341,10 +353,8 @@ def simhash64(docs: DataFrame, text_col: str = "text",
         raise ValueError(f"unknown word_hash {word_hash!r}")
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # r6: one vectorized pass per chunk instead of a per-row loop
-        # (same 0/1 integer sums via add.reduceat — bit-identical
-        # signatures, the per-row python/numpy dispatch was ~60% of
-        # the stage); chunked so the bit matrix stays ~32 MB.
+        # one vectorized pass per chunk (0/1 integer sums via
+        # add.reduceat); chunked so the bit matrix stays ~32 MB
         shifts = np.arange(n_bits, dtype=np.uint64)
         max_feats = 64_000
         for pdf in it:
@@ -354,30 +364,16 @@ def simhash64(docs: DataFrame, text_col: str = "text",
                 continue
             feats = [np.asarray(hs, dtype=np.int64).view(np.uint64)
                      for hs in pdf["hashes"]]
-            lens = np.fromiter((len(f) for f in feats), dtype=np.int64,
-                               count=len(feats))
             out = np.empty(len(feats), dtype=np.int64)
-            row = 0
-            while row < len(feats):
-                end = row
-                total = 0
-                while end < len(feats) and (total == 0
-                                            or total + lens[end]
-                                            <= max_feats):
-                    total += lens[end]
-                    end += 1
-                flat = np.concatenate(feats[row:end])
+            for row, end, flat, offsets, lens in _feature_chunks(
+                    feats, max_feats):
                 bits = (flat[:, None] >> shifts) & np.uint64(1)
-                offsets = np.zeros(end - row, dtype=np.int64)
-                np.cumsum(lens[row:end - 1] if end - row > 1 else [],
-                          out=offsets[1:])
                 sums = np.add.reduceat(bits, offsets, axis=0) \
                     .astype(np.int64)
                 # signed: uint64 would wrap negative vote sums
-                votes = sums * 2 - lens[row:end, None]
+                votes = sums * 2 - lens[:, None]
                 out[row:end] = ((votes > 0).astype(np.uint64)
                                 << shifts).sum(axis=1).astype(np.int64)
-                row = end
             yield pd.DataFrame({id_col: pdf[id_col], "simhash": out})
 
     return (docs.select(id_col, hashes.alias("hashes"))
@@ -447,19 +443,17 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
     rounds in practice. localCheckpoint per round keeps the plan flat
     (SURVEY.md §4).
 
-    r6 round shape (the kg/stages/graph.py discipline): the
-    symmetrized edge multiset is grouped ONCE into per-src adjacency
-    sets with a self-loop folded in (collect_set dedups, replacing
-    the former dropDuplicates shuffle; the self-loop makes the
+    Round shape (the kg/stages/graph.py discipline): the symmetrized
+    edge multiset is grouped ONCE into per-src adjacency sets with a
+    self-loop folded in (collect_set dedups; the self-loop makes the
     message aggregate itself compute min(own ∪ neighbors)), so each
-    round is ONE join of two O(nodes) tables + ONE aggregate —
-    the former shape re-shuffled the O(edges) list every round and
-    then paid a second join per round just to detect convergence.
-    Convergence is now read off an exact decimal(38) aggregate of the
-    checkpointed labels instead: labels are monotonically
-    non-increasing (every node's message set includes itself), so
-    (sum, count) unchanged across a round ⟺ no label changed — a
-    columnar scan of cached blocks, no join, no extra lineage."""
+    round is ONE join of two O(nodes) tables + ONE aggregate, and the
+    O(edges) list is never re-shuffled. Convergence is read off an
+    exact decimal(38) aggregate of the checkpointed labels: labels are
+    monotonically non-increasing (every node's message set includes
+    itself), so (sum, count) unchanged across a round ⟺ no label
+    changed — a columnar scan of cached blocks, no join, no extra
+    lineage."""
     self_e = nodes.select(F.col("node").alias("src"),
                           F.col("node").alias("dst"))
     adj = (edges.select("src", "dst")
@@ -498,22 +492,62 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
         # Silent truncation would return WRONG labels (stale
         # components) and surface only as a downstream mismatch.
         # Converged-early costs nothing, so the default is generous
-        # (64 ≥ any plausible entity-cluster diameter); a graph that
-        # genuinely exceeds it should switch to the O(log²)-round
-        # star variant, not get a quietly wrong answer.
+        # (64 ≥ any plausible entity-cluster diameter).
         raise RuntimeError(
             f"connected_components: no fixpoint after {max_iter} "
-            "rounds (graph diameter exceeds max_iter); raise "
-            "max_iter or use connected_components_star")
+            "rounds (graph diameter exceeds max_iter); raise max_iter")
     return labels
+
+
+def _driver_probe(nodes: DataFrame, edges: DataFrame,
+                  max_nodes: int, max_edges: int
+                  ) -> tuple[list, list] | None:
+    """The driver fast-path gate: collect at most ``max_nodes`` + 1
+    rows of ``nodes`` (projected by the caller) and, only if they fit,
+    at most ``max_edges`` + 1 (src, dst) rows of ``edges``. Returns
+    ``(node_rows, edge_rows)`` when both fit under their bound, else
+    None — the caller then runs its distributed branch.
+    ``max_nodes`` ≤ 0 skips both probes (no Spark job at all)."""
+    if max_nodes <= 0:
+        return None
+    node_rows = nodes.limit(max_nodes + 1).collect()
+    if len(node_rows) > max_nodes:
+        return None
+    edge_rows = edges.select("src", "dst").limit(max_edges + 1).collect()
+    if len(edge_rows) > max_edges:
+        return None
+    return node_rows, edge_rows
+
+
+def _min_root_components(ids: Iterable[int],
+                         edges: Iterable[tuple[int, int]]
+                         ) -> dict[int, int]:
+    """Driver-side C3: union-find (path halving, the smaller root
+    wins) → {node: component = min member id} for every distinct id
+    in ``ids``, in first-seen order. ``edges`` yields (src, dst)
+    pairs; an edge with an endpoint outside ``ids`` is skipped."""
+    parent = {n: n for n in ids}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for s, d in edges:
+        if s not in parent or d not in parent:
+            continue
+        a, b = find(s), find(d)
+        if a != b:
+            parent[max(a, b)] = min(a, b)
+    return {n: find(n) for n in list(parent)}
 
 
 def components_auto(nodes: DataFrame, edges: DataFrame,
                     driver_max_nodes: int = None,
                     driver_max_edges: int = None) -> DataFrame:
     """Same contract as :func:`connected_components` — (node) +
-    (src, dst) → (node, component = min member id) — but with the
-    canonicalize_norms fast-path discipline made generic: when BOTH
+    (src, dst) → (node, component = min member id) — but when BOTH
     probes fit (node count ≤ driver_max_nodes, edge count ≤
     driver_max_edges — the edge probe matters, a dense graph can emit
     orders more edges than nodes), run a driver union-find instead of
@@ -536,120 +570,24 @@ def components_auto(nodes: DataFrame, edges: DataFrame,
         driver_max_nodes = DRIVER_CANON_MAX_NODES
     if driver_max_edges is None:
         driver_max_edges = DRIVER_CANON_MAX_EDGES
-    if driver_max_nodes > 0:
-        node_rows = (nodes.select("node")
-                     .limit(driver_max_nodes + 1).collect())
-        if len(node_rows) <= driver_max_nodes:
-            edge_rows = (edges.select("src", "dst")
-                         .limit(driver_max_edges + 1).collect())
-            if len(edge_rows) <= driver_max_edges:
-                # dedup while preserving order — the distributed
-                # groupBy dedups too, so duplicate node rows must not
-                # change the output shape between branches
-                ids = list(dict.fromkeys(r["node"] for r in node_rows))
-                parent = {n: n for n in ids}
-
-                def find(x):
-                    while parent[x] != x:
-                        parent[x] = parent[parent[x]]
-                        x = parent[x]
-                    return x
-
-                for r in edge_rows:
-                    if r["src"] not in parent or r["dst"] not in parent:
-                        continue
-                    a, b = find(r["src"]), find(r["dst"])
-                    if a != b:
-                        # keep the minimum as the root → component id
-                        if a < b:
-                            parent[b] = a
-                        else:
-                            parent[a] = b
-                node_field = nodes.select("node").schema.fields[0]
-                schema = StructType([
-                    node_field,
-                    StructField("component", node_field.dataType)])
-                # pandas in, so the round-trip ships via Arrow —
-                # createDataFrame(list-of-tuples) pickles row by row
-                # (~4× slower at the 100k-node probe bound)
-                return nodes.sparkSession.createDataFrame(
-                    pd.DataFrame({"node": ids,
-                                  "component": [find(n) for n in ids]}),
-                    schema)
-    return connected_components(nodes, edges)
-
-
-def connected_components_star(nodes: DataFrame, edges: DataFrame,
-                              max_iter: int = 20) -> DataFrame:
-    """C3 alternative: alternating large-star / small-star
-    (Kiveris et al., SoCC 2014). Same contract as
-    :func:`connected_components`; converges in O(log²) rounds even on
-    pathological long chains, where hash-to-min needs O(diameter)
-    rounds. Prefer this when cluster diameters are unknown; the
-    default hash-to-min is cheaper per round for the tiny-diameter
-    entity-variant clusters the pipeline produces.
-
-    large-star: every node u connects each STRICTLY-LARGER neighbor v
-    to min(N⁺(u) ∪ {u}); small-star: every node u connects each
-    smaller-or-equal neighbor to the minimum. Edges always point
-    high→low; fixpoint when the edge multiset stops changing (checked
-    via an order-insensitive checksum — cheaper than except on big
-    edge sets).
-    """
-    def large_star(e: DataFrame) -> DataFrame:
-        # for each u: m = min(N(u) ∪ {u}); connect every v > u to m
-        nbrs = e.select(F.col("src").alias("u"), F.col("dst").alias("v")) \
-            .union(e.select(F.col("dst").alias("u"),
-                            F.col("src").alias("v")))
-        mins = (nbrs.groupBy("u")
-                .agg(F.least(F.min("v"), F.first("u")).alias("m")))
-        return (nbrs.join(mins, "u")
-                .where(F.col("v") > F.col("u"))
-                .select(F.col("v").alias("src"), F.col("m").alias("dst"))
-                .where(F.col("src") != F.col("dst"))
-                .dropDuplicates(["src", "dst"]))
-
-    def small_star(e: DataFrame) -> DataFrame:
-        # edges arrive oriented src > dst; for each center u = src:
-        # m = min(N⁻(u) ∪ {u}) = min(dst); connect u and every other
-        # smaller neighbor to m
-        nbrs = e.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        mins = nbrs.groupBy("u").agg(F.min("v").alias("m"))
-        via_u = mins.select(F.col("u").alias("src"),
-                            F.col("m").alias("dst"))
-        via_v = (nbrs.join(mins, "u")
-                 .where(F.col("v") != F.col("m"))
-                 .select(F.col("v").alias("src"), F.col("m").alias("dst")))
-        return (via_u.union(via_v)
-                .where(F.col("src") != F.col("dst"))
-                .dropDuplicates(["src", "dst"]))
-
-    e = (edges.select(F.greatest("src", "dst").alias("src"),
-                      F.least("src", "dst").alias("dst"))
-         .where(F.col("src") != F.col("dst"))
-         .dropDuplicates(["src", "dst"]).localCheckpoint())
-    prev = None
-    for _ in range(max_iter):
-        e = large_star(e).localCheckpoint()
-        e = small_star(e).localCheckpoint()
-        chk = e.select(F.sum(F.xxhash64("src", "dst")
-                             .cast("decimal(38,0)")).alias("c"),
-                       F.count("*").alias("n")).collect()[0]
-        cur = (str(chk["c"]), int(chk["n"]))
-        if cur == prev:
-            break
-        prev = cur
-    else:
-        raise RuntimeError(
-            f"connected_components_star: edge multiset not stable "
-            f"after {max_iter} large/small-star rounds — wrong "
-            "labels would follow; raise max_iter")
-    # at fixpoint every node points directly at its component minimum
-    labels = e.select(F.col("src").alias("node"),
-                      F.col("dst").alias("component"))
-    return (nodes.join(labels, "node", "left")
-            .select("node", F.coalesce("component", "node")
-                    .alias("component")))
+    probed = _driver_probe(nodes.select("node"), edges,
+                           driver_max_nodes, driver_max_edges)
+    if probed is None:
+        return connected_components(nodes, edges)
+    node_rows, edge_rows = probed
+    # distinct ids — the distributed groupBy dedups too, so duplicate
+    # node rows must not change the output shape between branches
+    comp = _min_root_components((r["node"] for r in node_rows), edge_rows)
+    node_field = nodes.select("node").schema.fields[0]
+    schema = StructType([
+        node_field, StructField("component", node_field.dataType)])
+    # pandas in, so the round-trip ships via Arrow —
+    # createDataFrame(list-of-tuples) pickles row by row
+    # (~4× slower at the 100k-node probe bound)
+    return nodes.sparkSession.createDataFrame(
+        pd.DataFrame({"node": list(comp),
+                      "component": list(comp.values())}),
+        schema)
 
 
 #: node count under which C3+C4 run on the driver. The iterative CC
@@ -680,35 +618,29 @@ def canonicalize_norms(norms: DataFrame, dict_df: DataFrame,
 
     C1/C2 (minhash, banding, verify) are always distributed — they
     scale with the data. C3/C4 (components + naming) run on the
-    driver when the node set is small (see DRIVER_CANON_MAX_NODES),
-    else through the distributed join/aggregate path below.
+    driver when both probes fit (see DRIVER_CANON_MAX_NODES /
+    DRIVER_CANON_MAX_EDGES), else through the distributed
+    join/aggregate path below.
     """
     feats = node_features(norms).persist()
-    # signatures feed only the banding (r6: they carry node, not
-    # norm — see minhash_signatures); the node → norm map below
-    # reads off the persisted feature table instead
+    # signatures carry node, not norm — the node → norm map below
+    # reads off the persisted feature table
     banded = lsh_bands(minhash_signatures(feats)).persist()
     edges = verify_pairs(candidate_pairs(banded), feats)
 
-    if driver_max_nodes > 0:
-        probe = (feats.select("norm", "node")
-                 .limit(driver_max_nodes + 1).collect())
-        if len(probe) <= driver_max_nodes:
-            # probe the EDGE count too: node count alone doesn't bound
-            # it — a dense near-dup graph can emit ~10⁸ verified pairs
-            # from 100k nodes and OOM the driver on collect()
-            edge_rows = (edges.select("src", "dst")
-                         .limit(driver_max_edges + 1).collect())
-            if len(edge_rows) <= driver_max_edges:
-                spark = norms.sparkSession
-                dict_rows = dict_df.select("norm", "entity").collect()
-                mapping = _name_clusters_driver(
-                    [(r["norm"], r["node"]) for r in probe],
-                    [(r["src"], r["dst"]) for r in edge_rows],
-                    {r["norm"]: r["entity"] for r in dict_rows})
-                return spark.createDataFrame(
-                    pd.DataFrame(mapping, columns=["norm", "entity"]),
-                    "norm string, entity string")
+    probed = _driver_probe(feats.select("norm", "node"), edges,
+                           driver_max_nodes, driver_max_edges)
+    if probed is not None:
+        node_rows, edge_rows = probed
+        comp = _min_root_components((r["node"] for r in node_rows),
+                                    edge_rows)
+        dict_rows = dict_df.select("norm", "entity").collect()
+        mapping = _name_clusters_driver(
+            [(r["norm"], comp[r["node"]]) for r in node_rows],
+            {r["norm"]: r["entity"] for r in dict_rows})
+        return norms.sparkSession.createDataFrame(
+            pd.DataFrame(mapping, columns=["norm", "entity"]),
+            "norm string, entity string")
 
     comps = connected_components(feats.select("node"), edges)
 
@@ -732,37 +664,21 @@ def canonicalize_norms(norms: DataFrame, dict_df: DataFrame,
             .select("norm", "entity"))
 
 
-def _name_clusters_driver(nodes: list[tuple[str, int]],
-                          edges: list[tuple[int, int]],
+def _name_clusters_driver(members: list[tuple[str, int]],
                           dictionary: dict[str, str]) -> list[tuple]:
-    """Driver-side C3+C4: union-find over the collected edge set, then
-    the same naming rule as the distributed branch — own dict hit
-    first, else the dict entity of the cluster's lexicographically-
-    first LINKED norm, else the cluster's lexicographically-first
-    norm. Output order is pinned for determinism."""
-    parent: dict[int, int] = {}
-
-    def find(x: int) -> int:
-        r = x
-        while parent.get(r, r) != r:
-            r = parent[r]
-        while parent.get(x, x) != x:
-            parent[x], x = r, parent[x]
-        return r
-
-    for s, d in edges:
-        rs, rd = find(s), find(d)
-        if rs != rd:
-            parent[max(rs, rd)] = min(rs, rd)
-
+    """Driver-side C4 over (norm, component) pairs: the same naming
+    rule as the distributed branch — own dict hit first, else the dict
+    entity of the cluster's lexicographically-first LINKED norm, else
+    the cluster's lexicographically-first norm. Output order is pinned
+    for determinism."""
     by_comp: dict[int, list[str]] = {}
-    for norm, node in nodes:
-        by_comp.setdefault(find(node), []).append(norm)
+    for norm, comp in members:
+        by_comp.setdefault(comp, []).append(norm)
     out = []
-    for comp, members in by_comp.items():
-        linked = sorted(m for m in members if m in dictionary)
-        fallback = dictionary[linked[0]] if linked else min(members)
-        for m in members:
+    for names in by_comp.values():
+        linked = sorted(m for m in names if m in dictionary)
+        fallback = dictionary[linked[0]] if linked else min(names)
+        for m in names:
             out.append((m, dictionary.get(m, fallback)))
     out.sort()
     return out

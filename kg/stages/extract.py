@@ -13,6 +13,7 @@ the same cost class as any tokenizer.
 from __future__ import annotations
 
 from collections.abc import Iterator
+from operator import itemgetter
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -20,29 +21,47 @@ from pyspark.sql import DataFrame
 from kg import schemas
 
 
-def _extract_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+#: mention-pair payload: the MENTION_PAIRS columns plus the gazetteer
+#: canonicals (consumed only by the fused scorers — extract_instances
+#: and cross_turn_instances slice them off so their schema stays
+#: MENTION_PAIRS)
+XT_PAIR_COLS = ["conv_id", "turn_idx", "head_surface", "tail_surface",
+                "head_norm", "tail_norm", "head_mtype", "tail_mtype",
+                "token_ids", "head_pos", "tail_pos",
+                "head_canonical", "tail_canonical"]
+
+#: the nlp.pair_instances dict fields, in XT_PAIR_COLS order
+_PAIR_FIELDS = itemgetter(*XT_PAIR_COLS[2:])
+
+
+def intra_turn_pairs(pdf: pd.DataFrame) -> list[tuple]:
+    """XT_PAIR_COLS tuples for every intra-turn mention pair of one
+    (conv_id, turn_idx, text) batch — the B1–B3 rule shared by
+    :func:`extract_instances` and the fused scorer in
+    kg/stages/score.py. Turns with fewer than two mentions emit
+    nothing."""
     # imports inside the worker: keeps the closure tiny
     from kg import nlp, spec
 
-    cols = ["conv_id", "turn_idx", "head_surface", "tail_surface",
-            "head_norm", "tail_norm", "head_mtype", "tail_mtype",
-            "token_ids", "head_pos", "tail_pos"]
+    rows: list[tuple] = []
+    for conv_id, turn_idx, text in zip(
+            pdf["conv_id"].to_numpy(), pdf["turn_idx"].to_numpy(),
+            pdf["text"].to_numpy()):
+        toks = spec.tokenize(text or "")
+        mens = nlp.find_mentions(toks)
+        if len(mens) < 2:
+            continue
+        key = (conv_id, int(turn_idx))
+        rows.extend(key + _PAIR_FIELDS(p)
+                    for p in nlp.pair_instances(toks, mens))
+    return rows
+
+
+def _extract_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    n_pair = len(XT_PAIR_COLS) - 2  # slice off the canonical slots
     for pdf in it:
-        rows: list[tuple] = []
-        for conv_id, turn_idx, text in zip(
-                pdf["conv_id"].to_numpy(), pdf["turn_idx"].to_numpy(),
-                pdf["text"].to_numpy()):
-            toks = spec.tokenize(text or "")
-            mens = nlp.find_mentions(toks)
-            if len(mens) < 2:
-                continue
-            for p in nlp.pair_instances(toks, mens):
-                rows.append((conv_id, int(turn_idx),
-                             p["head_surface"], p["tail_surface"],
-                             p["head_norm"], p["tail_norm"],
-                             p["head_mtype"], p["tail_mtype"],
-                             p["token_ids"], p["head_pos"], p["tail_pos"]))
-        yield pd.DataFrame(rows, columns=cols)
+        yield pd.DataFrame([r[:n_pair] for r in intra_turn_pairs(pdf)],
+                           columns=XT_PAIR_COLS[:n_pair])
 
 
 def extract_instances(transcripts: DataFrame) -> DataFrame:
@@ -113,16 +132,6 @@ def cross_turn_instances(transcripts: DataFrame, k: int = 1,
 
     return (cross_turn_prepared(transcripts, chunk, clustered_input)
             .mapInPandas(stream, schema=schemas.MENTION_PAIRS))
-
-
-#: cross-turn pair payload: the MENTION_PAIRS columns plus the
-#: gazetteer canonicals (consumed only by the fused scorer — the
-#: contract-surface cross_turn_instances slices them off so its
-#: schema stays MENTION_PAIRS)
-XT_PAIR_COLS = ["conv_id", "turn_idx", "head_surface", "tail_surface",
-                "head_norm", "tail_norm", "head_mtype", "tail_mtype",
-                "token_ids", "head_pos", "tail_pos",
-                "head_canonical", "tail_canonical"]
 
 
 def xt_group_pairs(conv_id, items: list, k: int,

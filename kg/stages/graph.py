@@ -50,6 +50,11 @@ def pagerank(nodes: DataFrame, edges: DataFrame, iters: int = 3,
     variant; feed a symmetrized edge list to avoid dangling mass
     loss). Returns (node, pr) unrounded.
 
+    Precondition, not checked: ``edges`` is endpoint-closed over
+    ``nodes`` (every src and dst is listed). A dst outside ``nodes``
+    gets an output row of its own, while N counts only ``nodes``; a
+    src outside ``nodes`` sends nothing until it has received rank.
+
     r6 iteration shape (guide §8 — make every repeated shuffle move a
     lightweight proxy, move the heavy multiset once): the edge list is
     pre-grouped ONCE into per-src adjacency arrays with the out-degree
@@ -117,6 +122,11 @@ def min_label_propagation(nodes: DataFrame, edges: DataFrame,
     reachability evidence; on a symmetrized graph the fixpoint is the
     connected-component minimum.
 
+    Precondition, not checked: ``edges`` is endpoint-closed over
+    ``nodes`` (every src and dst is listed). A dst outside ``nodes``
+    gets an output row of its own; a src outside ``nodes`` sends
+    nothing until it has received a label.
+
     Plan per round (same aggregateMessages lowering as
     :func:`pagerank`): adjacency ⋈ labels (two O(nodes) tables; the
     O(edges) multiset is pre-grouped once per src, WITH a self-loop
@@ -177,10 +187,7 @@ def min_label_propagation(nodes: DataFrame, edges: DataFrame,
 #: two-long struct key was 4-5× slower to probe than the packed
 #: long). Above the gate — the 100 TB regime — the shuffle semi-join
 #: on (a, c) runs exactly as before; output identical either way.
-import os as _os
-
-TRI_BCAST_MAX_EDGES = int(_os.environ.get("KG_TRI_BCAST_EDGES",
-                                          "50000000"))
+TRI_BCAST_MAX_EDGES = 50_000_000
 
 
 def triangle_counts(edges: DataFrame,
@@ -252,11 +259,13 @@ def triangle_counts(edges: DataFrame,
                      and stats["mn"] >= 0
                      and stats["mx"] < (1 << 31))
     if use_bcast:
-        close = F.broadcast(o.select(
-            (F.shiftleft(F.col("lo"), 32) + F.col("hi")).alias("_k")))
-        tri = (wedges
-               .withColumn("_k", F.shiftleft(F.col("a"), 32)
-                           + F.col("c"))
+        # pack in LONG arithmetic: on int ids shiftleft(·, 32) masks
+        # the shift count to 0 and distinct (lo, hi) keys collide
+        def pack(x, y):
+            return (F.shiftleft(F.col(x).cast("long"), 32)
+                    + F.col(y).cast("long"))
+        close = F.broadcast(o.select(pack("lo", "hi").alias("_k")))
+        tri = (wedges.withColumn("_k", pack("a", "c"))
                .join(close, "_k", "semi").drop("_k"))
     else:
         tri = wedges.join(

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
 from kg import model, model_attn, schemas, spec
+from kg.stages import extract
 
 #: relation → required (head_mtype, tail_mtype); typed precision filter
 TYPE_SIG = {rel: (st, ot) for rel, (st, ot, _) in spec.TEMPLATES.items()
@@ -135,44 +136,17 @@ def extract_and_score_fused(
     downstream linking joins then re-scanned the scored table. The
     unfused stages remain for unit tests and the driver contract.
     """
-    rels = np.array(spec.RELATIONS)
-    na_id = spec.REL_TO_ID[spec.NA_RELATION]
     out_cols = [f.name for f in FUSED_SCHEMA.fields]
 
     def batches(it):
-        from kg import nlp
         p = None
         for pdf in it:
             if p is None:
                 p = _unpack_once(weights_bc)
-            rows = []
-            for conv_id, turn_idx, text in zip(
-                    pdf["conv_id"].to_numpy(), pdf["turn_idx"].to_numpy(),
-                    pdf["text"].to_numpy()):
-                toks = spec.tokenize(text or "")
-                mens = nlp.find_mentions(toks)
-                if len(mens) < 2:
-                    continue
-                for pair in nlp.pair_instances(toks, mens):
-                    rows.append((conv_id, int(turn_idx), pair))
-            if not rows:
-                yield pd.DataFrame(columns=out_cols)
-                continue
-            lab, prob = _predict(
-                p, [r[2]["token_ids"] for r in rows],
-                [r[2]["head_pos"] for r in rows],
-                [r[2]["tail_pos"] for r in rows])
-            keep = (lab != na_id) & (prob >= threshold)
-            out = [
-                (cid, ti, pr["head_surface"], pr["tail_surface"],
-                 pr["head_norm"], pr["tail_norm"],
-                 pr["head_mtype"], pr["tail_mtype"],
-                 pr["head_pos"], pr["tail_pos"],
-                 rels[lb], np.float32(pb),
-                 pr["head_canonical"], pr["tail_canonical"])
-                for (cid, ti, pr), lb, pb, k in zip(rows, lab, prob, keep)
-                if k]
-            yield pd.DataFrame(out, columns=out_cols)
+            yield pd.DataFrame(
+                _score_pair_rows(p, extract.intra_turn_pairs(pdf),
+                                 threshold),
+                columns=out_cols)
 
     narrow = transcripts.select("conv_id", "turn_idx", "text")
     scored = narrow.mapInPandas(batches, schema=FUSED_SCHEMA)
@@ -189,65 +163,28 @@ def extract_and_score_cross_turn_fused(
     clustered_input: bool = False,
 ) -> DataFrame:
     """B1–B5 for the ±k cross-turn window in ONE streaming
-    mapInPandas (r5 — VERDICT r4 #6): pairing, PCNN scoring and exact
-    gazetteer linking fused into the same Python worker that walks the
-    conversation stream.
+    mapInPandas: pairing, PCNN scoring and exact gazetteer linking
+    fused into the same Python worker that walks the conversation
+    stream.
 
-    The r4 shape (cross_turn_instances → score_instances →
-    link_instances) paid a SECOND chained mapInPandas — two Python
-    workers per task, with token_ids (the widest column by far)
-    crossing the JVM↔Python Arrow boundary between them — plus two
-    broadcast joins. Here the pair stream never leaves Python before
-    scoring: stream_groups yields pair frames of up to its flush size
-    (20k rows — a full matmul batch, not per-conversation slivers),
-    each frame is scored with one vectorized forward pass, and the
-    gazetteer canonical IS the exact dictionary entity (same pinned
+    The pair stream never leaves Python before scoring, so token_ids
+    (the widest column by far) never crosses the JVM↔Python Arrow
+    boundary and no second chained mapInPandas or linking join runs:
+    one (conv_id, chunk) exchange → stream_groups with
+    extract.xt_group_pairs building XT_PAIR_COLS pair tuples → a
+    flush_transform that scores each ≤flush_rows buffer (20k rows — a
+    full matmul batch, not per-conversation slivers) in one vectorized
+    forward pass → FUSED_SCHEMA frames → the type-signature filter.
+    The gazetteer canonical IS the exact dictionary entity (same pinned
     inventory — the equivalence extract_and_score_fused already relies
     on, pinned in tests/test_extract_score.py for this path too).
-    Same single (conv_id, chunk) exchange as the pairing pass; zero
-    additional shuffles or joins.
     """
-    from kg.stages import extract
-
-    def close(key, items):
-        return extract.xt_group_pairs(key[0], items, k, cap_per_turn)
-
-    return _stream_score_fused(transcripts, weights_bc, close,
-                               threshold, chunk, clustered_input)
-
-
-def _score_xt_rows(p, rows: list, threshold: float) -> list:
-    """One batched forward pass over buffered XT_PAIR_COLS tuples →
-    FUSED_SCHEMA tuples (NA and sub-threshold rows dropped, gazetteer
-    canonical emitted as the exact entity). Raw tuples in, raw tuples
-    out: token_ids (the widest column) lives only in this Python list
-    and never crosses into a pandas object column — the same hot-path
-    discipline as the intra-turn fused extractor."""
-    if not rows:
-        return []
-    rels = np.array(spec.RELATIONS)
-    na_id = spec.REL_TO_ID[spec.NA_RELATION]
-    lab, prob = _predict(p, [r[8] for r in rows],
-                         [r[9] for r in rows], [r[10] for r in rows])
-    return [
-        (r[0], r[1], r[2], r[3], r[4], r[5], r[6], r[7], r[9], r[10],
-         rels[lb], np.float32(pb), r[11], r[12])
-        for r, lb, pb in zip(rows, lab, prob)
-        if lb != na_id and pb >= threshold]
-
-
-def _stream_score_fused(transcripts, weights_bc, close,
-                        threshold: float, chunk: int,
-                        clustered_input: bool = False) -> DataFrame:
-    """Shared plumbing of the streaming fused scorers: one
-    (conv_id, chunk) exchange → stream_groups with ``close`` building
-    XT_PAIR_COLS pair tuples → a flush_transform that scores each
-    ≤flush_rows buffer in one model pass → FUSED_SCHEMA frames →
-    the type-signature filter."""
-    from kg.stages import extract
     from kg.stages.grouped import stream_groups
 
     out_cols = [f.name for f in FUSED_SCHEMA.fields]
+
+    def close(key, items):
+        return extract.xt_group_pairs(key[0], items, k, cap_per_turn)
 
     def stream(it):
         state: dict = {}
@@ -255,7 +192,7 @@ def _stream_score_fused(transcripts, weights_bc, close,
         def ft(rows):
             if rows and "p" not in state:
                 state["p"] = _unpack_once(weights_bc)
-            return _score_xt_rows(state.get("p"), rows, threshold)
+            return _score_pair_rows(state.get("p"), rows, threshold)
 
         yield from stream_groups(
             it, ["conv_id", "_chunk", "turn_idx", "text"], 2,
@@ -267,77 +204,24 @@ def _stream_score_fused(transcripts, weights_bc, close,
     return apply_type_signature(scored)
 
 
-def extract_and_score_conv_fused(
-    transcripts: DataFrame,
-    weights_bc,
-    k: int = 1,
-    threshold: float = spec.REL_THRESHOLD,
-    cap_per_turn: int = 8,
-    chunk: int = 256,
-) -> DataFrame:
-    """Intra-turn AND ±k cross-turn B1–B5 in ONE pass: the corpus is
-    scanned once, each turn tokenized and mention-scanned EXACTLY
-    ONCE after the (conv_id, chunk) exchange, feeding both the
-    intra-turn pair combinatorics (nlp.pair_instances — uncapped
-    mentions, same as the intra fused path) and the cross-turn window
-    (mentions capped at ``cap_per_turn``, same as
-    cross_turn_instances); one batched forward pass scores both
-    families together. Output ≡ extract_and_score_fused ∪
-    extract_and_score_cross_turn_fused (pinned in
-    tests/test_extract_score.py).
-
-    NOT the pipeline default (r5 measurement, local[32], sf0.1
-    transcripts): the union shape is ~25% faster here because its
-    intra and cross passes are independent Spark stages that overlap,
-    while this pass serializes ALL extraction CPU into the
-    post-shuffle stage. Choose this plan when the SCAN is the scarce
-    resource — very wide transcript rows, remote object storage, or
-    a pay-per-read source — and the ~2× read amplification of the
-    union shape outweighs stage overlap; at equal CPU-bound footing,
-    keep the union (pipeline.extract_and_score documents the same
-    tradeoff from the caller side)."""
-    from kg import nlp
-
-    def close(key, items):
-        conv_id = key[0]
-        rows = []
-        turns = []
-        for turn_idx, text in items:
-            toks = spec.tokenize(text or "")
-            mens = nlp.find_mentions(toks)
-            # intra-turn pairs: full mention list, pair cap inside
-            if len(mens) >= 2:
-                for pr in nlp.pair_instances(toks, mens):
-                    rows.append((conv_id, int(turn_idx),
-                                 pr["head_surface"], pr["tail_surface"],
-                                 pr["head_norm"], pr["tail_norm"],
-                                 pr["head_mtype"], pr["tail_mtype"],
-                                 pr["token_ids"], pr["head_pos"],
-                                 pr["tail_pos"], pr["head_canonical"],
-                                 pr["tail_canonical"]))
-            if mens:
-                turns.append((int(turn_idx), toks, mens[:cap_per_turn]))
-        # cross-turn pairs over the SAME tokenization
-        for i, (ti, toks_i, mens_i) in enumerate(turns):
-            for tj, toks_j, mens_j in turns[i + 1:]:
-                if tj - ti > k:
-                    break
-                joined = toks_i + ["."] + toks_j
-                ids = spec.token_ids(joined)
-                off = len(toks_i) + 1
-                for a in mens_i:
-                    for b in mens_j:
-                        rows.append((conv_id, ti,
-                                     a["surface"], b["surface"],
-                                     a["norm"], b["norm"],
-                                     a["mtype"], b["mtype"],
-                                     ids, a["span_start"],
-                                     b["span_start"] + off,
-                                     a["canonical"], b["canonical"]))
-        return rows
-
-    return _stream_score_fused(transcripts, weights_bc, close,
-                               threshold, chunk)
+def _score_pair_rows(p, rows: list, threshold: float) -> list:
+    """One batched forward pass over XT_PAIR_COLS tuples (intra- or
+    cross-turn) → FUSED_SCHEMA tuples (NA and sub-threshold rows
+    dropped, gazetteer canonical emitted as the exact entity). Raw
+    tuples in, raw tuples out: token_ids (the widest column) lives
+    only in this Python list and never crosses into a pandas object
+    column."""
+    if not rows:
+        return []
+    rels = np.array(spec.RELATIONS)
+    na_id = spec.REL_TO_ID[spec.NA_RELATION]
+    lab, prob = _predict(p, [r[8] for r in rows],
+                         [r[9] for r in rows], [r[10] for r in rows])
+    return [
+        (r[0], r[1], r[2], r[3], r[4], r[5], r[6], r[7], r[9], r[10],
+         rels[lb], np.float32(pb), r[11], r[12])
+        for r, lb, pb in zip(rows, lab, prob)
+        if lb != na_id and pb >= threshold]
 
 
 def broadcast_weights(spark, params: dict | None = None,

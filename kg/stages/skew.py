@@ -142,10 +142,3 @@ def cpu_stage_partitions(df: DataFrame) -> int:
     conf = int(spark.conf.get("spark.sql.shuffle.partitions"))
     return max(conf, spark.sparkContext.defaultParallelism)
 
-
-def repartition_for_stage(df: DataFrame, n: int, *cols: str) -> DataFrame:
-    """E4: explicit exchange between macro-stages (e.g. by conv_id
-    before reassembly, by subj before the adjacency sink so output
-    files are clustered)."""
-    return df.repartition(n, *[F.col(c) for c in cols]) if cols \
-        else df.repartition(n)

@@ -85,44 +85,6 @@ def test_cc_property_vs_union_find(spark_prop, edges_raw):
     assert got == expect
 
 
-def test_cc_star_known_graph(spark):
-    nodes = spark.createDataFrame([(n,) for n in NODES], "node long")
-    edges = spark.createDataFrame(EDGES, schema=schemas.EDGES)
-    got = {r["node"]: r["component"]
-           for r in canon.connected_components_star(nodes, edges).collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1,
-                   10: 10, 11: 10, 12: 10, 99: 99}
-
-
-def test_cc_star_long_chain(spark):
-    """The regime large-star/small-star exists for: a chain of 40
-    (hash-to-min would need 40 rounds; star converges in O(log²))."""
-    n = 40
-    nodes = spark.createDataFrame([(i,) for i in range(n)], "node long")
-    edges = spark.createDataFrame(
-        [(i, i + 1, 1.0) for i in range(n - 1)], schema=schemas.EDGES)
-    got = {r["node"]: r["component"]
-           for r in canon.connected_components_star(
-               nodes, edges, max_iter=12).collect()}
-    assert got == {i: 0 for i in range(n)}
-
-
-@given(st.lists(
-    st.tuples(st.integers(0, 12), st.integers(0, 12)), max_size=20))
-@settings(max_examples=8, deadline=None)
-def test_cc_star_property_vs_union_find(spark_prop, edges_raw):
-    edges = [(min(a, b), max(a, b), 1.0) for a, b in edges_raw if a != b]
-    nodes = sorted({n for e in edges for n in e[:2]} | {0, 12})
-    expect = _union_find(nodes, [(s, d) for s, d, _ in edges])
-    ndf = spark_prop.createDataFrame([(n,) for n in nodes], "node long")
-    edf = spark_prop.createDataFrame(edges or [(0, 0, 1.0)],
-                                     schema=schemas.EDGES) \
-        .where("src != dst")
-    got = {r["node"]: r["component"]
-           for r in canon.connected_components_star(ndf, edf).collect()}
-    assert got == expect
-
-
 def test_lsh_blocks_variant_pairs(spark):
     """Variant surfaces of the same entity must land in a shared LSH
     bucket and survive Jaccard verification; unrelated entities must
@@ -252,6 +214,35 @@ def test_minhash_deterministic(spark):
     assert a == b
     assert len(a) == 2
     assert all(len(s) == 128 for s in a.values())
+
+
+def test_lsh_hash_draw_is_pinned(spark):
+    """The hash draw behind LSH blocking, pinned on two tiny docs: the
+    word-shingle hashes of node_features and the first three band
+    bucket hashes. A refactor that silently changes either
+    re-randomizes which pairs every near-dup consumer compares."""
+    docs = spark.createDataFrame(
+        [("the quick brown fox jumps",), ("a lazy dog naps",)],
+        "norm string")
+    feats = canon.node_features(docs, feature="word")
+    assert {r["norm"]: (r["node"], list(r["f"]))
+            for r in feats.collect()} == {
+        "the quick brown fox jumps": (
+            -5711067284744493187,
+            [-7314051219899227670, 1044920856434521801,
+             7655045852675767553]),
+        "a lazy dog naps": (
+            7301889154956114882,
+            [-5212147014743506981, -1957631117775061530])}
+    banded = canon.lsh_bands(canon.minhash_signatures(feats))
+    assert sorted((r["node"], r["band"], r["bhash"])
+                  for r in banded.where("band < 3").collect()) == [
+        (-5711067284744493187, 0, 3537194632241836254),
+        (-5711067284744493187, 1, -2295364682965291779),
+        (-5711067284744493187, 2, 4356539368976473354),
+        (7301889154956114882, 0, -5472558438430359950),
+        (7301889154956114882, 1, 318720250448410204),
+        (7301889154956114882, 2, -7763618613656695973)]
 
 
 def test_near_duplicate_edges_matches_bruteforce(spark):

@@ -204,35 +204,6 @@ def test_cross_turn_fused_equals_composed_path(spark):
     assert a == b
 
 
-def test_conv_fused_equals_intra_union_cross(spark):
-    """The combined single-pass extractor (pipeline default when
-    cross_turn_k > 0) ≡ intra-fused ∪ cross-fused, row-for-row —
-    tokenizing each turn once must change NOTHING about the output."""
-    from kg import datagen
-
-    pdf, _ = datagen.generate(n_conversations=300, seed=7)
-    t0 = spark.createDataFrame(pdf, schema=schemas.TRANSCRIPTS)
-    bc = score.broadcast_weights(spark)
-    combined = score.extract_and_score_conv_fused(
-        t0, bc, k=1, threshold=0.0)
-    union = score.extract_and_score_fused(
-        t0, bc, threshold=0.0).unionByName(
-        score.extract_and_score_cross_turn_fused(
-            t0, bc, k=1, threshold=0.0))
-
-    def key_rows(df):
-        return sorted(
-            (r["conv_id"], r["turn_idx"], r["head_norm"], r["tail_norm"],
-             r["head_pos"], r["tail_pos"], r["rel"],
-             round(float(r["score"]), 5),
-             r["head_entity"], r["tail_entity"])
-            for r in df.collect())
-
-    a, b = key_rows(combined), key_rows(union)
-    assert len(a) > 100   # intra rows dominate — real coverage
-    assert a == b
-
-
 def test_clustered_input_equals_shuffle_path(spark, tmp_path):
     """r5 clustered-input fast path: on a conv-bucketed layout (every
     conversation wholly inside one scan partition — here a parquet

@@ -125,23 +125,35 @@ def _brute_triangles(nodes, edge_set):
     return {v: k for v, k in per.items() if k}
 
 
+#: No triangles. Packing int ids with a 32-bit shift masks the shift
+#: to a no-op (key = a + c), so edge (1, 21) closed the wedge
+#: 10→11→12 (1 + 21 == 10 + 12): a phantom triangle {10, 11, 12}.
+_SQUARE_PLUS_EDGE = {(10, 11), (11, 12), (12, 13), (10, 13), (1, 21)}
+
+
 def test_triangle_counts_matches_bruteforce(spark):
+    """Exact per-node counts vs brute force, for both 32- and 64-bit
+    id columns (the broadcast closing probe packs ids into one long)."""
     import random
 
     rng = random.Random(7)
     n = 25
-    edge_set = {(a, b) for a in range(n) for b in range(a + 1, n)
-                if rng.random() < 0.25}
-    edges = spark.createDataFrame(sorted(edge_set),
-                                  "src long, dst long")
-    got = dict(graph.triangle_counts(edges).collect())
-    want = _brute_triangles(range(n), edge_set)
-    assert got == want and sum(want.values()) > 0
+    random_set = {(a, b) for a in range(n) for b in range(a + 1, n)
+                  if rng.random() < 0.25}
+    for id_type in ("int", "long"):
+        for edge_set in (random_set, _SQUARE_PLUS_EDGE):
+            edges = spark.createDataFrame(
+                sorted(edge_set), f"src {id_type}, dst {id_type}")
+            got = dict(graph.triangle_counts(edges).collect())
+            nodes = {v for e in edge_set for v in e}
+            assert got == _brute_triangles(nodes, edge_set), id_type
+    assert sum(_brute_triangles(range(n), random_set).values()) > 0
 
 
 def test_triangle_counts_bipartite_is_empty(spark):
     # complete bipartite K_{3,3}: odd cycles impossible -> 0 rows
-    edges = spark.createDataFrame(
-        [(a, b) for a in range(3) for b in range(10, 13)],
-        "src long, dst long")
-    assert graph.triangle_counts(edges).count() == 0
+    for id_type in ("int", "long"):
+        edges = spark.createDataFrame(
+            [(a, b) for a in range(3) for b in range(10, 13)],
+            f"src {id_type}, dst {id_type}")
+        assert graph.triangle_counts(edges).count() == 0, id_type

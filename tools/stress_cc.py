@@ -69,12 +69,6 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--nodes", type=int, default=2_000_000)
     ap.add_argument("--chain", type=int, default=8)
-    ap.add_argument("--algo", choices=("hashmin", "star"),
-                    default="hashmin",
-                    help="hashmin = hash-to-min loop (O(diameter) "
-                         "rounds); star = large-star/small-star "
-                         "(Kiveris14, O(log²) rounds — the long-chain "
-                         "regime)")
     args = ap.parse_args()
 
     from pyspark.sql import functions as F
@@ -101,9 +95,7 @@ def main() -> None:
     t0 = time.time()
     # force a DISTRIBUTED loop — the driver union-find fast path is
     # exactly what we verify against, so it must not run
-    cc = (canon.connected_components if args.algo == "hashmin"
-          else canon.connected_components_star)
-    labels = cc(nodes, edges)
+    labels = canon.connected_components(nodes, edges)
     pdf = labels.toPandas().sort_values("node")
     dt = time.time() - t0
 
@@ -116,7 +108,6 @@ def main() -> None:
         "n_nodes": n,
         "n_edges": edges.count(),
         "n_components": n_components,
-        "algo": args.algo,
         "labels_match": match,
         "seconds": round(dt, 2),
     }))
