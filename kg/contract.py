@@ -1701,20 +1701,24 @@ def doc_repetition_filter(spark, sf):
     3-grams that are duplicates of an earlier 3-gram in the SAME
     document — boilerplate, keyboard mash, and template spam score
     high; `keep` applies the standard ≤ 0.18 duplicate-3-gram policy
-    threshold. Pure JVM map work (split → windowed concat_ws →
-    array_distinct), no shuffle, no UDF; DuckDB recomputes the
-    identical list pipeline. Non-vacuous on this corpus: 27/500 docs
-    at sf0.01 have a nonzero ratio (max 0.07, so keep is uniformly
-    true — the policy binds on real boilerplate, the RATIO is the
-    verified measurement). Complements the cross-document dedup
+    threshold. Pure JVM map work (split → xxhash64 of each 3-token
+    slice → array_distinct), no shuffle, no UDF; DuckDB recomputes the
+    same ratio over the 3-gram STRINGS. The 64-bit fingerprints can
+    collide: two distinct trigrams sharing a hash lower the distinct
+    count and can flip a doc's keep verdict. By the birthday bound the
+    odds are about n_grams²/2⁶⁵ per doc (≈3·10⁻¹² for a 10k-trigram
+    document), far below any policy-relevant rate; the oracle replay
+    checks exact equality only at sf0.01. Non-vacuous on this corpus:
+    27/500 docs at sf0.01 have a nonzero ratio (max 0.07, so keep is
+    uniformly true — the policy binds on real boilerplate, the RATIO
+    is the verified measurement). Complements the cross-document dedup
     family: those kill copies BETWEEN docs, this kills degenerate
     text WITHIN a doc."""
-    # r6: grams are xxhash64(token slice) fingerprints, not built
-    # strings — the ratio only needs |distinct|/|count|, and tokens
-    # are space-free so concat_ws was injective; hash-as-identity is
-    # the repo's standing content-key model (the oracle's sf0.01
-    # string replay hash-matching the Spark output IS the
-    # collision-freeness check executing, as for decontaminate_ngrams)
+    # grams are xxhash64(token slice) fingerprints, not built strings:
+    # the ratio only needs |distinct|/|count|; hash-as-identity is the
+    # repo's standing content-key model (the oracle's sf0.01 string
+    # replay hash-matching the Spark output IS the collision-freeness
+    # check executing, as for decontaminate_ngrams)
     t = F.split(F.lower("text"), " ")
     grams = F.when(
         F.size(t) >= 3,

@@ -5,9 +5,9 @@ execution for kill/resume (E2/A5).
 Dataflow at scale (the plan you'd want on 1000 executors):
 
     scan T0 (pruned to conv_id, turn_idx, text)
-      → mapInPandas extract (B1–B3; narrow, no shuffle)
-      → mapInPandas score   (B4; narrow, broadcast model, Arrow-capped)
-      → 2 × broadcast join  (B5 dictionary linking; no shuffle)
+      → mapInPandas extract+score+link (B1–B5 fused; narrow, no
+        shuffle, broadcast model, Arrow-capped; the exact dictionary
+        resolves in-UDF)
       → [distinct norms → minhash/LSH/CC — tiny side plan on the
          dictionary-miss tail only]
       → groupBy(subj,pred,obj) agg (D2; the ONE unavoidable shuffle,
@@ -26,38 +26,23 @@ import hashlib
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from kg import spec
 from kg.stages import canon, checkpoint, link, metrics, score, triples
 
 
-def resolve_entities(scored: DataFrame, dict_df: DataFrame,
-                     canonicalize_tail: bool = True) -> DataFrame:
-    """B5 + C1–C4: exact-dictionary linking (broadcast joins), then
-    long-tail canonicalization of dictionary-miss norms via
-    minhash/LSH + connected components.
+def resolve_entities(scored: DataFrame, dict_df: DataFrame) -> DataFrame:
+    """C1–C4 over the dictionary-miss tail: ``scored`` comes from the
+    fused extractors, which already resolve the exact dictionary
+    in-UDF (B5) into head_entity/tail_entity; the NULL slots are
+    canonicalized via minhash/LSH + connected components.
 
     Callers must pass a MATERIALIZED ``scored`` frame (checkpointed or
-    parquet-backed): this function scans it multiple times (linking,
-    miss-detection, final join), and re-running the scoring UDF per
+    parquet-backed): this function scans it multiple times
+    (miss-detection, final join), and re-running the scoring UDF per
     scan would multiply the Python-path cost.
-
-    If the frame already carries head_entity/tail_entity (the fused
-    extractor resolves the exact dictionary in-UDF), the broadcast
-    linking joins are skipped and only the miss tail is processed.
     """
-    if "head_entity" in scored.columns:
-        linked = scored
-    else:
-        linked = link.link_instances(scored, dict_df)
-    if not canonicalize_tail:
-        return (linked
-                .withColumn("head_entity",
-                            F.coalesce("head_entity", "head_norm"))
-                .withColumn("tail_entity",
-                            F.coalesce("tail_entity", "tail_norm")))
     # single scan for BOTH miss sides: explode the two nullable slots
-    # and keep the null ones (round 1 ran two where-scans + union)
-    missed = (linked.select(F.explode(F.array(
+    # and keep the null ones
+    missed = (scored.select(F.explode(F.array(
                   F.when(F.col("head_entity").isNull(), F.col("head_norm")),
                   F.when(F.col("tail_entity").isNull(), F.col("tail_norm"))))
               .alias("norm"))
@@ -68,14 +53,14 @@ def resolve_entities(scored: DataFrame, dict_df: DataFrame,
         # common fast path: every mention linked exactly — skip the
         # whole minhash/CC side plan (it would still cost a dozen
         # empty jobs in the iterative loop)
-        return linked
+        return scored
     # The cluster graph must CONTAIN the dictionary norms, or a typo
     # variant can never share a component with a linked member and
     # C4's "cluster inherits the canonical of its linked member" is
     # dead code — every miss would fall back to its cluster-min norm.
     # The dictionary is a few hundred rows: unioning it into the node
     # set costs nothing; its own mappings are dropped afterwards
-    # (dict norms are already resolved in `linked`).
+    # (dict norms are already resolved in `scored`).
     nodes = missed.union(dict_df.select("norm")).distinct()
     mapping = (canon.canonicalize_norms(nodes, dict_df)
                .join(missed, "norm", "left_semi"))
@@ -84,7 +69,7 @@ def resolve_entities(scored: DataFrame, dict_df: DataFrame,
                                    F.col("entity").alias("_h_ent")))
     t = F.broadcast(mapping.select(F.col("norm").alias("tail_norm"),
                                    F.col("entity").alias("_t_ent")))
-    return (linked.join(h, "head_norm", "left").join(t, "tail_norm", "left")
+    return (scored.join(h, "head_norm", "left").join(t, "tail_norm", "left")
             .withColumn("head_entity",
                         F.coalesce("head_entity", "_h_ent", "head_norm"))
             .withColumn("tail_entity",
@@ -94,7 +79,6 @@ def resolve_entities(scored: DataFrame, dict_df: DataFrame,
 
 def extract_and_score(spark: SparkSession, transcripts: DataFrame,
                       weights_bc=None,
-                      threshold: float = spec.REL_THRESHOLD,
                       cross_turn_k: int = 0,
                       clustered_input: bool = False) -> DataFrame:
     """B1–B5 extraction. ``cross_turn_k > 0`` additionally scores
@@ -107,8 +91,7 @@ def extract_and_score(spark: SparkSession, transcripts: DataFrame,
     cross-turn-trained checkpoint is the tuning knob."""
     if weights_bc is None:
         weights_bc = score.broadcast_weights(spark)
-    fused = score.extract_and_score_fused(transcripts, weights_bc,
-                                          threshold=threshold)
+    fused = score.extract_and_score_fused(transcripts, weights_bc)
     if not cross_turn_k:
         return fused
     # two independent stages Spark overlaps: measured ~25% faster on
@@ -120,7 +103,7 @@ def extract_and_score(spark: SparkSession, transcripts: DataFrame,
     # exchange at all — at 10^12 turns that is the whole corpus not
     # shuffled. See extract.cross_turn_prepared for the contract.
     xfused = score.extract_and_score_cross_turn_fused(
-        transcripts, weights_bc, k=cross_turn_k, threshold=threshold,
+        transcripts, weights_bc, k=cross_turn_k,
         clustered_input=clustered_input)
     return fused.unionByName(xfused)
 

@@ -290,7 +290,6 @@ def verify_pairs(pairs: DataFrame, feats: DataFrame,
 def near_duplicate_edges(norms: DataFrame,
                          tau: float = spec.TAU_DUP,
                          feature: str = "char",
-                         shingle_w: int = spec.SHINGLE_W,
                          obs=None,
                          return_feats: bool = False,
                          block_cap: int = spec.BLOCK_CAP,
@@ -310,9 +309,8 @@ def near_duplicate_edges(norms: DataFrame,
     ``handles``: pass a list and the internally-persisted frames are
     appended to it so the CALLER can ``unpersist()`` them once the
     edges are materialized — in a long-lived session the caches
-    otherwise outlive the computation (ADVICE r3 leak class)."""
-    feats = node_features(norms, feature=feature,
-                          shingle_w=shingle_w).persist()
+    otherwise outlive the computation."""
+    feats = node_features(norms, feature=feature).persist()
     banded = lsh_bands(minhash_signatures(feats)).persist()
     if handles is not None:
         handles += [feats, banded]
@@ -543,9 +541,25 @@ def _min_root_components(ids: Iterable[int],
     return {n: find(n) for n in list(parent)}
 
 
+#: node count under which C3+C4 run on the driver. The iterative CC
+#: loop costs O(rounds) driver-scheduled jobs on kilobytes of data —
+#: pure fixed cost that caps strong scaling (Amdahl); a union-find
+#: over ≤100k collected ids is milliseconds. Above the threshold the
+#: distributed hash-to-min path runs — identical output (tested).
+DRIVER_CANON_MAX_NODES = 100_000
+
+#: edge count bound for the same fast path: node count alone doesn't
+#: bound the edge set (100k near-identical norms under block_cap=64 ×
+#: 32 bands can emit ~10⁸ surviving pairs — enough to OOM the driver).
+#: The edge probe collects at most this many +1 rows; one more and the
+#: distributed branch runs instead.
+DRIVER_CANON_MAX_EDGES = 1_000_000
+
+
 def components_auto(nodes: DataFrame, edges: DataFrame,
-                    driver_max_nodes: int = None,
-                    driver_max_edges: int = None) -> DataFrame:
+                    driver_max_nodes: int = DRIVER_CANON_MAX_NODES,
+                    driver_max_edges: int = DRIVER_CANON_MAX_EDGES
+                    ) -> DataFrame:
     """Same contract as :func:`connected_components` — (node) +
     (src, dst) → (node, component = min member id) — but when BOTH
     probes fit (node count ≤ driver_max_nodes, edge count ≤
@@ -566,10 +580,6 @@ def components_auto(nodes: DataFrame, edges: DataFrame,
     driver_max_nodes node rows (+1) and driver_max_edges edge rows
     (+1) at call time — size driver memory accordingly, or pass
     driver_max_nodes=0 to force the fully-lazy distributed branch."""
-    if driver_max_nodes is None:
-        driver_max_nodes = DRIVER_CANON_MAX_NODES
-    if driver_max_edges is None:
-        driver_max_edges = DRIVER_CANON_MAX_EDGES
     probed = _driver_probe(nodes.select("node"), edges,
                            driver_max_nodes, driver_max_edges)
     if probed is None:
@@ -590,21 +600,6 @@ def components_auto(nodes: DataFrame, edges: DataFrame,
         schema)
 
 
-#: node count under which C3+C4 run on the driver. The iterative CC
-#: loop costs O(rounds) driver-scheduled jobs on kilobytes of data —
-#: pure fixed cost that caps strong scaling (Amdahl); a union-find
-#: over ≤100k collected ids is milliseconds. Above the threshold the
-#: distributed hash-to-min path runs — identical output (tested).
-DRIVER_CANON_MAX_NODES = 100_000
-
-#: edge count bound for the same fast path: node count alone doesn't
-#: bound the edge set (100k near-identical norms under block_cap=64 ×
-#: 32 bands can emit ~10⁸ surviving pairs — enough to OOM the driver).
-#: The edge probe collects at most this many +1 rows; one more and the
-#: distributed branch runs instead.
-DRIVER_CANON_MAX_EDGES = 1_000_000
-
-
 def canonicalize_norms(norms: DataFrame, dict_df: DataFrame,
                        driver_max_nodes: int = DRIVER_CANON_MAX_NODES,
                        driver_max_edges: int = DRIVER_CANON_MAX_EDGES
@@ -620,48 +615,54 @@ def canonicalize_norms(norms: DataFrame, dict_df: DataFrame,
     scale with the data. C3/C4 (components + naming) run on the
     driver when both probes fit (see DRIVER_CANON_MAX_NODES /
     DRIVER_CANON_MAX_EDGES), else through the distributed
-    join/aggregate path below.
+    join/aggregate path below. Every DataFrame this function caches
+    is released before it returns: the distributed branch's output is
+    localCheckpointed first, because it reads the cached features.
     """
-    feats = node_features(norms).persist()
+    handles: list = []
     # signatures carry node, not norm — the node → norm map below
     # reads off the persisted feature table
-    banded = lsh_bands(minhash_signatures(feats)).persist()
-    edges = verify_pairs(candidate_pairs(banded), feats)
+    edges, feats = near_duplicate_edges(norms, return_feats=True,
+                                        handles=handles)
+    try:
+        probed = _driver_probe(feats.select("norm", "node"), edges,
+                               driver_max_nodes, driver_max_edges)
+        if probed is not None:
+            node_rows, edge_rows = probed
+            comp = _min_root_components((r["node"] for r in node_rows),
+                                        edge_rows)
+            dict_rows = dict_df.select("norm", "entity").collect()
+            mapping = _name_clusters_driver(
+                [(r["norm"], comp[r["node"]]) for r in node_rows],
+                {r["norm"]: r["entity"] for r in dict_rows})
+            return norms.sparkSession.createDataFrame(
+                pd.DataFrame(mapping, columns=["norm", "entity"]),
+                "norm string, entity string")
 
-    probed = _driver_probe(feats.select("norm", "node"), edges,
-                           driver_max_nodes, driver_max_edges)
-    if probed is not None:
-        node_rows, edge_rows = probed
-        comp = _min_root_components((r["node"] for r in node_rows),
-                                    edge_rows)
-        dict_rows = dict_df.select("norm", "entity").collect()
-        mapping = _name_clusters_driver(
-            [(r["norm"], comp[r["node"]]) for r in node_rows],
-            {r["norm"]: r["entity"] for r in dict_rows})
-        return norms.sparkSession.createDataFrame(
-            pd.DataFrame(mapping, columns=["norm", "entity"]),
-            "norm string, entity string")
-
-    comps = connected_components(feats.select("node"), edges)
-
-    labeled = (feats.select("norm", "node")
-               .join(comps, "node", "left")
-               .withColumn("component",
-                           F.coalesce("component", "node")))
-    linked = labeled.join(
-        F.broadcast(dict_df.select("norm", "entity")), "norm", "left")
-    cluster_name = (linked.groupBy("component").agg(
-        F.min(F.when(F.col("entity").isNotNull(), F.col("norm")))
-         .alias("_linked_norm"),
-        F.min("norm").alias("_any_norm")))
-    cluster_name = cluster_name.join(
-        F.broadcast(dict_df.select(F.col("norm").alias("_linked_norm"),
-                                   F.col("entity").alias("_cluster_entity"))),
-        "_linked_norm", "left")
-    return (linked.join(cluster_name, "component")
-            .withColumn("entity",
-                        F.coalesce("entity", "_cluster_entity", "_any_norm"))
-            .select("norm", "entity"))
+        comps = connected_components(feats.select("node"), edges)
+        labeled = (feats.select("norm", "node")
+                   .join(comps, "node", "left")
+                   .withColumn("component",
+                               F.coalesce("component", "node")))
+        linked = labeled.join(
+            F.broadcast(dict_df.select("norm", "entity")), "norm", "left")
+        cluster_name = (linked.groupBy("component").agg(
+            F.min(F.when(F.col("entity").isNotNull(), F.col("norm")))
+             .alias("_linked_norm"),
+            F.min("norm").alias("_any_norm")))
+        cluster_name = cluster_name.join(
+            F.broadcast(dict_df.select(
+                F.col("norm").alias("_linked_norm"),
+                F.col("entity").alias("_cluster_entity"))),
+            "_linked_norm", "left")
+        return (linked.join(cluster_name, "component")
+                .withColumn("entity", F.coalesce(
+                    "entity", "_cluster_entity", "_any_norm"))
+                .select("norm", "entity")
+                .localCheckpoint(eager=True))
+    finally:
+        for h in handles:
+            h.unpersist()
 
 
 def _name_clusters_driver(members: list[tuple[str, int]],

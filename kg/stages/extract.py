@@ -33,6 +33,14 @@ XT_PAIR_COLS = ["conv_id", "turn_idx", "head_surface", "tail_surface",
 #: the nlp.pair_instances dict fields, in XT_PAIR_COLS order
 _PAIR_FIELDS = itemgetter(*XT_PAIR_COLS[2:])
 
+#: cross-turn pairing keeps at most this many mentions per turn, which
+#: bounds a turn pair's fan-out at XT_MENTION_CAP²
+XT_MENTION_CAP = 8
+
+#: cross-turn groups are (conv_id, turn_idx // XT_CHUNK): the hot
+#: conversation never lands in one task
+XT_CHUNK = 256
+
 
 def intra_turn_pairs(pdf: pd.DataFrame) -> list[tuple]:
     """XT_PAIR_COLS tuples for every intra-turn mention pair of one
@@ -89,8 +97,6 @@ def _mention_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 
 def cross_turn_instances(transcripts: DataFrame, k: int = 1,
-                         cap_per_turn: int = 8,
-                         chunk: int = 256,
                          clustered_input: bool = False) -> DataFrame:
     """B3 cross-turn variant: mention pairs spanning turns ≤ k apart
     within a conversation (SURVEY.md §2 B3 "±k turn window").
@@ -99,24 +105,25 @@ def cross_turn_instances(transcripts: DataFrame, k: int = 1,
     in-vocab punctuation token, so the frozen PCNN vocabulary is
     unchanged).
 
-    Execution (r4): repartition on (conv_id, chunk) +
+    Execution: repartition on (conv_id, chunk) +
     sortWithinPartitions + a STREAMING mapInPandas that detects group
-    boundaries in-stream — one shuffle on the conversation key (same
-    exchange the old groupBy.applyInPandas paid), but each task
-    processes hundreds of conversations per Arrow batch instead of
-    one pandas frame PER GROUP. The per-group applyInPandas overhead
-    dominated at transcript shape (~20-turn conversations): 12.7 s →
-    ~1 s for 8k conversations at sf0.1. A group can span Arrow batch
-    boundaries; the stream buffers the open group across batches.
+    boundaries in-stream — one shuffle on the conversation key, and
+    each task processes hundreds of conversations per Arrow batch
+    instead of one pandas frame PER GROUP (a groupBy.applyInPandas
+    pays per-group overhead that dominates at transcript shape,
+    ~20-turn conversations: 12.7 s vs ~1 s for 8k conversations at
+    sf0.1). A group can span Arrow batch boundaries; the stream
+    buffers the open group across batches.
 
     Off the default pipeline path: the frozen scorer was trained on
     intra-turn instances, so cross-turn pairs are scored conservatively
     (mostly NA) until a cross-turn-trained checkpoint ships.
 
-    Boundedness: groups are (conv_id, turn_idx // chunk) so the hot
-    conversation (10^9-turn worst case) never lands in one task; pairs
-    that span a chunk boundary (≤ k/chunk of the total) are dropped —
-    the documented cap, not a silent truncation.
+    Boundedness: groups are (conv_id, turn_idx // XT_CHUNK) so the
+    hot conversation (10^9-turn worst case) never lands in one task;
+    pairs that span a chunk boundary (≤ k/XT_CHUNK of the total) are
+    dropped — the documented cap, not a silent truncation. Each turn
+    pairs at most its first XT_MENTION_CAP mentions.
     """
 
     n_pair = len(XT_PAIR_COLS) - 2  # slice off the canonical slots
@@ -127,25 +134,25 @@ def cross_turn_instances(transcripts: DataFrame, k: int = 1,
         yield from stream_groups(
             it, ["conv_id", "_chunk", "turn_idx", "text"], 2,
             lambda key, items: [r[:n_pair] for r in xt_group_pairs(
-                key[0], items, k, cap_per_turn)],
+                key[0], items, k)],
             XT_PAIR_COLS[:n_pair])
 
-    return (cross_turn_prepared(transcripts, chunk, clustered_input)
+    return (cross_turn_prepared(transcripts, clustered_input)
             .mapInPandas(stream, schema=schemas.MENTION_PAIRS))
 
 
-def xt_group_pairs(conv_id, items: list, k: int,
-                   cap_per_turn: int) -> list:
+def xt_group_pairs(conv_id, items: list, k: int) -> list:
     """One conversation-chunk's cross-turn pairs (the stream_groups
     close function shared by cross_turn_instances and the fused
-    scorer in kg/stages/score.py): tokenize each turn once, pair
-    mentions across turns ≤ k apart, emit XT_PAIR_COLS tuples."""
+    scorer in kg/stages/score.py): tokenize each turn once, pair each
+    turn's first XT_MENTION_CAP mentions across turns ≤ k apart, emit
+    XT_PAIR_COLS tuples."""
     from kg import nlp, spec
 
     turns = []
     for turn_idx, text in items:
         toks = spec.tokenize(text or "")
-        mens = nlp.find_mentions(toks)[:cap_per_turn]
+        mens = nlp.find_mentions(toks)[:XT_MENTION_CAP]
         if mens:
             turns.append((int(turn_idx), toks, mens))
     rows = []
@@ -213,11 +220,11 @@ def clustered_layout_ok(df: DataFrame) -> bool:
 
 
 def cross_turn_prepared(transcripts: DataFrame,
-                        chunk: int = 256,
                         clustered_input: bool = False) -> DataFrame:
     """The shared exchange under both cross-turn consumers: narrow
-    projection + ONE shuffle on (conv_id, chunk) + in-partition sort,
-    ready for a streaming mapInPandas over group boundaries.
+    projection + ONE shuffle on (conv_id, turn_idx // XT_CHUNK) +
+    in-partition sort, ready for a streaming mapInPandas over group
+    boundaries.
 
     The partition count is EXPLICIT (the session's configured shuffle
     partitions, via :func:`kg.stages.skew.cpu_stage_partitions`), not
@@ -225,17 +232,17 @@ def cross_turn_prepared(transcripts: DataFrame,
     transcript text is tiny per unit of extraction CPU (~KB/turn vs
     ~100 µs/turn of tokenize+mention+score Python), so at sf0.1 AQE
     folded the 32-way exchange to 3 tasks and serialized ~5 s of
-    single-core Python onto 3 cores (measured r5; the whole cross-turn
+    single-core Python onto 3 cores (measured; the whole cross-turn
     stage is CPU-bound, never byte-bound). Partitioning a Python-CPU
     stage by the configured parallelism is the right call at every
     scale — a 1000-executor deployment sets shuffle.partitions to its
     core budget and gets exactly that fan-out.
 
-    ``clustered_input=True`` (r5) skips the exchange entirely: an
+    ``clustered_input=True`` skips the exchange entirely: an
     in-partition sort feeds the stream directly off the scan. Only
     correct when the storage layout already CONTAINS each conversation
     in a single scan partition. The precise contract (stricter than
-    "bucketed by conv_id" — review-caught): (1) every conversation's
+    "bucketed by conv_id"): (1) every conversation's
     turns live in ONE FILE — a single-commit hash-repartitioned write
     gives this (kg.datagen does); an Iceberg table partitioned by
     bucket(conv_id) gives it only after per-bucket compaction, since
@@ -259,7 +266,8 @@ def cross_turn_prepared(transcripts: DataFrame,
 
     base = (transcripts.select("conv_id", "turn_idx", "text")
             .withColumn("_chunk",
-                        F.floor(F.col("turn_idx") / chunk).cast("int")))
+                        F.floor(F.col("turn_idx") / XT_CHUNK)
+                        .cast("int")))
     if clustered_input:
         return base.sortWithinPartitions("conv_id", "_chunk", "turn_idx")
     n = cpu_stage_partitions(transcripts)

@@ -41,8 +41,7 @@ def _materialize(df: DataFrame) -> DataFrame:
 
 
 def pagerank(nodes: DataFrame, edges: DataFrame, iters: int = 3,
-             checkpoint_every: int = 0,
-             materialize_inputs: bool = True) -> DataFrame:
+             checkpoint_every: int = 0) -> DataFrame:
     """``iters`` PageRank power iterations over ``edges`` (columns
     src, dst; every node listed in ``nodes.node`` — nodes without
     out-edges receive teleport mass only, their own mass is NOT
@@ -55,42 +54,35 @@ def pagerank(nodes: DataFrame, edges: DataFrame, iters: int = 3,
     gets an output row of its own, while N counts only ``nodes``; a
     src outside ``nodes`` sends nothing until it has received rank.
 
-    r6 iteration shape (guide §8 — make every repeated shuffle move a
-    lightweight proxy, move the heavy multiset once): the edge list is
+    Iteration shape (make every repeated shuffle move a lightweight
+    proxy, move the heavy multiset once): the edge list is
     pre-grouped ONCE into per-src adjacency arrays with the out-degree
     folded in (one groupBy, materialized), so each iteration is a
     JOIN OF TWO O(nodes) TABLES (adjacency ⋈ pr — the small state
     side auto-broadcasts / AQE picks the strategy) followed by a
     map-side explode of the destination arrays into the partial-agg
-    sum. The former shape re-shuffled the FULL O(edges) list per
-    iteration through a three-way SortMergeJoin (12M rows × 3 iters
-    at sf1.0; measured 9.4 s → 4.2 s for the contract entry). The
-    per-message work (pr/outdeg, partial sum) is unchanged, so pr
-    values are identical up to summation order — which was already
-    partition-order-dependent — and callers' rounding grain absorbs
-    that exactly as before.
+    sum. Re-shuffling the FULL O(edges) list per iteration through a
+    three-way SortMergeJoin instead measured 9.4 s vs 4.2 s for the
+    contract entry (12M rows × 3 iters at sf1.0). pr values depend on
+    summation order, which is partition-order-dependent; callers'
+    rounding grain absorbs that.
 
-    ``materialize_inputs`` (default on) localCheckpoints nodes and
-    the adjacency table once so each iteration reads the materialized
-    graph instead of recomputing its derivation — see
-    :func:`_materialize`. Disable only when the inputs are already
-    cached/checkpointed by the caller."""
-    if materialize_inputs:
-        nodes = _materialize(nodes)
-    adj = edges.groupBy("src").agg(
+    nodes and the adjacency table are localCheckpointed once so each
+    iteration reads the materialized graph instead of recomputing its
+    derivation — see :func:`_materialize`."""
+    nodes = _materialize(nodes)
+    adj = _materialize(edges.groupBy("src").agg(
         F.collect_list("dst").alias("_dsts"),
-        F.count("*").alias("_outdeg"))
-    if materialize_inputs:
-        adj = _materialize(adj)
+        F.count("*").alias("_outdeg")))
     ncnt = nodes.select(F.count("*").alias("n"))
     pr = (nodes.crossJoin(F.broadcast(ncnt))
           .select("node", (F.lit(1.0) / F.col("n")).alias("pr")))
-    # zero-message seeding (r6): every node contributes an explicit
-    # 0.0 into its own message sum, so the aggregate's key set IS the
-    # node set and the former per-iteration `nodes LEFT JOIN summed`
-    # disappears — one join + one aggregate per iteration. IEEE
-    # addition with +0.0 is the identity, so the sums are unchanged
-    # (contributions are strictly positive; no -0.0 can arise).
+    # zero-message seeding: every node contributes an explicit 0.0
+    # into its own message sum, so the aggregate's key set IS the node
+    # set and no per-iteration `nodes LEFT JOIN summed` is needed —
+    # one join + one aggregate per iteration. IEEE addition with +0.0
+    # is the identity, so the sums are unchanged (contributions are
+    # strictly positive; no -0.0 can arise).
     zeros = nodes.select("node", F.lit(0.0).alias("c"))
     for i in range(iters):
         contrib = (adj.join(pr, adj.src == pr.node)
@@ -110,8 +102,7 @@ def pagerank(nodes: DataFrame, edges: DataFrame, iters: int = 3,
 
 def min_label_propagation(nodes: DataFrame, edges: DataFrame,
                           iters: int = 3,
-                          checkpoint_every: int | None = None,
-                          materialize_inputs: bool = True) -> DataFrame:
+                          checkpoint_every: int = 0) -> DataFrame:
     """``iters`` synchronous rounds of min-label propagation — the
     HASH-MIN primitive bounded CC loops are built from (Kiveris et
     al. 2014 use the unbounded fixpoint; kg/stages/canon.py runs that
@@ -135,36 +126,25 @@ def min_label_propagation(nodes: DataFrame, edges: DataFrame,
     map-side). The self-loop makes the aggregate itself compute
     min({own} ∪ in-neighbor labels), so there is no ``least``
     left-join back to the state, the state is read once per round,
-    and the unrolled lineage stays LINEAR like pagerank's (the former
-    double-read shape duplicated the prior-round subtree per
-    reference — 2^iters copies, measured 21 s for 3 rounds at sf0.1
-    where ~6 s was real work — and had to localCheckpoint every
-    round to contain it; the default is now no per-round
-    checkpointing). String labels compare bytewise in both Spark and
-    DuckDB, so the min is engine-independent. Returns (node, label).
-    ``materialize_inputs``: see :func:`pagerank`. Pass
+    and the unrolled lineage stays LINEAR like pagerank's (a shape
+    that reads the state twice per round duplicates the prior-round
+    subtree per reference — 2^iters copies, measured 21 s for 3
+    rounds at sf0.1 where ~6 s was real work). String labels compare
+    bytewise in both Spark and DuckDB, so the min is
+    engine-independent. Returns (node, label). nodes and the
+    adjacency table are materialized as in :func:`pagerank`. Pass
     ``checkpoint_every`` to bound lineage on long convergence-driven
     runs."""
-    if materialize_inputs:
-        nodes = _materialize(nodes)
-    # self-loop seeding (r6): fold every node's OWN label into the
-    # message stream by appending a v→v edge before grouping, so
+    nodes = _materialize(nodes)
+    # self-loop seeding: fold every node's OWN label into the message
+    # stream by appending a v→v edge before grouping, so
     #   label(v, t) = min over messages = min({own} ∪ in-nbr labels)
-    # exactly as before, but a round is ONE join + ONE aggregate —
-    # the `least` left-join back to the state is gone, the state is
-    # read ONCE per round, and the unrolled lineage is linear (the
-    # former double-read made it 2^iters, forcing a localCheckpoint
-    # every round; the default is now no checkpointing, matching
-    # pagerank — pass checkpoint_every for long convergence runs).
-    adj = (edges.unionByName(
+    # and a round is ONE join + ONE aggregate that reads the state once
+    adj = _materialize(edges.unionByName(
         nodes.select(F.col("node").alias("src"),
                      F.col("node").alias("dst")))
         .groupBy("src").agg(F.collect_list("dst").alias("_dsts")))
-    if materialize_inputs:
-        adj = _materialize(adj)
     lab = nodes.select("node", F.col("node").alias("label"))
-    if checkpoint_every is None:
-        checkpoint_every = 0
     for i in range(iters):
         lab = (adj.join(lab, adj.src == lab.node)
                .select(F.explode("_dsts").alias("node"), "label")
@@ -190,8 +170,7 @@ def min_label_propagation(nodes: DataFrame, edges: DataFrame,
 TRI_BCAST_MAX_EDGES = 50_000_000
 
 
-def triangle_counts(edges: DataFrame,
-                    materialize_inputs: bool = True) -> DataFrame:
+def triangle_counts(edges: DataFrame) -> DataFrame:
     """Per-node triangle participation counts over an UNDIRECTED
     simple graph given as distinct (src, dst) pairs with src < dst
     (each undirected edge once). Degree-ordered orientation (the
@@ -210,16 +189,14 @@ def triangle_counts(edges: DataFrame,
     union re-aggregates by node. Returns (node, n_triangles) for
     nodes in ≥1 triangle.
 
-    ``materialize_inputs`` localCheckpoints ``edges`` (consumed by
-    the degree agg AND the orientation join — an expensive edge
-    derivation, e.g. a co-occurrence self-join + distinct, would
-    otherwise run twice), the oriented edge list ``o`` (consumed
-    three times: both wedge sides + the closing probe), and the
-    triangle table (consumed three times by the corner union); it
-    also enables the broadcast closing-probe gate (two tiny stat
-    jobs over the checkpointed ``o`` — see TRI_BCAST_MAX_EDGES)."""
-    if materialize_inputs:
-        edges = _materialize(edges)
+    Materializes ``edges`` (consumed by the degree agg AND the
+    orientation join — an expensive edge derivation, e.g. a
+    co-occurrence self-join + distinct, would otherwise run twice),
+    the oriented edge list ``o`` (consumed three times: both wedge
+    sides + the closing probe), and the triangle table (consumed
+    three times by the corner union). EAGER: a stat aggregate over ``o``
+    picks the closing probe (see TRI_BCAST_MAX_EDGES)."""
+    edges = _materialize(edges)
     deg = (edges.select(F.col("src").alias("node"))
            .unionByName(edges.select(F.col("dst").alias("node")))
            .groupBy("node").agg(F.count("*").alias("deg")))
@@ -234,31 +211,22 @@ def triangle_counts(edges: DataFrame,
                  .alias("lo"),
                  F.when(fwd, F.col("dst")).otherwise(F.col("src"))
                  .alias("hi"))
-    if materialize_inputs:
-        o = _materialize(o)
+    o = _materialize(o)
     w1 = o.select(F.col("lo").alias("a"), F.col("hi").alias("b"))
     w2 = o.select(F.col("lo").alias("b"), F.col("hi").alias("c"))
     wedges = w1.join(w2, "b")
     # the orientation is a strict total order, so the closing edge of
     # a path a→b→c can only be oriented a→c — one semi-join closes
-    # it. Probe strategy (r6): the wedge stream is O(Σ outdeg²) — two
+    # it. Probe strategy: the wedge stream is O(Σ outdeg²) — two
     # orders larger than the edge list — so when the edge list fits
     # the broadcast gate (and ids pack into one long), the probe runs
     # map-side against a broadcast LongHashedRelation of packed keys
-    # and the wedges never shuffle; else the original shuffle
-    # semi-join. Both probes are eager only when materialize_inputs
-    # already made the function effectively so (two tiny jobs over
-    # the checkpointed o / edges).
-    use_bcast = False
-    if materialize_inputs:
-        stats = o.agg(F.count("*").alias("n"),
-                      F.max(F.greatest("lo", "hi")).alias("mx"),
-                      F.min(F.least("lo", "hi")).alias("mn")).first()
-        use_bcast = (stats["n"] > 0
-                     and stats["n"] <= TRI_BCAST_MAX_EDGES
-                     and stats["mn"] >= 0
-                     and stats["mx"] < (1 << 31))
-    if use_bcast:
+    # and the wedges never shuffle; else the shuffle semi-join.
+    stats = o.agg(F.count("*").alias("n"),
+                  F.max(F.greatest("lo", "hi")).alias("mx"),
+                  F.min(F.least("lo", "hi")).alias("mn")).first()
+    if (stats["n"] > 0 and stats["n"] <= TRI_BCAST_MAX_EDGES
+            and stats["mn"] >= 0 and stats["mx"] < (1 << 31)):
         # pack in LONG arithmetic: on int ids shiftleft(·, 32) masks
         # the shift count to 0 and distinct (lo, hi) keys collide
         def pack(x, y):
@@ -276,8 +244,7 @@ def triangle_counts(edges: DataFrame,
     # re-executes per corner leg (exchange reuse dedups the shuffles
     # but not the merge/probe work above them — measured ~3× the
     # single-pass cost at 492M wedges)
-    if materialize_inputs:
-        tri = _materialize(tri)
+    tri = _materialize(tri)
     corners = (tri.select(F.col("a").alias("node"))
                .unionByName(tri.select(F.col("b").alias("node")))
                .unionByName(tri.select(F.col("c").alias("node"))))

@@ -51,8 +51,7 @@ def release_batch(new_feats: DataFrame, new_bands: DataFrame) -> None:
     new_bands.unpersist()
 
 
-def build_dedup_index(norms: DataFrame, feature: str = "char",
-                      shingle_w: int = spec.SHINGLE_W):
+def build_dedup_index(norms: DataFrame, feature: str = "char"):
     """One-time (or first-batch) index build → (feats, bands).
 
     Unlike the self-dedup path, bands rows are kept for SINGLETON
@@ -60,8 +59,7 @@ def build_dedup_index(norms: DataFrame, feature: str = "char",
     future near-duplicate will land. No cap is applied at build —
     caps belong to the query side, where drops can be observed per
     batch (canon.observe_dropped)."""
-    feats = canon.node_features(norms, feature=feature,
-                                shingle_w=shingle_w)
+    feats = canon.node_features(norms, feature=feature)
     bands = canon.lsh_bands(canon.minhash_signatures(feats))
     return feats, bands
 
@@ -78,7 +76,6 @@ def incremental_near_dup_edges(new_norms: DataFrame,
                                index_bands: DataFrame,
                                tau: float = spec.TAU_DUP,
                                feature: str = "char",
-                               shingle_w: int = spec.SHINGLE_W,
                                block_cap: int = spec.BLOCK_CAP,
                                obs=None,
                                persist_batch: bool = True,
@@ -125,11 +122,10 @@ def incremental_near_dup_edges(new_norms: DataFrame,
     only valid when ids are dense 0..n-1 — with gapped or sparse ids
     a ``where(id >= split)`` batch can hold more rows than the
     difference, the guard would under-count keys, and an oversized
-    key set could be broadcast (ADVICE r4). When density is not
-    guaranteed, pass the batch's actual count or leave the hint None
-    and pay the count job."""
-    new_feats = (canon.node_features(new_norms, feature=feature,
-                                     shingle_w=shingle_w)
+    key set could be broadcast. When density is not guaranteed, pass
+    the batch's actual count or leave the hint None and pay the count
+    job."""
+    new_feats = (canon.node_features(new_norms, feature=feature)
                  .join(index_feats.select("node"), "node", "left_anti"))
     if persist_batch:
         new_feats = new_feats.persist()
@@ -147,7 +143,7 @@ def incremental_near_dup_edges(new_norms: DataFrame,
     # persist exists only to keep that count from recomputing the
     # distinct and is released immediately after — the later join
     # recomputes the O(batch) distinct from new_bands rather than
-    # holding cached blocks for the session (ADVICE r3).
+    # holding cached blocks for the session.
     keys = new_bands.select("band", "bhash").distinct()
     if batch_count_hint is not None:
         n_keys = batch_count_hint * spec.MINHASH_BANDS

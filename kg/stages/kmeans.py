@@ -199,8 +199,7 @@ def update(assigned: DataFrame,
 
 
 def lloyd(emb: DataFrame, seed_cents: DataFrame, iters: int = 3,
-          round_to: int | None = None,
-          materialize_inputs: bool = True) -> DataFrame:
+          round_to: int | None = None) -> DataFrame:
     """``iters`` full Lloyd iterations from ``seed_cents`` (long
     form: cluster, pos, val). Returns the final centroids in long
     form, unrounded. Each iteration's centroid table is a K×dim-value
@@ -208,9 +207,10 @@ def lloyd(emb: DataFrame, seed_cents: DataFrame, iters: int = 3,
     save kilobytes of lineage, so unlike LPA (whose per-round state
     is O(nodes)) the unrolled lazy plan is kept: depth grows linearly
     in ``iters`` because each round reads the prior centroids exactly
-    once (the pagerank regime, not the LPA one)."""
-    if materialize_inputs:
-        emb = _materialize(emb)
+    once (the pagerank regime, not the LPA one). ``emb`` is
+    materialized once (graph._materialize), since every iteration
+    scans it."""
+    emb = _materialize(emb)
     cents = seed_cents
     for _ in range(iters):
         cents = assign_update(emb, fold_centroids(cents),

@@ -12,7 +12,7 @@ corpus. Corpus stats (N, avgdl) arrive as a broadcast 1-row cross
 join, never a collect. The final global top-k is orderBy + limit —
 Spark's TakeOrdered, a per-partition partial top-k then a k-row
 merge on the driver, NOT a single-partition total sort; the rank
-column is attached by a window AFTER the limit, over k rows.
+column is attached AFTER the limit, over k rows.
 
 Cross-engine determinism: per-(doc, term) contributions are rounded
 to 6 decimals (the tfidf-proven ln grain), then summed per doc over
@@ -20,7 +20,7 @@ a SORTED (term ASC) fold so both engines add in the same order, then
 the sum is rounded again — bit-stable ranking under libm ulp."""
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window as W, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 __all__ = ["K1", "B", "bm25_topk"]
 
@@ -40,10 +40,10 @@ def bm25_topk(docs: DataFrame, terms: list[str], k: int,
                     F.split(F.lower(text_col), " ").alias("ws"))
     dl = d.select(id_col, F.size("ws").alias("dl"))
     st = dl.agg(F.count("*").alias("n"), F.avg("dl").alias("avgdl"))
-    # r6: filter INSIDE the array before exploding — the old shape
-    # exploded every token into a row (10M rows at sf1.0) and then
-    # filtered; the higher-order filter keeps non-matching tokens
-    # from ever becoming rows, so explode emits only query-term hits
+    # filter INSIDE the array before exploding: exploding every token
+    # into a row first is 10M rows at sf1.0; the higher-order filter
+    # keeps non-matching tokens from ever becoming rows, so explode
+    # emits only query-term hits
     tf = (d.select(id_col,
                    F.explode(F.filter(
                        "ws", lambda w: w.isin(*terms))).alias("term"))
@@ -66,5 +66,17 @@ def bm25_topk(docs: DataFrame, terms: list[str], k: int,
              F.lit(0.0), lambda acc, x: acc + x["c"]), 6)
              .alias("score")))
     top = s.orderBy(F.desc("score"), F.asc(id_col)).limit(k)
-    w = W.orderBy(F.desc("score"), F.asc(id_col))
-    return top.withColumn("rank", F.row_number().over(w))
+    # rank: the ≤ k rows gathered into ONE array (TakeOrdered already
+    # emits a single partition, so no exchange), sorted by the same
+    # (score DESC, id ASC) order, then position-exploded — an
+    # unpartitioned window would do the same but warns on every run
+    def before(x, y):
+        return (F.when(x["score"] > y["score"], -1)
+                .when(x["score"] < y["score"], 1)
+                .when(x[id_col] < y[id_col], -1)
+                .when(x[id_col] > y[id_col], 1).otherwise(0))
+    ranked = top.agg(F.array_sort(F.collect_list(F.struct("score", id_col)),
+                                  before).alias("r"))
+    return ranked.select(F.posexplode("r").alias("pos", "r")).select(
+        F.col("r")[id_col].alias(id_col), F.col("r.score").alias("score"),
+        (F.col("pos") + 1).alias("rank"))

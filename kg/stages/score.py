@@ -158,8 +158,6 @@ def extract_and_score_cross_turn_fused(
     weights_bc,
     k: int = 1,
     threshold: float = spec.REL_THRESHOLD,
-    cap_per_turn: int = 8,
-    chunk: int = 256,
     clustered_input: bool = False,
 ) -> DataFrame:
     """B1–B5 for the ±k cross-turn window in ONE streaming
@@ -184,7 +182,7 @@ def extract_and_score_cross_turn_fused(
     out_cols = [f.name for f in FUSED_SCHEMA.fields]
 
     def close(key, items):
-        return extract.xt_group_pairs(key[0], items, k, cap_per_turn)
+        return extract.xt_group_pairs(key[0], items, k)
 
     def stream(it):
         state: dict = {}
@@ -198,8 +196,7 @@ def extract_and_score_cross_turn_fused(
             it, ["conv_id", "_chunk", "turn_idx", "text"], 2,
             close, out_cols, flush_transform=ft)
 
-    scored = (extract.cross_turn_prepared(transcripts, chunk,
-                                          clustered_input)
+    scored = (extract.cross_turn_prepared(transcripts, clustered_input)
               .mapInPandas(stream, schema=FUSED_SCHEMA))
     return apply_type_signature(scored)
 

@@ -80,40 +80,20 @@ def dedup_aggregate(raw: DataFrame,
     occurrence count, provenance = first ``cap`` (conv_id, turn_idx)
     witnesses in sorted order.
 
-    Single-pass hash aggregate (partial+final automatic); the slice
-    bounds the OUTPUT row size. For regimes where one hot triple has
-    millions of witnesses (unbounded agg buffers), use
-    :func:`dedup_aggregate_precapped` which bounds the buffers too —
-    at the cost of an extra sort shuffle, which measures SLOWER here
-    (interleaved A/B at 1.5M occurrences: 2.5–5s vs 10–23s).
+    Single-pass hash aggregate (partial+final automatic). The slice
+    bounds the OUTPUT row size only: ``collect_list`` buffers EVERY
+    witness of a triple before ``sort_array`` + ``slice``, so a hot
+    triple with millions of supporting turns holds all of them in one
+    aggregation buffer. Ranking and capping the witnesses before the
+    array aggregation (a row_number window) bounds the buffers but
+    costs an extra sort shuffle, which measured SLOWER here
+    (interleaved A/B at 1.5M occurrences: 2.5–5 s vs 10–23 s).
     """
     return (raw.groupBy("subj", "pred", "obj").agg(
         F.max("score").cast("double").alias("confidence"),
         F.count("*").alias("n_support"),
         F.slice(F.sort_array(F.collect_list(F.struct("conv_id", "turn_idx"))),
                 1, provenance_cap).alias("provenance")))
-
-
-def dedup_aggregate_precapped(raw: DataFrame,
-                              provenance_cap: int = PROVENANCE_CAP
-                              ) -> DataFrame:
-    """D2 variant with BOUNDED aggregation buffers: witnesses are
-    ranked per triple (row_number) and capped before the array
-    aggregation. Same output as dedup_aggregate; choose this when a
-    single triple may carry millions of supporting turns."""
-    from pyspark.sql import Window as W
-
-    key = ["subj", "pred", "obj"]
-    stats = raw.groupBy(*key).agg(
-        F.max("score").cast("double").alias("confidence"),
-        F.count("*").alias("n_support"))
-    w = W.partitionBy(*key).orderBy("conv_id", "turn_idx")
-    prov = (raw.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") <= provenance_cap)
-            .groupBy(*key)
-            .agg(F.sort_array(F.collect_list(
-                F.struct("conv_id", "turn_idx"))).alias("provenance")))
-    return stats.join(prov, key)
 
 
 def build_adjacency(triples: DataFrame) -> DataFrame:

@@ -138,6 +138,28 @@ def test_canonicalize_driver_path_equals_distributed(spark):
     assert fast == dist and len(fast) == 8
 
 
+def test_canonicalize_norms_releases_its_caches(spark):
+    """canonicalize_norms persists its feature and band tables; both
+    branches must release them before returning, so a long-lived
+    session does not gain cached DataFrames per call. Counted in the
+    JVM CacheManager (``getPersistentRDDs`` would also count the
+    localCheckpoints, which are not session caches)."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    d = dictionary_df(spark)
+    for kw in ({}, {"driver_max_nodes": 0}):
+        # a fresh input plan per call: persist() on a plan another
+        # test already cached would not add an entry
+        norms = spark.createDataFrame(
+            [("acme corp",), ("acme corpp",), ("zzzz wobbleplex",),
+             ("zzzz wobbleplexx",)], "norm string").localCheckpoint(
+                eager=True)
+        before = cache.numCachedEntries()
+        out = canon.canonicalize_norms(norms, d, **kw)
+        assert cache.numCachedEntries() == before, kw
+        assert dict(map(tuple, out.collect()))["acme corpp"] \
+            == "Acme Corp", kw
+
+
 def test_resolve_entities_typo_inherits_dict_entity(spark):
     """ADVICE r1: a dictionary-MISS typo variant must inherit the
     canonical entity of its dictionary-linked cluster-mate through

@@ -48,6 +48,24 @@ def test_topk_plan_is_take_ordered_not_global_sort(spark):
     # TakeOrdered(AndProject), never an Exchange SinglePartition sort
     docs = spark.createDataFrame(
         [(i, "join hash") for i in range(50)], "doc_id long, text string")
-    plan = (bm25_topk(docs, ["join", "hash"], k=10)
-            ._jdf.queryExecution().executedPlan().toString())
-    assert "TakeOrderedAndProject" in plan
+    executed = (bm25_topk(docs, ["join", "hash"], k=10)
+                ._jdf.queryExecution().executedPlan())
+    assert "TakeOrderedAndProject" in executed.toString()
+    # the rank over the k survivors must not be a Window without a
+    # partition spec (Spark warns "No Partition Defined for Window"
+    # and moves all data to one partition)
+    assert _unpartitioned_windows(executed) == 0
+
+
+def _unpartitioned_windows(node) -> int:
+    """Window operators with an empty partition spec in a physical
+    plan, walking through AQE wrappers and query stages."""
+    name = node.nodeName()
+    if name == "AdaptiveSparkPlan":
+        return _unpartitioned_windows(node.executedPlan())
+    if name.endswith("QueryStage"):
+        return _unpartitioned_windows(node.plan())
+    n = int(name == "Window" and node.partitionSpec().isEmpty())
+    kids = node.children()
+    return n + sum(_unpartitioned_windows(kids.apply(i))
+                   for i in range(kids.size()))
