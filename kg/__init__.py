@@ -10,8 +10,9 @@ Layout
 ------
 - :mod:`kg.spec`      — the pinned spec: tokenizer rules, relation &
   entity inventories, templates, thresholds, model hyperparameters.
-- :mod:`kg.schemas`   — declared StructType literals for every table
-  (T0..T10 in SURVEY.md §1.2); never inferred.
+- :mod:`kg.schemas`   — declared StructType literals for the Spark
+  tables (T0..T9 in SURVEY.md §1.2); never inferred. The T10
+  checkpoint manifest is JSON (kg.stages.checkpoint).
 - :mod:`kg.session`   — SparkSession factory (AQE on, Arrow on).
 - :mod:`kg.io`        — lakehouse seam: Parquet + atomic manifest
   locally, Iceberg ``writeTo`` branch when a runtime jar is present.

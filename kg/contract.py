@@ -1198,24 +1198,18 @@ def simhash_near_dups(spark, sf):
     JVM-side, the per-bit ±1 majority vote one vectorized numpy pass
     per Arrow batch.
 
-    ORACLE-PAIRED since round 4 using the md5_60 signature variant
-    (first 15 hex digits of md5(word) → 60-bit signatures): DuckDB
-    recomputes EVERY signature bit-for-bit (portable md5 + the same
-    duplicate-sensitive ±1 vote as a nested list comprehension) and
-    then brute-forces all-pairs Hamming — an EXACT equivalence, not
-    probabilistic: 4 blocks cover d ≤ 3 by pigeonhole, so block-join
-    candidates = all-pairs candidates whenever no block bucket
-    exceeds the cap (none does at sf0.01; drops are observable via
-    canon.observe_dropped). The xxhash64 64-bit variant stays the
-    production fast path, exactness-pinned in test_canon.py.
-    (Subsumes round 2's simhash_buckets histogram entry — the block
-    join IS the bucket table put to work.)"""
+    Oracle-paired: the signatures are 60-bit md5_60 ones (first 15
+    hex digits of md5(word)), so DuckDB recomputes EVERY signature bit
+    for bit (portable md5 + the same duplicate-sensitive ±1 vote as a
+    nested list comprehension) and then brute-forces all-pairs
+    Hamming — an EXACT equivalence, not probabilistic: 4 blocks cover
+    d ≤ 3 by pigeonhole, so block-join candidates = all-pairs
+    candidates whenever no block bucket exceeds the cap (none does at
+    sf0.01; drops are observable via canon.observe_dropped)."""
     from kg.stages import canon
 
-    sims = canon.simhash64(_t(spark, sf, "documents"),
-                           word_hash="md5_60")
-    return (canon.simhash_near_pairs(sims, n_bits=60)
-            .orderBy("src", "dst"))
+    sims = canon.simhash64(_t(spark, sf, "documents"))
+    return canon.simhash_near_pairs(sims).orderBy("src", "dst")
 
 
 @q("ann_bucket_join", None)

@@ -12,6 +12,10 @@ backward pass (used only by the offline trainer, kg/train.py) are
 plain numpy. The forward pass is fully vectorized over the batch —
 zero per-row Python — which is exactly what the Arrow-batched UDF
 needs (BASELINE.json:15 "no per-row Python").
+
+The embedding init, input features, pooling head and embedding
+gradient are shared with the self-attention encoder (kg/model_attn.py);
+only the encoder body between them differs.
 """
 
 from __future__ import annotations
@@ -30,27 +34,34 @@ N_REL = len(spec.RELATIONS)
 _NEG = -1e30
 
 
+def glorot(rng: np.random.Generator, *shape) -> np.ndarray:
+    lim = np.sqrt(6.0 / sum(shape))
+    return rng.uniform(-lim, lim, size=shape).astype(np.float32)
+
+
+def init_embeddings(rng: np.random.Generator) -> dict[str, np.ndarray]:
+    """The input features both encoders share: word and two
+    relative-position embeddings, drawn first from ``rng`` (<pad>
+    pinned to zero)."""
+    def normal(*shape):
+        return (0.1 * rng.standard_normal(shape)).astype(np.float32)
+
+    p = {"E_word": normal(len(spec.vocabulary()), spec.EMB_DIM),
+         "E_p1": normal(N_POS, spec.POS_DIM),
+         "E_p2": normal(N_POS, spec.POS_DIM)}
+    p["E_word"][0] = 0.0
+    return p
+
+
 def init_params(seed: int = spec.MODEL_SEED) -> dict[str, np.ndarray]:
     rng = np.random.default_rng(seed)
-    vocab_size = len(spec.vocabulary())
-
-    def glorot(*shape):
-        lim = np.sqrt(6.0 / sum(shape))
-        return rng.uniform(-lim, lim, size=shape).astype(np.float32)
-
-    p = {
-        "E_word": (0.1 * rng.standard_normal((vocab_size, spec.EMB_DIM))
-                   ).astype(np.float32),
-        "E_p1": (0.1 * rng.standard_normal((N_POS, spec.POS_DIM))
-                 ).astype(np.float32),
-        "E_p2": (0.1 * rng.standard_normal((N_POS, spec.POS_DIM))
-                 ).astype(np.float32),
-        "W_conv": glorot(COL_DIM, spec.N_FILTERS),
+    p = init_embeddings(rng)
+    p.update({
+        "W_conv": glorot(rng, COL_DIM, spec.N_FILTERS),
         "b_conv": np.zeros(spec.N_FILTERS, dtype=np.float32),
-        "W_out": glorot(3 * spec.N_FILTERS, N_REL),
+        "W_out": glorot(rng, 3 * spec.N_FILTERS, N_REL),
         "b_out": np.zeros(N_REL, dtype=np.float32),
-    }
-    p["E_word"][0] = 0.0  # <pad> embedding pinned to zero
+    })
     return p
 
 
@@ -70,14 +81,38 @@ def pad_batch(
     return ids, h, t_, lens
 
 
-def _embed(p, ids, heads, tails):
-    B, T = ids.shape
+def _rel_positions(T, heads, tails):
+    """Relative-position buckets (B,T) of every slot to head and tail."""
     idx = np.arange(T, dtype=np.int32)[None, :]
     r1 = np.clip(idx - heads[:, None], -spec.POS_MAX, spec.POS_MAX) + spec.POS_MAX
     r2 = np.clip(idx - tails[:, None], -spec.POS_MAX, spec.POS_MAX) + spec.POS_MAX
+    return r1, r2
+
+
+def _embed(p, ids, heads, tails, lens):
+    """Input features X (B,T,IN_DIM) with ALL channels zeroed beyond
+    each row's length: otherwise the position embeddings of pad slots
+    bleed into the last real token and scores depend on the batch's
+    max length (i.e. on Arrow batch boundaries)."""
+    r1, r2 = _rel_positions(ids.shape[1], heads, tails)
     X = np.concatenate(
         [p["E_word"][ids], p["E_p1"][r1], p["E_p2"][r2]], axis=-1)
-    return X, r1, r2
+    valid = (np.arange(ids.shape[1])[None, :] < lens[:, None])
+    X = X * valid[:, :, None]
+    return X, {"X": X, "r1": r1, "r2": r2, "ids": ids, "valid": valid}
+
+
+def _embed_grads(p, cache, dX) -> dict[str, np.ndarray]:
+    """Scatter dX (B,T,IN_DIM) back onto the three embedding tables."""
+    D, P = spec.EMB_DIM, spec.POS_DIM
+    dE_word = np.zeros_like(p["E_word"])
+    np.add.at(dE_word, cache["ids"], dX[:, :, :D])
+    dE_word[0] = 0.0
+    dE_p1 = np.zeros_like(p["E_p1"])
+    np.add.at(dE_p1, cache["r1"], dX[:, :, D:D + P])
+    dE_p2 = np.zeros_like(p["E_p2"])
+    np.add.at(dE_p2, cache["r2"], dX[:, :, D + P:])
+    return {"E_word": dE_word, "E_p1": dE_p1, "E_p2": dE_p2}
 
 
 def _im2col(X: np.ndarray) -> np.ndarray:
@@ -103,30 +138,23 @@ def _segment_masks(T, heads, tails, lens):
     return np.stack([m1, m2, m3], axis=1)  # (B,3,T)
 
 
-def forward(p, ids, heads, tails, lens, want_cache=False):
-    """Returns softmax probabilities (B, N_REL); with want_cache, also
-    the intermediates needed for backward."""
-    X, r1, r2 = _embed(p, ids, heads, tails)
-    # zero ALL embedding channels beyond each row's length: otherwise
-    # the position embeddings of pad slots bleed into the conv window
-    # of the last real token and scores depend on the batch's max
-    # length (i.e. on Arrow batch boundaries) — nondeterminism.
-    valid = (np.arange(ids.shape[1])[None, :] < lens[:, None])
-    X = X * valid[:, :, None]
-    cols = _im2col(X)                                 # (B,T,COL)
-    conv = cols @ p["W_conv"] + p["b_conv"]           # (B,T,F) float32
-    masks = _segment_masks(ids.shape[1], heads, tails, lens)
-    # piecewise max-pool, one contiguous (B,T,F) float32 temp per
-    # segment. (A single (B,3,T,F) masked tensor upcast to float64 —
-    # the naive formulation — costs ~400MB/batch and dominated the
-    # scorer's runtime.)
-    B, T, Fn = conv.shape
+def pool_head(H, masks, W_out, b_out, want_cache=False):
+    """The head both encoders share (Zeng15 §3.3): piecewise max-pool
+    of H (B,T,F) over the three head/tail segments → tanh → linear
+    softmax, in float64 for numerically stable probabilities. Returns
+    probs (B, N_REL); with want_cache also {"arg", "g", "masks"} for
+    backward (the argmax is only taken then).
+
+    One contiguous (B,T,F) temp per segment: a single (B,3,T,F) masked
+    tensor upcast to float64 costs ~400MB/batch and dominated the
+    scorer's runtime."""
+    B, _, Fn = H.shape
     neg = np.float32(_NEG)
-    pooled = np.empty((B, 3, Fn), dtype=np.float32)
+    pooled = np.empty((B, 3, Fn), dtype=H.dtype)
     arg = np.empty((B, 3, Fn), dtype=np.int64) if want_cache else None
     for s in range(3):
         off = np.where(masks[:, s, :], np.float32(0), neg)[:, :, None]
-        tmp = conv + off                              # (B,T,F) f32
+        tmp = H + off                                 # (B,T,F)
         if want_cache:
             a = tmp.argmax(axis=1)                    # (B,F)
             arg[:, s, :] = a
@@ -134,18 +162,29 @@ def forward(p, ids, heads, tails, lens, want_cache=False):
                 tmp, a[:, None, :], axis=1)[:, 0, :]
         else:
             pooled[:, s, :] = tmp.max(axis=1)
-    pooled = np.where(pooled <= neg / 2, np.float32(0), pooled)
+    pooled = np.where(pooled <= neg / 2, pooled.dtype.type(0), pooled)
     g = np.tanh(pooled.reshape(B, -1))                # (B,3F)
-    # softmax in float64 for numerically stable probabilities
-    logits = (g @ p["W_out"] + p["b_out"]).astype(np.float64)
+    logits = (g @ W_out + b_out).astype(np.float64)
     z = logits - logits.max(axis=1, keepdims=True)
     ez = np.exp(z)
     probs = ez / ez.sum(axis=1, keepdims=True)
     if not want_cache:
         return probs
-    return probs, {"X": X, "r1": r1, "r2": r2, "cols": cols, "arg": arg,
-                   "pooled": pooled, "g": g, "ids": ids, "masks": masks,
-                   "valid": valid}
+    return probs, {"arg": arg, "g": g, "masks": masks}
+
+
+def forward(p, ids, heads, tails, lens, want_cache=False):
+    """Returns softmax probabilities (B, N_REL); with want_cache, also
+    the intermediates needed for backward."""
+    X, cache = _embed(p, ids, heads, tails, lens)
+    cols = _im2col(X)                                 # (B,T,COL)
+    conv = cols @ p["W_conv"] + p["b_conv"]           # (B,T,F) float32
+    masks = _segment_masks(ids.shape[1], heads, tails, lens)
+    out = pool_head(conv, masks, p["W_out"], p["b_out"], want_cache)
+    if not want_cache:
+        return out
+    probs, head = out
+    return probs, {**cache, **head, "cols": cols}
 
 
 def backward(p, cache, probs, labels):
@@ -181,15 +220,7 @@ def backward(p, cache, probs, labels):
     for k in range(spec.CONV_WINDOW):
         dXp[:, k:k + T, :] += dcols[:, :, k, :]
     dX = dXp[:, pad:pad + T, :] * cache["valid"][:, :, None]
-    dE_word = np.zeros_like(p["E_word"])
-    np.add.at(dE_word, cache["ids"], dX[:, :, :spec.EMB_DIM])
-    dE_word[0] = 0.0
-    dE_p1 = np.zeros_like(p["E_p1"])
-    np.add.at(dE_p1, cache["r1"],
-              dX[:, :, spec.EMB_DIM:spec.EMB_DIM + spec.POS_DIM])
-    dE_p2 = np.zeros_like(p["E_p2"])
-    np.add.at(dE_p2, cache["r2"], dX[:, :, spec.EMB_DIM + spec.POS_DIM:])
-    grads.update({"E_word": dE_word, "E_p1": dE_p1, "E_p2": dE_p2})
+    grads.update(_embed_grads(p, cache, dX))
     return grads
 
 
@@ -251,10 +282,7 @@ def forward_infer(t: dict, ids, heads, tails, lens) -> np.ndarray:
     linear algebra, reassociated)."""
     B, T = ids.shape
     idx = np.arange(T, dtype=np.int32)[None, :]
-    r1 = np.clip(idx - heads[:, None], -spec.POS_MAX,
-                 spec.POS_MAX) + spec.POS_MAX
-    r2 = np.clip(idx - tails[:, None], -spec.POS_MAX,
-                 spec.POS_MAX) + spec.POS_MAX
+    r1, r2 = _rel_positions(T, heads, tails)
     pad_w = (spec.CONV_WINDOW - 1) // 2
     # word sentinel is the <pad> id 0 (zero embedding ⇒ zero table row)
     ids_p = np.pad(ids, ((0, 0), (pad_w, pad_w)))
@@ -276,44 +304,25 @@ def forward_infer(t: dict, ids, heads, tails, lens) -> np.ndarray:
         conv += t["TP1"][k][i1]
         conv += t["TP2"][k][i2]
     masks = _segment_masks(T, heads, tails, lens)
-    neg = np.float32(_NEG)
-    pooled = np.empty((B, 3, spec.N_FILTERS), dtype=np.float32)
-    for s in range(3):
-        off = np.where(masks[:, s, :], np.float32(0), neg)[:, :, None]
-        pooled[:, s, :] = (conv + off).max(axis=1)
-    pooled = np.where(pooled <= neg / 2, np.float32(0), pooled)
-    g = np.tanh(pooled.reshape(B, -1))
-    logits = (g @ t["W_out"] + t["b_out"]).astype(np.float64)
-    z = logits - logits.max(axis=1, keepdims=True)
-    ez = np.exp(z)
-    return ez / ez.sum(axis=1, keepdims=True)
+    return pool_head(conv, masks, t["W_out"], t["b_out"])
 
 
-def predict(p, token_ids, heads, tails,
-            batch: int = 1024) -> tuple[np.ndarray, np.ndarray]:
-    """Inference entry for the scoring UDF: returns (pred_label[B],
-    prob_of_pred[B]). Table-driven, processed in sub-batches sized to
-    keep the (B,T,F) buffers cache-friendly."""
+def predict(p, token_ids, heads, tails, batch: int = 1024) -> np.ndarray:
+    """Softmax probabilities (B, N_REL) for raw token-id lists.
+    Table-driven, processed in sub-batches sized to keep the (B,T,F)
+    buffers cache-friendly."""
     t = infer_tables(p)
     n = len(token_ids)
-    lab = np.empty(n, dtype=np.int64)
-    pr = np.empty(n, dtype=np.float64)
+    probs = np.empty((n, N_REL), dtype=np.float64)
     for s in range(0, n, batch):
         sl = slice(s, min(s + batch, n))
         ids, h, tt, lens = pad_batch(token_ids[sl], heads[sl], tails[sl])
-        probs = forward_infer(t, ids, h, tt, lens)
-        lab[sl] = probs.argmax(axis=1)
-        pr[sl] = probs[np.arange(len(probs)), lab[sl]]
-    return lab, pr
+        probs[sl] = forward_infer(t, ids, h, tt, lens)
+    return probs
 
 
 def save_params(path: str, p: dict[str, np.ndarray]) -> None:
     np.savez_compressed(path, **p)
-
-
-def load_params(path: str) -> dict[str, np.ndarray]:
-    with np.load(path) as z:
-        return {k: z[k] for k in z.files}
 
 
 def load_default_params() -> dict[str, np.ndarray]:

@@ -5,15 +5,17 @@ R-BERT line `P:WuHe19`, reduced to what the sandbox can train:
 single block, single head, no pretraining — torch is not installed,
 so forward AND backward are plain numpy, like kg/model.py).
 
-Input features are IDENTICAL to the PCNN (word embedding ⊕ two
-relative-position embeddings, kg/model.py:_embed), so the two
-encoders are drop-in alternatives behind the same scoring UDF:
+The embedding init, the input features (word embedding ⊕ two
+relative-position embeddings), the pooling head and the embedding
+gradient are kg/model.py's own (init_embeddings, _embed, pool_head,
+_embed_grads), so the two encoders are drop-in alternatives behind
+the same scoring UDF:
 
     X (B,T,60) → W_in → H0 (B,T,D)
     H1 = LayerNorm(H0 + SelfAttn(H0) @ W_ao)      # residual + LN
     H2 = LayerNorm(H1 + FFN(H1))                  # residual + LN
     piecewise max-pool over the 3 head/tail segments (Zeng15 §3.3,
-    shared with the PCNN head) → tanh → linear softmax
+    model.pool_head) → tanh → linear softmax
 
 Attention masks PAD keys (every query may only attend to real
 tokens); pooling masks already exclude PAD queries from the loss
@@ -26,10 +28,10 @@ from __future__ import annotations
 import numpy as np
 
 from kg import spec
-from kg.model import _embed, _segment_masks, pad_batch
+from kg.model import (
+    IN_DIM, N_REL, _embed, _embed_grads, _segment_masks, glorot,
+    init_embeddings, pad_batch, params_from_bytes, pool_head)
 
-N_REL = len(spec.RELATIONS)
-IN_DIM = spec.EMB_DIM + 2 * spec.POS_DIM
 D_MODEL = 64
 D_FF = 128
 _NEG = np.float32(-1e30)
@@ -39,38 +41,25 @@ _LN_EPS = 1e-5
 def init_params(seed: int = spec.MODEL_SEED, d_model: int = D_MODEL,
                 d_ff: int = D_FF) -> dict[str, np.ndarray]:
     rng = np.random.default_rng(seed + 1)  # distinct stream from PCNN
-    vocab_size = len(spec.vocabulary())
-
-    def glorot(*shape):
-        lim = np.sqrt(6.0 / sum(shape))
-        return rng.uniform(-lim, lim, size=shape).astype(np.float32)
-
-    n_pos = 2 * spec.POS_MAX + 1
-    p = {
-        "E_word": (0.1 * rng.standard_normal((vocab_size, spec.EMB_DIM))
-                   ).astype(np.float32),
-        "E_p1": (0.1 * rng.standard_normal((n_pos, spec.POS_DIM))
-                 ).astype(np.float32),
-        "E_p2": (0.1 * rng.standard_normal((n_pos, spec.POS_DIM))
-                 ).astype(np.float32),
-        "W_in": glorot(IN_DIM, d_model),
+    p = init_embeddings(rng)
+    p.update({
+        "W_in": glorot(rng, IN_DIM, d_model),
         "b_in": np.zeros(d_model, dtype=np.float32),
-        "Wq": glorot(d_model, d_model),
-        "Wk": glorot(d_model, d_model),
-        "Wv": glorot(d_model, d_model),
-        "Wo": glorot(d_model, d_model),
+        "Wq": glorot(rng, d_model, d_model),
+        "Wk": glorot(rng, d_model, d_model),
+        "Wv": glorot(rng, d_model, d_model),
+        "Wo": glorot(rng, d_model, d_model),
         "g1": np.ones(d_model, dtype=np.float32),
         "be1": np.zeros(d_model, dtype=np.float32),
-        "W1": glorot(d_model, d_ff),
+        "W1": glorot(rng, d_model, d_ff),
         "b1": np.zeros(d_ff, dtype=np.float32),
-        "W2": glorot(d_ff, d_model),
+        "W2": glorot(rng, d_ff, d_model),
         "b2": np.zeros(d_model, dtype=np.float32),
         "g2": np.ones(d_model, dtype=np.float32),
         "be2": np.zeros(d_model, dtype=np.float32),
-        "W_out": glorot(3 * d_model, N_REL),
+        "W_out": glorot(rng, 3 * d_model, N_REL),
         "b_out": np.zeros(N_REL, dtype=np.float32),
-    }
-    p["E_word"][0] = 0.0  # <pad> pinned to zero
+    })
     return p
 
 
@@ -96,10 +85,9 @@ def _layernorm_backward(dy, gamma, cache):
 def forward(p, ids, heads, tails, lens, want_cache=False):
     """Softmax probabilities (B, N_REL); with want_cache also the
     intermediates for backward."""
-    X, r1, r2 = _embed(p, ids, heads, tails)
+    X, emb = _embed(p, ids, heads, tails, lens)
     B, T, _ = X.shape
-    valid = (np.arange(T)[None, :] < lens[:, None])
-    X = X * valid[:, :, None]
+    valid = emb["valid"]
     H0 = X @ p["W_in"] + p["b_in"]                      # (B,T,D)
     D = H0.shape[-1]
     Q, K, V = H0 @ p["Wq"], H0 @ p["Wk"], H0 @ p["Wv"]
@@ -117,27 +105,13 @@ def forward(p, ids, heads, tails, lens, want_cache=False):
     FF = R @ p["W2"] + p["b2"]
     H2, ln2 = _layernorm(H1 + FF, p["g2"], p["be2"])
     masks = _segment_masks(T, heads, tails, lens)       # (B,3,T)
-    pooled = np.empty((B, 3, D), dtype=H2.dtype)
-    arg = np.empty((B, 3, D), dtype=np.int64)
-    for s in range(3):
-        off = np.where(masks[:, s, :], np.float32(0), _NEG)[:, :, None]
-        tmp = H2 + off
-        a = tmp.argmax(axis=1)
-        arg[:, s, :] = a
-        pooled[:, s, :] = np.take_along_axis(tmp, a[:, None, :],
-                                             axis=1)[:, 0, :]
-    pooled = np.where(pooled <= _NEG / 2, pooled.dtype.type(0), pooled)
-    g = np.tanh(pooled.reshape(B, -1))
-    logits = (g @ p["W_out"] + p["b_out"]).astype(np.float64)
-    z = logits - logits.max(axis=1, keepdims=True)
-    ez = np.exp(z)
-    probs = ez / ez.sum(axis=1, keepdims=True)
+    out = pool_head(H2, masks, p["W_out"], p["b_out"], want_cache)
     if not want_cache:
-        return probs
-    return probs, {"X": X, "r1": r1, "r2": r2, "valid": valid, "ids": ids,
-                   "H0": H0, "Q": Q, "K": K, "V": V, "A": A, "Z": Z,
-                   "ln1": ln1, "H1": H1, "U": U, "R": R, "ln2": ln2,
-                   "masks": masks, "arg": arg, "pooled": pooled, "g": g}
+        return out
+    probs, head = out
+    return probs, {**emb, **head, "H0": H0, "Q": Q, "K": K, "V": V,
+                   "A": A, "Z": Z, "ln1": ln1, "H1": H1, "U": U, "R": R,
+                   "ln2": ln2}
 
 
 def backward(p, cache, probs, labels):
@@ -195,24 +169,14 @@ def backward(p, cache, probs, labels):
     grads["W_in"] = cache["X"].reshape(-1, IN_DIM).T @ dH0.reshape(-1, D)
     grads["b_in"] = dH0.sum(axis=(0, 1))
     dX = (dH0 @ p["W_in"].T) * cache["valid"][:, :, None]
-    dE_word = np.zeros_like(p["E_word"])
-    np.add.at(dE_word, cache["ids"], dX[:, :, :spec.EMB_DIM])
-    dE_word[0] = 0.0
-    dE_p1 = np.zeros_like(p["E_p1"])
-    np.add.at(dE_p1, cache["r1"],
-              dX[:, :, spec.EMB_DIM:spec.EMB_DIM + spec.POS_DIM])
-    dE_p2 = np.zeros_like(p["E_p2"])
-    np.add.at(dE_p2, cache["r2"], dX[:, :, spec.EMB_DIM + spec.POS_DIM:])
-    grads.update({"E_word": dE_word, "E_p1": dE_p1, "E_p2": dE_p2})
+    grads.update(_embed_grads(p, cache, dX))
     return {k: v.astype(dt) for k, v in grads.items()}
 
 
-def predict(p, token_ids, heads, tails):
-    """Same contract as kg.model.predict: (labels[B], probs[B])."""
+def predict(p, token_ids, heads, tails) -> np.ndarray:
+    """Same contract as kg.model.predict: probabilities (B, N_REL)."""
     ids, h, t, lens = pad_batch(token_ids, heads, tails)
-    probs = forward(p, ids, h, t, lens)
-    lab = probs.argmax(axis=1)
-    return lab, probs[np.arange(len(lab)), lab]
+    return forward(p, ids, h, t, lens)
 
 
 def is_attn_params(p: dict) -> bool:
@@ -222,8 +186,6 @@ def is_attn_params(p: dict) -> bool:
 
 def load_default_params() -> dict[str, np.ndarray]:
     from importlib import resources
-
-    from kg.model import params_from_bytes
 
     data = resources.files("kg").joinpath("weights_attn.npz").read_bytes()
     return params_from_bytes(data)

@@ -102,14 +102,3 @@ ADJACENCY = T.StructType([
     ]))),
     T.StructField("out_degree", T.IntegerType()),
 ])
-
-# T10 — checkpoint manifest (E2)
-MANIFEST = T.StructType([
-    T.StructField("stage", T.StringType()),
-    T.StructField("partition_id", T.IntegerType()),
-    T.StructField("input_rows", T.LongType()),
-    T.StructField("output_rows", T.LongType()),
-    T.StructField("checksum", T.StringType()),
-    T.StructField("committed_at", T.TimestampType()),
-    T.StructField("snapshot_id", T.StringType()),
-])

@@ -4,7 +4,8 @@
 Distant-supervision semantics: all instances sharing an entity pair
 form a bag; the bag's relation is scored by attention-weighting the
 instances instead of trusting any single sentence. This
-implementation runs at inference over the frozen PCNN: per-relation
+implementation runs at inference over either frozen encoder (the
+scoring UDF's dispatch, kg.stages.score.predict_probs): per-relation
 attention weights α_ik = softmax_i(logit_ik), bag logit
 L_k = Σ_i α_ik · logit_ik, prediction = softmax(L). (Lin16 learns the
 attention query jointly; with a frozen instance model the instance
@@ -12,10 +13,11 @@ logits themselves are the natural query — the standard
 inference-time reduction.)
 
 Dataflow: ONE fused mapInPandas emits per-instance logits (7 floats —
-far narrower than the 384-dim pooled features), then a single
-groupBy(head, tail) with applyInPandas runs the numpy attention per
-bag. Bags are naturally small; the groupBy shuffles only
-(entity-pair, logits) rows.
+far narrower than the pooled features) for the intra-turn pairs of
+kg.stages.extract.intra_turn_pairs, then one exchange on the entity
+pair and a streaming pass (kg.stages.grouped.stream_groups) run the
+numpy attention per bag. Bags are naturally small; the exchange
+moves only (entity-pair, logits) rows.
 """
 
 from __future__ import annotations
@@ -24,7 +26,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from kg import model, spec
+from kg import spec
 
 _LOGIT_SCHEMA = ("conv_id string, turn_idx int, head_norm string, "
                  "tail_norm string, head_entity string, "
@@ -37,8 +39,8 @@ BAG_SCHEMA = ("head_norm string, tail_norm string, head_entity string, "
 
 def _instance_logits(transcripts: DataFrame, weights_bc) -> DataFrame:
     def batches(it):
-        from kg import nlp
-        from kg.stages.score import _unpack_once
+        from kg.stages.extract import intra_turn_pairs
+        from kg.stages.score import _unpack_once, predict_probs
 
         p = None
         cols = ["conv_id", "turn_idx", "head_norm", "tail_norm",
@@ -46,31 +48,19 @@ def _instance_logits(transcripts: DataFrame, weights_bc) -> DataFrame:
         for pdf in it:
             if p is None:
                 p = _unpack_once(weights_bc)
-            t = model.infer_tables(p)
-            rows = []
-            for conv_id, turn_idx, text in zip(
-                    pdf["conv_id"].to_numpy(), pdf["turn_idx"].to_numpy(),
-                    pdf["text"].to_numpy()):
-                toks = spec.tokenize(text or "")
-                mens = nlp.find_mentions(toks)
-                if len(mens) < 2:
-                    continue
-                for pr in nlp.pair_instances(toks, mens):
-                    rows.append((conv_id, int(turn_idx), pr))
+            # XT_PAIR_COLS tuples: conv_id, turn_idx 0-1, norms 4-5,
+            # token_ids, head_pos, tail_pos 8-10, canonicals 11-12
+            rows = intra_turn_pairs(pdf)
             if not rows:
                 yield pd.DataFrame(columns=cols)
                 continue
-            ids, h, tt, lens = model.pad_batch(
-                [r[2]["token_ids"] for r in rows],
-                [r[2]["head_pos"] for r in rows],
-                [r[2]["tail_pos"] for r in rows])
-            probs = model.forward_infer(t, ids, h, tt, lens)
+            probs = predict_probs(p, [r[8] for r in rows],
+                                  [r[9] for r in rows],
+                                  [r[10] for r in rows])
             logits = np.log(probs + 1e-12).astype(np.float32)
             yield pd.DataFrame(
-                [(cid, ti, pr["head_norm"], pr["tail_norm"],
-                  pr["head_canonical"], pr["tail_canonical"],
-                  logits[i].tolist())
-                 for i, (cid, ti, pr) in enumerate(rows)], columns=cols)
+                [(r[0], r[1], r[4], r[5], r[11], r[12], lg.tolist())
+                 for r, lg in zip(rows, logits)], columns=cols)
 
     return (transcripts.select("conv_id", "turn_idx", "text")
             .mapInPandas(batches, schema=_LOGIT_SCHEMA))
@@ -106,12 +96,8 @@ def score_bags(transcripts: DataFrame, weights_bc,
         return (key[0], key[1], meta[0], meta[1],
                 spec.RELATIONS[k], float(probs[k]), len(logits))
 
-    # Streaming group-by (r4, same rewrite as
-    # extract.cross_turn_instances, via the shared
-    # kg.stages.grouped.stream_groups machine): bags are naturally
-    # TINY (1–5 instances), so applyInPandas paid one pandas frame
-    # per bag — per-group overhead dominated. Same exchange,
-    # boundaries detected in-stream.
+    # bags are TINY (1–5 instances): group boundaries are detected
+    # in-stream, with no pandas frame per bag
     def close(key, items):
         meta = (items[0][0], items[0][1])
         logits = [np.asarray(x[2], dtype=np.float32) for x in items]

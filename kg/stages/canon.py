@@ -322,38 +322,30 @@ def near_duplicate_edges(norms: DataFrame,
     return edges
 
 
+#: SimHash signature width: md5_60's first 15 hex digits of md5(word)
+SIMHASH_BITS = 60
+
+
 def simhash64(docs: DataFrame, text_col: str = "text",
-              id_col: str = "doc_id",
-              word_hash: str = "xxhash64") -> DataFrame:
+              id_col: str = "doc_id") -> DataFrame:
     """Word-feature SimHash (Charikar 2002): per-word hash JVM-side,
     the per-bit ±1 majority vote as one vectorized numpy pass per
     Arrow batch. → (id, simhash).
 
-    ``word_hash='xxhash64'`` (default): 64-bit signatures — the
-    production fast path. ``word_hash='md5_60'``: 60-bit signatures
-    from the first 15 hex digits of md5(word) — same algorithm,
-    marginally slower hash, chosen so an EXTERNAL engine (the DuckDB
-    driver oracle) can recompute every signature bit-for-bit: md5 +
-    base conversion are portable, xxhash64 is Spark-private. The
-    majority vote is duplicate-sensitive (a word's hash votes once
-    per occurrence) in both variants."""
-    if word_hash == "xxhash64":
-        n_bits = 64
-        hashes = F.transform(F.split(F.lower(text_col), " "),
-                             lambda w: F.xxhash64(w))
-    elif word_hash == "md5_60":
-        n_bits = 60
-        hashes = F.transform(
-            F.split(F.lower(text_col), " "),
-            lambda w: F.conv(F.substring(F.md5(w), 1, 15), 16, 10)
-                       .cast("long"))
-    else:
-        raise ValueError(f"unknown word_hash {word_hash!r}")
+    Signatures are ``SIMHASH_BITS`` = 60 wide, from the first 15 hex
+    digits of md5(word) (the md5_60 rule): md5 and base conversion are
+    portable, so an EXTERNAL engine (the DuckDB driver oracle) can
+    recompute every signature bit for bit. The majority vote is
+    duplicate-sensitive: a word's hash votes once per occurrence."""
+    hashes = F.transform(
+        F.split(F.lower(text_col), " "),
+        lambda w: F.conv(F.substring(F.md5(w), 1, 15), 16, 10)
+                   .cast("long"))
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # one vectorized pass per chunk (0/1 integer sums via
         # add.reduceat); chunked so the bit matrix stays ~32 MB
-        shifts = np.arange(n_bits, dtype=np.uint64)
+        shifts = np.arange(SIMHASH_BITS, dtype=np.uint64)
         max_feats = 64_000
         for pdf in it:
             if len(pdf) == 0:
@@ -382,11 +374,11 @@ def simhash64(docs: DataFrame, text_col: str = "text",
 def simhash_near_pairs(sims: DataFrame, id_col: str = "doc_id",
                        max_hamming: int = 3, n_blocks: int = 4,
                        block_cap: int = spec.BLOCK_CAP,
-                       obs=None, n_bits: int = 64) -> DataFrame:
+                       obs=None) -> DataFrame:
     """Near-duplicate pairs by SimHash Hamming distance ≤ d (Manku,
     Jain & Das Sarma, WWW 2007, single-permutation block variant):
-    split the 64-bit signature into ``n_blocks`` blocks — any pair
-    within Hamming distance ``max_hamming ≤ n_blocks − 1`` shares at
+    split the ``SIMHASH_BITS``-bit signature into ``n_blocks`` blocks —
+    any pair within Hamming distance ``max_hamming ≤ n_blocks − 1`` shares at
     least one INTACT block (pigeonhole), so candidates come from a
     block-value equi-join, never an all-pairs scan. The 8-byte
     signature rides the block shuffle, so verification
@@ -398,9 +390,9 @@ def simhash_near_pairs(sims: DataFrame, id_col: str = "doc_id",
     guarantee. Over-cap blocks are dropped — counted via ``obs`` (a
     ``pyspark.sql.Observation``) when supplied, same contract as
     :func:`candidate_pairs`. Returns (src, dst, hamming), src < dst.
-    ``n_bits`` must match the signature width (64 for the xxhash64
-    variant, 60 for md5_60) so blocks tile the signature exactly."""
-    width = n_bits // n_blocks
+    ``n_blocks`` must divide ``SIMHASH_BITS`` so blocks tile the
+    signature exactly."""
+    width = SIMHASH_BITS // n_blocks
     mask = (1 << width) - 1
     blocks = F.array(*[
         F.struct(F.lit(b).alias("blk"),

@@ -160,15 +160,3 @@ def run_checkpointed(spark: SparkSession, root: str, stage: str,
                      groups: int = 4) -> DataFrame:
     cp = StageCheckpoint(root, stage, snapshot_id, n_buckets)
     return cp.run(spark, input_df, fn, bucket_key, groups=groups)
-
-
-def manifest_df(spark: SparkSession, root: str, stage: str) -> DataFrame:
-    """The T10 view of a stage's manifest (for tests / reporting)."""
-    from kg import schemas
-
-    m = io.read_json(os.path.join(root, stage, MANIFEST)) or {"buckets": {}}
-    rows = [(stage, v["partition_id"], None, v["output_rows"],
-             v["checksum"], datetime.fromisoformat(v["committed_at"]),
-             m.get("snapshot_id"))
-            for v in m["buckets"].values()]
-    return spark.createDataFrame(rows, schema=schemas.MANIFEST)

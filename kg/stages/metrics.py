@@ -1,9 +1,9 @@
-"""E1 — stage metrics and lineage (SURVEY.md §2 E1).
+"""E1 — stage metrics (SURVEY.md §2 E1).
 
 Row counters ride the job itself via ``Observation`` (zero extra
-actions); per-partition lineage and order-insensitive checksums are
-one cheap aggregation each, recorded into the checkpoint manifest
-(T10) by kg.stages.checkpoint.
+actions). Per-bucket row counts and order-insensitive checksums are
+computed from the written files by kg.stages.checkpoint and recorded
+in its manifest.
 """
 
 from __future__ import annotations
@@ -16,20 +16,3 @@ def observed(df: DataFrame, stage: str) -> tuple[DataFrame, Observation]:
     the next action runs: ``obs.get["rows"]``."""
     obs = Observation(stage)
     return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
-
-
-def partition_histogram(df: DataFrame) -> DataFrame:
-    """Rows per physical partition — the skew diagnostic (E3 feeds on
-    this at the conv_id level; this is the task level)."""
-    return (df.groupBy(F.spark_partition_id().alias("partition_id"))
-              .agg(F.count("*").alias("rows"))
-              .orderBy("partition_id"))
-
-
-def table_checksum(df: DataFrame) -> str:
-    """Order-insensitive content checksum: sum of xxhash64 over all
-    columns. Used for resume-equivalence assertions (E2/A5)."""
-    row = df.select(
-        F.sum(F.xxhash64(*df.columns).cast("decimal(38,0)"))
-        .alias("c")).collect()[0]
-    return str(row["c"] if row["c"] is not None else 0)

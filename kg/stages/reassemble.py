@@ -1,4 +1,7 @@
-"""A2/A3 — conversation reassembly and sessionization (SURVEY.md §2 A).
+"""A2 — conversation reassembly (SURVEY.md §2 A).
+
+A3, bounded chunks per conversation, is the ``turn_idx // XT_CHUNK``
+grouping key of kg.stages.extract.cross_turn_prepared.
 
 The stable-turn-ordering invariant (BASELINE.json:15) is enforced here:
 ``sort_array`` over structs whose FIRST field is ``turn_idx`` gives a
@@ -27,22 +30,3 @@ def reassemble_conversations(transcripts: DataFrame) -> DataFrame:
         .agg(F.sort_array(F.collect_list(turn)).alias("turns"))
         .withColumn("n_turns", F.size("turns").cast("int"))
     )
-
-
-def sessionize(transcripts: DataFrame, window: int = 128,
-               overlap: int = 2) -> DataFrame:
-    """A3: bounded chunks of ≤ ``window`` turns per (conv_id, chunk),
-    with the previous ``overlap`` turns' text carried as context —
-    keeps any single task's state bounded even for the hot
-    conversation (10^12-turn posture, SURVEY.md §2 A3)."""
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("conv_id").orderBy("turn_idx")
-    df = transcripts.withColumn(
-        "chunk_id", F.floor(F.col("turn_idx") / window).cast("int"))
-    for i in range(1, overlap + 1):
-        df = df.withColumn(f"ctx_{i}", F.lag("text", i).over(w))
-    ctx = F.concat_ws(" ", *[F.col(f"ctx_{i}")
-                             for i in range(overlap, 0, -1)])
-    return (df.withColumn("context", ctx)
-              .drop(*[f"ctx_{i}" for i in range(1, overlap + 1)]))

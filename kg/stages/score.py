@@ -50,14 +50,21 @@ def _unpack_once(bc) -> dict:
     return p
 
 
-def _predict(p, token_ids, heads, tails):
+def predict_probs(p, token_ids, heads, tails) -> np.ndarray:
     """Encoder dispatch: the broadcast params decide whether the PCNN
     (lookup-table fast path) or the BERT-style self-attention encoder
-    (kg/model_attn.py) scores the batch — same (labels, probs)
-    contract, so the whole UDF/pipeline plumbing is shared."""
-    if model_attn.is_attn_params(p):
-        return model_attn.predict(p, token_ids, heads, tails)
-    return model.predict(p, token_ids, heads, tails)
+    (kg/model_attn.py) scores the batch — same (B, N_REL) softmax
+    contract, so the whole UDF/pipeline plumbing (bags included) is
+    shared."""
+    enc = model_attn if model_attn.is_attn_params(p) else model
+    return enc.predict(p, token_ids, heads, tails)
+
+
+def _predict(p, token_ids, heads, tails):
+    """(pred_label[B], prob_of_pred[B]) of :func:`predict_probs`."""
+    probs = predict_probs(p, token_ids, heads, tails)
+    lab = probs.argmax(axis=1)
+    return lab, probs[np.arange(len(lab)), lab]
 
 
 def score_instances(

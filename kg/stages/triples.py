@@ -102,20 +102,3 @@ def build_adjacency(triples: DataFrame) -> DataFrame:
         F.sort_array(F.collect_list(F.struct("pred", "obj")))
          .alias("out_edges"))
         .withColumn("out_degree", F.size("out_edges").cast("int")))
-
-
-def degree_topk(triples: DataFrame, k: int = 20) -> DataFrame:
-    """D4: top-k subjects by out-degree (TakeOrderedAndProject — no
-    global sort materialization)."""
-    return (triples.groupBy("subj")
-            .agg(F.countDistinct("pred", "obj").alias("out_degree"))
-            .orderBy(F.desc("out_degree"), F.asc("subj"))
-            .limit(k))
-
-
-def predicate_support(triples: DataFrame) -> DataFrame:
-    """D4 variant: per-predicate triple counts + total support."""
-    return (triples.groupBy("pred").agg(
-        F.count("*").alias("n_triples"),
-        F.sum("n_support").alias("total_support"))
-        .orderBy(F.desc("n_triples"), F.asc("pred")))

@@ -1,8 +1,6 @@
-"""Offline trainer for the self-attention ("BERT-style") encoder
-(SURVEY.md §2 B4 alternative; same protocol as kg/train.py: runs ONCE
-on the driver, deterministic seeds, plain-numpy Adam, writes the
-pinned ``kg/weights_attn.npz``; the pipeline only ever loads +
-broadcasts the frozen weights).
+"""Trains the self-attention ("BERT-style") encoder with kg/train.py's
+loop (SURVEY.md §2 B4 alternative) and writes the pinned
+``kg/weights_attn.npz``.
 
 Usage: ``python -m kg.train_attn``.
 """
@@ -11,62 +9,13 @@ from __future__ import annotations
 
 import os
 
-import numpy as np
-
-from kg import datagen, model, model_attn, spec
-from kg.train import _adam_step
+from kg import model, model_attn, train
 
 WEIGHTS_PATH = os.path.join(os.path.dirname(__file__), "weights_attn.npz")
 
 
-def train(
-    epochs: int = 10, batch_size: int = 128, lr: float = 1e-3,
-    seed: int = spec.MODEL_SEED, n_per_template: int = 120,
-    n_per_cross: int = 120,
-) -> tuple[dict[str, np.ndarray], float]:
-    insts = datagen.training_instances(n_per_template=n_per_template)
-    if n_per_cross > 0:
-        # cross-turn-aware since round 3 — same data as kg.train
-        insts = insts + datagen.cross_training_instances(
-            n_per_template=n_per_cross)
-    rng = np.random.default_rng(seed)
-    order = rng.permutation(len(insts))
-    n_val = max(len(insts) // 10, 1)
-    val_idx, trn_idx = order[:n_val], order[n_val:]
-
-    def batch(idx):
-        ids, h, t, lens = model.pad_batch(
-            [insts[i][0] for i in idx], [insts[i][1] for i in idx],
-            [insts[i][2] for i in idx])
-        y = np.array([insts[i][3] for i in idx])
-        return ids, h, t, lens, y
-
-    p = model_attn.init_params(seed)
-    m = {k: np.zeros_like(v) for k, v in p.items()}
-    v = {k: np.zeros_like(x) for k, x in p.items()}
-    step = 0
-    for ep in range(epochs):
-        rng.shuffle(trn_idx)
-        losses = []
-        for s in range(0, len(trn_idx), batch_size):
-            ids, h, t, lens, y = batch(trn_idx[s:s + batch_size])
-            probs, cache = model_attn.forward(p, ids, h, t, lens,
-                                              want_cache=True)
-            losses.append(-np.log(probs[np.arange(len(y)), y]
-                                  + 1e-12).mean())
-            grads = model_attn.backward(p, cache, probs, y)
-            step += 1
-            _adam_step(p, grads, m, v, step, lr=lr)
-        ids, h, t, lens, y = batch(val_idx)
-        acc = float((model_attn.forward(p, ids, h, t, lens)
-                     .argmax(1) == y).mean())
-        print(f"epoch {ep + 1}: loss={np.mean(losses):.4f} "
-              f"val_acc={acc:.4f}")
-    return p, acc
-
-
 def main() -> None:
-    p, acc = train()
+    p, acc = train.train(model_attn, epochs=10)
     model.save_params(WEIGHTS_PATH, p)
     print(f"saved {WEIGHTS_PATH} (val_acc={acc:.4f})")
 

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import itertools
+
 import pytest
 
 from kg.session import get_spark
@@ -30,3 +32,25 @@ def tiny_transcripts(spark):
     df = spark.createDataFrame(pdf, schema=schemas.TRANSCRIPTS).cache()
     df.count()
     return df, gold
+
+
+@pytest.fixture(scope="session")
+def count_jobs(spark):
+    """``count_jobs(fn)`` → (fn(), number of Spark jobs fn ran): the
+    call runs under a fresh job group, counted once the listener bus
+    has delivered every job-start event."""
+    sc = spark.sparkContext
+    seq = itertools.count()
+
+    def run(fn):
+        group = f"count-jobs-{next(seq)}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -51,10 +51,10 @@ def test_attn_batch_invariant():
     p = model_attn.load_default_params()
     short = list(np.random.default_rng(1).integers(1, 50, size=6))
     long = list(np.random.default_rng(2).integers(1, 50, size=40))
-    lab_a, prob_a = model_attn.predict(p, [short], [0], [2])
-    lab_b, prob_b = model_attn.predict(p, [short, long], [0, 0], [2, 5])
-    assert lab_a[0] == lab_b[0]
-    assert abs(float(prob_a[0]) - float(prob_b[0])) < 1e-5
+    prob_a = model_attn.predict(p, [short], [0], [2])
+    prob_b = model_attn.predict(p, [short, long], [0, 0], [2, 5])
+    assert prob_a[0].argmax() == prob_b[0].argmax()
+    assert np.abs(prob_a[0] - prob_b[0]).max() < 1e-5
 
 
 def test_attn_frozen_weights_accuracy():

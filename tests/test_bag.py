@@ -25,13 +25,16 @@ ROWS = [
 
 
 def test_bag_attention(spark):
+    """Both encoders behind the scoring UDF score bags (a loop, not
+    parametrize, so the test id stays the same)."""
     df = spark.createDataFrame(ROWS, schema=schemas.TRANSCRIPTS)
-    bc = score.broadcast_weights(spark)
-    out = {(r["head_entity"], r["rel"], r["tail_entity"]): r
-           for r in bag.score_bags(df, bc).collect()}
-    key = ("Ann Barard", "employed_by", "Acme Corp")
-    assert key in out
-    assert out[key]["bag_size"] == 4          # incl. the NA co-mention
-    assert out[key]["score"] >= 0.6
-    # the NA-only pair must not produce a bag relation
-    assert not any(h == "Boris Barben" for (h, _, _) in out)
+    for encoder in ("pcnn", "attn"):
+        bc = score.broadcast_weights(spark, encoder=encoder)
+        out = {(r["head_entity"], r["rel"], r["tail_entity"]): r
+               for r in bag.score_bags(df, bc).collect()}
+        key = ("Ann Barard", "employed_by", "Acme Corp")
+        assert key in out, encoder
+        assert out[key]["bag_size"] == 4      # incl. the NA co-mention
+        assert out[key]["score"] >= 0.6, encoder
+        # the NA-only pair must not produce a bag relation
+        assert not any(h == "Boris Barben" for (h, _, _) in out), encoder

@@ -123,12 +123,11 @@ def test_oracle_float_columns_are_rounded(duck):
 
 
 def test_simhash_word_identical_docs_share_bucket(spark):
-    """64-bit simhash: word-identical docs collide; docs over disjoint
+    """60-bit simhash: word-identical docs collide; docs over disjoint
     vocabularies do not. Regression: the per-bit ±1 vote sum must be
     SIGNED — a uint64 wrap made every deficit bit read 'positive'
-    and collapsed most docs into simhash -1. (Bucket histogram built
-    inline from canon.simhash64 — the simhash_buckets contract entry
-    was merged into simhash_near_dups in round 3.)"""
+    and collapsed most docs into the all-ones signature
+    (1 << 60) - 1."""
     from pyspark.sql import functions as F
 
     from kg.stages import canon
@@ -142,7 +141,7 @@ def test_simhash_word_identical_docs_share_bucket(spark):
            .collect())
     sizes = sorted(r["n_docs"] for r in out)
     assert sizes == [1, 2]
-    assert all(r["simhash"] != -1 for r in out)
+    assert all(r["simhash"] != (1 << 60) - 1 for r in out)
 
 
 def test_entry_smoke(spark):

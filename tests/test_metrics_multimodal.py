@@ -14,21 +14,6 @@ def test_observed_row_counter(spark):
     assert obs.get["rows"] == 100
 
 
-def test_partition_histogram(spark):
-    df = spark.range(1000).repartition(4)
-    hist = metrics.partition_histogram(df).collect()
-    assert sum(r["rows"] for r in hist) == 1000
-    assert len(hist) == 4
-
-
-def test_table_checksum_order_insensitive(spark):
-    a = spark.createDataFrame([(1, "x"), (2, "y"), (3, "z")], "i int, s string")
-    b = spark.createDataFrame([(3, "z"), (1, "x"), (2, "y")], "i int, s string")
-    assert metrics.table_checksum(a) == metrics.table_checksum(b)
-    c = spark.createDataFrame([(1, "x"), (2, "y"), (3, "w")], "i int, s string")
-    assert metrics.table_checksum(a) != metrics.table_checksum(c)
-
-
 def test_multimodal_stub_features(spark):
     df = spark.createDataFrame(
         [(1, bytearray(b"hello world")), (2, bytearray(b"")),

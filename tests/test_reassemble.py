@@ -8,7 +8,7 @@ from datetime import datetime
 from pyspark.sql import functions as F
 
 from kg import schemas
-from kg.stages.reassemble import reassemble_conversations, sessionize
+from kg.stages.reassemble import reassemble_conversations
 
 ROWS = [
     ("c1", 2, "user", "third turn", None, datetime(2024, 1, 1, 0, 0, 2)),
@@ -46,13 +46,3 @@ def test_reassemble_preserves_text_bytes(spark, tiny_transcripts):
                     F.col("t.text").alias("text")))
     assert original.exceptAll(back).isEmpty()
     assert back.exceptAll(original).isEmpty()
-
-
-def test_sessionize_chunks_and_context(spark):
-    rows = [("c1", i, "user", f"t{i}", None, datetime(2024, 1, 1))
-            for i in range(10)]
-    df = spark.createDataFrame(rows, schema=schemas.TRANSCRIPTS)
-    out = sessionize(df, window=4, overlap=2).orderBy("turn_idx").collect()
-    assert [r["chunk_id"] for r in out] == [0, 0, 0, 0, 1, 1, 1, 1, 2, 2]
-    assert out[0]["context"] == ""           # no history
-    assert out[5]["context"] == "t3 t4"      # crosses the chunk boundary

@@ -102,15 +102,14 @@ def test_pcnn_scores_batch_invariant():
     """A row's score must not depend on which batch it rides in
     (Arrow batch boundaries are an execution detail, not semantics)."""
     from kg import model
-    from kg.train import WEIGHTS_PATH
 
-    p = model.load_params(WEIGHTS_PATH)
+    p = model.load_default_params()
     short = [3, 4, 5, 6, 7]
     long = list(range(3, 40))
     alone = model.predict(p, [short], [0], [3])
     batched = model.predict(p, [short, long], [0, 0], [3, 3])
-    assert alone[0][0] == batched[0][0]
-    assert abs(alone[1][0] - batched[1][0]) < 1e-6
+    assert alone[0].argmax() == batched[0].argmax()
+    assert np.abs(alone[0] - batched[0]).max() < 1e-6
 
 
 @pytest.mark.parametrize("n", [1, 7, 40])

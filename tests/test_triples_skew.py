@@ -61,15 +61,6 @@ def test_adjacency_sorted(spark):
     assert adj["A"]["out_edges"][0]["obj"] == "T"
 
 
-def test_degree_topk_and_predicate_support(spark):
-    t8 = triples.dedup_aggregate(_raw(spark))
-    top = triples.degree_topk(t8, k=1).collect()
-    assert len(top) == 1 and top[0]["subj"] in ("A", "B")
-    ps = {r["pred"]: r["n_triples"]
-          for r in triples.predicate_support(t8).collect()}
-    assert ps == {"uses": 1, "part_of": 1}
-
-
 def test_salted_count_equals_plain(spark, tiny_transcripts):
     """E3 two-phase salted aggregation ≡ plain groupBy count —
     the semantic equivalence that lets us salt hot keys freely."""
