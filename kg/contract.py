@@ -877,7 +877,7 @@ def udaf_confidence_merge(spark, sf):
     # explicit exchange: pandas UDAFs have no partial agg, so the
     # post-shuffle stage is pure Python CPU and AQE's bytes-based
     # coalescing would fold it to one task (see
-    # triples.dedup_aggregate_noisy_or / skew.cpu_stage_partitions)
+    # skew.cpu_stage_partitions)
     return (li.repartition(cpu_stage_partitions(li), "l_orderkey")
             .groupBy("l_orderkey")
             .agg(F.floor(noisy_or_udaf()("l_discount") * 10000 + 0.5)
@@ -1205,7 +1205,7 @@ def simhash_near_dups(spark, sf):
     Hamming — an EXACT equivalence, not probabilistic: 4 blocks cover
     d ≤ 3 by pigeonhole, so block-join candidates = all-pairs
     candidates whenever no block bucket exceeds the cap (none does at
-    sf0.01; drops are observable via canon.observe_dropped)."""
+    sf0.01; drops are observable via canon.capped_blocks)."""
     from kg.stages import canon
 
     sims = canon.simhash64(_t(spark, sf, "documents"))
@@ -1476,12 +1476,11 @@ def corpus_sample_hash(spark, sf):
     salt re-draws the sample without touching the data. Fully
     JVM-side (md5 + conv), pushdown-friendly, embarrassingly
     parallel. Hash-matched against DuckDB computing the identical
-    md5-prefix rule."""
-    bucket = (F.conv(F.substring(
-        F.md5(F.concat(F.lit("s42:"), F.col("doc_id").cast("string"))),
-        1, 8), 16, 10).cast("long") % 10)
+    md5-prefix rule (corpus.sample_bucket)."""
+    from kg.stages import corpus
+
     return (_t(spark, sf, "documents")
-            .where(bucket == 0).select("doc_id", "text"))
+            .where(corpus.sample_bucket(10) == 0).select("doc_id", "text"))
 
 
 @q("token_pack_greedy", """
@@ -1508,19 +1507,13 @@ def token_pack_greedy(spark, sf):
     PARTITIONED BY shard: packing is embarrassingly parallel — no
     global sort, no single-partition window — which is the only shape
     that exists at 100 TB. Hash-matched against the identical
-    partitioned SUM OVER in DuckDB."""
-    from pyspark.sql import Window as W
+    partitioned SUM OVER in DuckDB. The window is corpus.pack, the
+    corpus pipeline's packing step."""
+    from kg.stages import corpus
 
-    w = (W.partitionBy("shard").orderBy("doc_id")
-         .rowsBetween(W.unboundedPreceding, -1))
     t = (_t(spark, sf, "documents")
-         .select("doc_id", (F.col("doc_id") % 8).alias("shard"),
-                 F.size(F.split("text", " ")).alias("n_tokens")))
-    cum = F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
-    return t.select(
-        "doc_id", "shard", "n_tokens",
-        F.floor(cum / 2048).cast("long").alias("pack_id"),
-        (cum % 2048).cast("long").alias("pack_offset"))
+         .select("doc_id", F.size(F.split("text", " ")).alias("n_tokens")))
+    return corpus.pack(t, n_shards=8, pack_ctx=2048)
 
 
 _CORPUS_STOP_SQL = "('the','a','of','to','and','in','is','was','for','on','at','by')"
@@ -1946,6 +1939,31 @@ _PR_IT_SQL = ("""{{out}} AS (
               .format(tel=repr(_PR_TELEPORT), damp=repr(_PR_DAMP)))
 
 
+def _supplier_part_graph(spark, sf, s_key, p_key):
+    """The symmetrized supplier↔part graph of pagerank_iter3 and
+    min_label_prop_iter3 → (p0, nodes, edges). ``p0`` is the distinct
+    (l_suppkey, l_partkey) pair table, localCheckpointed because it
+    feeds the edge list twice (the symmetrizing union), the node set
+    and the callers' decode tables, and a graph function's
+    materialization boundary hides the shared subtree from exchange
+    reuse. ``s_key`` / ``p_key`` map a key column to its long node id
+    (injective, disjoint key spaces). The node set comes from the two
+    key-space distincts off p0 instead of a distinct over the
+    symmetrized edge list — the same set, since every supplier and
+    every part appears on a symmetrized bipartite edge list."""
+    p0 = (_t(spark, sf, "lineitem").select("l_suppkey", "l_partkey")
+          .distinct().localCheckpoint(eager=False))
+    e0 = p0.select(s_key(F.col("l_suppkey")).alias("src"),
+                   p_key(F.col("l_partkey")).alias("dst"))
+    edges = e0.unionByName(e0.select(F.col("dst").alias("src"),
+                                     F.col("src").alias("dst")))
+    nodes = (p0.select(s_key(F.col("l_suppkey")).alias("node"))
+             .distinct()
+             .unionByName(p0.select(p_key(F.col("l_partkey"))
+                                    .alias("node")).distinct()))
+    return p0, nodes, edges
+
+
 @q("pagerank_iter3", """
 WITH e0 AS (SELECT DISTINCT 's' || CAST(l_suppkey AS VARCHAR) AS src,
                             'p' || CAST(l_partkey AS VARCHAR) AS dst
@@ -1968,42 +1986,25 @@ def pagerank_iter3(spark, sf):
     edges, 2.1k nodes at sf0.01; node ids prefixed 's'/'p' so the two
     key spaces cannot collide).
 
-    Plan at scale (r6): the edge list is pre-grouped once into per-src
+    Plan at scale: the edge list is pre-grouped once into per-src
     adjacency arrays (graph.pagerank); each iteration joins two
     O(nodes) tables and explodes the arrays map-side into the
     partial-agg sum — the heavy edge multiset never re-shuffles. N
     rides a broadcast 1-row cross join. Fixed unrolled iterations keep
-    the whole thing one declarative plan; a convergence-driven variant
-    would localCheckpoint every few iterations to cut lineage (the
-    same discipline kg/stages/canon.py uses for CC). Scores rounded to
-    6 decimals on both engines; sum-order ulp drift across 3
-    iterations is ~1e-12, far under the rounding grain.
+    the whole thing one declarative plan. Scores rounded to 6
+    decimals on both engines; sum-order ulp drift across 3 iterations
+    is ~1e-12, far under the rounding grain.
 
-    r6 key narrowing (guide §2.3): the two key spaces ride the whole
-    derivation and all iterations as LONGS (supplier 2k, part 2k+1 —
-    injective, so distinct-on-ints ≡ distinct-on-strings) and the 's'/
-    'p'-prefixed strings are built once on the O(nodes) OUTPUT —
-    12M×3 iterated string rows down to 210k string builds at sf1.0;
-    the distinct also now prunes the scan to two int columns."""
+    Key narrowing: the two key spaces ride the whole derivation and
+    all iterations as LONGS (supplier 2k, part 2k+1 — injective, so
+    distinct-on-ints ≡ distinct-on-strings; the graph comes from
+    :func:`_supplier_part_graph`) and the 's'/'p'-prefixed strings are
+    built once on the O(nodes) OUTPUT — 210k string builds at sf1.0
+    instead of 12M×3 iterated string rows."""
     from kg.stages import graph
 
-    li = _t(spark, sf, "lineitem")
-    # localCheckpoint: p0 feeds the edge list (twice, via the
-    # symmetrizing union) AND the node set below
-    p0 = (li.select("l_suppkey", "l_partkey").distinct()
-          .localCheckpoint(eager=False))
-    e0 = p0.select((F.col("l_suppkey") * 2).alias("src"),
-                   (F.col("l_partkey") * 2 + 1).alias("dst"))
-    edges = e0.unionByName(e0.select(F.col("dst").alias("src"),
-                                     F.col("src").alias("dst")))
-    # node set from the two key-space distincts (10k + 200k int rows
-    # off the checkpointed pair table) instead of a distinct over the
-    # 12M-row symmetrized edge list — same set: on a symmetrized
-    # bipartite edge list every supplier and every part appears
-    nodes = (p0.select((F.col("l_suppkey") * 2).alias("node"))
-             .distinct()
-             .unionByName(p0.select((F.col("l_partkey") * 2 + 1)
-                                    .alias("node")).distinct()))
+    _, nodes, edges = _supplier_part_graph(
+        spark, sf, lambda k: k * 2, lambda k: k * 2 + 1)
     pr = graph.pagerank(nodes, edges, iters=3)
     node_s = F.when(
         F.col("node") % 2 == 0,
@@ -2095,15 +2096,16 @@ def kmeans_update(spark, sf):
     iteration, keyed on (cluster, pos) so K×dim cells spread across
     the cluster instead of K hot groups. `+ 0` after rounding
     normalizes IEEE negative zero (a mean of ~0 can round to -0.0,
-    and -0.0 vs 0.0 hash differently despite comparing equal)."""
-    # keep_v (r6): the assignment pass already carries each vector —
-    # posexplode it directly instead of re-joining the embedding scan
-    assign = _kmeans_assignment(spark, sf, keep_v=True)
-    return (assign
-            .select("cluster", F.posexplode("v").alias("pos", "val"))
-            .groupBy("cluster", "pos")
-            .agg((F.round(F.avg("val"), 4) + F.lit(0.0))
-                 .alias("mean_val")))
+    and -0.0 vs 0.0 hash differently despite comparing equal). The
+    assignment keeps each vector (``keep_v``), so kmeans.update
+    posexplodes it directly instead of re-joining the embedding
+    scan."""
+    from kg.stages import kmeans
+
+    cents = kmeans.update(_kmeans_assignment(spark, sf, keep_v=True),
+                          round_to=4)
+    return cents.select("cluster", "pos",
+                        (F.col("val") + F.lit(0.0)).alias("mean_val"))
 
 
 def _lpa_enc(prefix_is_s: int, n):
@@ -2160,42 +2162,24 @@ def min_label_prop_iter3(spark, sf):
     (kg/stages/canon.py, Kiveris et al. 2014) iterates to fixpoint,
     certified here at a FIXED horizon so the per-round message
     semantics (not just the fixpoint) are hash-matched; a bounded run
-    is also the k-hop reachability aggregation. Per round: edges ⋈
-    labels → groupBy(dst) min → least with own label (map-side
-    partial min combines before the shuffle; string labels compare
-    bytewise identically in Spark and DuckDB). DuckDB replays the 3
-    unrolled rounds.
+    is also the k-hop reachability aggregation. Per round
+    (graph.min_label_round): adjacency ⋈ labels → groupBy(dst) min,
+    with each node's own label riding a self-loop (map-side partial
+    min combines before the shuffle). DuckDB replays the 3 unrolled
+    rounds as edges ⋈ labels → min → least with own label.
 
-    r6 key narrowing: labels propagate as LONGS under an
+    Key narrowing: labels propagate as LONGS under an
     order-isomorphic encoding of the 'p{n}'/'s{n}' lexicographic
     order (:func:`_lpa_enc` — min(enc) ≡ min(string) at every step,
-    so every intermediate round is unchanged), and the string surface
-    is rebuilt on the O(nodes) OUTPUT via a per-key-space decode
-    dictionary; with graph.py's r6 adjacency iteration the 12M-edge
-    multiset (sf1.0) is grouped once and never re-shuffled. Output
-    identical by construction (enc strictly monotone + injective in
-    the string order; verified row-identical vs the string-label run
-    at sf0.01/0.1/1.0)."""
+    so every intermediate round equals the string-label round), and
+    the string surface is rebuilt on the O(nodes) OUTPUT via a
+    per-key-space decode dictionary built off the shared pair table
+    of :func:`_supplier_part_graph`; the 12M-edge multiset (sf1.0) is
+    grouped once and never re-shuffled."""
     from kg.stages import graph
 
-    li = _t(spark, sf, "lineitem")
-    # localCheckpoint: p0 feeds BOTH the edge list and the decode
-    # dictionary, and the graph fn's internal materialization boundary
-    # hides the shared subtree from exchange reuse — without it the
-    # 6M-row distinct runs twice (measured 6.6 s → 4.8 s at sf1.0)
-    p0 = (li.select("l_suppkey", "l_partkey").distinct()
-          .localCheckpoint(eager=False))
-    e0 = p0.select(_lpa_enc(1, F.col("l_suppkey")).alias("src"),
-                   _lpa_enc(0, F.col("l_partkey")).alias("dst"))
-    edges = e0.unionByName(e0.select(F.col("dst").alias("src"),
-                                     F.col("src").alias("dst")))
-    # node set from the two key-space distincts off p0 (10k + 200k
-    # int rows) instead of a 12M-row distinct over the symmetrized
-    # edge list — same set on a symmetrized bipartite graph
-    nodes = (p0.select(_lpa_enc(1, F.col("l_suppkey")).alias("node"))
-             .distinct()
-             .unionByName(p0.select(_lpa_enc(0, F.col("l_partkey"))
-                                    .alias("node")).distinct()))
+    p0, nodes, edges = _supplier_part_graph(
+        spark, sf, lambda k: _lpa_enc(1, k), lambda k: _lpa_enc(0, k))
     lab = graph.min_label_propagation(nodes, edges, iters=3)
     dic = (p0.select(
         _lpa_enc(1, F.col("l_suppkey")).alias("e"),
@@ -2253,23 +2237,20 @@ def triangle_counts_parts(spark, sf):
     feasible self-join and an exploding one. DuckDB replays the same
     orientation (the tie-break reduces to deg<= because src < dst by
     construction) and closes wedges with EXISTS = the semi-join."""
-    from kg.stages import graph
+    from kg.stages import canon, graph
 
-    # r6 edge derivation: ONE groupBy(order) with collect_set (the
-    # per-order part dedup the former lp-distinct did) and the src<dst
-    # pair expansion IN-ARRAY off the sorted set — same distinct pairs
-    # as the lp self-join, with two fewer shuffles (no lp distinct, no
-    # join): 13.4 s → 2.5 s at 6M lineitems. Per-order part counts are
-    # single digits, so the in-array expansion is O(k²)-bounded tiny.
-    pair_expr = ("flatten(transform(ps, (x, i) -> "
-                 "transform(slice(ps, i + 2, size(ps)), "
-                 "y -> struct(x AS src, y AS dst))))")
+    # edge derivation: ONE groupBy(order) with collect_set (the
+    # per-order part dedup) and the src<dst pair expansion in-array
+    # off the sorted set (canon.block_pairs) — the same distinct pairs
+    # as the lp self-join of the oracle, with no lp distinct and no
+    # join. Per-order part counts are single digits, so the in-array
+    # expansion is O(k²)-bounded tiny.
     grouped = (_t(spark, sf, "lineitem")
                .groupBy(F.col("l_orderkey").alias("ok"))
                .agg(F.sort_array(F.collect_set("l_partkey"))
-                    .alias("ps")))
-    edges = (grouped.select(F.explode(F.expr(pair_expr)).alias("e"))
-             .select("e.src", "e.dst").distinct())
+                    .alias("ns")))
+    edges = (canon.block_pairs(grouped, "x AS src, y AS dst")
+             .select("p.src", "p.dst").distinct())
     return graph.triangle_counts(edges)
 
 

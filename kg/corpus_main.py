@@ -76,9 +76,7 @@ def main(argv: list[str] | None = None) -> None:
             "shard", "pack_id"),
         f"{args.output}{sep}corpus")
 
-    written = (spark.table(f"{args.output}{sep}corpus")
-               if io.is_iceberg(args.output)
-               else spark.read.parquet(f"{args.output}{sep}corpus"))
+    written = io.read_table(spark, f"{args.output}{sep}corpus")
     # windows counted by token COVERAGE per shard (ceil(tokens/ctx)),
     # not by start positions — a window a document merely spans into
     # is still a window the training loader must emit

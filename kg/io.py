@@ -25,26 +25,20 @@ def is_iceberg(identifier: str) -> bool:
     return "/" not in identifier and identifier.count(".") >= 2
 
 
-def read_table(spark: SparkSession, identifier: str,
-               snapshot_id: str | None = None) -> DataFrame:
+def read_table(spark: SparkSession, identifier: str) -> DataFrame:
+    """The current snapshot of an Iceberg table, or a Parquet path."""
     if is_iceberg(identifier):
-        r = spark.read
-        if snapshot_id:
-            r = r.option("snapshot-id", snapshot_id)  # Iceberg time travel
-        return r.table(identifier)
+        return spark.read.table(identifier)
     return spark.read.parquet(identifier)
 
 
-def write_table(df: DataFrame, identifier: str, mode: str = "overwrite",
-                partition_by: list[str] | None = None) -> None:
+def write_table(df: DataFrame, identifier: str) -> None:
+    """Replace the table: ``createOrReplace`` for Iceberg, overwrite
+    for a Parquet path."""
     if is_iceberg(identifier):
-        w = df.writeTo(identifier)
-        (w.createOrReplace() if mode == "overwrite" else w.append())
+        df.writeTo(identifier).createOrReplace()
         return
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(identifier)
+    df.write.mode("overwrite").parquet(identifier)
 
 
 def atomic_write_json(path: str, payload: dict) -> None:

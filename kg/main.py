@@ -88,9 +88,7 @@ def main(argv: list[str] | None = None) -> None:
         out["adjacency"].repartitionByRange(
             max(spark.sparkContext.defaultParallelism, 4), "subj"),
         f"{args.output}{sep}adjacency")
-    n = spark.read.parquet(f"{args.output}{sep}triples").count() \
-        if not io.is_iceberg(args.output) else \
-        spark.table(f"{args.output}{sep}triples").count()
+    n = io.read_table(spark, f"{args.output}{sep}triples").count()
     print(f"triples committed: {n}")
     spark.stop()
 

@@ -15,7 +15,6 @@ from functools import lru_cache
 
 from kg import spec
 
-_WORD_RE = re.compile(r"\w")
 _CAP_RE = re.compile(r"^[A-Z][a-zA-Z]*$")
 
 

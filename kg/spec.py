@@ -62,9 +62,6 @@ REL_TO_ID = {r: i for i, r in enumerate(RELATIONS)}
 
 #: Post-softmax acceptance threshold for non-NA predictions (B4).
 REL_THRESHOLD = 0.60
-#: Entity-link acceptance threshold (B5): below this, the mention stays
-#: unlinked and flows to the minhash/CC long-tail canonicalizer (C1–C4).
-TAU_LINK = 0.50
 #: Jaccard threshold for C2 pair verification.
 TAU_DUP = 0.60
 

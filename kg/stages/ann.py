@@ -130,11 +130,12 @@ def candidate_pairs(buckets: DataFrame, id_col: str = "vec_id",
     """Directed candidate pairs (q, c): ids sharing any (table, bucket),
     deduplicated across tables as bare 16-byte rows — the canon.py
     candidate shape, one groupBy shuffle + in-array expansion.
-    Over-cap buckets are dropped and, when ``obs`` (a
-    ``pyspark.sql.Observation``) is supplied, counted as
-    ``dropped_buckets`` / ``dropped_nodes`` after the first action.
+    Buckets come from :func:`canon.capped_blocks`: over-cap buckets
+    are dropped and counted into ``obs`` when supplied. The expansion
+    is this module's own: pairs are directed, and ``q_filter`` prunes
+    the query side inside it.
 
-    ``q_filter`` (r6): optional SQL boolean over the element variable
+    ``q_filter``: optional SQL boolean over the element variable
     ``x`` (e.g. ``"x < 50"``) restricting which ids act as QUERIES.
     Per-query top-k is independent of every other query, so when a
     caller only consumes a query subset, pushing its predicate into
@@ -147,11 +148,8 @@ def candidate_pairs(buckets: DataFrame, id_col: str = "vec_id",
         f"flatten(transform({qs}, x -> "
         "transform(filter(ns, y -> y != x), y -> "
         "struct(x AS q, y AS c))))")
-    blocks = (buckets.groupBy("table", "bucket")
-              .agg(F.collect_list(id_col).alias("ns"))
-              .where(F.size("ns") >= 2))
-    blocks = canon.observe_dropped(blocks, obs, bucket_cap)
-    blocks = blocks.where(F.size("ns") <= bucket_cap)
+    blocks = canon.capped_blocks(buckets, ["table", "bucket"], id_col,
+                                 bucket_cap, obs)
     return (blocks.select(F.explode(F.expr(pair_expr)).alias("p"))
             .select("p.q", "p.c")
             .dropDuplicates(["q", "c"]))

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import StructField, StructType
 
 from kg import spec
+from kg.stages import graph
 
 _MERSENNE = (1 << 61) - 1
 
@@ -79,29 +80,47 @@ def with_ngrams(df: DataFrame, norm_col: str, out_col: str) -> DataFrame:
         out_col, F.expr(_NGRAMS_SQL.format(p=padded, n=spec.CHAR_NGRAM)))
 
 
-def observe_dropped(blocks: DataFrame, obs, cap: int) -> DataFrame:
-    """E1 observability for every capped blocking path (minhash bands,
-    simhash blocks, ANN buckets — one definition, three call sites):
-    `dropped_buckets` = over-cap buckets, `dropped_nodes` = node SLOTS
-    inside them, summed across bands/blocks/tables — a node dropped in
-    k buckets counts k times, so this is an UPPER BOUND on the
-    distinct-node recall exposure, not a distinct count (computing
-    distinct ids here would cost an extra shuffle on the hot path).
-    No-op when ``obs`` is None. ``blocks`` must carry the ``ns``
-    collect_list column.
+def capped_blocks(rows: DataFrame, keys: list[str], member, cap: int,
+                  obs=None) -> DataFrame:
+    """The blocking rule of every capped LSH path (minhash bands,
+    simhash blocks, incremental touched buckets, ANN buckets): group
+    ``rows`` on ``keys`` into ``ns = collect_list(member)``, drop
+    blocks of fewer than 2 members, and drop blocks of more than
+    ``cap`` members. Returns (*keys, ns).
+
+    Drops are counted when ``obs`` (a ``pyspark.sql.Observation``) is
+    supplied: ``dropped_buckets`` = over-cap blocks, ``dropped_nodes``
+    = member SLOTS inside them, summed across bands/blocks/tables — a
+    node dropped in k blocks counts k times, so it is an UPPER BOUND
+    on the distinct-node recall exposure (a distinct count would cost
+    an extra shuffle on the hot path). Singletons are never counted.
 
     Caveat (measured, Spark 4.1): if the query's FINAL result is
     empty, AQE can prune the observed subtree and ``obs.get`` raises
     instead of returning zeros — read the metrics only after an
     action that produced rows, or wrap the read in try/except."""
-    if obs is None:
-        return blocks
-    return blocks.observe(
-        obs,
-        F.sum(F.when(F.size("ns") > cap, 1).otherwise(0))
-         .alias("dropped_buckets"),
-        F.sum(F.when(F.size("ns") > cap, F.size("ns"))
-              .otherwise(0)).alias("dropped_nodes"))
+    blocks = (rows.groupBy(*keys).agg(F.collect_list(member).alias("ns"))
+              .where(F.size("ns") >= 2))
+    if obs is not None:
+        over = F.size("ns") > cap
+        blocks = blocks.observe(
+            obs,
+            F.sum(F.when(over, 1).otherwise(0)).alias("dropped_buckets"),
+            F.sum(F.when(over, F.size("ns")).otherwise(0))
+             .alias("dropped_nodes"))
+    return blocks.where(F.size("ns") <= cap)
+
+
+def block_pairs(blocks: DataFrame, fields: str) -> DataFrame:
+    """The in-array pair expansion of a block table: for every
+    unordered member pair (x, y) of ``ns`` (x before y in the list),
+    one ``struct(<fields>)`` — ``fields`` is a SQL field list over
+    the lambda variables ``x`` and ``y`` — exploded into column
+    ``p``. Bounded by |ns|² per block, with no self-join."""
+    return blocks.select(F.explode(F.expr(
+        "flatten(transform(ns, (x, i) -> "
+        "transform(slice(ns, i + 2, size(ns)), "
+        f"y -> struct({fields}))))")).alias("p"))
 
 
 def node_features(norms: DataFrame, feature: str = "char",
@@ -221,35 +240,21 @@ def candidate_pairs(banded: DataFrame,
                     block_cap: int = spec.BLOCK_CAP,
                     obs=None) -> DataFrame:
     """C1c: nodes sharing an LSH bucket, as distinct bare (src, dst)
-    int64 ids with src < dst. Oversized buckets (super-common
-    surfaces) are dropped — and COUNTED when ``obs`` (a
-    ``pyspark.sql.Observation``) is supplied: after the first action,
-    ``obs.get`` reports ``dropped_buckets`` / ``dropped_nodes`` so
-    recall loss from hot buckets is observable, not silent (the E1
-    metrics discipline; round 2's collect_list rewrite lost this).
+    int64 ids with src < dst. Buckets come from :func:`capped_blocks`
+    on (band, bhash): over-cap buckets (super-common surfaces) are
+    dropped and counted into ``obs`` when supplied, so recall loss
+    from hot buckets is observable, not silent.
 
-    Ids only by design: a pair that collides in k bands is emitted k
-    times, and the dedup shuffle moves 16-byte rows. Feature arrays
-    attach AFTER dedup via a join against the per-node feature table
-    (round 1 carried both gram arrays through this dropDuplicates —
-    an array-wide shuffle of every duplicate pair).
-
-    One shuffle, not three: blocks materialize as collect_list(node)
-    per bucket (size-capped in the same aggregate), and the src<dst
-    pair expansion happens IN-ARRAY with higher-order functions —
-    bounded by block_cap² per bucket. The round-1 shape (bucket-size
-    aggregate + semi-join + self-join) reached the same pairs through
-    three shuffles of the banded fan-out."""
-    pair_expr = (
-        "flatten(transform(ns, (x, i) -> "
-        "transform(slice(ns, i + 2, size(ns)), "
-        "y -> struct(least(x, y) AS src, greatest(x, y) AS dst))))")
-    blocks = (banded.groupBy("band", "bhash")
-              .agg(F.collect_list("node").alias("ns"))
-              .where(F.size("ns") >= 2))
-    blocks = observe_dropped(blocks, obs, block_cap)
-    blocks = blocks.where(F.size("ns") <= block_cap)
-    return (blocks.select(F.explode(F.expr(pair_expr)).alias("p"))
+    One shuffle: the per-bucket ``collect_list(node)`` is the only
+    exchange before the id-pair dedup, and the src < dst expansion
+    happens in-array (:func:`block_pairs`). Ids only by design: a
+    pair that collides in k bands is emitted k times, so the dedup
+    shuffle moves 16-byte rows; feature arrays attach after the dedup
+    (:func:`verify_pairs`)."""
+    blocks = capped_blocks(banded, ["band", "bhash"], "node", block_cap,
+                           obs)
+    return (block_pairs(blocks,
+                        "least(x, y) AS src, greatest(x, y) AS dst")
             .select("p.src", "p.dst")
             .where(F.col("src") != F.col("dst"))
             .dropDuplicates(["src", "dst"]))
@@ -387,11 +392,10 @@ def simhash_near_pairs(sims: DataFrame, id_col: str = "doc_id",
     Precision-oriented complement to the minhash path
     (:func:`near_duplicate_edges` is the recall workhorse): wider
     blocks ⇒ fewer false candidates but only a d ≤ n_blocks−1
-    guarantee. Over-cap blocks are dropped — counted via ``obs`` (a
-    ``pyspark.sql.Observation``) when supplied, same contract as
-    :func:`candidate_pairs`. Returns (src, dst, hamming), src < dst.
-    ``n_blocks`` must divide ``SIMHASH_BITS`` so blocks tile the
-    signature exactly."""
+    guarantee. Blocks come from :func:`capped_blocks`: over-cap blocks
+    are dropped and counted into ``obs`` when supplied. Returns
+    (src, dst, hamming), src < dst. ``n_blocks`` must divide
+    ``SIMHASH_BITS`` so blocks tile the signature exactly."""
     width = SIMHASH_BITS // n_blocks
     mask = (1 << width) - 1
     blocks = F.array(*[
@@ -402,17 +406,12 @@ def simhash_near_pairs(sims: DataFrame, id_col: str = "doc_id",
     banded = (sims.select(F.col(id_col).alias("id"), "simhash",
                           F.explode(blocks).alias("bb"))
               .select("id", "simhash", "bb.blk", "bb.bval"))
-    pair_expr = (
-        "flatten(transform(ns, (x, i) -> "
-        "transform(slice(ns, i + 2, size(ns)), y -> struct("
-        "least(x.id, y.id) AS src, greatest(x.id, y.id) AS dst, "
-        "bit_count(x.simhash ^ y.simhash) AS hamming))))")
-    grouped = (banded.groupBy("blk", "bval")
-               .agg(F.collect_list(F.struct("id", "simhash")).alias("ns"))
-               .where(F.size("ns") >= 2))
-    grouped = observe_dropped(grouped, obs, block_cap)
-    grouped = grouped.where(F.size("ns") <= block_cap)
-    return (grouped.select(F.explode(F.expr(pair_expr)).alias("p"))
+    grouped = capped_blocks(banded, ["blk", "bval"],
+                            F.struct("id", "simhash"), block_cap, obs)
+    return (block_pairs(grouped,
+                        "least(x.id, y.id) AS src, "
+                        "greatest(x.id, y.id) AS dst, "
+                        "bit_count(x.simhash ^ y.simhash) AS hamming")
             .select("p.src", "p.dst", "p.hamming")
             .where((F.col("hamming") <= max_hamming)
                    & (F.col("src") != F.col("dst")))
@@ -425,68 +424,51 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
 
     ``nodes``: (node) — every vertex, including singletons.
     ``edges``: (src, dst). Returns (node, component) with component =
-    min node id of the true component (deterministic).
+    min node id of the true component (deterministic). An edge
+    endpoint outside ``nodes`` gets a row once a label reaches it,
+    carrying the least label that reaches it, but never seeds a label
+    of its own (pinned in tests/test_canon.py).
 
-    Each iteration: every node proposes its current label to all
-    neighbors; labels = min(own, proposals). Converges in O(diameter)
-    iterations; entity-variant clusters are tiny, so this is 2–4
-    rounds in practice. localCheckpoint per round keeps the plan flat
-    (SURVEY.md §4).
+    Each round is :func:`graph.min_label_round` over the
+    :func:`graph.label_adjacency` of the symmetrized edges — the same
+    hash-min round as :func:`graph.min_label_propagation`, iterated to
+    a fixpoint: ONE join of two O(nodes) tables + ONE aggregate per
+    round, and the O(edges) list is grouped once, never re-shuffled.
+    Converges in O(diameter) rounds; entity-variant clusters are tiny,
+    so 2–4 rounds in practice. localCheckpoint per round keeps the
+    plan flat (SURVEY.md §4).
 
-    Round shape (the kg/stages/graph.py discipline): the symmetrized
-    edge multiset is grouped ONCE into per-src adjacency sets with a
-    self-loop folded in (collect_set dedups; the self-loop makes the
-    message aggregate itself compute min(own ∪ neighbors)), so each
-    round is ONE join of two O(nodes) tables + ONE aggregate, and the
-    O(edges) list is never re-shuffled. Convergence is read off an
-    exact decimal(38) aggregate of the checkpointed labels: labels are
-    monotonically non-increasing (every node's message set includes
-    itself), so (sum, count) unchanged across a round ⟺ no label
-    changed — a columnar scan of cached blocks, no join, no extra
-    lineage."""
-    self_e = nodes.select(F.col("node").alias("src"),
-                          F.col("node").alias("dst"))
-    adj = (edges.select("src", "dst")
-           .union(edges.select(F.col("dst").alias("src"),
-                               F.col("src").alias("dst")))
-           .union(self_e)
-           .groupBy("src").agg(F.collect_set("dst").alias("_dsts"))
-           # self-loop for every adjacency row — nodes get it via
-           # self_e; a malformed-input endpoint outside ``nodes``
-           # gets it here, keeping label monotonicity (and thereby
-           # the sum-based convergence test) valid on ANY input
-           .withColumn("_dsts", F.array_union(
-               "_dsts", F.array(F.col("src"))))
-           .localCheckpoint())
-    labels = nodes.select("node", F.col("node").alias("component"))
+    Convergence is read off an exact decimal(38) aggregate of the
+    checkpointed labels: labels never increase (a node's message set
+    includes its own label, and an outside endpoint only gains
+    senders), so (sum, count) unchanged across a round ⟺ no label
+    changed — a columnar scan of cached blocks, no join. Raises
+    RuntimeError after ``max_iter`` rounds without a fixpoint rather
+    than return stale labels."""
+    sym = edges.select("src", "dst").union(
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    adj = graph.label_adjacency(nodes, sym).localCheckpoint()
+    labels = nodes.select("node", F.col("node").alias("label"))
     labels = labels.localCheckpoint()
 
     def _sig(lab: DataFrame) -> tuple:
         r = lab.agg(
-            F.sum(F.col("component").cast("decimal(38,0)")).alias("s"),
+            F.sum(F.col("label").cast("decimal(38,0)")).alias("s"),
             F.count("*").alias("n")).first()
         return (r["s"], r["n"])
 
     prev = _sig(labels)
     for _ in range(max_iter):
-        labels = (adj.join(labels, adj.src == labels.node)
-                  .select(F.explode("_dsts").alias("node"), "component")
-                  .groupBy("node")
-                  .agg(F.min("component").alias("component"))
-                  .localCheckpoint())
+        labels = graph.min_label_round(adj, labels).localCheckpoint()
         cur = _sig(labels)
         if cur == prev:
             break
         prev = cur
     else:
-        # Silent truncation would return WRONG labels (stale
-        # components) and surface only as a downstream mismatch.
-        # Converged-early costs nothing, so the default is generous
-        # (64 ≥ any plausible entity-cluster diameter).
         raise RuntimeError(
             f"connected_components: no fixpoint after {max_iter} "
             "rounds (graph diameter exceeds max_iter); raise max_iter")
-    return labels
+    return labels.withColumnRenamed("label", "component")
 
 
 def _driver_probe(nodes: DataFrame, edges: DataFrame,

@@ -33,7 +33,7 @@ from kg.stages import canon
 
 __all__ = ["corpus_pipeline", "gopher_quality_cols",
            "drop_boilerplate_turns", "c4_page_stats",
-           "stratified_sample"]
+           "stratified_sample", "sample_bucket", "pack"]
 
 STOPWORDS = spec.STOPWORDS  # one shared definition, no drift
 
@@ -296,16 +296,13 @@ def corpus_pipeline(docs: DataFrame,
       doc_id (deterministic under any partitioning).
     - Near-dup dedup: minhash/LSH word-shingle edges at Jaccard ≥ τ →
       connected components over distinct norms → ONE survivor per
-      component: the member with the minimum doc_id (r4: was "the
-      norm whose xxhash64 is the component label", which is equally
-      deterministic but content-opaque — min doc_id is the rule a
-      user can predict, and the rule an external engine can replicate
-      for verification, since it never references the internal hash
-      ids).
-    - Sample: keep iff md5-prefix % ``sample_mod`` == 0 (skipped when
-      None — sampling is policy, not hygiene).
-    - Pack: per-shard (doc_id % n_shards) concat-then-chunk into
-      ``pack_ctx``-token windows in doc_id order.
+      component: the member with the minimum doc_id — a rule a user
+      can predict and an external engine can replicate, since it never
+      references the internal hash ids.
+    - Sample: keep iff :func:`sample_bucket` (``sample_mod``) == 0
+      (skipped when None — sampling is policy, not hygiene).
+    - Pack: :func:`pack` into ``n_shards`` shards of
+      ``pack_ctx``-token windows.
     - ``gopher=True`` additionally applies the Gopher/MassiveText
       character/layout battery (:func:`gopher_quality_cols`) in the
       same QC map stage — still zero extra shuffles."""
@@ -323,10 +320,10 @@ def corpus_pipeline(docs: DataFrame,
     # normalize equally with different n_tokens, and first() is
     # partitioning-dependent. min(struct) ties n_tokens to the
     # winning (minimum) doc_id deterministically.
-    # localCheckpoint, not persist (r4): the survivor table has TWO
+    # localCheckpoint, not persist: the survivor table has TWO
     # consumers on either side of the eager components probe (LSH
     # features before, the keep-join after). A persist must either
-    # leak for the session (ADVICE r3) or be released before the
+    # leak for the session or be released before the
     # keep-join materializes — paying the QC+groupBy scan twice.
     # localCheckpoint materializes once, truncates the lineage, and
     # its blocks are reclaimed when the DataFrame is GC'd, so neither
@@ -356,8 +353,8 @@ def corpus_pipeline(docs: DataFrame,
     # components_auto consumed feats/banded/edges EAGERLY (driver
     # union-find collect, or localCheckpoint on the distributed
     # branch), so comp no longer references them — release the LSH
-    # caches now instead of leaking them for the session (ADVICE r3;
-    # `exact` itself is a localCheckpoint, see above — nothing to
+    # caches now instead of leaking them for the session (`exact`
+    # itself is a localCheckpoint, see above — nothing to
     # release and nothing recomputes).
     for h in handles:
         h.unpersist()
@@ -372,17 +369,35 @@ def corpus_pipeline(docs: DataFrame,
                     F.col("m.n_tokens").alias("n_tokens")))
 
     if sample_mod is not None:
-        bucket = (F.conv(F.substring(
-            F.md5(F.concat(F.lit("s42:"),
-                           F.col("doc_id").cast("string"))),
-            1, 8), 16, 10).cast("long") % sample_mod)
-        keep = keep.where(bucket == 0)
+        keep = keep.where(sample_bucket(sample_mod) == 0)
+    return pack(keep, n_shards, pack_ctx)
 
+
+def sample_bucket(mod: int):
+    """The deterministic sample rule as a column over ``doc_id``:
+    int(md5('s42:' || doc_id)[:8], 16) % ``mod``; a sample keeps the
+    rows where it is 0. md5 and base conversion are portable, so the
+    sample is the same on every engine, run and partitioning (unlike
+    rand(seed)); the salt re-draws it without touching the data."""
+    return (F.conv(F.substring(
+        F.md5(F.concat(F.lit("s42:"), F.col("doc_id").cast("string"))),
+        1, 8), 16, 10).cast("long") % mod)
+
+
+def pack(docs: DataFrame, n_shards: int, pack_ctx: int) -> DataFrame:
+    """Sequence packing: (doc_id, n_tokens) → (doc_id, n_tokens,
+    shard, pack_id, pack_offset). Per shard (doc_id % ``n_shards``),
+    documents in doc_id order are laid head-to-tail into
+    ``pack_ctx``-token windows: pack_id is the window a document
+    STARTS in and pack_offset its start position there (documents may
+    span a boundary — concat-then-chunk, not bin packing). The window
+    is partitioned by shard, so there is no global sort and no
+    single-partition window."""
     from pyspark.sql import Window as W
 
     w = (W.partitionBy("shard").orderBy("doc_id")
          .rowsBetween(W.unboundedPreceding, -1))
-    packed = keep.withColumn("shard", F.col("doc_id") % n_shards)
+    packed = docs.withColumn("shard", F.col("doc_id") % n_shards)
     cum = F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
     return packed.select(
         "doc_id", "n_tokens", "shard",

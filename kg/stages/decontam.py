@@ -31,19 +31,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-__all__ = ["word_ngrams", "word_ngram_hashes", "benchmark_ngrams",
-           "decontaminate"]
-
-
-def word_ngrams(ws_col: str, n: int):
-    """Sliding word n-grams of a named array column as space-joined
-    strings; [] when the doc has fewer than n words (so short docs
-    contribute no grams instead of erroring on a negative slide)."""
-    return F.when(
-        F.size(ws_col) >= n,
-        F.expr(f"transform(sequence(1, size({ws_col}) - {n - 1}), "
-               f"i -> concat_ws(' ', slice({ws_col}, i, {n})))")
-    ).otherwise(F.array().cast("array<string>"))
+__all__ = ["word_ngram_hashes", "benchmark_ngrams", "decontaminate"]
 
 
 def word_ngram_hashes(ws_col: str, n: int):

@@ -1,7 +1,7 @@
-"""Graph analytics over DataFrame edge lists (SURVEY.md §2 —
-round-5 additions): PageRank power iteration, synchronous min-label
-propagation, and degree-ordered triangle counting — each as the
-join-aggregate shape GraphFrames' aggregateMessages lowers to.
+"""Graph analytics over DataFrame edge lists (SURVEY.md §2): PageRank
+power iteration, synchronous min-label propagation, and
+degree-ordered triangle counting — each as the join-aggregate shape
+GraphFrames' aggregateMessages lowers to.
 
 Dataflow per iteration (the plan you'd want on a billion-edge graph):
 
@@ -118,42 +118,47 @@ def min_label_propagation(nodes: DataFrame, edges: DataFrame,
     gets an output row of its own; a src outside ``nodes`` sends
     nothing until it has received a label.
 
-    Plan per round (same aggregateMessages lowering as
-    :func:`pagerank`): adjacency ⋈ labels (two O(nodes) tables; the
-    O(edges) multiset is pre-grouped once per src, WITH a self-loop
-    per node so each node's own label rides the message stream) →
-    map-side explode → groupBy(dst) min (partial agg combines
-    map-side). The self-loop makes the aggregate itself compute
-    min({own} ∪ in-neighbor labels), so there is no ``least``
-    left-join back to the state, the state is read once per round,
-    and the unrolled lineage stays LINEAR like pagerank's (a shape
-    that reads the state twice per round duplicates the prior-round
-    subtree per reference — 2^iters copies, measured 21 s for 3
-    rounds at sf0.1 where ~6 s was real work). String labels compare
-    bytewise in both Spark and DuckDB, so the min is
-    engine-independent. Returns (node, label). nodes and the
-    adjacency table are materialized as in :func:`pagerank`. Pass
-    ``checkpoint_every`` to bound lineage on long convergence-driven
-    runs."""
+    Plan per round: :func:`min_label_round` over the
+    :func:`label_adjacency` table, materialized once as in
+    :func:`pagerank`. String labels compare bytewise in both Spark and
+    DuckDB, so the min is engine-independent. Returns (node, label).
+    Pass ``checkpoint_every`` to bound lineage on long
+    convergence-driven runs."""
     nodes = _materialize(nodes)
-    # self-loop seeding: fold every node's OWN label into the message
-    # stream by appending a v→v edge before grouping, so
-    #   label(v, t) = min over messages = min({own} ∪ in-nbr labels)
-    # and a round is ONE join + ONE aggregate that reads the state once
-    adj = _materialize(edges.unionByName(
-        nodes.select(F.col("node").alias("src"),
-                     F.col("node").alias("dst")))
-        .groupBy("src").agg(F.collect_list("dst").alias("_dsts")))
+    adj = _materialize(label_adjacency(nodes, edges))
     lab = nodes.select("node", F.col("node").alias("label"))
     for i in range(iters):
-        lab = (adj.join(lab, adj.src == lab.node)
-               .select(F.explode("_dsts").alias("node"), "label")
-               .groupBy("node")
-               .agg(F.min("label").alias("label")))
+        lab = min_label_round(adj, lab)
         if checkpoint_every and (i + 1) % checkpoint_every == 0 \
                 and i + 1 < iters:
             lab = _materialize(lab)
     return lab
+
+
+def label_adjacency(nodes: DataFrame, edges: DataFrame) -> DataFrame:
+    """(src, _dsts): the per-src destination arrays of ``edges`` plus
+    a self-loop v→v for every node, so each node's OWN label rides the
+    message stream of :func:`min_label_round`. The O(edges) multiset
+    is grouped here once; rounds only read the arrays."""
+    return (edges.unionByName(
+        nodes.select(F.col("node").alias("src"),
+                     F.col("node").alias("dst")))
+        .groupBy("src").agg(F.collect_list("dst").alias("_dsts")))
+
+
+def min_label_round(adj: DataFrame, lab: DataFrame) -> DataFrame:
+    """One hash-min round: (node, label) → (node, label) with
+    label(v) = min over the labels sent to v, i.e.
+    min({own} ∪ in-neighbor labels) on a :func:`label_adjacency`
+    table. adjacency ⋈ labels (two O(nodes) tables) → map-side
+    explode → groupBy(node) min, whose partial aggregate combines
+    map-side. The state is read once per round, so unrolled rounds
+    keep a LINEAR lineage (reading it twice per round doubles the
+    prior-round subtree per reference — 2^iters copies)."""
+    return (adj.join(lab, adj.src == lab.node)
+            .select(F.explode("_dsts").alias("node"), "label")
+            .groupBy("node")
+            .agg(F.min("label").alias("label")))
 
 
 #: Closing-edge probe strategy gate for :func:`triangle_counts`

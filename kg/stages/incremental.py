@@ -58,7 +58,7 @@ def build_dedup_index(norms: DataFrame, feature: str = "char"):
     buckets too: a bucket holding one node today is exactly where a
     future near-duplicate will land. No cap is applied at build —
     caps belong to the query side, where drops can be observed per
-    batch (canon.observe_dropped)."""
+    batch (canon.capped_blocks)."""
     feats = canon.node_features(norms, feature=feature)
     bands = canon.lsh_bands(canon.minhash_signatures(feats))
     return feats, bands
@@ -93,10 +93,10 @@ def incremental_near_dup_edges(new_norms: DataFrame,
     Cap semantics — EXACT parity with the one-shot path: each touched
     bucket is reconstructed with its COMBINED membership (index nodes
     + batch nodes — byte-identical to the bucket
-    canon.candidate_pairs would see on old ∪ new), the cap is applied
-    to that combined size, and only pairs touching a new node are
-    emitted. Guarantee (pinned in test_incremental.py, hot-bucket
-    regime included):
+    canon.candidate_pairs would see on old ∪ new), the same
+    :func:`canon.capped_blocks` rule caps that combined size, and only
+    pairs touching a new node are emitted. Guarantee (pinned in
+    test_incremental.py, hot-bucket regime included):
 
         incremental edges == one-shot(old ∪ new) edges
                               ∩ {pairs with ≥ 1 new node}
@@ -106,7 +106,7 @@ def incremental_near_dup_edges(new_norms: DataFrame,
     grows past the cap — those pairs are Jaccard-verified true
     near-dups regardless (precision is exact always; the cap is a
     recall heuristic). ``obs`` observes combined over-cap buckets
-    (canon.observe_dropped).
+    (canon.capped_blocks).
 
     ``persist_batch=False`` skips the per-batch persists entirely
     (each batch table then recomputes at each of its ~2 plan uses —
@@ -162,20 +162,14 @@ def incremental_near_dup_edges(new_norms: DataFrame,
     # ONE combined grouping — the bucket the one-shot path would see —
     # so the cap binds identically, and one expansion emits cross AND
     # within-batch pairs (single id-pair dedup shuffle).
-    pair_expr = (
-        "flatten(transform(ns, (x, i) -> "
-        "transform(slice(ns, i + 2, size(ns)), "
-        "y -> struct(least(x.node, y.node) AS src, "
-        "greatest(x.node, y.node) AS dst, "
-        "(x.is_new OR y.is_new) AS any_new))))")
-    grouped = (touched.unionByName(batch)
-               .groupBy("band", "bhash")
-               .agg(F.collect_list(F.struct("node", "is_new"))
-                    .alias("ns"))
-               .where(F.size("ns") >= 2))
-    grouped = canon.observe_dropped(grouped, obs, block_cap)
-    grouped = grouped.where(F.size("ns") <= block_cap)
-    cands = (grouped.select(F.explode(F.expr(pair_expr)).alias("p"))
+    grouped = canon.capped_blocks(touched.unionByName(batch),
+                                  ["band", "bhash"],
+                                  F.struct("node", "is_new"), block_cap,
+                                  obs)
+    cands = (canon.block_pairs(grouped,
+                               "least(x.node, y.node) AS src, "
+                               "greatest(x.node, y.node) AS dst, "
+                               "(x.is_new OR y.is_new) AS any_new")
              .where(F.col("p.any_new"))
              .select("p.src", "p.dst")
              .where(F.col("src") != F.col("dst"))

@@ -13,6 +13,7 @@ nothing else — schema, batching, call sites — changes.
 
 from __future__ import annotations
 
+import math
 from collections.abc import Iterator
 
 import pandas as pd
@@ -20,6 +21,17 @@ from pyspark.sql import DataFrame
 
 FEATURE_SCHEMA = ("doc_id bigint, n_bytes int, kind string, "
                   "feat_mean double, feat_dim int")
+
+
+def _round6(x: float) -> float:
+    """x rounded to 6 decimals the way SQL engines (DuckDB's
+    ``round(x, 6)``) do it: scale by 1e6, round half up, unscale.
+    Python's ``round`` rounds the exact binary value instead, so the
+    two disagree when x·1e6 lands on .5 but x sits just below it
+    (24174 / 65280 → 0.370312 vs 0.370313)."""
+    y = x * 1e6
+    f = math.floor(y)
+    return (f + (y - f >= 0.5)) / 1e6
 
 
 def _feature_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -35,7 +47,7 @@ def _feature_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             "doc_id": pdf["doc_id"].astype("int64"),
             "n_bytes": [len(p) for p in pdf["payload"]],
             "kind": "bytes-stub",
-            "feat_mean": [round(sum(b) / (max(len(b), 1) * 255.0), 6)
+            "feat_mean": [_round6(sum(b) / (max(len(b), 1) * 255.0))
                           for b in raw],
             "feat_dim": [max(len(b), 1) for b in raw],
         })

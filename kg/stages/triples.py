@@ -30,38 +30,6 @@ def noisy_or_udaf():
     return noisy_or
 
 
-def dedup_aggregate_noisy_or(raw: DataFrame,
-                             provenance_cap: int = PROVENANCE_CAP
-                             ) -> DataFrame:
-    """D2 variant: confidence = noisy-or over supporting scores via the
-    grouped-agg pandas UDAF instead of max. Spark disallows mixing
-    pandas UDAFs with built-in aggregates in one agg, so the UDAF runs
-    in its own aggregation and joins the count/provenance stats — two
-    shuffles on the same key. Default D2 stays
-    :func:`dedup_aggregate` (single-pass, JVM-only).
-
-    The UDAF side repartitions EXPLICITLY first: grouped-agg pandas
-    UDAFs have no partial aggregation (raw rows shuffle, Python runs
-    entirely post-shuffle), so the stage is Python-CPU-bound and AQE's
-    bytes-based coalescing starves it — measured r5: a 64 KB shuffle
-    folded to ONE task carrying all the per-group Python (same
-    mismatch skew.cpu_stage_partitions documents). The explicit
-    exchange satisfies the agg's distribution requirement, so no
-    second shuffle appears. The JVM stats side is left alone — partial
-    aggregation there is worth more than fixed fan-out."""
-    from kg.stages.skew import cpu_stage_partitions
-
-    key = ["subj", "pred", "obj"]
-    conf = (raw.repartition(cpu_stage_partitions(raw), *key)
-            .groupBy(*key).agg(
-                noisy_or_udaf()("score").alias("confidence")))
-    stats = raw.groupBy(*key).agg(
-        F.count("*").alias("n_support"),
-        F.slice(F.sort_array(F.collect_list(F.struct("conv_id", "turn_idx"))),
-                1, provenance_cap).alias("provenance"))
-    return conf.join(stats, key)
-
-
 def emit_triples(linked: DataFrame) -> DataFrame:
     """D1: scored+linked instances → raw triple occurrences."""
     return linked.select(

@@ -85,6 +85,44 @@ def test_cc_property_vs_union_find(spark_prop, edges_raw):
     assert got == expect
 
 
+def test_cc_endpoints_outside_nodes(spark):
+    """Edges may name endpoints missing from ``nodes``: such an
+    endpoint gets a row once a label reaches it, with the least label
+    that does, and never seeds a label of its own."""
+    cases = [
+        ([0, 1, 2, 10], [(1, 7), (7, 2), (10, 11), (11, 3)],
+         {0: 0, 1: 1, 2: 1, 3: 10, 7: 1, 10: 10, 11: 10}),
+        ([5, 6], [(9, 5), (8, 9), (6, 4), (4, 3), (3, 2)],
+         {2: 6, 3: 6, 4: 6, 5: 5, 6: 6, 8: 5, 9: 5}),
+        ([20], [(1, 2), (2, 3)], {20: 20}),
+    ]
+    for node_ids, edge_list, want in cases:
+        nodes = spark.createDataFrame([(n,) for n in node_ids],
+                                      "node long")
+        edges = spark.createDataFrame(edge_list, "src long, dst long")
+        got = {r["node"]: r["component"]
+               for r in canon.connected_components(nodes, edges)
+               .collect()}
+        assert got == want, node_ids
+
+
+def test_capped_blocks_at_its_bound(spark):
+    """A block of exactly ``cap`` members is kept; one of cap + 1 is
+    dropped and counted; a singleton is neither kept nor counted."""
+    from pyspark.sql import Observation
+
+    cap = 3
+    rows = ([("kept", i) for i in range(cap)]
+            + [("over", i) for i in range(cap + 1)] + [("single", 0)])
+    df = spark.createDataFrame(rows, "k string, m long")
+    obs = Observation("capped_blocks")
+    got = {r["k"]: sorted(r["ns"])
+           for r in canon.capped_blocks(df, ["k"], "m", cap, obs)
+           .collect()}
+    assert got == {"kept": [0, 1, 2]}
+    assert obs.get == {"dropped_buckets": 1, "dropped_nodes": cap + 1}
+
+
 def test_lsh_blocks_variant_pairs(spark):
     """Variant surfaces of the same entity must land in a shared LSH
     bucket and survive Jaccard verification; unrelated entities must

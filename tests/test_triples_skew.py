@@ -31,20 +31,6 @@ def test_dedup_aggregate(spark):
         [("c1", 0), ("c1", 5), ("c2", 3)]
 
 
-def test_dedup_aggregate_noisy_or(spark):
-    """The grouped-agg pandas UDAF D2 variant: confidence is the
-    noisy-or of the supporting scores; count/provenance match the
-    default aggregate."""
-    out = {(r["subj"], r["pred"], r["obj"]): r
-           for r in triples.dedup_aggregate_noisy_or(_raw(spark)).collect()}
-    a = out[("A", "uses", "T")]
-    want = 1.0 - (1 - 0.9) * (1 - 0.7) * (1 - 0.8)
-    assert abs(a["confidence"] - want) < 1e-6
-    assert a["n_support"] == 3
-    b = out[("B", "part_of", "C")]
-    assert abs(b["confidence"] - 0.99) < 1e-5
-
-
 def test_provenance_cap(spark):
     rows = [("A", "uses", "T", 0.5, f"c{i}", i) for i in range(50)]
     df = spark.createDataFrame(
