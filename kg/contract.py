@@ -637,19 +637,17 @@ FROM documents
 """)
 def text_quality_score(spark, sf):
     """Quality scoring: token count, mean token length, stopword
-    ratio — the standard pretraining-corpus filters. r6: stopword
-    membership via ``isin`` (12 literals > the In→InSet threshold, so
-    each token probes a hash set) instead of array_contains scanning
-    the 12-element array per token — same membership, ~25% off the
-    scan."""
+    ratio — the standard pretraining-corpus filters. The ratio is
+    corpus.stopword_ratio, the rule the corpus QC filter applies."""
+    from kg.stages.corpus import stopword_ratio
+
     words = F.split("text", " ")
     n = F.size(words)
     return (_t(spark, sf, "documents").select(
         "doc_id", n.alias("n_tokens"),
         F.round(F.length("text").cast("double") / n, 4)
          .alias("avg_tok_len"),
-        F.round(F.size(F.filter(words, lambda x: x.isin(*_STOPWORDS)))
-                .cast("double") / n, 4).alias("stopword_ratio")))
+        F.round(stopword_ratio(words), 4).alias("stopword_ratio")))
 
 
 @q("lang_id_heuristic", f"""
@@ -662,11 +660,11 @@ FROM documents
 """)
 def lang_id_heuristic(spark, sf):
     """Language ID via stopword-density heuristic (n-gram-free but the
-    same plumbing: JVM-side, no UDF). r6: InSet membership — see
-    text_quality_score."""
-    words = F.split("text", " ")
-    ratio = (F.size(F.filter(words, lambda x: x.isin(*_STOPWORDS)))
-             .cast("double") / F.size(words))
+    same plumbing: JVM-side, no UDF): 'en' when corpus.stopword_ratio
+    exceeds 0.05."""
+    from kg.stages.corpus import stopword_ratio
+
+    ratio = stopword_ratio(F.split("text", " "))
     return (_t(spark, sf, "documents").select(
         "doc_id",
         F.when(ratio > 0.05, "en").otherwise("unk").alias("lang_pred")))
@@ -1706,14 +1704,11 @@ def doc_repetition_filter(spark, sf):
     # repo's standing content-key model (the oracle's sf0.01 string
     # replay hash-matching the Spark output IS the collision-freeness
     # check executing, as for decontaminate_ngrams)
-    t = F.split(F.lower("text"), " ")
-    grams = F.when(
-        F.size(t) >= 3,
-        F.expr("transform(sequence(1, size(tk) - 2), "
-               "i -> xxhash64(slice(tk, i, 3)))")
-    ).otherwise(F.array().cast("array<bigint>"))
+    from kg.stages.decontam import word_ngram_hashes
+
     d = (_t(spark, sf, "documents")
-         .withColumn("tk", t).withColumn("gs", grams))
+         .withColumn("tk", F.split(F.lower("text"), " "))
+         .withColumn("gs", word_ngram_hashes("tk", 3)))
     ratio = F.when(F.size("gs") == 0, F.lit(0.0)).otherwise(
         1.0 - F.size(F.array_distinct("gs")).cast("double")
         / F.size("gs"))

@@ -59,12 +59,13 @@ def resolve_entities(scored: DataFrame, dict_df: DataFrame) -> DataFrame:
     # C4's "cluster inherits the canonical of its linked member" is
     # dead code — every miss would fall back to its cluster-min norm.
     # The dictionary is a few hundred rows: unioning it into the node
-    # set costs nothing; its own mappings are dropped afterwards
-    # (dict norms are already resolved in `scored`).
-    nodes = missed.union(dict_df.select("norm")).distinct()
-    mapping = (canon.canonicalize_norms(nodes, dict_df)
-               .join(missed, "norm", "left_semi"))
-    # the dictionary-miss tail is small by construction → broadcast
+    # set costs nothing (node_features takes the distinct norms).
+    mapping = canon.canonicalize_norms(
+        missed.union(dict_df.select("norm")), dict_df)
+    # the mapping also names the dictionary norms; that is harmless: a
+    # dictionary norm's slot is already resolved in `scored`, and the
+    # coalesce below keeps that entity. The dictionary-miss tail plus
+    # the dictionary is small by construction → broadcast
     h = F.broadcast(mapping.select(F.col("norm").alias("head_norm"),
                                    F.col("entity").alias("_h_ent")))
     t = F.broadcast(mapping.select(F.col("norm").alias("tail_norm"),

@@ -136,14 +136,13 @@ def bpe_count_series(texts: pd.Series,
 
 
 def with_bpe_symbol_count(df, text_col: str, out_col: str,
-                          merges: list[tuple[str, str]] | None = None,
                           ranks: dict[tuple[str, str], int] | None = None):
     """Append `out_col` = true-BPE merged-symbol count of `text_col`.
 
     Map-only mapInPandas (iterator form: the rank dict is built once
-    per partition from the broadcast, not once per batch). `merges`
-    defaults to the frozen spec table; pairs whose left side contains
-    a sentinel are re-expressed through the sentinel expansion so the
+    per partition from the broadcast, not once per batch). The ranks
+    default to the frozen spec table, whose pairs with a sentinel on
+    the left are re-expressed through the sentinel expansion so the
     character-level merge loop sees real pairs (spec stores chained
     merges as (sentinel+char) for the replace() path). Pass ``ranks``
     (a prebuilt (left, right) → rank dict, e.g.
@@ -153,8 +152,7 @@ def with_bpe_symbol_count(df, text_col: str, out_col: str,
 
     spark = df.sparkSession
     if ranks is None:
-        table = merges if merges is not None else spec.BPE_MERGES
-        ranks = spec.merge_ranks(table)
+        ranks = spec.merge_ranks(spec.BPE_MERGES)
     bc = spark.sparkContext.broadcast(ranks)
     cols = [f.name for f in df.schema.fields]
     # Fresh StructType — StructType.add would MUTATE the cached

@@ -20,9 +20,11 @@
   (GraphFrames-style on plain DataFrames; Kiveris et al. SoCC 2014
   family). Driver loop with ``localCheckpoint`` per iteration to
   truncate lineage — without it the plan grows exponentially.
-- C4: cluster naming — a cluster inherits the canonical name of its
-  lexicographically-first dictionary-linked member, else its
-  lexicographically-first norm (fully deterministic).
+- C4: cluster naming, one rule (``_name_cluster``) run on the driver
+  or per component — a norm keeps its own dictionary entity, else
+  inherits the entity of its cluster's lexicographically-first
+  dictionary-linked member, else its cluster's lexicographically-first
+  norm (fully deterministic).
 
 Node ids are ``xxhash64(norm)`` — deterministic across runs and
 partition layouts, unlike ``monotonically_increasing_id``.
@@ -30,7 +32,7 @@ partition layouts, unlike ``monotonically_increasing_id``.
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Iterator
+from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -39,6 +41,8 @@ from pyspark.sql.types import StructField, StructType
 
 from kg import spec
 from kg.stages import graph
+from kg.stages.grouped import stream_groups
+from kg.stages.skew import cpu_stage_partitions
 
 _MERSENNE = (1 << 61) - 1
 
@@ -56,16 +60,14 @@ _NGRAMS_SQL = (
 )
 
 #: w-word shingles over a space-split token array, each shingle hashed
-#: to int64 in the same expression — no string arrays materialize.
-#: r6: the hash is taken over the token SLICE directly instead of a
-#: concat_ws-joined string — identical identity (tokens are space-free,
-#: so the join was injective) without building ~|tokens| short strings
-#: per document just to hash and discard them (guide §2.3). The hash
-#: VALUES change, which re-randomizes LSH banding but not the verified
-#: output: candidates are exact-Jaccard-verified, and true near-dup
-#: pairs sit at J ≥ 0.9 where the b=32/r=4 miss probability is ~1e-15
-#: under ANY hash draw (outputs re-verified identical at
-#: sf0.01/0.1/1.0 for all three LSH consumers).
+#: to int64 in the same expression — no string arrays materialize. The
+#: hash is taken over the token SLICE: tokens are space-free, so a
+#: slice identifies the same shingle as its space-joined string,
+#: without building ~|tokens| short strings per document just to hash
+#: and discard them. The hash draw randomizes LSH banding, not the
+#: verified output: candidates are exact-Jaccard-verified, and true
+#: near-dup pairs sit at J ≥ 0.9, where the b=32/r=4 miss probability
+#: is ~1e-15 under any hash draw.
 _SHINGLES_SQL = (
     "array_distinct(transform("
     "sequence(1, greatest(size({t}) - {wm1}, 1)), "
@@ -200,17 +202,14 @@ def _minhash_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                             "sig": list(sigs)})
 
 
-def minhash_signatures(feats: DataFrame, feature: str = "char") -> DataFrame:
-    """C1a: (node, norm, f) — or a bare ``norm`` column, in which case
-    :func:`node_features` runs first — → (node, sig[H]).
+def minhash_signatures(feats: DataFrame) -> DataFrame:
+    """C1a: the (node, f) feature table of :func:`node_features` →
+    (node, sig[H]).
 
-    r6: only (node, f) crosses the Arrow boundary — the norm string
-    (a full document for word-feature callers) used to ride into
-    Python and back purely to re-derive node on the way out; every
-    consumer keys on node, and callers needing the node → norm map
-    read it off the feature table they already hold."""
-    if "f" not in feats.columns:
-        feats = node_features(feats, feature=feature)
+    Only (node, f) crosses the Arrow boundary, never the norm string
+    (a full document for word-feature callers): every consumer keys
+    on node, and callers needing the node → norm map read it off the
+    feature table they already hold."""
     return (feats.select("node", "f")
             .mapInPandas(_minhash_batches,
                          schema="node long, sig array<long>"))
@@ -221,11 +220,9 @@ def lsh_bands(signed: DataFrame) -> DataFrame:
     JVM-side → (node, band, bhash) — 24-byte rows into the block join,
     no payload columns ride the fan-out.
 
-    r6: each band hashes its r signature lanes as r SCALAR xxhash64
-    arguments (element_at) instead of hashing a freshly-sliced
-    sub-array — same 64-bit bucket entropy, no per-band array
-    allocation (32 slices/row at H=128). Band values change; see the
-    _SHINGLES_SQL note for why the verified output does not."""
+    Each band hashes its r signature lanes as r SCALAR xxhash64
+    arguments (element_at), so no per-band sub-array is allocated
+    (32 slices/row at H=128)."""
     r = spec.MINHASH_ROWS
     bands = F.array(*[
         F.struct(F.lit(i).alias("band"),
@@ -274,9 +271,8 @@ def verify_pairs(pairs: DataFrame, feats: DataFrame,
     ``carry``: optional feats column to ride the two joins through to
     the output as ``src_<carry>``/``dst_<carry>`` — callers that need
     a node → payload map on the edges (e.g. fingerprint keys) get it
-    for free here instead of re-joining the edge set afterwards (the
-    r3 minhash bench regression was exactly such a re-join). The f
-    arrays dominate the join width, so the passenger column is noise."""
+    here instead of re-joining the edge set afterwards. The f arrays
+    dominate the join width, so the passenger column is noise."""
     extra1 = [F.col(carry).alias(f"src_{carry}")] if carry else []
     extra2 = [F.col(carry).alias(f"dst_{carry}")] if carry else []
     g1 = feats.select(F.col("node").alias("src"),
@@ -331,11 +327,10 @@ def near_duplicate_edges(norms: DataFrame,
 SIMHASH_BITS = 60
 
 
-def simhash64(docs: DataFrame, text_col: str = "text",
-              id_col: str = "doc_id") -> DataFrame:
-    """Word-feature SimHash (Charikar 2002): per-word hash JVM-side,
-    the per-bit ±1 majority vote as one vectorized numpy pass per
-    Arrow batch. → (id, simhash).
+def simhash64(docs: DataFrame) -> DataFrame:
+    """Word-feature SimHash (Charikar 2002) of (doc_id, text): per-word
+    hash JVM-side, the per-bit ±1 majority vote as one vectorized
+    numpy pass per Arrow batch. → (doc_id, simhash).
 
     Signatures are ``SIMHASH_BITS`` = 60 wide, from the first 15 hex
     digits of md5(word) (the md5_60 rule): md5 and base conversion are
@@ -343,7 +338,7 @@ def simhash64(docs: DataFrame, text_col: str = "text",
     recompute every signature bit for bit. The majority vote is
     duplicate-sensitive: a word's hash votes once per occurrence."""
     hashes = F.transform(
-        F.split(F.lower(text_col), " "),
+        F.split(F.lower("text"), " "),
         lambda w: F.conv(F.substring(F.md5(w), 1, 15), 16, 10)
                    .cast("long"))
 
@@ -354,7 +349,7 @@ def simhash64(docs: DataFrame, text_col: str = "text",
         max_feats = 64_000
         for pdf in it:
             if len(pdf) == 0:
-                yield pd.DataFrame({id_col: pdf[id_col],
+                yield pd.DataFrame({"doc_id": pdf["doc_id"],
                                     "simhash": pd.Series(dtype=np.int64)})
                 continue
             feats = [np.asarray(hs, dtype=np.int64).view(np.uint64)
@@ -369,51 +364,57 @@ def simhash64(docs: DataFrame, text_col: str = "text",
                 votes = sums * 2 - lens[:, None]
                 out[row:end] = ((votes > 0).astype(np.uint64)
                                 << shifts).sum(axis=1).astype(np.int64)
-            yield pd.DataFrame({id_col: pdf[id_col], "simhash": out})
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "simhash": out})
 
-    return (docs.select(id_col, hashes.alias("hashes"))
+    return (docs.select("doc_id", hashes.alias("hashes"))
             .where(F.size("hashes") > 0)
-            .mapInPandas(batches, schema=f"{id_col} long, simhash long"))
+            .mapInPandas(batches, schema="doc_id long, simhash long"))
 
 
-def simhash_near_pairs(sims: DataFrame, id_col: str = "doc_id",
-                       max_hamming: int = 3, n_blocks: int = 4,
-                       block_cap: int = spec.BLOCK_CAP,
-                       obs=None) -> DataFrame:
-    """Near-duplicate pairs by SimHash Hamming distance ≤ d (Manku,
-    Jain & Das Sarma, WWW 2007, single-permutation block variant):
-    split the ``SIMHASH_BITS``-bit signature into ``n_blocks`` blocks —
-    any pair within Hamming distance ``max_hamming ≤ n_blocks − 1`` shares at
-    least one INTACT block (pigeonhole), so candidates come from a
-    block-value equi-join, never an all-pairs scan. The 8-byte
-    signature rides the block shuffle, so verification
-    (``bit_count(x ^ y)``) is in-line JVM work with no re-join.
+#: Hamming radius of :func:`simhash_near_pairs`; at most
+#: ``SIMHASH_BLOCKS`` − 1, so the pigeonhole guarantee covers it
+SIMHASH_MAX_HAMMING = 3
+
+#: blocks the signature splits into; divides ``SIMHASH_BITS`` so the
+#: blocks tile the signature exactly
+SIMHASH_BLOCKS = 4
+
+
+def simhash_near_pairs(sims: DataFrame) -> DataFrame:
+    """Near-duplicate pairs by SimHash Hamming distance ≤
+    ``SIMHASH_MAX_HAMMING`` (Manku, Jain & Das Sarma, WWW 2007,
+    single-permutation block variant): split the ``SIMHASH_BITS``-bit
+    signature into ``SIMHASH_BLOCKS`` blocks — any pair within Hamming
+    distance ``SIMHASH_BLOCKS`` − 1 shares at least one INTACT block
+    (pigeonhole), so candidates come from a block-value equi-join,
+    never an all-pairs scan. The 8-byte signature rides the block
+    shuffle, so verification (``bit_count(x ^ y)``) is in-line JVM
+    work with no re-join.
 
     Precision-oriented complement to the minhash path
     (:func:`near_duplicate_edges` is the recall workhorse): wider
-    blocks ⇒ fewer false candidates but only a d ≤ n_blocks−1
-    guarantee. Blocks come from :func:`capped_blocks`: over-cap blocks
-    are dropped and counted into ``obs`` when supplied. Returns
-    (src, dst, hamming), src < dst. ``n_blocks`` must divide
-    ``SIMHASH_BITS`` so blocks tile the signature exactly."""
-    width = SIMHASH_BITS // n_blocks
+    blocks ⇒ fewer false candidates but only a d ≤ blocks − 1
+    guarantee. Blocks come from :func:`capped_blocks`: blocks of more
+    than ``spec.BLOCK_CAP`` members are dropped. Returns
+    (src, dst, hamming), src < dst."""
+    width = SIMHASH_BITS // SIMHASH_BLOCKS
     mask = (1 << width) - 1
     blocks = F.array(*[
         F.struct(F.lit(b).alias("blk"),
                  F.shiftright("simhash", b * width)
                   .bitwiseAND(F.lit(mask)).alias("bval"))
-        for b in range(n_blocks)])
-    banded = (sims.select(F.col(id_col).alias("id"), "simhash",
+        for b in range(SIMHASH_BLOCKS)])
+    banded = (sims.select(F.col("doc_id").alias("id"), "simhash",
                           F.explode(blocks).alias("bb"))
               .select("id", "simhash", "bb.blk", "bb.bval"))
     grouped = capped_blocks(banded, ["blk", "bval"],
-                            F.struct("id", "simhash"), block_cap, obs)
+                            F.struct("id", "simhash"), spec.BLOCK_CAP)
     return (block_pairs(grouped,
                         "least(x.id, y.id) AS src, "
                         "greatest(x.id, y.id) AS dst, "
                         "bit_count(x.simhash ^ y.simhash) AS hamming")
             .select("p.src", "p.dst", "p.hamming")
-            .where((F.col("hamming") <= max_hamming)
+            .where((F.col("hamming") <= SIMHASH_MAX_HAMMING)
                    & (F.col("src") != F.col("dst")))
             .dropDuplicates(["src", "dst"]))
 
@@ -471,50 +472,6 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
     return labels.withColumnRenamed("label", "component")
 
 
-def _driver_probe(nodes: DataFrame, edges: DataFrame,
-                  max_nodes: int, max_edges: int
-                  ) -> tuple[list, list] | None:
-    """The driver fast-path gate: collect at most ``max_nodes`` + 1
-    rows of ``nodes`` (projected by the caller) and, only if they fit,
-    at most ``max_edges`` + 1 (src, dst) rows of ``edges``. Returns
-    ``(node_rows, edge_rows)`` when both fit under their bound, else
-    None — the caller then runs its distributed branch.
-    ``max_nodes`` ≤ 0 skips both probes (no Spark job at all)."""
-    if max_nodes <= 0:
-        return None
-    node_rows = nodes.limit(max_nodes + 1).collect()
-    if len(node_rows) > max_nodes:
-        return None
-    edge_rows = edges.select("src", "dst").limit(max_edges + 1).collect()
-    if len(edge_rows) > max_edges:
-        return None
-    return node_rows, edge_rows
-
-
-def _min_root_components(ids: Iterable[int],
-                         edges: Iterable[tuple[int, int]]
-                         ) -> dict[int, int]:
-    """Driver-side C3: union-find (path halving, the smaller root
-    wins) → {node: component = min member id} for every distinct id
-    in ``ids``, in first-seen order. ``edges`` yields (src, dst)
-    pairs; an edge with an endpoint outside ``ids`` is skipped."""
-    parent = {n: n for n in ids}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for s, d in edges:
-        if s not in parent or d not in parent:
-            continue
-        a, b = find(s), find(d)
-        if a != b:
-            parent[max(a, b)] = min(a, b)
-    return {n: find(n) for n in list(parent)}
-
-
 #: node count under which C3+C4 run on the driver. The iterative CC
 #: loop costs O(rounds) driver-scheduled jobs on kilobytes of data —
 #: pure fixed cost that caps strong scaling (Amdahl); a union-find
@@ -530,16 +487,52 @@ DRIVER_CANON_MAX_NODES = 100_000
 DRIVER_CANON_MAX_EDGES = 1_000_000
 
 
-def components_auto(nodes: DataFrame, edges: DataFrame,
-                    driver_max_nodes: int = DRIVER_CANON_MAX_NODES,
-                    driver_max_edges: int = DRIVER_CANON_MAX_EDGES
-                    ) -> DataFrame:
+def _driver_components(nodes: DataFrame, edges: DataFrame
+                       ) -> tuple[list, dict[int, int]] | None:
+    """Driver-side C3 behind the fast-path gate: collect at most
+    ``DRIVER_CANON_MAX_NODES`` + 1 rows of ``nodes`` (projected by the
+    caller; it has a ``node`` column) and, only if they fit, at most
+    ``DRIVER_CANON_MAX_EDGES`` + 1 (src, dst) rows of ``edges``. Both
+    bounds are read at call time. Returns None when either probe
+    overflows — the caller then runs its distributed branch — else
+    ``(node_rows, {node: component})``.
+
+    The components come from a union-find (path halving, the smaller
+    root wins): component = min member id, for every distinct node id
+    in first-seen order, so duplicate node rows collapse as they do
+    in the distributed groupBy. An edge with an endpoint outside
+    ``nodes`` is skipped."""
+    node_rows = nodes.limit(DRIVER_CANON_MAX_NODES + 1).collect()
+    if len(node_rows) > DRIVER_CANON_MAX_NODES:
+        return None
+    edge_rows = (edges.select("src", "dst")
+                 .limit(DRIVER_CANON_MAX_EDGES + 1).collect())
+    if len(edge_rows) > DRIVER_CANON_MAX_EDGES:
+        return None
+    parent = {r["node"]: r["node"] for r in node_rows}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for s, d in edge_rows:
+        if s in parent and d in parent:
+            a, b = find(s), find(d)
+            if a != b:
+                parent[max(a, b)] = min(a, b)
+    return node_rows, {n: find(n) for n in list(parent)}
+
+
+def components_auto(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     """Same contract as :func:`connected_components` — (node) +
-    (src, dst) → (node, component = min member id) — but when BOTH
-    probes fit (node count ≤ driver_max_nodes, edge count ≤
-    driver_max_edges — the edge probe matters, a dense graph can emit
-    orders more edges than nodes), run a driver union-find instead of
-    the iterative distributed loop, killing the O(rounds)
+    (src, dst) → (node, component = min member id) — but when both
+    probes of :func:`_driver_components` fit (node count ≤
+    ``DRIVER_CANON_MAX_NODES``, edge count ≤ ``DRIVER_CANON_MAX_EDGES``
+    — the edge probe matters, a dense graph can emit orders more
+    edges than nodes), run its driver union-find instead of the
+    iterative distributed loop, killing the O(rounds)
     driver-scheduled job storm that is pure fixed cost on small
     graphs (Amdahl tail at bench scale). Above either bound, the
     distributed hash-to-min path runs. Output identical on every
@@ -551,17 +544,13 @@ def components_auto(nodes: DataFrame, edges: DataFrame,
     need branch-identical output.
 
     NOTE this function is EAGER: the probes collect up to
-    driver_max_nodes node rows (+1) and driver_max_edges edge rows
-    (+1) at call time — size driver memory accordingly, or pass
-    driver_max_nodes=0 to force the fully-lazy distributed branch."""
-    probed = _driver_probe(nodes.select("node"), edges,
-                           driver_max_nodes, driver_max_edges)
+    ``DRIVER_CANON_MAX_NODES`` node rows (+1) and
+    ``DRIVER_CANON_MAX_EDGES`` edge rows (+1) at call time — size
+    driver memory accordingly."""
+    probed = _driver_components(nodes.select("node"), edges)
     if probed is None:
         return connected_components(nodes, edges)
-    node_rows, edge_rows = probed
-    # distinct ids — the distributed groupBy dedups too, so duplicate
-    # node rows must not change the output shape between branches
-    comp = _min_root_components((r["node"] for r in node_rows), edge_rows)
+    comp = probed[1]
     node_field = nodes.select("node").schema.fields[0]
     schema = StructType([
         node_field, StructField("component", node_field.dataType)])
@@ -574,86 +563,74 @@ def components_auto(nodes: DataFrame, edges: DataFrame,
         schema)
 
 
-def canonicalize_norms(norms: DataFrame, dict_df: DataFrame,
-                       driver_max_nodes: int = DRIVER_CANON_MAX_NODES,
-                       driver_max_edges: int = DRIVER_CANON_MAX_EDGES
-                       ) -> DataFrame:
-    """C1→C4 end-to-end over a distinct ``norm`` column.
+def _name_cluster(members: list[tuple[str, str | None]]
+                  ) -> list[tuple[str, str]]:
+    """C4 for one cluster: its (norm, own dictionary entity or None)
+    pairs → (norm, entity) pairs. A norm keeps its own dictionary
+    entity; otherwise it takes the entity of the cluster's
+    lexicographically-first linked norm; otherwise the cluster's
+    lexicographically-first norm. The result depends on the member
+    set only, not on its order."""
+    linked = [m for m in members if m[1] is not None]
+    name = min(linked)[1] if linked else min(n for n, _ in members)
+    return [(n, name if e is None else e) for n, e in members]
 
-    Returns (norm, entity): every norm mapped to its canonical entity
-    name — its own dictionary hit first, else its cluster's canonical
-    (lexicographically-first linked member), else the cluster's
-    lexicographically-first norm.
+
+def canonicalize_norms(norms: DataFrame, dict_df: DataFrame) -> DataFrame:
+    """C1→C4 end-to-end over a distinct ``norm`` column → (norm,
+    entity): every norm named by :func:`_name_cluster` over its
+    component.
 
     C1/C2 (minhash, banding, verify) are always distributed — they
-    scale with the data. C3/C4 (components + naming) run on the
-    driver when both probes fit (see DRIVER_CANON_MAX_NODES /
-    DRIVER_CANON_MAX_EDGES), else through the distributed
-    join/aggregate path below. Every DataFrame this function caches
-    is released before it returns: the distributed branch's output is
-    localCheckpointed first, because it reads the cached features.
-    """
+    scale with the data. When both probes of
+    :func:`_driver_components` fit, C3 is its driver union-find and
+    C4 names the clusters on the driver, output sorted. Otherwise C3
+    is the distributed hash-to-min loop and C4 one streaming
+    ``mapInPandas`` over the component-keyed exchange (sorted within
+    partitions, boundaries found by :func:`stream_groups`). Every
+    DataFrame this function caches is released before it returns:
+    the distributed branch's output is localCheckpointed first,
+    because it reads the cached features."""
     handles: list = []
     # signatures carry node, not norm — the node → norm map below
     # reads off the persisted feature table
     edges, feats = near_duplicate_edges(norms, return_feats=True,
                                         handles=handles)
     try:
-        probed = _driver_probe(feats.select("norm", "node"), edges,
-                               driver_max_nodes, driver_max_edges)
+        probed = _driver_components(feats.select("norm", "node"), edges)
         if probed is not None:
-            node_rows, edge_rows = probed
-            comp = _min_root_components((r["node"] for r in node_rows),
-                                        edge_rows)
-            dict_rows = dict_df.select("norm", "entity").collect()
-            mapping = _name_clusters_driver(
-                [(r["norm"], comp[r["node"]]) for r in node_rows],
-                {r["norm"]: r["entity"] for r in dict_rows})
+            node_rows, comp = probed
+            entity_of = dict(dict_df.select("norm", "entity").collect())
+            clusters: dict[int, list] = {}
+            for r in node_rows:
+                clusters.setdefault(comp[r["node"]], []).append(
+                    (r["norm"], entity_of.get(r["norm"])))
+            mapping = sorted(row for members in clusters.values()
+                             for row in _name_cluster(members))
             return norms.sparkSession.createDataFrame(
                 pd.DataFrame(mapping, columns=["norm", "entity"]),
                 "norm string, entity string")
 
-        comps = connected_components(feats.select("node"), edges)
-        labeled = (feats.select("norm", "node")
-                   .join(comps, "node", "left")
-                   .withColumn("component",
-                               F.coalesce("component", "node")))
-        linked = labeled.join(
-            F.broadcast(dict_df.select("norm", "entity")), "norm", "left")
-        cluster_name = (linked.groupBy("component").agg(
-            F.min(F.when(F.col("entity").isNotNull(), F.col("norm")))
-             .alias("_linked_norm"),
-            F.min("norm").alias("_any_norm")))
-        cluster_name = cluster_name.join(
-            F.broadcast(dict_df.select(
-                F.col("norm").alias("_linked_norm"),
-                F.col("entity").alias("_cluster_entity"))),
-            "_linked_norm", "left")
-        return (linked.join(cluster_name, "component")
-                .withColumn("entity", F.coalesce(
-                    "entity", "_cluster_entity", "_any_norm"))
-                .select("norm", "entity")
+        # an inner join keeps every norm: connected_components labels
+        # every node it is given
+        linked = (feats.select("norm", "node")
+                  .join(connected_components(feats.select("node"), edges),
+                        "node")
+                  .join(F.broadcast(dict_df.select("norm", "entity")),
+                        "norm", "left")
+                  .select("component", "norm", "entity"))
+
+        def stream(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            yield from stream_groups(
+                it, ["component", "norm", "entity"], 1,
+                lambda _, members: _name_cluster(members),
+                ["norm", "entity"])
+
+        return (linked.repartition(cpu_stage_partitions(linked),
+                                   "component")
+                .sortWithinPartitions("component")
+                .mapInPandas(stream, schema="norm string, entity string")
                 .localCheckpoint(eager=True))
     finally:
         for h in handles:
             h.unpersist()
-
-
-def _name_clusters_driver(members: list[tuple[str, int]],
-                          dictionary: dict[str, str]) -> list[tuple]:
-    """Driver-side C4 over (norm, component) pairs: the same naming
-    rule as the distributed branch — own dict hit first, else the dict
-    entity of the cluster's lexicographically-first LINKED norm, else
-    the cluster's lexicographically-first norm. Output order is pinned
-    for determinism."""
-    by_comp: dict[int, list[str]] = {}
-    for norm, comp in members:
-        by_comp.setdefault(comp, []).append(norm)
-    out = []
-    for names in by_comp.values():
-        linked = sorted(m for m in names if m in dictionary)
-        fallback = dictionary[linked[0]] if linked else min(names)
-        for m in names:
-            out.append((m, dictionary.get(m, fallback)))
-    out.sort()
-    return out

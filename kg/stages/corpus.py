@@ -33,7 +33,7 @@ from kg.stages import canon
 
 __all__ = ["corpus_pipeline", "gopher_quality_cols",
            "drop_boilerplate_turns", "c4_page_stats",
-           "stratified_sample", "sample_bucket", "pack"]
+           "stratified_sample", "sample_bucket", "pack", "stopword_ratio"]
 
 STOPWORDS = spec.STOPWORDS  # one shared definition, no drift
 
@@ -264,15 +264,20 @@ def temperature_mix_sample(df: DataFrame, strata_cols: list[str],
             .drop("_rk", "_quota"))
 
 
+def stopword_ratio(words):
+    """The share of the token-array Column ``words`` that is in
+    ``STOPWORDS``, as a double. Membership is ``isin``: with 12
+    literals, above the In→InSet threshold, each token is one hash-set
+    probe."""
+    return (F.size(F.filter(words, lambda x: x.isin(*STOPWORDS)))
+            .cast("double") / F.size(words))
+
+
 def _qc_cols(df: DataFrame) -> DataFrame:
     words = F.split("text", " ")
-    # r6: isin (In→InSet hash probe per token) instead of
-    # array_contains scanning the stopword array per token
     return df.withColumns({
         "n_tokens": F.size(words),
-        "stopword_ratio":
-            F.size(F.filter(words, lambda x: x.isin(*STOPWORDS)))
-            .cast("double") / F.size(words),
+        "stopword_ratio": stopword_ratio(words),
         "norm": F.lower(F.regexp_replace("text", r"\s+", " ")),
     })
 

@@ -35,20 +35,18 @@ __all__ = ["word_ngram_hashes", "benchmark_ngrams", "decontaminate"]
 
 
 def word_ngram_hashes(ws_col: str, n: int):
-    """Sliding word n-grams as xxhash64 fingerprints of the n-word
-    SLICE (r6): gram identity is decided by hashing the token
-    sub-array directly, so no joined gram string is ever built — at
-    sf1.0 the corpus side materialized ~10M ~30-byte concat_ws
-    strings purely to be probed and discarded (guide §2.3/§4 — hash
-    the proxy, not the payload). Space-joined strings and token
-    slices identify the same grams here because tokens come from
-    split(text, ' ') and therefore contain no spaces (the join is
-    injective). Hash-as-identity is the repo's standing trust model
-    for content keys (canon.py node = xxhash64(norm), shingles =
-    xxhash64(w-word join)); a cross-gram collision against the
-    benchmark set is ~|corpus grams|·|bench grams|/2^64 ≈ 1e-8 at
-    sf1.0 — and the contract fixture is verified hash-identical to
-    the string implementation at sf0.01/0.1/1.0."""
+    """Sliding word n-grams of the token-array column ``ws_col`` as
+    xxhash64 fingerprints of each n-word SLICE (an empty array when
+    there are fewer than n tokens). Gram identity is decided by
+    hashing the token sub-array directly, so no joined gram string is
+    ever built (at sf1.0 that would be ~10M ~30-byte strings, probed
+    and discarded). Space-joined strings and token slices identify
+    the same grams because tokens come from split(text, ' ') and
+    contain no spaces. Hash-as-identity is the repo's standing trust
+    model for content keys (canon.py node = xxhash64(norm), shingles
+    = xxhash64 of the token slice); a cross-gram collision against
+    the benchmark set is ~|corpus grams|·|bench grams|/2^64 ≈ 1e-8 at
+    sf1.0."""
     return F.when(
         F.size(ws_col) >= n,
         F.expr(f"transform(sequence(1, size({ws_col}) - {n - 1}), "

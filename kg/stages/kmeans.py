@@ -49,6 +49,18 @@ def _nearest(v, cmat):
     return np.argmin(d, axis=1), d
 
 
+def _centroid_matrix(cents):
+    """(cids, cmat) of one broadcast ``cents`` list: the centroid ids
+    as int64 and their vectors stacked into a float64 (K, dim)
+    matrix, both in list order (cid-sorted by
+    :func:`fold_centroids`)."""
+    import numpy as np
+
+    return (np.array([c["cid"] for c in cents], dtype=np.int64),
+            np.stack([np.asarray(c["cv"], dtype=np.float64)
+                      for c in cents]))
+
+
 def fold_centroids(long_cents: DataFrame) -> DataFrame:
     """(cluster, pos, val) long form → ONE row with
     ``cents: array<struct<cid, cv:array<double>>>`` sorted by cid —
@@ -71,20 +83,14 @@ def assign(emb: DataFrame, cent_row: DataFrame) -> DataFrame:
     frame from :func:`fold_centroids`. Returns (vec_id, v, cluster,
     dist) — dist unrounded Euclidean.
 
-    r6 (guide §4.2): the distance argmin runs as one vectorized numpy
-    pass per Arrow batch instead of interpreted Catalyst higher-order
-    functions (zip_with + aggregate are evaluated per ELEMENT with no
-    codegen: K·dim ≈ 512 interpreted ops and a K-struct alloc per
-    vector dominated kmeans_iter3 — measured ~170 µs/vector at
-    sf1.0). BIT-IDENTICAL to the expression form, not merely close:
-    the accumulator adds (v[j]−c[j])² in the same index order as the
-    zip_with/aggregate left fold, np.sqrt is the same IEEE
-    correctly-rounded op, and np.argmin's first-minimum tie-break
-    equals the (dist, cid) struct ordering because the centroid
-    matrix rows arrive cid-sorted from :func:`fold_centroids`. The
-    centroids still ride the broadcast 1-row cross join — the plan
-    stays map-only, no collect, and the iteration stays one lazy
-    declarative chain."""
+    The distance argmin is one vectorized numpy pass per Arrow batch
+    (:func:`_nearest`), not interpreted higher-order SQL functions
+    (zip_with + aggregate run per ELEMENT without codegen: K·dim
+    interpreted ops and a K-struct alloc per vector). The result is
+    BIT-IDENTICAL to that expression form, not merely close — see
+    :func:`_nearest` for why. The centroids ride a broadcast 1-row
+    cross join: the plan stays map-only, with no collect, and the
+    iteration stays one lazy declarative chain."""
     import numpy as np
     import pandas as pd
 
@@ -94,11 +100,7 @@ def assign(emb: DataFrame, cent_row: DataFrame) -> DataFrame:
             if len(pdf) == 0:
                 continue
             if cmat is None:
-                cents = pdf["cents"].iloc[0]
-                cids = np.array([c["cid"] for c in cents],
-                                dtype=np.int64)
-                cmat = np.stack([np.asarray(c["cv"], dtype=np.float64)
-                                 for c in cents])
+                cids, cmat = _centroid_matrix(pdf["cents"].iloc[0])
             v = np.stack(pdf["v"].to_numpy()).astype(np.float64)
             n = len(v)
             best, d = _nearest(v, cmat)
@@ -141,11 +143,7 @@ def assign_update(emb: DataFrame, cent_row: DataFrame,
             if len(pdf) == 0:
                 continue
             if cmat is None:
-                cents = pdf["cents"].iloc[0]
-                cids = np.array([c["cid"] for c in cents],
-                                dtype=np.int64)
-                cmat = np.stack([np.asarray(c["cv"], dtype=np.float64)
-                                 for c in cents])
+                cids, cmat = _centroid_matrix(pdf["cents"].iloc[0])
             v = np.stack(pdf["v"].to_numpy()).astype(np.float64)
             best = _nearest(v, cmat)[0]
             dim = cmat.shape[1]

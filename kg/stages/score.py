@@ -228,15 +228,13 @@ def _score_pair_rows(p, rows: list, threshold: float) -> list:
         if lb != na_id and pb >= threshold]
 
 
-def broadcast_weights(spark, params: dict | None = None,
-                      encoder: str = "pcnn"):
+def broadcast_weights(spark, encoder: str = "pcnn"):
     """Broadcast the frozen model once per job (npz-compressed bytes).
 
     ``encoder``: 'pcnn' (default — lookup-table fast path) or 'attn'
     (the BERT-style self-attention encoder, kg/model_attn.py); the
     scoring UDF dispatches on the params content, nothing else in the
     pipeline changes."""
-    if params is None:
-        params = (model_attn.load_default_params() if encoder == "attn"
-                  else model.load_default_params())
+    params = (model_attn.load_default_params() if encoder == "attn"
+              else model.load_default_params())
     return spark.sparkContext.broadcast(model.params_to_bytes(params))

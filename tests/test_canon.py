@@ -9,7 +9,7 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from kg import schemas
+from kg import schemas, spec
 from kg.stages import canon
 from kg.stages.link import dictionary_df
 
@@ -160,9 +160,25 @@ def test_canonicalize_norms_end_to_end(spark):
         == "zzzz wobbleplex"
 
 
-def test_canonicalize_driver_path_equals_distributed(spark):
+def test_name_cluster_rule():
+    """C4 on one cluster: a norm keeps its own dictionary entity; the
+    others take the entity of the lexicographically-first LINKED norm
+    (not of a later linked one, nor of the first norm overall); with
+    no linked norm, every member takes the minimum norm."""
+    got = dict(canon._name_cluster([
+        ("zeta", "Zeta Inc"), ("acme corpp", None), ("beta", "Beta Co"),
+        ("aaa", None)]))
+    assert got == {"zeta": "Zeta Inc", "beta": "Beta Co",
+                   "acme corpp": "Beta Co", "aaa": "Beta Co"}
+    got = dict(canon._name_cluster([("wobble x", None), ("wobble", None)]))
+    assert got == {"wobble x": "wobble", "wobble": "wobble"}
+    assert canon._name_cluster([("solo", None)]) == [("solo", "solo")]
+
+
+def test_canonicalize_driver_path_equals_distributed(spark, monkeypatch):
     """The driver-side C3+C4 fast path (small node sets) must be
-    byte-identical to the distributed join/aggregate branch."""
+    byte-identical to the distributed hash-to-min + streaming-naming
+    branch."""
     norms = spark.createDataFrame(
         [("acme corp",), ("acme corpp",), ("the acme corp",),
          ("dataquill",), ("dataquill io",), ("zzzz wobbleplex",),
@@ -170,13 +186,13 @@ def test_canonicalize_driver_path_equals_distributed(spark):
     d = dictionary_df(spark)
     fast = {(r["norm"], r["entity"])
             for r in canon.canonicalize_norms(norms, d).collect()}
+    monkeypatch.setattr(canon, "DRIVER_CANON_MAX_NODES", 0)
     dist = {(r["norm"], r["entity"])
-            for r in canon.canonicalize_norms(
-                norms, d, driver_max_nodes=0).collect()}
+            for r in canon.canonicalize_norms(norms, d).collect()}
     assert fast == dist and len(fast) == 8
 
 
-def test_canonicalize_norms_releases_its_caches(spark):
+def test_canonicalize_norms_releases_its_caches(spark, monkeypatch):
     """canonicalize_norms persists its feature and band tables; both
     branches must release them before returning, so a long-lived
     session does not gain cached DataFrames per call. Counted in the
@@ -184,7 +200,8 @@ def test_canonicalize_norms_releases_its_caches(spark):
     localCheckpoints, which are not session caches)."""
     cache = spark._jsparkSession.sharedState().cacheManager()
     d = dictionary_df(spark)
-    for kw in ({}, {"driver_max_nodes": 0}):
+    for max_nodes in (canon.DRIVER_CANON_MAX_NODES, 0):
+        monkeypatch.setattr(canon, "DRIVER_CANON_MAX_NODES", max_nodes)
         # a fresh input plan per call: persist() on a plan another
         # test already cached would not add an entry
         norms = spark.createDataFrame(
@@ -192,10 +209,10 @@ def test_canonicalize_norms_releases_its_caches(spark):
              ("zzzz wobbleplexx",)], "norm string").localCheckpoint(
                 eager=True)
         before = cache.numCachedEntries()
-        out = canon.canonicalize_norms(norms, d, **kw)
-        assert cache.numCachedEntries() == before, kw
+        out = canon.canonicalize_norms(norms, d)
+        assert cache.numCachedEntries() == before, max_nodes
         assert dict(map(tuple, out.collect()))["acme corpp"] \
-            == "Acme Corp", kw
+            == "Acme Corp", max_nodes
 
 
 def test_resolve_entities_typo_inherits_dict_entity(spark):
@@ -234,23 +251,25 @@ def test_snapshot_id_requires_files(spark):
         pipeline.snapshot_id_of(df)
 
 
-def test_simhash_near_pairs_block_cap(spark):
+def test_simhash_near_pairs_block_cap(spark, monkeypatch):
     """Identical docs all share every block: a small cap must drop the
     degenerate bucket rather than emit O(n²) pairs."""
     docs = spark.createDataFrame(
         [(i, "alpha beta gamma delta epsilon zeta") for i in range(40)],
         "doc_id long, text string")
     sims = canon.simhash64(docs)
-    assert canon.simhash_near_pairs(sims, block_cap=8).count() == 0
-    full = canon.simhash_near_pairs(sims, block_cap=64).count()
+    monkeypatch.setattr(spec, "BLOCK_CAP", 8)
+    assert canon.simhash_near_pairs(sims).count() == 0
+    monkeypatch.setattr(spec, "BLOCK_CAP", 64)
+    full = canon.simhash_near_pairs(sims).count()
     assert full == 40 * 39 // 2
 
 
 def test_minhash_deterministic(spark):
-    norms = spark.createDataFrame([("acme corp",), ("dataquill",)],
-                                  "norm string")
-    a = {r["node"]: r["sig"] for r in canon.minhash_signatures(norms).collect()}
-    b = {r["node"]: r["sig"] for r in canon.minhash_signatures(norms).collect()}
+    feats = canon.node_features(spark.createDataFrame(
+        [("acme corp",), ("dataquill",)], "norm string"))
+    a = {r["node"]: r["sig"] for r in canon.minhash_signatures(feats).collect()}
+    b = {r["node"]: r["sig"] for r in canon.minhash_signatures(feats).collect()}
     assert a == b
     assert len(a) == 2
     assert all(len(s) == 128 for s in a.values())
@@ -366,11 +385,11 @@ def test_candidate_pairs_drop_count_observable(spark):
     assert got["dropped_nodes"] >= 9 * got["dropped_buckets"]
 
 
-def test_canonicalize_edge_bound_falls_back_distributed(spark):
+def test_canonicalize_edge_bound_falls_back_distributed(spark, monkeypatch):
     """ADVICE r2 (medium): the driver C3+C4 fast path must probe the
-    EDGE count, not just nodes — with driver_max_edges=1 a clustered
-    norm set exceeds the bound and the distributed branch runs,
-    producing identical output to the driver path."""
+    EDGE count, not just nodes — with DRIVER_CANON_MAX_EDGES=1 a
+    clustered norm set exceeds the bound and the distributed branch
+    runs, producing identical output to the driver path."""
     rows = [("acme corp",), ("acme corporation",), ("acme corp.",),
             ("dataquill",), ("dataquill.io",), ("solben",)]
     norms = spark.createDataFrame(rows, "norm string")
@@ -378,13 +397,13 @@ def test_canonicalize_edge_bound_falls_back_distributed(spark):
         [("acme corp", "Acme Corp"), ("dataquill", "Dataquill")],
         "norm string, entity string")
     via_driver = canon.canonicalize_norms(norms, dict_df)
-    via_dist = canon.canonicalize_norms(norms, dict_df,
-                                        driver_max_edges=1)
+    monkeypatch.setattr(canon, "DRIVER_CANON_MAX_EDGES", 1)
+    via_dist = canon.canonicalize_norms(norms, dict_df)
     assert sorted(map(tuple, via_driver.collect())) \
         == sorted(map(tuple, via_dist.collect()))
 
 
-def test_components_auto_parity(spark):
+def test_components_auto_parity(spark, monkeypatch):
     """components_auto: driver union-find output == distributed
     hash-to-min output on the same multi-component graph, and the
     edge-bound forces the distributed branch (probe discipline)."""
@@ -398,9 +417,9 @@ def test_components_auto_parity(spark):
             for r in canon.components_auto(nodes, edges).collect()}
     dist = {(r["node"], r["component"])
             for r in canon.connected_components(nodes, edges).collect()}
+    monkeypatch.setattr(canon, "DRIVER_CANON_MAX_EDGES", 1)
     forced = {(r["node"], r["component"])
-              for r in canon.components_auto(
-                  nodes, edges, driver_max_edges=1).collect()}
+              for r in canon.components_auto(nodes, edges).collect()}
     assert fast == dist == forced
     assert (999, 999) in fast            # singleton keeps itself
 
@@ -426,7 +445,7 @@ def test_simhash_md5_60_variant_exact_and_portable(spark):
         assert sh[r["doc_id"]] == sig
     # (a) block-join exactness
     got = {(r["src"], r["dst"]): r["hamming"]
-           for r in canon.simhash_near_pairs(sims, max_hamming=3).collect()}
+           for r in canon.simhash_near_pairs(sims).collect()}
     ids = sorted(sh)
     want = {}
     for i, a in enumerate(ids):

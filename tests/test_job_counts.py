@@ -27,12 +27,13 @@ def _graph(spark):
     return nodes, edges
 
 
-def test_canonicalize_norms_jobs(spark, count_jobs):
+def test_canonicalize_norms_jobs(spark, count_jobs, monkeypatch):
     d = dictionary_df(spark)
-    for kw, pin in (({}, 10), ({"driver_max_nodes": 0}, 39)):
+    for max_nodes, pin in ((canon.DRIVER_CANON_MAX_NODES, 10), (0, 34)):
+        monkeypatch.setattr(canon, "DRIVER_CANON_MAX_NODES", max_nodes)
         norms = _norms(spark)
-        _, n = count_jobs(lambda: canon.canonicalize_norms(norms, d, **kw))
-        assert n <= pin, (kw, n)
+        _, n = count_jobs(lambda: canon.canonicalize_norms(norms, d))
+        assert n <= pin, (max_nodes, n)
 
 
 def test_components_auto_jobs(spark, count_jobs):
@@ -65,8 +66,10 @@ def test_resolve_entities_jobs(spark, count_jobs):
     scored = spark.createDataFrame(
         [tuple(row[f.name] for f in schema.fields)], schema)
     d = dictionary_df(spark)
-    _, n = count_jobs(lambda: pipeline.resolve_entities(scored, d))
+    out, n = count_jobs(lambda: pipeline.resolve_entities(scored, d))
     assert n <= 13, n
+    _, n = count_jobs(out.collect)
+    assert n <= 2, n
 
 
 def test_corpus_pipeline_jobs(spark, count_jobs):
