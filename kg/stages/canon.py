@@ -488,20 +488,20 @@ DRIVER_CANON_MAX_EDGES = 1_000_000
 
 
 def _driver_components(nodes: DataFrame, edges: DataFrame
-                       ) -> tuple[list, dict[int, int]] | None:
+                       ) -> dict | None:
     """Driver-side C3 behind the fast-path gate: collect at most
     ``DRIVER_CANON_MAX_NODES`` + 1 rows of ``nodes`` (projected by the
     caller; it has a ``node`` column) and, only if they fit, at most
     ``DRIVER_CANON_MAX_EDGES`` + 1 (src, dst) rows of ``edges``. Both
     bounds are read at call time. Returns None when either probe
     overflows — the caller then runs its distributed branch — else
-    ``(node_rows, {node: component})``.
+    ``{row: component}`` over the distinct collected rows, in
+    first-seen order, so duplicate rows collapse as they do in the
+    distributed groupBy.
 
-    The components come from a union-find (path halving, the smaller
-    root wins): component = min member id, for every distinct node id
-    in first-seen order, so duplicate node rows collapse as they do
-    in the distributed groupBy. An edge with an endpoint outside
-    ``nodes`` is skipped."""
+    The components come from a union-find over the rows' ``node``
+    ids (path halving, the smaller root wins): component = min member
+    id. An edge with an endpoint outside ``nodes`` is skipped."""
     node_rows = nodes.limit(DRIVER_CANON_MAX_NODES + 1).collect()
     if len(node_rows) > DRIVER_CANON_MAX_NODES:
         return None
@@ -522,7 +522,7 @@ def _driver_components(nodes: DataFrame, edges: DataFrame
             a, b = find(s), find(d)
             if a != b:
                 parent[max(a, b)] = min(a, b)
-    return node_rows, {n: find(n) for n in list(parent)}
+    return {r: find(r["node"]) for r in node_rows}
 
 
 def components_auto(nodes: DataFrame, edges: DataFrame) -> DataFrame:
@@ -547,10 +547,9 @@ def components_auto(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     ``DRIVER_CANON_MAX_NODES`` node rows (+1) and
     ``DRIVER_CANON_MAX_EDGES`` edge rows (+1) at call time — size
     driver memory accordingly."""
-    probed = _driver_components(nodes.select("node"), edges)
-    if probed is None:
+    comp = _driver_components(nodes.select("node"), edges)
+    if comp is None:
         return connected_components(nodes, edges)
-    comp = probed[1]
     node_field = nodes.select("node").schema.fields[0]
     schema = StructType([
         node_field, StructField("component", node_field.dataType)])
@@ -558,7 +557,7 @@ def components_auto(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     # createDataFrame(list-of-tuples) pickles row by row
     # (~4× slower at the 100k-node probe bound)
     return nodes.sparkSession.createDataFrame(
-        pd.DataFrame({"node": list(comp),
+        pd.DataFrame({"node": [r["node"] for r in comp],
                       "component": list(comp.values())}),
         schema)
 
@@ -587,8 +586,10 @@ def canonicalize_norms(norms: DataFrame, dict_df: DataFrame) -> DataFrame:
     C4 names the clusters on the driver, output sorted. Otherwise C3
     is the distributed hash-to-min loop and C4 one streaming
     ``mapInPandas`` over the component-keyed exchange (sorted within
-    partitions, boundaries found by :func:`stream_groups`). Every
-    DataFrame this function caches is released before it returns:
+    partitions, boundaries found by :func:`stream_groups`); one task
+    holds a whole component's (norm, entity) pairs in a Python list,
+    so that branch's per-task memory grows with the largest
+    component. Every DataFrame this function caches is released before it returns:
     the distributed branch's output is localCheckpointed first,
     because it reads the cached features."""
     handles: list = []
@@ -597,13 +598,12 @@ def canonicalize_norms(norms: DataFrame, dict_df: DataFrame) -> DataFrame:
     edges, feats = near_duplicate_edges(norms, return_feats=True,
                                         handles=handles)
     try:
-        probed = _driver_components(feats.select("norm", "node"), edges)
-        if probed is not None:
-            node_rows, comp = probed
+        comp = _driver_components(feats.select("norm", "node"), edges)
+        if comp is not None:
             entity_of = dict(dict_df.select("norm", "entity").collect())
             clusters: dict[int, list] = {}
-            for r in node_rows:
-                clusters.setdefault(comp[r["node"]], []).append(
+            for r, c in comp.items():
+                clusters.setdefault(c, []).append(
                     (r["norm"], entity_of.get(r["norm"])))
             mapping = sorted(row for members in clusters.values()
                              for row in _name_cluster(members))

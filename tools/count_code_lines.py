@@ -7,8 +7,7 @@ bracket counts every line it covers). Docstrings — the first
 statement of a module, class or function when it is a string
 literal — are found with ``ast`` and their lines do not count.
 
-    python tools/count_code_lines.py            # kg/ per file + total
-    python tools/count_code_lines.py some/dir   # another tree
+    python tools/count_code_lines.py
 
 Prints one ``<count> <path>`` line per file, then ``<total> total``.
 """
@@ -48,8 +47,8 @@ def count_file(path: Path) -> int:
     return len(code - _docstring_lines(ast.parse(src)))
 
 
-def main(argv: list[str]) -> int:
-    root = Path(argv[0] if argv else Path(__file__).parent.parent / "kg")
+def main() -> int:
+    root = Path(__file__).parent.parent / "kg"
     total = 0
     for path in sorted(root.rglob("*.py")):
         n = count_file(path)
@@ -60,4 +59,4 @@ def main(argv: list[str]) -> int:
 
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1:]))
+    sys.exit(main())
