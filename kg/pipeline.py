@@ -8,8 +8,9 @@ Dataflow at scale (the plan you'd want on 1000 executors):
       → mapInPandas extract+score+link (B1–B5 fused; narrow, no
         shuffle, broadcast model, Arrow-capped; the exact dictionary
         resolves in-UDF)
-      → [distinct norms → minhash/LSH/CC — tiny side plan on the
-         dictionary-miss tail only]
+      → [distinct dictionary-miss norms, collected when they fit the
+         driver bound → minhash/LSH/verify/union-find on the driver,
+         or the distributed minhash/LSH/CC plan above it]
       → groupBy(subj,pred,obj) agg (D2; the ONE unavoidable shuffle,
         map-side combined)
       → groupBy(subj) agg (D3; second shuffle, key-clustered sink)
@@ -24,6 +25,7 @@ from __future__ import annotations
 
 import hashlib
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from kg.stages import canon, checkpoint, link, metrics, score, triples
@@ -35,10 +37,17 @@ def resolve_entities(scored: DataFrame, dict_df: DataFrame) -> DataFrame:
     in-UDF (B5) into head_entity/tail_entity; the NULL slots are
     canonicalized via minhash/LSH + connected components.
 
+    The distinct tail is collected once, at most
+    ``canon.DRIVER_CANON_MAX_NODES`` + 1 norms. An empty tail returns
+    ``scored`` itself: every mention linked exactly, so the whole
+    canon side plan is skipped. A tail inside the bound goes to canon
+    as a driver-built frame; a larger one as its lazy plan.
+
     Callers must pass a MATERIALIZED ``scored`` frame (checkpointed or
-    parquet-backed): this function scans it multiple times
-    (miss-detection, final join), and re-running the scoring UDF per
-    scan would multiply the Python-path cost.
+    parquet-backed): this function scans it more than once (the tail
+    probe, the final join, and a large tail's canon input), and
+    re-running the scoring UDF per scan would multiply the Python-path
+    cost.
     """
     # single scan for BOTH miss sides: explode the two nullable slots
     # and keep the null ones
@@ -47,13 +56,14 @@ def resolve_entities(scored: DataFrame, dict_df: DataFrame) -> DataFrame:
                   F.when(F.col("tail_entity").isNull(), F.col("tail_norm"))))
               .alias("norm"))
               .where(F.col("norm").isNotNull())
-              .distinct()
-              .localCheckpoint(eager=True))
-    if missed.isEmpty():
-        # common fast path: every mention linked exactly — skip the
-        # whole minhash/CC side plan (it would still cost a dozen
-        # empty jobs in the iterative loop)
+              .distinct())
+    tail = missed.limit(canon.DRIVER_CANON_MAX_NODES + 1).collect()
+    if not tail:
         return scored
+    if len(tail) <= canon.DRIVER_CANON_MAX_NODES:
+        missed = scored.sparkSession.createDataFrame(
+            pd.DataFrame({"norm": [r["norm"] for r in tail]}),
+            "norm string")
     # The cluster graph must CONTAIN the dictionary norms, or a typo
     # variant can never share a component with a linked member and
     # C4's "cluster inherits the canonical of its linked member" is

@@ -9,7 +9,7 @@
   near-all-pairs (round 1 measured 673k candidate pairs from 4,793
   docs — 83% of the whole bench); word-shingle Jaccard between
   unrelated documents is ≈0, so candidates stay O(n·near_dups).
-  The minhash UDF itself is a single vectorized numpy pass
+  The minhash itself is a single vectorized numpy pass
   (concatenate + minimum.reduceat) — zero per-row Python.
 - C1c: candidate pairs are deduplicated as BARE (src, dst) int64 ids —
   the band fan-out shuffle carries 16-byte rows, never feature arrays.
@@ -25,6 +25,15 @@
   inherits the entity of its cluster's lexicographically-first
   dictionary-linked member, else its cluster's lexicographically-first
   norm (fully deterministic).
+
+Inside the driver bounds (``DRIVER_CANON_MAX_NODES`` norms,
+``DRIVER_CANON_MAX_EDGES`` distinct candidate pairs),
+:func:`canonicalize_norms` collects the JVM feature table and runs
+the rest of C1–C4 on the driver: the same minhash function, a numpy
+replica of the JVM band hash, the same blocking cap, exact Jaccard and
+a union-find — the same output without the Spark stages' fixed cost.
+Above the bounds, and for every other caller, the steps above run
+distributed.
 
 Node ids are ``xxhash64(norm)`` — deterministic across runs and
 partition layouts, unlike ``monotonically_increasing_id``.
@@ -175,31 +184,34 @@ def _feature_chunks(feats: list, max_feats: int):
         row = end
 
 
-def _minhash_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Vectorized minhash over pre-hashed feature arrays: one
-    (total_features, H) universal-hash matrix per chunk, per-row min
-    via ``np.minimum.reduceat`` — no per-row Python, no string ops.
-    Chunked so the temp matrix stays ≤ ~64 MB."""
+def _minhash(feats: list[np.ndarray]) -> np.ndarray:
+    """Vectorized minhash of pre-hashed feature arrays → (rows, H)
+    int64 signatures: one (total_features, H) universal-hash matrix
+    per chunk, per-row min via ``np.minimum.reduceat`` — no per-row
+    Python, no string ops. Chunked so the temp matrix stays ≤ ~64 MB."""
     a, b = _perm_coeffs()
     au = a.astype(np.uint64)
     bu = b.astype(np.uint64)
     m64 = np.uint64(_MERSENNE)
     max_feats = 64_000  # 64k × 128 × 8 B ≈ 64 MB temp
+    feats = [np.asarray(f, dtype=np.int64).view(np.uint64) for f in feats]
+    sigs = np.empty((len(feats), spec.MINHASH_H), dtype=np.int64)
+    for row, end, flat, offsets, _ in _feature_chunks(feats, max_feats):
+        h = (flat[:, None] * au[None, :] + bu[None, :]) % m64
+        sigs[row:end] = np.minimum.reduceat(
+            h, offsets, axis=0).astype(np.int64)
+    return sigs
+
+
+def _minhash_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """The minhash UDF: (node, f) Arrow batches → (node, sig)."""
     for pdf in it:
         if len(pdf) == 0:
             yield pd.DataFrame({"node": pd.Series(dtype=np.int64),
                                 "sig": pd.Series(dtype=object)})
             continue
-        feats = [np.asarray(f, dtype=np.int64).view(np.uint64)
-                 for f in pdf["f"]]
-        sigs = np.empty((len(feats), spec.MINHASH_H), dtype=np.int64)
-        for row, end, flat, offsets, _ in _feature_chunks(feats,
-                                                          max_feats):
-            h = (flat[:, None] * au[None, :] + bu[None, :]) % m64
-            sigs[row:end] = np.minimum.reduceat(
-                h, offsets, axis=0).astype(np.int64)
         yield pd.DataFrame({"node": pdf["node"],
-                            "sig": list(sigs)})
+                            "sig": list(_minhash(list(pdf["f"])))})
 
 
 def minhash_signatures(feats: DataFrame) -> DataFrame:
@@ -231,6 +243,45 @@ def lsh_bands(signed: DataFrame) -> DataFrame:
         for i in range(spec.MINHASH_BANDS)])
     return (signed.select("node", F.explode(bands).alias("bb"))
             .select("node", "bb.band", "bb.bhash"))
+
+
+#: the primes of Spark's XXH64 (org.apache.spark.sql.catalyst.expressions)
+_XXH_P1, _XXH_P2, _XXH_P3, _XXH_P4, _XXH_P5 = (np.uint64(p) for p in (
+    0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9,
+    0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5))
+
+
+def _rotl64(x: np.ndarray, r: int) -> np.ndarray:
+    return (x << np.uint64(r)) | (x >> np.uint64(64 - r))
+
+
+def _xxhash64_longs(lanes: np.ndarray) -> np.ndarray:
+    """Spark SQL's ``xxhash64(c1, …, ck)`` over k int64 columns,
+    vectorized: (rows, k) int64 → (rows,) int64. Spark starts from
+    seed 42 and hashes each column with ``XXH64.hashLong``, seeded
+    with the hash of the columns before it. uint64 arithmetic wraps
+    as Java's long does."""
+    h = np.full(len(lanes), 42, dtype=np.uint64)
+    for col in lanes.astype(np.uint64).T:
+        h = h + _XXH_P5 + np.uint64(8)
+        h ^= _rotl64(col * _XXH_P2, 31) * _XXH_P1
+        h = _rotl64(h, 27) * _XXH_P1 + _XXH_P4
+        h ^= h >> np.uint64(33)
+        h *= _XXH_P2
+        h ^= h >> np.uint64(29)
+        h *= _XXH_P3
+        h ^= h >> np.uint64(32)
+    return h.view(np.int64)
+
+
+def _driver_band_hashes(sigs: np.ndarray) -> np.ndarray:
+    """:func:`lsh_bands` on the driver: (rows, H) signatures →
+    (rows, b) band hashes, equal to the ``bhash`` the JVM computes for
+    the same signature lanes (pinned in tests/test_canon.py), so both
+    branches of :func:`canonicalize_norms` bucket identically."""
+    n, r = len(sigs), spec.MINHASH_ROWS
+    return _xxhash64_longs(sigs.reshape(n * spec.MINHASH_BANDS, r)) \
+        .reshape(n, spec.MINHASH_BANDS)
 
 
 def candidate_pairs(banded: DataFrame,
@@ -472,19 +523,46 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
     return labels.withColumnRenamed("label", "component")
 
 
-#: node count under which C3+C4 run on the driver. The iterative CC
-#: loop costs O(rounds) driver-scheduled jobs on kilobytes of data —
-#: pure fixed cost that caps strong scaling (Amdahl); a union-find
-#: over ≤100k collected ids is milliseconds. Above the threshold the
-#: distributed hash-to-min path runs — identical output (tested).
+#: node count up to which :func:`canonicalize_norms` runs C1–C4, and
+#: :func:`components_auto` C3, on the driver. Small inputs make the
+#: Spark stages pure fixed cost — the iterative CC loop alone is
+#: O(rounds) driver-scheduled jobs on kilobytes of data, which caps
+#: strong scaling (Amdahl). The driver C1–C4 was still faster at this
+#: bound (98,956 norms on 4 cores: 12.9 s vs 19.2 s median, ~600 MB
+#: driver RSS), so the bound caps driver memory; the crossover above
+#: it is unmeasured. Above it the distributed path runs — identical
+#: output (tested).
 DRIVER_CANON_MAX_NODES = 100_000
 
-#: edge count bound for the same fast path: node count alone doesn't
+#: the edge bound of the same driver paths: node count alone doesn't
 #: bound the edge set (100k near-identical norms under block_cap=64 ×
-#: 32 bands can emit ~10⁸ surviving pairs — enough to OOM the driver).
-#: The edge probe collects at most this many +1 rows; one more and the
-#: distributed branch runs instead.
+#: 32 bands can emit ~10⁸ pairs — enough to OOM the driver).
+#: :func:`components_auto` collects at most this many +1 edges;
+#: :func:`canonicalize_norms` admits at most this many distinct
+#: candidate pairs (at 888,608 of them its driver branch took 20.9 s
+#: vs 31.9 s distributed). One more and the distributed branch runs
+#: instead.
 DRIVER_CANON_MAX_EDGES = 1_000_000
+
+
+def _union_find(ids, pairs) -> dict:
+    """``{id: component}`` over ``ids``, component = the min id of its
+    connected set: a union-find with path halving where the smaller
+    root wins. A pair with an endpoint outside ``ids`` is skipped."""
+    parent = {i: i for i in ids}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for s, d in pairs:
+        if s in parent and d in parent:
+            a, b = find(s), find(d)
+            if a != b:
+                parent[max(a, b)] = min(a, b)
+    return {i: find(i) for i in parent}
 
 
 def _driver_components(nodes: DataFrame, edges: DataFrame
@@ -497,11 +575,8 @@ def _driver_components(nodes: DataFrame, edges: DataFrame
     overflows — the caller then runs its distributed branch — else
     ``{row: component}`` over the distinct collected rows, in
     first-seen order, so duplicate rows collapse as they do in the
-    distributed groupBy.
-
-    The components come from a union-find over the rows' ``node``
-    ids (path halving, the smaller root wins): component = min member
-    id. An edge with an endpoint outside ``nodes`` is skipped."""
+    distributed groupBy. The components come from :func:`_union_find`
+    over the rows' ``node`` ids."""
     node_rows = nodes.limit(DRIVER_CANON_MAX_NODES + 1).collect()
     if len(node_rows) > DRIVER_CANON_MAX_NODES:
         return None
@@ -509,20 +584,8 @@ def _driver_components(nodes: DataFrame, edges: DataFrame
                  .limit(DRIVER_CANON_MAX_EDGES + 1).collect())
     if len(edge_rows) > DRIVER_CANON_MAX_EDGES:
         return None
-    parent = {r["node"]: r["node"] for r in node_rows}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for s, d in edge_rows:
-        if s in parent and d in parent:
-            a, b = find(s), find(d)
-            if a != b:
-                parent[max(a, b)] = min(a, b)
-    return {r: find(r["node"]) for r in node_rows}
+    comp = _union_find([r["node"] for r in node_rows], edge_rows)
+    return {r: comp[r["node"]] for r in node_rows}
 
 
 def components_auto(nodes: DataFrame, edges: DataFrame) -> DataFrame:
@@ -575,35 +638,89 @@ def _name_cluster(members: list[tuple[str, str | None]]
     return [(n, name if e is None else e) for n, e in members]
 
 
+def _driver_near_duplicates(feats: list) -> set[tuple[int, int]] | None:
+    """C1–C2 of :func:`near_duplicate_edges` on the driver, over the
+    feature arrays of distinct nodes: :func:`_minhash`, the
+    :func:`_driver_band_hashes` banding, :func:`capped_blocks`'s rule
+    (keep the (band, bhash) blocks of 2..``BLOCK_CAP`` rows), the pair
+    dedup of :func:`candidate_pairs`, and :func:`verify_pairs`' exact
+    Jaccard ≥ ``TAU_DUP``, with |A∩B| counted over distinct hashes as
+    ``array_intersect`` does. Returns the verified (i, j) row-index
+    pairs, i < j — or None, before any Jaccard is computed, once the
+    kept blocks hold more than ``DRIVER_CANON_MAX_EDGES`` distinct
+    candidate pairs."""
+    n = len(feats)
+    codes = np.empty(0, dtype=np.int64)  # pair (i, j) as i·n + j
+    for col in _driver_band_hashes(_minhash(feats)).T:
+        order = np.argsort(col, kind="stable")
+        keys = col[order]
+        starts = np.flatnonzero(np.r_[True, keys[1:] != keys[:-1]])
+        sizes = np.diff(np.r_[starts, n])
+        keep = (sizes >= 2) & (sizes <= spec.BLOCK_CAP)
+        # a band's blocks are disjoint, so its pairs are distinct: one
+        # band over the budget is over it without building its pairs
+        if (sizes[keep] * (sizes[keep] - 1) // 2).sum() \
+                > DRIVER_CANON_MAX_EDGES:
+            return None
+        band = [codes]
+        for k in np.unique(sizes[keep]):
+            members = np.sort(order[starts[keep & (sizes == k)][:, None]
+                                    + np.arange(k)], axis=1)
+            i, j = np.triu_indices(k, 1)
+            band.append((members[:, i] * n + members[:, j]).ravel())
+        codes = np.unique(np.concatenate(band))
+        if len(codes) > DRIVER_CANON_MAX_EDGES:
+            return None
+    sets = [set(f) for f in feats]
+    src, dst = divmod(codes, n)
+    return {(i, j) for i, j in zip(src.tolist(), dst.tolist())
+            if (x := len(sets[i] & sets[j]))
+            / (len(feats[i]) + len(feats[j]) - x) >= spec.TAU_DUP}
+
+
 def canonicalize_norms(norms: DataFrame, dict_df: DataFrame) -> DataFrame:
     """C1→C4 end-to-end over a distinct ``norm`` column → (norm,
     entity): every norm named by :func:`_name_cluster` over its
     component.
 
-    C1/C2 (minhash, banding, verify) are always distributed — they
-    scale with the data. When both probes of
-    :func:`_driver_components` fit, C3 is its driver union-find and
-    C4 names the clusters on the driver, output sorted. Otherwise C3
-    is the distributed hash-to-min loop and C4 one streaming
-    ``mapInPandas`` over the component-keyed exchange (sorted within
-    partitions, boundaries found by :func:`stream_groups`); one task
-    holds a whole component's (norm, entity) pairs in a Python list,
-    so that branch's per-task memory grows with the largest
-    component. Every DataFrame this function caches is released before it returns:
-    the distributed branch's output is localCheckpointed first,
-    because it reads the cached features."""
-    handles: list = []
-    # signatures carry node, not norm — the node → norm map below
-    # reads off the persisted feature table
-    edges, feats = near_duplicate_edges(norms, return_feats=True,
-                                        handles=handles)
+    :func:`node_features` runs in the JVM either way. One gate then
+    picks one of two whole branches:
+
+    - Driver: at most ``DRIVER_CANON_MAX_NODES`` + 1 (norm, f) rows
+      are collected. If they fit, and the kept LSH blocks hold at most
+      ``DRIVER_CANON_MAX_EDGES`` distinct candidate pairs, C1–C2 are
+      :func:`_driver_near_duplicates`, C3 :func:`_union_find` and C4
+      names the clusters on the driver, output sorted. The banding is
+      bit-identical to :func:`lsh_bands`, so both branches compare the
+      same pairs.
+    - Distributed: above either bound, C1–C2 are the steps of
+      :func:`near_duplicate_edges` over the probe's persisted feature
+      table, C3 the hash-to-min loop of
+      :func:`connected_components`, and C4 one streaming
+      ``mapInPandas`` over the component-keyed exchange (sorted within
+      partitions, boundaries found by :func:`stream_groups`); one task
+      holds a whole component's (norm, entity) pairs in a Python list,
+      so per-task memory grows with the largest component.
+
+    Every DataFrame this function caches is released before it
+    returns: the distributed branch's output is localCheckpointed
+    first, because it reads the cached features."""
+    # persisted, so the distributed branch reuses the probe's scan. Not
+    # near_duplicate_edges: building its lazy band plan alone (32 band
+    # columns, ~3k Py4J calls) costs the driver branch ~1 s per call
+    feats = node_features(norms).persist()
+    handles = [feats]
     try:
-        comp = _driver_components(feats.select("norm", "node"), edges)
-        if comp is not None:
+        rows = (feats.select("norm", "f")
+                .limit(DRIVER_CANON_MAX_NODES + 1).collect())
+        pairs = (_driver_near_duplicates([r["f"] for r in rows])
+                 if len(rows) <= DRIVER_CANON_MAX_NODES else None)
+        if pairs is not None:
+            comp = _union_find(range(len(rows)), pairs)
             entity_of = dict(dict_df.select("norm", "entity").collect())
             clusters: dict[int, list] = {}
-            for r, c in comp.items():
-                clusters.setdefault(c, []).append(
+            for i, r in enumerate(rows):
+                clusters.setdefault(comp[i], []).append(
                     (r["norm"], entity_of.get(r["norm"])))
             mapping = sorted(row for members in clusters.values()
                              for row in _name_cluster(members))
@@ -611,6 +728,9 @@ def canonicalize_norms(norms: DataFrame, dict_df: DataFrame) -> DataFrame:
                 pd.DataFrame(mapping, columns=["norm", "entity"]),
                 "norm string, entity string")
 
+        banded = lsh_bands(minhash_signatures(feats)).persist()
+        handles.append(banded)
+        edges = verify_pairs(candidate_pairs(banded), feats)
         # an inner join keeps every norm: connected_components labels
         # every node it is given
         linked = (feats.select("norm", "node")

@@ -14,8 +14,6 @@ transcripts cannot blow Python-worker memory.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
@@ -65,42 +63,6 @@ def _predict(p, token_ids, heads, tails):
     probs = predict_probs(p, token_ids, heads, tails)
     lab = probs.argmax(axis=1)
     return lab, probs[np.arange(len(lab)), lab]
-
-
-def score_instances(
-    instances: DataFrame,
-    weights_bc,
-    threshold: float = spec.REL_THRESHOLD,
-    type_filter: bool = True,
-) -> DataFrame:
-    """T3 → T4: classify every instance, drop NA and sub-threshold
-    rows, optionally enforce the relation type signature."""
-    rels = np.array(spec.RELATIONS)
-
-    def score_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        p = None
-        for pdf in it:
-            if p is None:
-                p = _unpack_once(weights_bc)
-            if len(pdf) == 0:
-                yield pdf.assign(rel=pd.Series(dtype=str),
-                                 score=pd.Series(dtype="float32"))
-                continue
-            ids = [list(x) for x in pdf["token_ids"]]
-            lab, prob = _predict(
-                p, ids, pdf["head_pos"].to_numpy(),
-                pdf["tail_pos"].to_numpy())
-            out = pdf.copy()
-            out["rel"] = rels[lab]
-            out["score"] = prob.astype(np.float32)
-            keep = (lab != spec.REL_TO_ID[spec.NA_RELATION]) & \
-                   (prob >= threshold)
-            yield out[keep]
-
-    scored = instances.mapInPandas(score_batches, schema=schemas.SCORED)
-    if type_filter:
-        scored = apply_type_signature(scored)
-    return scored
 
 
 def apply_type_signature(scored: DataFrame) -> DataFrame:

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import duckdb
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -176,9 +177,9 @@ def test_name_cluster_rule():
 
 
 def test_canonicalize_driver_path_equals_distributed(spark, monkeypatch):
-    """The driver-side C3+C4 fast path (small node sets) must be
-    byte-identical to the distributed hash-to-min + streaming-naming
-    branch."""
+    """The driver-side C1–C4 branch (small node sets) must be
+    byte-identical to the distributed minhash/LSH + hash-to-min +
+    streaming-naming branch."""
     norms = spark.createDataFrame(
         [("acme corp",), ("acme corpp",), ("the acme corp",),
          ("dataquill",), ("dataquill io",), ("zzzz wobbleplex",),
@@ -215,11 +216,12 @@ def test_canonicalize_norms_releases_its_caches(spark, monkeypatch):
             == "Acme Corp", max_nodes
 
 
-def test_resolve_entities_typo_inherits_dict_entity(spark):
+def test_resolve_entities_typo_inherits_dict_entity(spark, monkeypatch):
     """ADVICE r1: a dictionary-MISS typo variant must inherit the
     canonical entity of its dictionary-linked cluster-mate through
     connected components — which requires the dict norms to be part of
-    the CC node set (they are not themselves misses)."""
+    the CC node set (they are not themselves misses). Holds for a tail
+    inside the driver bound and for one above it."""
     from kg import pipeline, schemas
     from pyspark.sql import types as T
 
@@ -237,9 +239,25 @@ def test_resolve_entities_typo_inherits_dict_entity(spark):
                head_entity=None, tail_entity="Dataquill")
     scored = spark.createDataFrame(
         [tuple(row[f.name] for f in schema.fields)], schema)
-    out = pipeline.resolve_entities(scored, dictionary_df(spark)).collect()
-    assert out[0]["head_entity"] == "Acme Corp"   # via CC, not cluster-min
-    assert out[0]["tail_entity"] == "Dataquill"
+    for max_nodes in (canon.DRIVER_CANON_MAX_NODES, 0):
+        monkeypatch.setattr(canon, "DRIVER_CANON_MAX_NODES", max_nodes)
+        out = pipeline.resolve_entities(scored,
+                                        dictionary_df(spark)).collect()
+        # via CC, not cluster-min
+        assert out[0]["head_entity"] == "Acme Corp", max_nodes
+        assert out[0]["tail_entity"] == "Dataquill", max_nodes
+
+
+def test_resolve_entities_empty_tail_returns_scored(spark):
+    """Every slot already linked: no dictionary-miss tail, so
+    resolve_entities hands back ``scored`` itself."""
+    from kg import pipeline
+
+    scored = spark.createDataFrame(
+        [("acme corp", "Acme Corp", "dataquill", "Dataquill")],
+        "head_norm string, head_entity string, "
+        "tail_norm string, tail_entity string")
+    assert pipeline.resolve_entities(scored, dictionary_df(spark)) is scored
 
 
 def test_snapshot_id_requires_files(spark):
@@ -293,15 +311,21 @@ def test_lsh_hash_draw_is_pinned(spark):
         "a lazy dog naps": (
             7301889154956114882,
             [-5212147014743506981, -1957631117775061530])}
-    banded = canon.lsh_bands(canon.minhash_signatures(feats))
-    assert sorted((r["node"], r["band"], r["bhash"])
-                  for r in banded.where("band < 3").collect()) == [
+    pinned = [
         (-5711067284744493187, 0, 3537194632241836254),
         (-5711067284744493187, 1, -2295364682965291779),
         (-5711067284744493187, 2, 4356539368976473354),
         (7301889154956114882, 0, -5472558438430359950),
         (7301889154956114882, 1, 318720250448410204),
         (7301889154956114882, 2, -7763618613656695973)]
+    banded = canon.lsh_bands(canon.minhash_signatures(feats))
+    assert sorted((r["node"], r["band"], r["bhash"])
+                  for r in banded.where("band < 3").collect()) == pinned
+    # the driver branch of canonicalize_norms draws the same buckets
+    rows = feats.collect()
+    bands = canon._driver_band_hashes(canon._minhash([r["f"] for r in rows]))
+    assert sorted((r["node"], b, int(bands[i, b]))
+                  for i, r in enumerate(rows) for b in range(3)) == pinned
 
 
 def test_near_duplicate_edges_matches_bruteforce(spark):
@@ -385,11 +409,130 @@ def test_candidate_pairs_drop_count_observable(spark):
     assert got["dropped_nodes"] >= 9 * got["dropped_buckets"]
 
 
+def _distributed_spy(monkeypatch) -> list:
+    """Record each call of the distributed C3, so a test can tell which
+    branch of canonicalize_norms ran."""
+    calls: list = []
+    real = canon.connected_components
+
+    def spy(*args, **kw):
+        calls.append(1)
+        return real(*args, **kw)
+
+    monkeypatch.setattr(canon, "connected_components", spy)
+    return calls
+
+
+def _mapping(norms, dict_df) -> list:
+    return sorted(map(tuple, canon.canonicalize_norms(norms, dict_df)
+                      .collect()))
+
+
+def _typo(norm: str, pos: int, ch: str) -> str:
+    i = pos % len(norm)
+    return norm[:i] + ch + norm[i + 1:]
+
+
+_DICT_NORMS = sorted(spec.linking_dictionary())
+
+
+@given(st.lists(st.tuples(st.sampled_from(_DICT_NORMS),
+                          st.integers(0, 40),
+                          st.sampled_from("aeiouxyz "),
+                          st.booleans()),
+                min_size=1, max_size=12))
+@settings(max_examples=5, deadline=None)
+def test_canonicalize_driver_equals_distributed_on_typos(spark_prop, draws):
+    """Property: on a random set of dictionary norms and one-letter
+    typos of them (each typo with or without its source norm), the
+    driver C1–C4 branch and the forced-distributed branch give the
+    same mapping."""
+    rows = set()
+    for norm, pos, ch, keep_source in draws:
+        rows.add(_typo(norm, pos, ch))
+        if keep_source:
+            rows.add(norm)
+    norms = spark_prop.createDataFrame(sorted((r,) for r in rows),
+                                       "norm string")
+    d = dictionary_df(spark_prop)
+    with pytest.MonkeyPatch.context() as mp:
+        calls = _distributed_spy(mp)
+        driver = _mapping(norms, d)
+        assert not calls
+        mp.setattr(canon, "DRIVER_CANON_MAX_NODES", 0)
+        distributed = _mapping(norms, d)
+        assert calls
+    assert driver == distributed
+    assert {n for n, _ in driver} == rows
+
+
+def test_canonicalize_over_cap_bucket_matches_distributed(spark,
+                                                          monkeypatch):
+    """70 near-identical long norms (one-letter variants of a
+    600-character string) fill some band buckets past ``BLOCK_CAP``.
+    Both branches drop those buckets: they verify the same edges and
+    give the same mapping."""
+    import random
+
+    rng = random.Random(0)
+    base = "".join(rng.choices("abcdefghijklmnopqrstuvwxyz ", k=600))
+    rows = [(_typo(base, 5 * i, "#"),) for i in range(70)]
+    norms = spark.createDataFrame(rows, "norm string")
+    feats = canon.node_features(norms).collect()
+    bands = canon._driver_band_hashes(canon._minhash([r["f"] for r in feats]))
+    biggest = max(np.unique(col, return_counts=True)[1].max()
+                  for col in bands.T)
+    assert biggest > spec.BLOCK_CAP, biggest
+    nodes = [r["node"] for r in feats]
+    driver_edges = {tuple(sorted((nodes[i], nodes[j]))) for i, j in
+                    canon._driver_near_duplicates([r["f"] for r in feats])}
+    jvm_edges = {(r["src"], r["dst"]) for r in canon.near_duplicate_edges(
+        norms).collect()}
+    assert driver_edges == jvm_edges and jvm_edges
+    d = dictionary_df(spark)
+    driver = _mapping(norms, d)
+    monkeypatch.setattr(canon, "DRIVER_CANON_MAX_NODES", 0)
+    assert _mapping(norms, d) == driver
+    assert len({e for _, e in driver}) < len(driver)
+
+
+def test_canonicalize_pair_budget_gates_the_driver_branch(spark,
+                                                          monkeypatch):
+    """The driver branch admits exactly ``DRIVER_CANON_MAX_EDGES``
+    distinct candidate pairs, as many as :func:`candidate_pairs`
+    emits. A near-duplicate pair shares many bands, so the kept
+    blocks' summed pair slots (k(k−1)/2 per block of k) exceed that
+    count and do not gate. At the JVM's distinct count the driver
+    branch runs; one pair under it, the distributed branch does, with
+    the same mapping."""
+    from pyspark.sql import functions as F
+
+    norms = spark.createDataFrame(
+        [("acme corp",), ("acme corpp",), ("acme corporation",),
+         ("the acme corp",), ("dataquill",), ("dataquill io",),
+         ("zzzz wobbleplex",), ("zzzz wobbleplexx",)], "norm string")
+    banded = canon.lsh_bands(
+        canon.minhash_signatures(canon.node_features(norms)))
+    slots = canon.capped_blocks(banded, ["band", "bhash"], "node",
+                                spec.BLOCK_CAP).select(
+        F.sum(F.size("ns") * (F.size("ns") - 1) / 2)).first()[0]
+    distinct = canon.candidate_pairs(banded).count()
+    assert slots > distinct > 0, (slots, distinct)
+    d = dictionary_df(spark)
+    calls = _distributed_spy(monkeypatch)
+    monkeypatch.setattr(canon, "DRIVER_CANON_MAX_EDGES", distinct)
+    driver = _mapping(norms, d)
+    assert not calls
+    monkeypatch.setattr(canon, "DRIVER_CANON_MAX_EDGES", distinct - 1)
+    assert _mapping(norms, d) == driver
+    assert calls
+
+
 def test_canonicalize_edge_bound_falls_back_distributed(spark, monkeypatch):
-    """ADVICE r2 (medium): the driver C3+C4 fast path must probe the
-    EDGE count, not just nodes — with DRIVER_CANON_MAX_EDGES=1 a
-    clustered norm set exceeds the bound and the distributed branch
-    runs, producing identical output to the driver path."""
+    """ADVICE r2 (medium): the driver branch must bound the candidate
+    pairs, not just the nodes — with DRIVER_CANON_MAX_EDGES=1 a
+    clustered norm set exceeds the pair budget and the distributed
+    branch runs, producing identical output to the driver path."""
     rows = [("acme corp",), ("acme corporation",), ("acme corp.",),
             ("dataquill",), ("dataquill.io",), ("solben",)]
     norms = spark.createDataFrame(rows, "norm string")

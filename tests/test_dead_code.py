@@ -17,10 +17,6 @@ ALLOWED = {
     "contract.DRIVER_WINDOW": "the driver's evaluation window; "
                               "test_contract checks driver_order "
                               "against it",
-    "score.score_instances": "reference scorer of the fused-path "
-                             "equivalence tests",
-    "link.link_instances": "reference linker of the fused-path "
-                           "equivalence tests",
     "spec.bpe_symbol_count": "pure-Python reference the BPE "
                              "contract expressions are tested against",
 }

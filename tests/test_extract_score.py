@@ -3,12 +3,72 @@ weights, type filtering, dictionary linking (SURVEY.md §5.1)."""
 
 from __future__ import annotations
 
+from collections.abc import Iterator
 from datetime import datetime
 
-from pyspark.sql import functions as F
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame, functions as F
 
 from kg import schemas, spec
 from kg.stages import extract, link, score
+
+
+# Reference implementations of B4 and B5 as separate DataFrame steps.
+# Production runs them fused into one pass
+# (score.extract_and_score_fused and its cross-turn twin); the
+# equivalence tests below compare the fused pass against these.
+
+def score_instances(instances: DataFrame, weights_bc,
+                    threshold: float = spec.REL_THRESHOLD,
+                    type_filter: bool = True) -> DataFrame:
+    """T3 → T4: classify every instance, drop NA and sub-threshold
+    rows, optionally enforce the relation type signature."""
+    rels = np.array(spec.RELATIONS)
+
+    def score_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        p = None
+        for pdf in it:
+            if p is None:
+                p = score._unpack_once(weights_bc)
+            if len(pdf) == 0:
+                yield pdf.assign(rel=pd.Series(dtype=str),
+                                 score=pd.Series(dtype="float32"))
+                continue
+            ids = [list(x) for x in pdf["token_ids"]]
+            lab, prob = score._predict(
+                p, ids, pdf["head_pos"].to_numpy(),
+                pdf["tail_pos"].to_numpy())
+            out = pdf.copy()
+            out["rel"] = rels[lab]
+            out["score"] = prob.astype(np.float32)
+            keep = (lab != spec.REL_TO_ID[spec.NA_RELATION]) & \
+                   (prob >= threshold)
+            yield out[keep]
+
+    scored = instances.mapInPandas(score_batches, schema=schemas.SCORED)
+    if type_filter:
+        scored = score.apply_type_signature(scored)
+    return scored
+
+
+def link_exact(df: DataFrame, dict_df: DataFrame, norm_col: str,
+               out_col: str) -> DataFrame:
+    """Left broadcast-join ``norm_col`` against the dictionary; adds
+    ``out_col`` (nullable canonical entity) and ``out_col + '_score'``
+    (1.0 exact / null)."""
+    d = F.broadcast(dict_df.select(
+        F.col("norm").alias(norm_col),
+        F.col("entity").alias(out_col)))
+    return (df.join(d, on=norm_col, how="left")
+              .withColumn(f"{out_col}_score",
+                          F.when(F.col(out_col).isNotNull(), F.lit(1.0))))
+
+
+def link_instances(scored: DataFrame, dict_df: DataFrame) -> DataFrame:
+    """T4 → T4 ⊕ (head_entity, tail_entity): two broadcast joins."""
+    df = link_exact(scored, dict_df, "head_norm", "head_entity")
+    return link_exact(df, dict_df, "tail_norm", "tail_entity")
 
 ROWS = [
     ("c1", 0, "user", "Ann Barard works at Acme Corp according to the report",
@@ -45,7 +105,7 @@ def test_detect_mentions_ids_deterministic(spark):
 def test_score_keeps_relation_drops_na(spark):
     bc = score.broadcast_weights(spark)
     inst = extract.extract_instances(_t0(spark))
-    out = score.score_instances(inst, bc).collect()
+    out = score_instances(inst, bc).collect()
     got = {(r["head_norm"], r["rel"], r["tail_norm"]) for r in out}
     assert ("ann barard", "employed_by", "acme corp") in got
     # the NA conference sentence must not survive
@@ -57,11 +117,11 @@ def test_type_filter_blocks_signature_violations(spark):
     bc = score.broadcast_weights(spark)
     inst = extract.extract_instances(_t0(spark))
     # force a wrong-type head by relabeling mtypes before the filter
-    typed = score.score_instances(inst, bc, type_filter=False) \
+    typed = score_instances(inst, bc, type_filter=False) \
         .withColumn("head_mtype", F.lit("tool"))
     sig = score.TYPE_SIG["employed_by"]
     assert sig == ("person", "org")
-    filtered = score.score_instances(inst, bc, type_filter=True)
+    filtered = score_instances(inst, bc, type_filter=True)
     assert filtered.where(
         (F.col("rel") == "employed_by") &
         (F.col("head_mtype") != "person")).isEmpty()
@@ -94,7 +154,7 @@ def test_cross_turn_instances(spark):
 def test_link_exact_broadcast(spark):
     df = spark.createDataFrame(
         [("acme corp",), ("unknown thing",)], "head_norm string")
-    out = link.link_exact(df, link.dictionary_df(spark),
+    out = link_exact(df, link.dictionary_df(spark),
                           "head_norm", "head_entity").collect()
     by = {r["head_norm"]: r for r in out}
     assert by["acme corp"]["head_entity"] == "Acme Corp"
@@ -186,8 +246,8 @@ def test_cross_turn_fused_equals_composed_path(spark):
     fused = score.extract_and_score_cross_turn_fused(
         t0, bc, k=1, threshold=0.0)
     inst = extract.cross_turn_instances(t0, k=1)
-    composed = link.link_instances(
-        score.score_instances(inst, bc, threshold=0.0),
+    composed = link_instances(
+        score_instances(inst, bc, threshold=0.0),
         link.dictionary_df(spark)).select(
         [f.name for f in score.FUSED_SCHEMA.fields])
 

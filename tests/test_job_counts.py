@@ -29,7 +29,7 @@ def _graph(spark):
 
 def test_canonicalize_norms_jobs(spark, count_jobs, monkeypatch):
     d = dictionary_df(spark)
-    for max_nodes, pin in ((canon.DRIVER_CANON_MAX_NODES, 10), (0, 34)):
+    for max_nodes, pin in ((canon.DRIVER_CANON_MAX_NODES, 3), (0, 34)):
         monkeypatch.setattr(canon, "DRIVER_CANON_MAX_NODES", max_nodes)
         norms = _norms(spark)
         _, n = count_jobs(lambda: canon.canonicalize_norms(norms, d))
@@ -67,7 +67,7 @@ def test_resolve_entities_jobs(spark, count_jobs):
         [tuple(row[f.name] for f in schema.fields)], schema)
     d = dictionary_df(spark)
     out, n = count_jobs(lambda: pipeline.resolve_entities(scored, d))
-    assert n <= 13, n
+    assert n <= 5, n
     _, n = count_jobs(out.collect)
     assert n <= 2, n
 
