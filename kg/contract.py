@@ -722,8 +722,8 @@ def token_count_bpe_merges(spark, sf):
     count = residual characters excluding spaces, and n_merges =
     symbols eliminated. Fully JVM-side (a replace() chain inside
     whole-stage codegen — no UDF, pushable); the oracle runs the
-    IDENTICAL chain in DuckDB, and kg.spec.bpe_symbol_count pins both
-    against pure Python in pytest. token_count_bpe (above) keeps the
+    IDENTICAL chain in DuckDB, and the pure-Python bpe_symbol_count in
+    tests/test_bpe.py pins both. token_count_bpe (above) keeps the
     pre-tokenizer counts as the sanity columns.
 
     The n_bpe_symbols_udf column is the SCALE path certified in the

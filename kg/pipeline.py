@@ -25,7 +25,6 @@ from __future__ import annotations
 
 import hashlib
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from kg.stages import canon, checkpoint, link, metrics, score, triples
@@ -37,7 +36,7 @@ def resolve_entities(scored: DataFrame, dict_df: DataFrame) -> DataFrame:
     in-UDF (B5) into head_entity/tail_entity; the NULL slots are
     canonicalized via minhash/LSH + connected components.
 
-    The distinct tail is collected once, at most
+    The distinct tail is collected once through Arrow, at most
     ``canon.DRIVER_CANON_MAX_NODES`` + 1 norms. An empty tail returns
     ``scored`` itself: every mention linked exactly, so the whole
     canon side plan is skipped. A tail inside the bound goes to canon
@@ -57,13 +56,11 @@ def resolve_entities(scored: DataFrame, dict_df: DataFrame) -> DataFrame:
               .alias("norm"))
               .where(F.col("norm").isNotNull())
               .distinct())
-    tail = missed.limit(canon.DRIVER_CANON_MAX_NODES + 1).collect()
-    if not tail:
+    tail = missed.limit(canon.DRIVER_CANON_MAX_NODES + 1).toPandas()
+    if tail.empty:
         return scored
     if len(tail) <= canon.DRIVER_CANON_MAX_NODES:
-        missed = scored.sparkSession.createDataFrame(
-            pd.DataFrame({"norm": [r["norm"] for r in tail]}),
-            "norm string")
+        missed = scored.sparkSession.createDataFrame(tail, "norm string")
     # The cluster graph must CONTAIN the dictionary norms, or a typo
     # variant can never share a component with a linked member and
     # C4's "cluster inherits the canonical of its linked member" is

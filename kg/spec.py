@@ -154,17 +154,6 @@ def merge_ranks(table: list[tuple[str, str]]) -> dict[tuple[str, str], int]:
     return out
 
 
-def bpe_symbol_count(text: str) -> int:
-    """Reference (pure-Python) merged-symbol count for a lowercased
-    text: rank-ordered exhaustive rewriting, spaces excluded. The
-    Spark and DuckDB expressions in contract.token_count_bpe_merges
-    must agree with this on every input (pytest pins it)."""
-    s = text.lower()
-    for pat, rep in BPE_MERGES:
-        s = s.replace(pat, rep)
-    return len(s.replace(" ", ""))
-
-
 # ---------------------------------------------------------------------------
 # PCNN hyperparameters (B4) — Zeng et al. 2015 §3
 # ---------------------------------------------------------------------------

@@ -110,9 +110,10 @@ def encode_word(word: str, ranks: dict[tuple[str, str], int]) -> tuple[str, ...]
 def bpe_count_series(texts: pd.Series,
                      ranks: dict[tuple[str, str], int]) -> pd.Series:
     """Merged-symbol count per text (spaces excluded, lowercased —
-    the same normalization as spec.bpe_symbol_count). Unique-word
-    cache per batch: each distinct word is encoded once, then counts
-    are recombined per row — the standard tokenizer amortization.
+    the same normalization as the reference count in
+    tests/test_bpe.py). Unique-word cache per batch: each distinct
+    word is encoded once, then counts are recombined per row — the
+    standard tokenizer amortization.
     NULL text propagates as NULL (nullable Int64), matching what the
     JVM replace() chain and the DuckDB oracle do with NULL — a
     nullable corpus must not kill the task."""

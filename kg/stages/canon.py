@@ -20,11 +20,14 @@
   (GraphFrames-style on plain DataFrames; Kiveris et al. SoCC 2014
   family). Driver loop with ``localCheckpoint`` per iteration to
   truncate lineage — without it the plan grows exponentially.
-- C4: cluster naming, one rule (``_name_cluster``) run on the driver
-  or per component — a norm keeps its own dictionary entity, else
-  inherits the entity of its cluster's lexicographically-first
-  dictionary-linked member, else its cluster's lexicographically-first
-  norm (fully deterministic).
+- C4: cluster naming, one rule — a norm keeps its own dictionary
+  entity, else inherits the entity of its cluster's
+  lexicographically-first dictionary-linked member, else its cluster's
+  lexicographically-first norm (fully deterministic). It has two
+  forms, pinned equal in tests/test_canon.py: ``_name_cluster`` on the
+  driver, and one window aggregate per component
+  (``_name_components``) on the engine, whose buffer spills to disk
+  instead of holding a whole component in one Python list.
 
 Inside the driver bounds (``DRIVER_CANON_MAX_NODES`` norms,
 ``DRIVER_CANON_MAX_EDGES`` distinct candidate pairs),
@@ -45,13 +48,10 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql import DataFrame, Window, functions as F
 
 from kg import spec
 from kg.stages import graph
-from kg.stages.grouped import stream_groups
-from kg.stages.skew import cpu_stage_partitions
 
 _MERSENNE = (1 << 61) - 1
 
@@ -206,10 +206,6 @@ def _minhash(feats: list[np.ndarray]) -> np.ndarray:
 def _minhash_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """The minhash UDF: (node, f) Arrow batches → (node, sig)."""
     for pdf in it:
-        if len(pdf) == 0:
-            yield pd.DataFrame({"node": pd.Series(dtype=np.int64),
-                                "sig": pd.Series(dtype=object)})
-            continue
         yield pd.DataFrame({"node": pdf["node"],
                             "sig": list(_minhash(list(pdf["f"])))})
 
@@ -234,14 +230,16 @@ def lsh_bands(signed: DataFrame) -> DataFrame:
 
     Each band hashes its r signature lanes as r SCALAR xxhash64
     arguments (element_at), so no per-band sub-array is allocated
-    (32 slices/row at H=128)."""
+    (32 slices/row at H=128). The band array is parsed from one SQL
+    string: built column by column, its ~3k Py4J calls cost the driver
+    ~0.5 s per plan (now ~0.09 s)."""
     r = spec.MINHASH_ROWS
-    bands = F.array(*[
-        F.struct(F.lit(i).alias("band"),
-                 F.xxhash64(*[F.element_at("sig", i * r + j + 1)
-                              for j in range(r)]).alias("bhash"))
-        for i in range(spec.MINHASH_BANDS)])
-    return (signed.select("node", F.explode(bands).alias("bb"))
+    bands = ", ".join(
+        f"struct({i} AS band, xxhash64("
+        + ", ".join(f"element_at(sig, {i * r + j + 1})" for j in range(r))
+        + ") AS bhash)" for i in range(spec.MINHASH_BANDS))
+    return (signed.select("node", F.explode(F.expr(f"array({bands})"))
+                          .alias("bb"))
             .select("node", "bb.band", "bb.bhash"))
 
 
@@ -399,10 +397,6 @@ def simhash64(docs: DataFrame) -> DataFrame:
         shifts = np.arange(SIMHASH_BITS, dtype=np.uint64)
         max_feats = 64_000
         for pdf in it:
-            if len(pdf) == 0:
-                yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                    "simhash": pd.Series(dtype=np.int64)})
-                continue
             feats = [np.asarray(hs, dtype=np.int64).view(np.uint64)
                      for hs in pdf["hashes"]]
             out = np.empty(len(feats), dtype=np.int64)
@@ -565,41 +559,19 @@ def _union_find(ids, pairs) -> dict:
     return {i: find(i) for i in parent}
 
 
-def _driver_components(nodes: DataFrame, edges: DataFrame
-                       ) -> dict | None:
-    """Driver-side C3 behind the fast-path gate: collect at most
-    ``DRIVER_CANON_MAX_NODES`` + 1 rows of ``nodes`` (projected by the
-    caller; it has a ``node`` column) and, only if they fit, at most
-    ``DRIVER_CANON_MAX_EDGES`` + 1 (src, dst) rows of ``edges``. Both
-    bounds are read at call time. Returns None when either probe
-    overflows — the caller then runs its distributed branch — else
-    ``{row: component}`` over the distinct collected rows, in
-    first-seen order, so duplicate rows collapse as they do in the
-    distributed groupBy. The components come from :func:`_union_find`
-    over the rows' ``node`` ids."""
-    node_rows = nodes.limit(DRIVER_CANON_MAX_NODES + 1).collect()
-    if len(node_rows) > DRIVER_CANON_MAX_NODES:
-        return None
-    edge_rows = (edges.select("src", "dst")
-                 .limit(DRIVER_CANON_MAX_EDGES + 1).collect())
-    if len(edge_rows) > DRIVER_CANON_MAX_EDGES:
-        return None
-    comp = _union_find([r["node"] for r in node_rows], edge_rows)
-    return {r: comp[r["node"]] for r in node_rows}
-
-
 def components_auto(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     """Same contract as :func:`connected_components` — (node) +
     (src, dst) → (node, component = min member id) — but when both
-    probes of :func:`_driver_components` fit (node count ≤
-    ``DRIVER_CANON_MAX_NODES``, edge count ≤ ``DRIVER_CANON_MAX_EDGES``
-    — the edge probe matters, a dense graph can emit orders more
-    edges than nodes), run its driver union-find instead of the
-    iterative distributed loop, killing the O(rounds)
-    driver-scheduled job storm that is pure fixed cost on small
-    graphs (Amdahl tail at bench scale). Above either bound, the
-    distributed hash-to-min path runs. Output identical on every
-    WELL-FORMED graph — edge endpoints ⊆ nodes, as every in-repo
+    Arrow probes fit (at most ``DRIVER_CANON_MAX_NODES`` node rows,
+    then at most ``DRIVER_CANON_MAX_EDGES`` edge rows — the edge probe
+    matters, a dense graph can emit orders more edges than nodes), run
+    :func:`_union_find` on the driver instead of the iterative
+    distributed loop, killing the O(rounds) driver-scheduled job storm
+    that is pure fixed cost on small graphs (Amdahl tail at bench
+    scale). Both bounds are read at call time, and the node bound
+    counts rows before duplicate node rows collapse. Above either
+    bound, the distributed hash-to-min path runs. Output identical on
+    every WELL-FORMED graph — edge endpoints ⊆ nodes, as every in-repo
     caller guarantees (pinned in test_canon.py); on malformed input
     the driver branch IGNORES edges with an endpoint outside
     ``nodes`` while the distributed branch propagates labels into
@@ -610,19 +582,21 @@ def components_auto(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     ``DRIVER_CANON_MAX_NODES`` node rows (+1) and
     ``DRIVER_CANON_MAX_EDGES`` edge rows (+1) at call time — size
     driver memory accordingly."""
-    comp = _driver_components(nodes.select("node"), edges)
-    if comp is None:
+    ids = nodes.select("node").limit(DRIVER_CANON_MAX_NODES + 1).toArrow()
+    if ids.num_rows > DRIVER_CANON_MAX_NODES:
         return connected_components(nodes, edges)
-    node_field = nodes.select("node").schema.fields[0]
-    schema = StructType([
-        node_field, StructField("component", node_field.dataType)])
-    # pandas in, so the round-trip ships via Arrow —
-    # createDataFrame(list-of-tuples) pickles row by row
-    # (~4× slower at the 100k-node probe bound)
+    pairs = (edges.select("src", "dst")
+             .limit(DRIVER_CANON_MAX_EDGES + 1).toArrow())
+    if pairs.num_rows > DRIVER_CANON_MAX_EDGES:
+        return connected_components(nodes, edges)
+    # to_pylist keeps int ids and nulls as they are (pandas would turn
+    # a nullable long into float); the union-find dict drops duplicates
+    comp = _union_find(ids["node"].to_pylist(),
+                       zip(pairs["src"].to_pylist(),
+                           pairs["dst"].to_pylist()))
     return nodes.sparkSession.createDataFrame(
-        pd.DataFrame({"node": [r["node"] for r in comp],
-                      "component": list(comp.values())}),
-        schema)
+        pd.DataFrame({"node": list(comp), "component": list(comp.values())}),
+        nodes.select("node", F.col("node").alias("component")).schema)
 
 
 def _name_cluster(members: list[tuple[str, str | None]]
@@ -638,9 +612,22 @@ def _name_cluster(members: list[tuple[str, str | None]]
     return [(n, name if e is None else e) for n, e in members]
 
 
+def _name_components(linked: DataFrame) -> DataFrame:
+    """:func:`_name_cluster` over every component of a (component,
+    norm, entity) frame at once → (norm, entity), as one window
+    aggregate per component: the least (norm, entity) struct among the
+    linked norms names the others, else the least norm does."""
+    w = Window.partitionBy("component")
+    lk = F.when(F.col("entity").isNotNull(), F.struct("norm", "entity"))
+    return linked.select("norm", F.coalesce(
+        "entity", F.min(lk).over(w)["entity"], F.min("norm").over(w))
+        .alias("entity"))
+
+
 def _driver_near_duplicates(feats: list) -> set[tuple[int, int]] | None:
     """C1–C2 of :func:`near_duplicate_edges` on the driver, over the
-    feature arrays of distinct nodes: :func:`_minhash`, the
+    feature arrays of distinct nodes (Python int lists, so the set
+    intersections hash ints, not numpy scalars): :func:`_minhash`, the
     :func:`_driver_band_hashes` banding, :func:`capped_blocks`'s rule
     (keep the (band, bhash) blocks of 2..``BLOCK_CAP`` rows), the pair
     dedup of :func:`candidate_pairs`, and :func:`verify_pairs`' exact
@@ -680,48 +667,46 @@ def _driver_near_duplicates(feats: list) -> set[tuple[int, int]] | None:
 
 def canonicalize_norms(norms: DataFrame, dict_df: DataFrame) -> DataFrame:
     """C1→C4 end-to-end over a distinct ``norm`` column → (norm,
-    entity): every norm named by :func:`_name_cluster` over its
-    component.
+    entity): every norm named by the C4 rule over its component.
 
     :func:`node_features` runs in the JVM either way. One gate then
     picks one of two whole branches:
 
     - Driver: at most ``DRIVER_CANON_MAX_NODES`` + 1 (norm, f) rows
-      are collected. If they fit, and the kept LSH blocks hold at most
-      ``DRIVER_CANON_MAX_EDGES`` distinct candidate pairs, C1–C2 are
-      :func:`_driver_near_duplicates`, C3 :func:`_union_find` and C4
-      names the clusters on the driver, output sorted. The banding is
-      bit-identical to :func:`lsh_bands`, so both branches compare the
-      same pairs.
+      are collected through Arrow. If they fit, and the kept LSH blocks
+      hold at most ``DRIVER_CANON_MAX_EDGES`` distinct candidate pairs,
+      C1–C2 are :func:`_driver_near_duplicates`, C3 :func:`_union_find`
+      and C4 :func:`_name_cluster` per cluster on the driver, output
+      sorted. The banding is bit-identical to :func:`lsh_bands`, so
+      both branches compare the same pairs.
     - Distributed: above either bound, C1–C2 are the steps of
       :func:`near_duplicate_edges` over the probe's persisted feature
       table, C3 the hash-to-min loop of
-      :func:`connected_components`, and C4 one streaming
-      ``mapInPandas`` over the component-keyed exchange (sorted within
-      partitions, boundaries found by :func:`stream_groups`); one task
-      holds a whole component's (norm, entity) pairs in a Python list,
-      so per-task memory grows with the largest component.
+      :func:`connected_components`, and C4 :func:`_name_components`,
+      one window aggregate over the component-keyed exchange. Its
+      window buffer spills to disk, so per-task memory stays bounded
+      however large a component grows.
 
     Every DataFrame this function caches is released before it
     returns: the distributed branch's output is localCheckpointed
     first, because it reads the cached features."""
     # persisted, so the distributed branch reuses the probe's scan. Not
-    # near_duplicate_edges: building its lazy band plan alone (32 band
-    # columns, ~3k Py4J calls) costs the driver branch ~1 s per call
+    # near_duplicate_edges: building its lazy plan up front costs the
+    # driver branch ~0.35 s per call (0.48 → 0.83 s on ~1k norms)
     feats = node_features(norms).persist()
     handles = [feats]
     try:
-        rows = (feats.select("norm", "f")
-                .limit(DRIVER_CANON_MAX_NODES + 1).collect())
-        pairs = (_driver_near_duplicates([r["f"] for r in rows])
-                 if len(rows) <= DRIVER_CANON_MAX_NODES else None)
+        probe = (feats.select("norm", "f")
+                 .limit(DRIVER_CANON_MAX_NODES + 1).toPandas())
+        pairs = (_driver_near_duplicates([f.tolist() for f in probe["f"]])
+                 if len(probe) <= DRIVER_CANON_MAX_NODES else None)
         if pairs is not None:
-            comp = _union_find(range(len(rows)), pairs)
+            comp = _union_find(range(len(probe)), pairs)
             entity_of = dict(dict_df.select("norm", "entity").collect())
             clusters: dict[int, list] = {}
-            for i, r in enumerate(rows):
+            for i, norm in enumerate(probe["norm"]):
                 clusters.setdefault(comp[i], []).append(
-                    (r["norm"], entity_of.get(r["norm"])))
+                    (norm, entity_of.get(norm)))
             mapping = sorted(row for members in clusters.values()
                              for row in _name_cluster(members))
             return norms.sparkSession.createDataFrame(
@@ -737,20 +722,8 @@ def canonicalize_norms(norms: DataFrame, dict_df: DataFrame) -> DataFrame:
                   .join(connected_components(feats.select("node"), edges),
                         "node")
                   .join(F.broadcast(dict_df.select("norm", "entity")),
-                        "norm", "left")
-                  .select("component", "norm", "entity"))
-
-        def stream(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            yield from stream_groups(
-                it, ["component", "norm", "entity"], 1,
-                lambda _, members: _name_cluster(members),
-                ["norm", "entity"])
-
-        return (linked.repartition(cpu_stage_partitions(linked),
-                                   "component")
-                .sortWithinPartitions("component")
-                .mapInPandas(stream, schema="norm string, entity string")
-                .localCheckpoint(eager=True))
+                        "norm", "left"))
+        return _name_components(linked).localCheckpoint(eager=True)
     finally:
         for h in handles:
             h.unpersist()

@@ -10,6 +10,17 @@ from kg import spec
 from kg.stages import bpe
 
 
+def bpe_symbol_count(text: str) -> int:
+    """Reference (pure-Python) merged-symbol count for a lowercased
+    text: rank-ordered exhaustive rewriting, spaces excluded. The
+    Spark and DuckDB expressions in contract.token_count_bpe_merges
+    must agree with this on every input."""
+    s = text.lower()
+    for pat, rep in spec.BPE_MERGES:
+        s = s.replace(pat, rep)
+    return len(s.replace(" ", ""))
+
+
 def test_merge_ranks_expands_chained_sentinels():
     ranks = spec.merge_ranks(spec.BPE_MERGES)
     assert ranks[("t", "h")] == 0
@@ -33,11 +44,11 @@ def test_encode_word_frozen_table_examples():
 def test_true_bpe_equals_chain_on_frozen_table(text):
     """On spec.BPE_MERGES every replacement is a sentinel no earlier
     pattern contains, so true BPE == rank-exhaustive rewriting ==
-    spec.bpe_symbol_count — the property that makes the DuckDB chain
+    bpe_symbol_count — the property that makes the DuckDB chain
     a valid oracle for the UDF column."""
     ranks = spec.merge_ranks(spec.BPE_MERGES)
     got = int(bpe.bpe_count_series(pd.Series([text]), ranks).iloc[0])
-    assert got == spec.bpe_symbol_count(text)
+    assert got == bpe_symbol_count(text)
 
 
 def test_true_bpe_diverges_from_naive_rewriting():
@@ -72,7 +83,7 @@ def test_unique_word_cache_counts():
     ranks = spec.merge_ranks(spec.BPE_MERGES)
     texts = pd.Series(["the thing the thing", "", "   ", "on er an"])
     got = bpe.bpe_count_series(texts, ranks)
-    assert list(got) == [spec.bpe_symbol_count(t) for t in texts]
+    assert list(got) == [bpe_symbol_count(t) for t in texts]
     assert got.dtype == "Int64"
     withnull = bpe.bpe_count_series(pd.Series(["the", None]), ranks)
     assert withnull.iloc[0] == 1

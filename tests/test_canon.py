@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import duckdb
 import numpy as np
+import pandas as pd
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -161,25 +162,36 @@ def test_canonicalize_norms_end_to_end(spark):
         == "zzzz wobbleplex"
 
 
-def test_name_cluster_rule():
+def test_name_cluster_rule(spark):
     """C4 on one cluster: a norm keeps its own dictionary entity; the
     others take the entity of the lexicographically-first LINKED norm
     (not of a later linked one, nor of the first norm overall); with
-    no linked norm, every member takes the minimum norm."""
-    got = dict(canon._name_cluster([
-        ("zeta", "Zeta Inc"), ("acme corpp", None), ("beta", "Beta Co"),
-        ("aaa", None)]))
-    assert got == {"zeta": "Zeta Inc", "beta": "Beta Co",
-                   "acme corpp": "Beta Co", "aaa": "Beta Co"}
-    got = dict(canon._name_cluster([("wobble x", None), ("wobble", None)]))
-    assert got == {"wobble x": "wobble", "wobble": "wobble"}
+    no linked norm, every member takes the minimum norm. The window
+    form the distributed branch runs (``_name_components``) names the
+    same three clusters, as components of one frame, the same way."""
+    clusters = [
+        [("zeta", "Zeta Inc"), ("acme corpp", None), ("beta", "Beta Co"),
+         ("aaa", None)],
+        [("wobble x", None), ("wobble", None)],
+        [("solo", None)]]
+    want = [{"zeta": "Zeta Inc", "beta": "Beta Co",
+             "acme corpp": "Beta Co", "aaa": "Beta Co"},
+            {"wobble x": "wobble", "wobble": "wobble"},
+            {"solo": "solo"}]
+    assert [dict(canon._name_cluster(c)) for c in clusters] == want
     assert canon._name_cluster([("solo", None)]) == [("solo", "solo")]
+    linked = spark.createDataFrame(
+        [(k, n, e) for k, c in enumerate(clusters) for n, e in c],
+        "component long, norm string, entity string")
+    got = {r["norm"]: r["entity"]
+           for r in canon._name_components(linked).collect()}
+    assert got == {n: e for w in want for n, e in w.items()}
 
 
 def test_canonicalize_driver_path_equals_distributed(spark, monkeypatch):
     """The driver-side C1–C4 branch (small node sets) must be
     byte-identical to the distributed minhash/LSH + hash-to-min +
-    streaming-naming branch."""
+    window-naming branch."""
     norms = spark.createDataFrame(
         [("acme corp",), ("acme corpp",), ("the acme corp",),
          ("dataquill",), ("dataquill io",), ("zzzz wobbleplex",),
@@ -291,6 +303,15 @@ def test_minhash_deterministic(spark):
     assert a == b
     assert len(a) == 2
     assert all(len(s) == 128 for s in a.values())
+
+
+def test_minhash_batches_empty_batch():
+    """An empty Arrow batch yields one zero-row (node, sig) frame."""
+    empty = pd.DataFrame({"node": pd.Series(dtype=np.int64),
+                          "f": pd.Series(dtype=object)})
+    out = list(canon._minhash_batches(iter([empty])))
+    assert len(out) == 1 and len(out[0]) == 0
+    assert list(out[0].columns) == ["node", "sig"]
 
 
 def test_lsh_hash_draw_is_pinned(spark):
@@ -549,21 +570,31 @@ def test_canonicalize_edge_bound_falls_back_distributed(spark, monkeypatch):
 def test_components_auto_parity(spark, monkeypatch):
     """components_auto: driver union-find output == distributed
     hash-to-min output on the same multi-component graph, and the
-    edge-bound forces the distributed branch (probe discipline)."""
+    edge-bound forces the distributed branch (probe discipline). A
+    duplicated node row collapses to one output row, and int ids keep
+    their type."""
     edges = spark.createDataFrame(
         [(i, i + 1, 1.0) for i in range(0, 30, 3)]      # 10 chains
         + [(100, 103, 1.0), (103, 106, 1.0)], schema=schemas.EDGES)
     nodes = spark.createDataFrame(
         [(i,) for i in range(0, 32)] + [(100,), (103,), (106,), (999,)],
         "node long")
-    fast = {(r["node"], r["component"])
-            for r in canon.components_auto(nodes, edges).collect()}
-    dist = {(r["node"], r["component"])
-            for r in canon.connected_components(nodes, edges).collect()}
+
+    def comps(df):
+        rows = df.collect()
+        assert len(rows) == len({r["node"] for r in rows})
+        return {(r["node"], r["component"]) for r in rows}
+
+    fast = comps(canon.components_auto(nodes, edges))
+    dist = comps(canon.connected_components(nodes, edges))
+    dup = comps(canon.components_auto(nodes.union(nodes.limit(3)), edges))
+    ints = canon.components_auto(nodes.selectExpr("int(node) AS node"),
+                                 edges)
+    assert ints.schema.simpleString() == \
+        "struct<node:int,component:int>"
     monkeypatch.setattr(canon, "DRIVER_CANON_MAX_EDGES", 1)
-    forced = {(r["node"], r["component"])
-              for r in canon.components_auto(nodes, edges).collect()}
-    assert fast == dist == forced
+    forced = comps(canon.components_auto(nodes, edges))
+    assert fast == dist == forced == dup == comps(ints)
     assert (999, 999) in fast            # singleton keeps itself
 
 

@@ -17,8 +17,6 @@ ALLOWED = {
     "contract.DRIVER_WINDOW": "the driver's evaluation window; "
                               "test_contract checks driver_order "
                               "against it",
-    "spec.bpe_symbol_count": "pure-Python reference the BPE "
-                             "contract expressions are tested against",
 }
 
 #: modules whose definitions are declarations, read by name elsewhere

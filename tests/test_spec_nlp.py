@@ -9,6 +9,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from kg import nlp, spec
+from test_bpe import bpe_symbol_count
 
 
 def test_tokenizer_golden_pairs():
@@ -180,7 +181,7 @@ def test_bpe_symbol_count_matches_spark_and_duckdb(spark):
              "punctuation, too! ingrained...",
              "", "th", "the", "the the the"]
     rows = [(i, t) for i, t in enumerate(texts)]
-    want = {i: spec.bpe_symbol_count(t) for i, t in rows}
+    want = {i: bpe_symbol_count(t) for i, t in rows}
 
     import os
     import tempfile
@@ -251,7 +252,7 @@ def test_bpe_rewriting_duckdb_property(text):
     got = con.execute(
         f"SELECT length(replace({_bpe_chain_sql('lower(?)')}, ' ', ''))",
         [text]).fetchone()[0]
-    assert got == spec.bpe_symbol_count(text)
+    assert got == bpe_symbol_count(text)
 
 
 def test_lang_id_ngram_discriminates(spark):
