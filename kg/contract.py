@@ -1142,10 +1142,11 @@ def minhash_lsh_dedup(spark, sf):
     banding to near-all-pairs (round-1: 673k pairs / 65 s — 83% of
     the bench); 3-word shingles put unrelated docs at ≈0.
 
-    Persist note (deliberate, reviewed r4): near_duplicate_edges
-    caches feats+banded internally and this entry does NOT release
-    them — it is also the bench hot path, where the feature table has
-    three in-plan consumers and dropping the persist would triple the
+    Persist note (deliberate, reviewed r4): inside canon's driver
+    bounds near_duplicate_edges returns local edges and releases its
+    feature cache itself. Above them it caches feats+banded and this
+    entry does NOT release them — the feature table has three in-plan
+    consumers there, and dropping the persist would triple the
     dominant cost. In the driver-contract session the entry runs
     once, so the residual cache is two small tables, LRU-evictable —
     unlike the per-batch/per-call leaks fixed via persist_batch=False

@@ -29,14 +29,17 @@
   (``_name_components``) on the engine, whose buffer spills to disk
   instead of holding a whole component in one Python list.
 
-Inside the driver bounds (``DRIVER_CANON_MAX_NODES`` norms,
+Inside the driver bounds (``DRIVER_CANON_MAX_NODES`` nodes,
+``DRIVER_CANON_MAX_FEATURES`` features in all,
 ``DRIVER_CANON_MAX_EDGES`` distinct candidate pairs),
-:func:`canonicalize_norms` collects the JVM feature table and runs
-the rest of C1–C4 on the driver: the same minhash function, a numpy
-replica of the JVM band hash, the same blocking cap, exact Jaccard and
-a union-find — the same output without the Spark stages' fixed cost.
-Above the bounds, and for every other caller, the steps above run
-distributed.
+:func:`near_duplicate_edges` and :func:`canonicalize_norms` collect
+the JVM feature table through one probe (:func:`_driver_probe`) and
+run C1–C2 on the driver: the same minhash function, a numpy replica of
+the JVM band hash, the same blocking cap and exact Jaccard — the same
+edges without the Spark stages' fixed cost. :func:`canonicalize_norms`
+then runs C3–C4 there too (a union-find and :func:`_name_cluster`),
+and :func:`components_auto` runs C3 on the driver inside the node and
+edge bounds. Above the bounds the steps above run distributed.
 
 Node ids are ``xxhash64(norm)`` — deterministic across runs and
 partition layouts, unlike ``monotonically_increasing_id``.
@@ -48,6 +51,8 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window, functions as F
 
 from kg import spec
@@ -186,20 +191,23 @@ def _feature_chunks(feats: list, max_feats: int):
 
 def _minhash(feats: list[np.ndarray]) -> np.ndarray:
     """Vectorized minhash of pre-hashed feature arrays → (rows, H)
-    int64 signatures: one (total_features, H) universal-hash matrix
-    per chunk, per-row min via ``np.minimum.reduceat`` — no per-row
-    Python, no string ops. Chunked so the temp matrix stays ≤ ~64 MB."""
+    int64 signatures: one (H, total_features) universal-hash matrix
+    per chunk, updated in place, per-row min via
+    ``np.minimum.reduceat`` along the contiguous feature axis — no
+    per-row Python, no string ops. Chunked so the temp matrix stays
+    ≤ ~64 MB."""
     a, b = _perm_coeffs()
-    au = a.astype(np.uint64)
-    bu = b.astype(np.uint64)
+    au = a.astype(np.uint64)[:, None]
+    bu = b.astype(np.uint64)[:, None]
     m64 = np.uint64(_MERSENNE)
-    max_feats = 64_000  # 64k × 128 × 8 B ≈ 64 MB temp
+    max_feats = 64_000  # 128 × 64k × 8 B ≈ 64 MB temp
     feats = [np.asarray(f, dtype=np.int64).view(np.uint64) for f in feats]
     sigs = np.empty((len(feats), spec.MINHASH_H), dtype=np.int64)
     for row, end, flat, offsets, _ in _feature_chunks(feats, max_feats):
-        h = (flat[:, None] * au[None, :] + bu[None, :]) % m64
-        sigs[row:end] = np.minimum.reduceat(
-            h, offsets, axis=0).astype(np.int64)
+        h = au * flat[None, :]
+        h += bu
+        h %= m64
+        sigs[row:end] = np.minimum.reduceat(h, offsets, axis=1).T
     return sigs
 
 
@@ -276,7 +284,8 @@ def _driver_band_hashes(sigs: np.ndarray) -> np.ndarray:
     """:func:`lsh_bands` on the driver: (rows, H) signatures →
     (rows, b) band hashes, equal to the ``bhash`` the JVM computes for
     the same signature lanes (pinned in tests/test_canon.py), so both
-    branches of :func:`canonicalize_norms` bucket identically."""
+    branches of :func:`near_duplicate_edges` and
+    :func:`canonicalize_norms` bucket identically."""
     n, r = len(sigs), spec.MINHASH_ROWS
     return _xxhash64_longs(sigs.reshape(n * spec.MINHASH_BANDS, r)) \
         .reshape(n, spec.MINHASH_BANDS)
@@ -345,11 +354,28 @@ def near_duplicate_edges(norms: DataFrame,
                          block_cap: int = spec.BLOCK_CAP,
                          handles: list | None = None,
                          carry: str | None = None):
-    """C1+C2 composed with persist discipline: the feature table feeds
-    both the minhash UDF and the verify join, and the banded frame
-    feeds both the bucket-size filter and the pair join — without
-    persistence each would recompute. Returns (src, dst, sim) with
-    src < dst; node = xxhash64(norm).
+    """C1+C2: near-duplicate edges (src, dst, sim) with src < dst and
+    sim ≥ ``tau``; node = xxhash64(norm). The (node, norm, f) feature
+    table is computed in the JVM and persisted, then one gate picks a
+    branch:
+
+    - Driver: if :func:`_driver_probe` fits the table in the driver
+      bounds and the kept LSH blocks hold at most
+      ``DRIVER_CANON_MAX_EDGES`` distinct candidate pairs, C1–C2 run
+      in :func:`_driver_near_duplicates` with the same ``tau`` and
+      ``block_cap``, and the edges come back as a local relation.
+    - Distributed: otherwise the minhash UDF, :func:`lsh_bands`,
+      :func:`candidate_pairs` and :func:`verify_pairs`, lazily, over
+      the same persisted features. The banded frame is persisted too:
+      it feeds both the bucket-size filter and the pair join.
+
+    Both branches give the same edges (tested). This function is
+    EAGER, as :func:`components_auto` is: the probe collects up to
+    ``DRIVER_CANON_MAX_NODES`` + 1 feature rows at call time.
+
+    ``obs`` (a ``pyspark.sql.Observation``) receives the
+    :func:`capped_blocks` drop counts on either branch: on the driver
+    branch it is filled before this function returns.
 
     ``return_feats=True`` additionally returns the persisted
     (node, norm, f) table as ``(edges, feats)`` so callers needing a
@@ -359,11 +385,33 @@ def near_duplicate_edges(norms: DataFrame,
     ``handles``: pass a list and the internally-persisted frames are
     appended to it so the CALLER can ``unpersist()`` them once the
     edges are materialized — in a long-lived session the caches
-    otherwise outlive the computation."""
+    otherwise outlive the computation. The driver branch releases the
+    feature table itself unless ``return_feats`` is set.
+
+    ``carry``: a feature-table column to ride through to the edges as
+    ``src_<carry>``/``dst_<carry>`` (see :func:`verify_pairs`)."""
     feats = node_features(norms, feature=feature).persist()
+    if handles is not None:
+        handles.append(feats)
+    probe = _driver_probe(feats, carry)
+    near = None if probe is None else _driver_near_duplicates(
+        probe.column("f").to_numpy(zero_copy_only=False), tau, block_cap)
+    if near is not None:
+        pairs, dropped_buckets, dropped_nodes = near
+        edges = _local_edges(feats.sparkSession, probe, pairs, carry)
+        if obs is not None:
+            feats.sparkSession.createDataFrame(
+                [(dropped_buckets, dropped_nodes)],
+                "dropped_buckets long, dropped_nodes long").observe(
+                obs, F.sum("dropped_buckets").alias("dropped_buckets"),
+                F.sum("dropped_nodes").alias("dropped_nodes")).collect()
+        if return_feats:
+            return edges, feats
+        feats.unpersist()
+        return edges
     banded = lsh_bands(minhash_signatures(feats)).persist()
     if handles is not None:
-        handles += [feats, banded]
+        handles.append(banded)
     edges = verify_pairs(
         candidate_pairs(banded, block_cap=block_cap, obs=obs),
         feats, tau=tau, carry=carry)
@@ -517,8 +565,9 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
     return labels.withColumnRenamed("label", "component")
 
 
-#: node count up to which :func:`canonicalize_norms` runs C1–C4, and
-#: :func:`components_auto` C3, on the driver. Small inputs make the
+#: node count up to which :func:`canonicalize_norms` runs C1–C4,
+#: :func:`near_duplicate_edges` C1–C2 and :func:`components_auto` C3
+#: on the driver. Small inputs make the
 #: Spark stages pure fixed cost — the iterative CC loop alone is
 #: O(rounds) driver-scheduled jobs on kilobytes of data, which caps
 #: strong scaling (Amdahl). The driver C1–C4 was still faster at this
@@ -531,12 +580,19 @@ DRIVER_CANON_MAX_NODES = 100_000
 #: the edge bound of the same driver paths: node count alone doesn't
 #: bound the edge set (100k near-identical norms under block_cap=64 ×
 #: 32 bands can emit ~10⁸ pairs — enough to OOM the driver).
-#: :func:`components_auto` collects at most this many +1 edges;
-#: :func:`canonicalize_norms` admits at most this many distinct
-#: candidate pairs (at 888,608 of them its driver branch took 20.9 s
-#: vs 31.9 s distributed). One more and the distributed branch runs
-#: instead.
+#: :func:`components_auto` collects at most this many +1 edges; the
+#: driver C1–C2 admits at most this many distinct candidate pairs (at
+#: 888,608 of them the driver branch of :func:`canonicalize_norms`
+#: took 20.9 s vs 31.9 s distributed). One more and the distributed
+#: branch runs instead.
 DRIVER_CANON_MAX_EDGES = 1_000_000
+
+#: summed feature count (one int64 hash each) up to which the driver
+#: C1–C2 of :func:`near_duplicate_edges` and :func:`canonicalize_norms`
+#: run: documents carry orders of magnitude more word shingles than
+#: entity norms carry char-3-grams, so the node bound alone does not
+#: bound the driver's feature sets.
+DRIVER_CANON_MAX_FEATURES = 2_000_000
 
 
 def _union_find(ids, pairs) -> dict:
@@ -624,26 +680,50 @@ def _name_components(linked: DataFrame) -> DataFrame:
         .alias("entity"))
 
 
-def _driver_near_duplicates(feats: list) -> set[tuple[int, int]] | None:
+def _driver_probe(feats: DataFrame, carry: str | None = None):
+    """The driver gate of :func:`near_duplicate_edges` and
+    :func:`canonicalize_norms`: at most ``DRIVER_CANON_MAX_NODES`` + 1
+    rows of a persisted (node, f[, carry]) feature table, collected
+    through Arrow as a ``pyarrow.Table`` — or None if they exceed
+    ``DRIVER_CANON_MAX_NODES`` rows or ``DRIVER_CANON_MAX_FEATURES``
+    features in all. The Arrow batch is 8 bytes per feature; the
+    bounds are checked before any of it becomes Python objects."""
+    probe = (feats.select("node", "f", *([carry] if carry else []))
+             .limit(DRIVER_CANON_MAX_NODES + 1).toArrow())
+    n_feats = pc.sum(pc.list_value_length(probe.column("f")), min_count=0)
+    if probe.num_rows > DRIVER_CANON_MAX_NODES \
+            or n_feats.as_py() > DRIVER_CANON_MAX_FEATURES:
+        return None
+    return probe
+
+
+def _driver_near_duplicates(feats: list, tau: float = spec.TAU_DUP,
+                            block_cap: int = spec.BLOCK_CAP):
     """C1–C2 of :func:`near_duplicate_edges` on the driver, over the
-    feature arrays of distinct nodes (Python int lists, so the set
-    intersections hash ints, not numpy scalars): :func:`_minhash`, the
+    int64 feature arrays of distinct nodes: :func:`_minhash`, the
     :func:`_driver_band_hashes` banding, :func:`capped_blocks`'s rule
-    (keep the (band, bhash) blocks of 2..``BLOCK_CAP`` rows), the pair
+    (keep the (band, bhash) blocks of 2..``block_cap`` rows), the pair
     dedup of :func:`candidate_pairs`, and :func:`verify_pairs`' exact
-    Jaccard ≥ ``TAU_DUP``, with |A∩B| counted over distinct hashes as
-    ``array_intersect`` does. Returns the verified (i, j) row-index
-    pairs, i < j — or None, before any Jaccard is computed, once the
-    kept blocks hold more than ``DRIVER_CANON_MAX_EDGES`` distinct
-    candidate pairs."""
+    Jaccard ≥ ``tau``, with |A∩B| counted over distinct hashes as
+    ``array_intersect`` does.
+
+    Returns ({(i, j): sim} over the verified row-index pairs, i < j,
+    dropped_buckets, dropped_nodes), the drop counts as
+    :func:`capped_blocks` observes them — or None, before any Jaccard
+    is computed, once the kept blocks hold more than
+    ``DRIVER_CANON_MAX_EDGES`` distinct candidate pairs."""
     n = len(feats)
     codes = np.empty(0, dtype=np.int64)  # pair (i, j) as i·n + j
+    dropped_buckets = dropped_nodes = 0
     for col in _driver_band_hashes(_minhash(feats)).T:
         order = np.argsort(col, kind="stable")
         keys = col[order]
         starts = np.flatnonzero(np.r_[True, keys[1:] != keys[:-1]])
         sizes = np.diff(np.r_[starts, n])
-        keep = (sizes >= 2) & (sizes <= spec.BLOCK_CAP)
+        keep = (sizes >= 2) & (sizes <= block_cap)
+        over = (sizes >= 2) & ~keep
+        dropped_buckets += int(over.sum())
+        dropped_nodes += int(sizes[over].sum())
         # a band's blocks are disjoint, so its pairs are distinct: one
         # band over the budget is over it without building its pairs
         if (sizes[keep] * (sizes[keep] - 1) // 2).sum() \
@@ -658,11 +738,35 @@ def _driver_near_duplicates(feats: list) -> set[tuple[int, int]] | None:
         codes = np.unique(np.concatenate(band))
         if len(codes) > DRIVER_CANON_MAX_EDGES:
             return None
-    sets = [set(f) for f in feats]
+    # Python int sets: intersections hash ints, not numpy scalars
+    sets = [set(f.tolist()) for f in feats]
     src, dst = divmod(codes, n)
-    return {(i, j) for i, j in zip(src.tolist(), dst.tolist())
-            if (x := len(sets[i] & sets[j]))
-            / (len(feats[i]) + len(feats[j]) - x) >= spec.TAU_DUP}
+    pairs = {}
+    for i, j in zip(src.tolist(), dst.tolist()):
+        x = len(sets[i] & sets[j])
+        if (sim := x / (len(feats[i]) + len(feats[j]) - x)) >= tau:
+            pairs[i, j] = sim
+    return pairs, dropped_buckets, dropped_nodes
+
+
+def _local_edges(spark, probe, pairs: dict, carry: str | None) -> DataFrame:
+    """The driver branch's verified row-index pairs over the probe
+    table as the local relation :func:`verify_pairs` would give: (src,
+    dst, sim[, src_<carry>, dst_<carry>]) with src < dst by node id,
+    sorted. Column types follow the probe's Arrow types."""
+    node = probe.column("node").to_numpy()
+    ij = np.array(list(pairs), dtype=np.int64).reshape(-1, 2)
+    ij = np.where((node[ij[:, 0]] > node[ij[:, 1]])[:, None],
+                  ij[:, ::-1], ij)
+    order = np.lexsort((node[ij[:, 1]], node[ij[:, 0]]))
+    src, dst = ij[order].T
+    cols = {"src": node[src], "dst": node[dst],
+            "sim": np.fromiter(pairs.values(), np.float64,
+                               len(pairs))[order]}
+    if carry:
+        c = probe.column(carry)
+        cols[f"src_{carry}"], cols[f"dst_{carry}"] = c.take(src), c.take(dst)
+    return spark.createDataFrame(pa.table(cols))
 
 
 def canonicalize_norms(norms: DataFrame, dict_df: DataFrame) -> DataFrame:
@@ -672,14 +776,14 @@ def canonicalize_norms(norms: DataFrame, dict_df: DataFrame) -> DataFrame:
     :func:`node_features` runs in the JVM either way. One gate then
     picks one of two whole branches:
 
-    - Driver: at most ``DRIVER_CANON_MAX_NODES`` + 1 (norm, f) rows
-      are collected through Arrow. If they fit, and the kept LSH blocks
-      hold at most ``DRIVER_CANON_MAX_EDGES`` distinct candidate pairs,
-      C1–C2 are :func:`_driver_near_duplicates`, C3 :func:`_union_find`
-      and C4 :func:`_name_cluster` per cluster on the driver, output
-      sorted. The banding is bit-identical to :func:`lsh_bands`, so
-      both branches compare the same pairs.
-    - Distributed: above either bound, C1–C2 are the steps of
+    - Driver: if :func:`_driver_probe` fits the (node, f, norm) table
+      in the driver bounds, and the kept LSH blocks hold at most
+      ``DRIVER_CANON_MAX_EDGES`` distinct candidate pairs, C1–C2 are
+      :func:`_driver_near_duplicates`, C3 :func:`_union_find` and C4
+      :func:`_name_cluster` per cluster on the driver, output sorted.
+      The banding is bit-identical to :func:`lsh_bands`, so both
+      branches compare the same pairs.
+    - Distributed: above any bound, C1–C2 are the steps of
       :func:`near_duplicate_edges` over the probe's persisted feature
       table, C3 the hash-to-min loop of
       :func:`connected_components`, and C4 :func:`_name_components`,
@@ -696,15 +800,14 @@ def canonicalize_norms(norms: DataFrame, dict_df: DataFrame) -> DataFrame:
     feats = node_features(norms).persist()
     handles = [feats]
     try:
-        probe = (feats.select("norm", "f")
-                 .limit(DRIVER_CANON_MAX_NODES + 1).toPandas())
-        pairs = (_driver_near_duplicates([f.tolist() for f in probe["f"]])
-                 if len(probe) <= DRIVER_CANON_MAX_NODES else None)
-        if pairs is not None:
-            comp = _union_find(range(len(probe)), pairs)
+        probe = _driver_probe(feats, "norm")
+        near = None if probe is None else _driver_near_duplicates(
+            probe.column("f").to_numpy(zero_copy_only=False))
+        if near is not None:
+            comp = _union_find(range(probe.num_rows), near[0])
             entity_of = dict(dict_df.select("norm", "entity").collect())
             clusters: dict[int, list] = {}
-            for i, norm in enumerate(probe["norm"]):
+            for i, norm in enumerate(probe.column("norm").to_pylist()):
                 clusters.setdefault(comp[i], []).append(
                     (norm, entity_of.get(norm)))
             mapping = sorted(row for members in clusters.values()

@@ -12,13 +12,17 @@ token_pack_greedy) — this module contributes the composition, the
 keep-the-minimum-doc tie-breaking, and the stage counters.
 
 Scale shape: stages 1–2 are map-only scalar expressions; exact dedup
-is one groupBy on the normalized text (persisted — it feeds the LSH
-features and the final keep-join); near-dup dedup reuses the banded
-LSH machinery (canon.near_duplicate_edges — capped buckets,
-id-narrow shuffles) with components through canon.components_auto,
-which is EAGER: it probes node/edge counts at call time and runs a
-bounded driver union-find on small graphs (≤100k nodes / ≤1M edges
-collected) or the fully-distributed hash-to-min loop above that.
+is one groupBy on the normalized text (localCheckpointed — it feeds
+the LSH features and the final keep-join); near-dup dedup reuses the
+banded LSH machinery (canon.near_duplicate_edges — capped buckets,
+id-narrow shuffles) with components through canon.components_auto.
+Both are EAGER: near_duplicate_edges probes the feature table at
+call time and, inside canon's driver bounds (nodes, total shingles,
+candidate pairs), runs minhash → LSH → verify on the driver and
+returns a local edge relation; components_auto probes node/edge
+counts and runs a bounded driver union-find on small graphs (≤100k
+nodes / ≤1M edges collected). Above the bounds both run
+distributed (the lazy LSH plan, the hash-to-min loop).
 Sampling is a map-only md5 rule; packing is a per-shard window.
 Determinism is partitioning-independent (pinned in
 tests/test_corpus.py) because every decision keys on content hashes
@@ -355,12 +359,13 @@ def corpus_pipeline(docs: DataFrame,
     # the QC + groupBy chain (the probe in components_auto is an
     # eager collect, so this reuse matters)
     comp = canon.components_auto(feats.select("node"), edges)
-    # components_auto consumed feats/banded/edges EAGERLY (driver
-    # union-find collect, or localCheckpoint on the distributed
-    # branch), so comp no longer references them — release the LSH
-    # caches now instead of leaking them for the session (`exact`
-    # itself is a localCheckpoint, see above — nothing to
-    # release and nothing recomputes).
+    # components_auto consumed feats (and, on the distributed LSH
+    # branch, banded and the lazy edges) EAGERLY (driver union-find
+    # collect, or localCheckpoint on the distributed branch), so comp
+    # no longer references them — release the LSH caches now instead
+    # of leaking them for the session (`exact` itself is a
+    # localCheckpoint, see above — nothing to release and nothing
+    # recomputes).
     for h in handles:
         h.unpersist()
     # Survivor = min doc_id per near-dup component (min(struct) ties

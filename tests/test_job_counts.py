@@ -36,6 +36,16 @@ def test_canonicalize_norms_jobs(spark, count_jobs, monkeypatch):
         assert n <= pin, (max_nodes, n)
 
 
+def test_near_duplicate_edges_jobs(spark, count_jobs):
+    """Driver branch: the feature probe is the only Spark work, and
+    the edges come back as a local relation."""
+    norms = _norms(spark)
+    edges, n = count_jobs(lambda: canon.near_duplicate_edges(norms))
+    assert n <= 3, n
+    _, n = count_jobs(edges.collect)
+    assert n == 0, n
+
+
 def test_components_auto_jobs(spark, count_jobs):
     nodes, edges = _graph(spark)
     _, n = count_jobs(lambda: canon.components_auto(nodes, edges))
@@ -76,7 +86,7 @@ def test_corpus_pipeline_jobs(spark, count_jobs):
     docs = (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
             .select("doc_id", "text"))
     _, n = count_jobs(lambda: corpus.corpus_pipeline(docs).collect())
-    assert n <= 15, n
+    assert n <= 11, n
 
 
 def test_graph_iteration_jobs(spark, count_jobs):

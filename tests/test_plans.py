@@ -124,24 +124,34 @@ def test_packing_window_is_sharded(spark):
         assert "Exchange SinglePartition" not in plan, plan
 
 
-def test_dedup_fingerprints_ride_verify_joins(spark):
-    """The r4 carry fix, pinned: the minhash_lsh_dedup entry's plan
-    must contain EXACTLY the two node-keyed verify joins — the r3
+def test_dedup_fingerprints_ride_verify_joins(spark, monkeypatch):
+    """The r4 carry fix, pinned: on the distributed branch of
+    near_duplicate_edges, the minhash_lsh_dedup entry's plan must
+    contain EXACTLY the two node-keyed verify joins — the r3
     regression attached fingerprints by re-joining the edge set (2
     extra joins + an O(distinct norms) md5 scan, 2.9× the entry's
     cost). md5 must appear only above the joins (on edge rows), never
-    as its own join input."""
+    as its own join input. Inside the driver bounds (sf0.001) the
+    carried norms come back with the local edge relation, and the
+    whole entry plans as one local scan."""
     from kg.contract import Q
+    from kg.stages import canon
 
     import re
 
+    def joins(plan: str) -> int:
+        # formatted explain lists each operator twice (tree + detail);
+        # count the unique "(N) Op" detail headers
+        return len(re.findall(
+            r"\(\d+\) (?:BroadcastHashJoin|SortMergeJoin|"
+            r"ShuffledHashJoin|BroadcastNestedLoopJoin|CartesianProduct)",
+            plan))
+
     plan = _plan(Q["minhash_lsh_dedup"][0](spark, SF))
-    # formatted explain lists each operator twice (tree + detail);
-    # count the unique "(N) Op" detail headers
-    n_joins = len(re.findall(
-        r"\(\d+\) (?:BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin|"
-        r"BroadcastNestedLoopJoin|CartesianProduct)", plan))
-    assert n_joins == 2, f"expected exactly 2 verify joins:\n{plan}"
+    assert joins(plan) == 0 and "LocalTableScan" in plan, plan
+    monkeypatch.setattr(canon, "DRIVER_CANON_MAX_NODES", 0)
+    plan = _plan(Q["minhash_lsh_dedup"][0](spark, SF))
+    assert joins(plan) == 2, f"expected exactly 2 verify joins:\n{plan}"
     assert "md5" in plan
 
 
