@@ -1978,12 +1978,16 @@ def pagerank_iter3(spark, sf):
     """Graph analytics over the materialized KG shape: 3 unrolled
     PageRank power iterations (Page et al. 1999; d = 0.85, no dangling
     redistribution — every node has out-edges on the symmetrized
-    graph) on the supplier↔part co-occurrence graph (51.7k directed
-    edges, 2.1k nodes at sf0.01; node ids prefixed 's'/'p' so the two
-    key spaces cannot collide).
+    graph) on the supplier↔part co-occurrence graph (51,731 distinct
+    pairs, i.e. 103,462 directed edges, 2.1k nodes at sf0.01; node ids
+    prefixed 's'/'p' so the two key spaces cannot collide).
 
-    Plan at scale: the edge list is pre-grouped once into per-src
-    adjacency arrays (graph.pagerank); each iteration joins two
+    Inside graph.DRIVER_GRAPH_MAX_NODES / DRIVER_GRAPH_MAX_EDGES
+    (sf0.01 and sf0.1, 1.18M directed edges) graph.pagerank runs the
+    iterations on the driver and returns a local relation. Plan at
+    scale (sf1.0, ~11.8M edges, above the edge bound): the edge list
+    is pre-grouped once into per-src adjacency arrays
+    (graph.pagerank); each iteration joins two
     O(nodes) tables and explodes the arrays map-side into the
     partial-agg sum — the heavy edge multiset never re-shuffles. N
     rides a broadcast 1-row cross join. Fixed unrolled iterations keep
@@ -2162,7 +2166,9 @@ def min_label_prop_iter3(spark, sf):
     (graph.min_label_round): adjacency ⋈ labels → groupBy(dst) min,
     with each node's own label riding a self-loop (map-side partial
     min combines before the shuffle). DuckDB replays the 3 unrolled
-    rounds as edges ⋈ labels → min → least with own label.
+    rounds as edges ⋈ labels → min → least with own label. Inside the
+    graph driver bounds (sf0.01, sf0.1) the rounds run on the driver
+    instead and the labels come back as a local relation.
 
     Key narrowing: labels propagate as LONGS under an
     order-isomorphic encoding of the 'p{n}'/'s{n}' lexicographic

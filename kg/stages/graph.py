@@ -13,13 +13,29 @@ Dataflow per iteration (the plan you'd want on a billion-edge graph):
         self-labels — so the aggregate's key set IS the node set and
         no join back to the node table is needed)
 
-N (node count) rides a broadcast 1-row cross join — never a collect.
-Fixed unrolled iterations keep everything one declarative plan; for
+N (node count) rides a broadcast 1-row cross join. Fixed unrolled
+iterations keep everything one declarative plan; for
 convergence-driven runs pass ``checkpoint_every`` so lineage is cut
 with localCheckpoint the same way the CC loop in canon.py does.
+
+Driver gate of :func:`pagerank` and :func:`min_label_propagation`:
+on a small graph every round's join, explode and shuffle aggregate is
+pure fixed cost, so both first collect a bounded Arrow probe of the
+node ids (at most ``DRIVER_GRAPH_MAX_NODES`` + 1 rows), then of the
+edges (at most ``DRIVER_GRAPH_MAX_EDGES`` + 1). Inside both bounds,
+and only on a WELL-FORMED graph — non-null int or string ids of one
+type, distinct node rows, every edge endpoint listed in ``nodes`` —
+the rounds run in numpy over positions in the sorted node ids and
+come back as a local relation with the distributed output's schema.
+Any other input, over a bound or malformed, runs the distributed
+plan above unchanged, so the two branches agree on every input by
+construction (pinned in tests/test_graph.py).
 """
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 
 #: shared with the contract oracle (kg/contract.py interpolates these
@@ -40,6 +56,58 @@ def _materialize(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=False)
 
 
+#: node rows up to which :func:`pagerank` and
+#: :func:`min_label_propagation` run on the driver (module docstring).
+#: Canon's 100k node bound would reject graph_hub's 110k nodes. The
+#: driver branch was still faster above both bounds: on
+#: tools/stress_graph.py --op pagerank --iters 3 (4 cores, one cold
+#: call each) 5.6 s vs 11.6 s at 262k nodes / 557k edges, 11.0 s vs
+#: 15.2 s at 1.05M / 2.23M and 18.4 s vs 33.8 s at 4.2M / 8.9M, so
+#: the bounds cap driver memory: the Python driver's ru_maxrss was
+#: 257 MB, 593 MB and 1.9 GB there (141 MB distributed).
+DRIVER_GRAPH_MAX_NODES = 1_000_000
+
+#: edge rows up to which the same driver branch runs: the edge probe
+#: is the driver's memory and most of its time. One more and the
+#: distributed branch runs instead, after collecting MAX + 1 edges.
+DRIVER_GRAPH_MAX_EDGES = 2_000_000
+
+
+def _driver_graph(nodes: DataFrame, edges: DataFrame):
+    """The driver gate: (Arrow field of ``node``, node ids sorted in
+    Spark's order, src positions, dst positions into those ids), or
+    None when a probe exceeds its bound or the graph is not
+    well-formed (module docstring). Arrow sorts strings by their UTF-8
+    bytes, as Spark compares them, so a min over positions is the min
+    over ids."""
+    probe = (nodes.select("node").limit(DRIVER_GRAPH_MAX_NODES + 1)
+             .toArrow())
+    ids = probe.column("node").combine_chunks()
+    t = ids.type
+    if (probe.num_rows > DRIVER_GRAPH_MAX_NODES or ids.null_count
+            or not (pa.types.is_integer(t) or pa.types.is_string(t))
+            or pc.count_distinct(ids).as_py() < len(ids)):
+        return None
+    pairs = (edges.select("src", "dst").limit(DRIVER_GRAPH_MAX_EDGES + 1)
+             .toArrow())
+    if pairs.num_rows > DRIVER_GRAPH_MAX_EDGES \
+            or pairs.schema.types != [t, t]:
+        return None
+    ids = ids.take(pc.sort_indices(ids))
+    pos = [pc.index_in(pairs.column(c), value_set=ids)
+           for c in ("src", "dst")]
+    if any(p.null_count for p in pos):
+        return None
+    return (probe.schema.field("node"), ids,
+            *(p.to_numpy().astype(np.int64) for p in pos))
+
+
+def _local(nodes: DataFrame, fields: list, *cols) -> DataFrame:
+    """The driver branch's columns as a local relation."""
+    return nodes.sparkSession.createDataFrame(
+        pa.table(list(cols), schema=pa.schema(fields)))
+
+
 def pagerank(nodes: DataFrame, edges: DataFrame, iters: int = 3,
              checkpoint_every: int = 0) -> DataFrame:
     """``iters`` PageRank power iterations over ``edges`` (columns
@@ -49,13 +117,21 @@ def pagerank(nodes: DataFrame, edges: DataFrame, iters: int = 3,
     variant; feed a symmetrized edge list to avoid dangling mass
     loss). Returns (node, pr) unrounded.
 
-    Precondition, not checked: ``edges`` is endpoint-closed over
-    ``nodes`` (every src and dst is listed). A dst outside ``nodes``
-    gets an output row of its own, while N counts only ``nodes``; a
-    src outside ``nodes`` sends nothing until it has received rank.
+    EAGER gate (module docstring): inside ``DRIVER_GRAPH_MAX_NODES``
+    / ``DRIVER_GRAPH_MAX_EDGES`` a well-formed graph runs on the driver
+    — out-degrees and each round's message sums are ``np.bincount``
+    over the probed edges — and returns a local relation. Any other
+    input runs the distributed plan below. ``checkpoint_every`` only
+    matters there.
 
-    Iteration shape (make every repeated shuffle move a lightweight
-    proxy, move the heavy multiset once): the edge list is
+    Precondition of the distributed branch, not checked:
+    ``edges`` is endpoint-closed over ``nodes`` (every src and dst is
+    listed). A dst outside ``nodes`` gets an output row of its own,
+    while N counts only ``nodes``; a src outside ``nodes`` sends
+    nothing until it has received rank.
+
+    Distributed iteration shape (make every repeated shuffle move a
+    lightweight proxy, move the heavy multiset once): the edge list is
     pre-grouped ONCE into per-src adjacency arrays with the out-degree
     folded in (one groupBy, materialized), so each iteration is a
     JOIN OF TWO O(nodes) TABLES (adjacency ⋈ pr — the small state
@@ -70,6 +146,11 @@ def pagerank(nodes: DataFrame, edges: DataFrame, iters: int = 3,
     nodes and the adjacency table are localCheckpointed once so each
     iteration reads the materialized graph instead of recomputing its
     derivation — see :func:`_materialize`."""
+    g = _driver_graph(nodes, edges)
+    if g is not None:
+        field, ids, src, dst = g
+        return _local(nodes, [field, pa.field("pr", pa.float64())], ids,
+                      _driver_pagerank(len(ids), src, dst, iters))
     nodes = _materialize(nodes)
     adj = _materialize(edges.groupBy("src").agg(
         F.collect_list("dst").alias("_dsts"),
@@ -100,6 +181,21 @@ def pagerank(nodes: DataFrame, edges: DataFrame, iters: int = 3,
     return pr
 
 
+def _driver_pagerank(n: int, src, dst, iters: int) -> np.ndarray:
+    """:func:`pagerank`'s rounds over node positions, with the
+    distributed branch's arithmetic: pr₀ = 1.0 / n, then TELEPORT / n
+    + DAMP · Σ pr[src] / outdeg[src] per dst. Only the summation order
+    differs."""
+    if not n:
+        return np.zeros(0)
+    outdeg = np.bincount(src, minlength=n)
+    pr = np.full(n, 1.0 / n)
+    for _ in range(iters):
+        pr = TELEPORT / n + DAMP * np.bincount(
+            dst, weights=pr[src] / outdeg[src], minlength=n)
+    return pr
+
+
 def min_label_propagation(nodes: DataFrame, edges: DataFrame,
                           iters: int = 3,
                           checkpoint_every: int = 0) -> DataFrame:
@@ -113,17 +209,37 @@ def min_label_propagation(nodes: DataFrame, edges: DataFrame,
     reachability evidence; on a symmetrized graph the fixpoint is the
     connected-component minimum.
 
-    Precondition, not checked: ``edges`` is endpoint-closed over
-    ``nodes`` (every src and dst is listed). A dst outside ``nodes``
-    gets an output row of its own; a src outside ``nodes`` sends
-    nothing until it has received a label.
+    EAGER gate (module docstring), as in :func:`pagerank`: inside the
+    driver bounds a well-formed graph runs each round as
+    ``np.minimum.at`` over positions in the sorted node ids and
+    returns a local relation; any other input runs the distributed
+    plan below.
 
-    Plan per round: :func:`min_label_round` over the
+    Precondition of the distributed branch, not checked: ``edges``
+    is endpoint-closed over ``nodes`` (every src and dst is listed). A
+    dst outside ``nodes`` gets an output row of its own; a src outside
+    ``nodes`` sends nothing until it has received a label.
+
+    Distributed plan per round: :func:`min_label_round` over the
     :func:`label_adjacency` table, materialized once as in
-    :func:`pagerank`. String labels compare bytewise in both Spark and
-    DuckDB, so the min is engine-independent. Returns (node, label).
-    Pass ``checkpoint_every`` to bound lineage on long
+    :func:`pagerank`. String labels compare bytewise in Spark, DuckDB
+    and Arrow, so the min is engine-independent. Returns (node,
+    label). Pass ``checkpoint_every`` to bound lineage on long
     convergence-driven runs."""
+    g = _driver_graph(nodes, edges)
+    if g is not None:
+        field, ids, src, dst = g
+        lab = np.arange(len(ids))
+        for _ in range(iters):
+            nxt = lab.copy()
+            np.minimum.at(nxt, dst, lab[src])
+            lab = nxt
+        # the distributed schema: round 0 is the node column twice,
+        # later rounds a non-null exploded node and a nullable min
+        fields = ([field, field.with_name("label")] if iters == 0 else
+                  [field.with_nullable(False),
+                   pa.field("label", field.type)])
+        return _local(nodes, fields, ids, ids.take(pa.array(lab)))
     nodes = _materialize(nodes)
     adj = _materialize(label_adjacency(nodes, edges))
     lab = nodes.select("node", F.col("node").alias("label"))

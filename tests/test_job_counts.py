@@ -89,8 +89,16 @@ def test_corpus_pipeline_jobs(spark, count_jobs):
     assert n <= 11, n
 
 
-def test_graph_iteration_jobs(spark, count_jobs):
+def test_graph_iteration_jobs(spark, count_jobs, monkeypatch):
+    """Driver branch: the node and edge probes are the only Spark work
+    (collecting the local relation runs none). Forced distributed
+    (node bound -1, below any row count): the rejected node probe's
+    one job plus the unrolled rounds' 16 / 8."""
     nodes, edges = _graph(spark)
-    for op, pin in ((graph.pagerank, 16), (graph.min_label_propagation, 8)):
-        _, n = count_jobs(lambda: op(nodes, edges, iters=3).collect())
-        assert n <= pin, (op.__name__, n)
+    for max_nodes, pins in ((graph.DRIVER_GRAPH_MAX_NODES, (2, 2)),
+                            (-1, (1 + 16, 1 + 8))):
+        monkeypatch.setattr(graph, "DRIVER_GRAPH_MAX_NODES", max_nodes)
+        for op, pin in zip((graph.pagerank, graph.min_label_propagation),
+                           pins):
+            _, n = count_jobs(lambda: op(nodes, edges, iters=3).collect())
+            assert n <= pin, (op.__name__, max_nodes, n)

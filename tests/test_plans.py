@@ -249,12 +249,36 @@ def test_c4_page_agg_combines_map_side(spark):
     assert n_exchange == 1, plan
 
 
-def test_graph_joins_stay_equi(spark):
+def _joins(plan: str) -> int:
+    """Join operators in a formatted plan: it lists each operator
+    twice (tree + detail), so count the unique "(N) Op" headers."""
+    import re
+
+    return len(re.findall(
+        r"\(\d+\) (?:BroadcastHashJoin|SortMergeJoin|"
+        r"ShuffledHashJoin|BroadcastNestedLoopJoin|CartesianProduct)",
+        plan))
+
+
+def test_graph_joins_stay_equi(spark, monkeypatch):
     """Triangle wedge/closing joins and LPA message joins must stay
     hash/sort-merge equi-joins — BroadcastNestedLoopJoin or a
     CartesianProduct means a join key was lost and the plan is
-    all-pairs (fatal at 10^9 edges)."""
+    all-pairs (fatal at 10^9 edges). The LPA entry is built forced
+    distributed (node bound -1) so its message joins are planned.
+    Inside the driver bounds both graph entries read their graph
+    output as one local scan: pagerank_iter3 plans no join, and
+    min_label_prop_iter3 only its two decode joins."""
+    from kg.stages import graph
+
+    for name, n_joins in (("pagerank_iter3", 0),
+                          ("min_label_prop_iter3", 2)):
+        plan = _plan(contract.Q[name][0](spark, SF))
+        assert "LocalTableScan" in plan, name
+        assert _joins(plan) == n_joins, (name, plan)
+    monkeypatch.setattr(graph, "DRIVER_GRAPH_MAX_NODES", -1)
     for name in ("triangle_counts_parts", "min_label_prop_iter3"):
         plan = _plan(contract.Q[name][0](spark, SF))
         assert "BroadcastNestedLoopJoin" not in plan, name
         assert "CartesianProduct" not in plan, name
+    assert _joins(plan) == 2 + 3, plan
