@@ -62,14 +62,27 @@ def _materialize(df: DataFrame) -> DataFrame:
 #: driver branch was still faster above both bounds: on
 #: tools/stress_graph.py --op pagerank --iters 3 (4 cores, one cold
 #: call each) 5.6 s vs 11.6 s at 262k nodes / 557k edges, 11.0 s vs
-#: 15.2 s at 1.05M / 2.23M and 18.4 s vs 33.8 s at 4.2M / 8.9M, so
-#: the bounds cap driver memory: the Python driver's ru_maxrss was
-#: 257 MB, 593 MB and 1.9 GB there (141 MB distributed).
+#: 15.2 s at 1.05M / 2.23M and 18.4 s vs 33.8 s at 4.2M / 8.9M
+#: (--op lpa at 950k / 2.02M: 7.0-9.2 s vs 11.5-14.7 s), so the
+#: bounds cap driver memory: the Python driver's ru_maxrss was 257
+#: MB, 593 MB and 1.9 GB there (141 MB distributed).
 DRIVER_GRAPH_MAX_NODES = 1_000_000
 
 #: edge rows up to which the same driver branch runs: the edge probe
 #: is the driver's memory and most of its time. One more and the
 #: distributed branch runs instead, after collecting MAX + 1 edges.
+#: That rejected probe costs the edge derivation plus the transfer:
+#: on tools/stress_graph.py's graph just above the bound (232
+#: replicas: 950k nodes / 2.02M edges, 4 cores, warm) the gate took
+#: 0.9-1.1 s (node probe 0.1-0.2 s) before a 12-15 s distributed
+#: call; on the contract's sf0.1 graph (1,181,946 edges, bound
+#: lowered to 1M) it added 0.6-1.0 s to calls of 2-2.5 s. Counting
+#: the edges first saves little of that: a limit-count of the same
+#: 2.02M edges took 0.6 s, since it runs the same derivation, and it
+#: would be one more job inside the bound. Inside the bound at sf0.1
+#: (6 alternating warm pairs) the pagerank_iter3 entry took 1.9 s vs
+#: 2.3 s distributed, and min_label_prop_iter3 2.6 s vs 2.4 s (its
+#: probes took 1.1-1.3 s of that; the rounds' numpy 0.02 s).
 DRIVER_GRAPH_MAX_EDGES = 2_000_000
 
 

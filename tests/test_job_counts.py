@@ -89,16 +89,26 @@ def test_corpus_pipeline_jobs(spark, count_jobs):
     assert n <= 11, n
 
 
+def _assert_graph_op_jobs(count_jobs, nodes, edges, pins):
+    for op, pin in zip((graph.pagerank, graph.min_label_propagation),
+                       pins):
+        _, n = count_jobs(lambda: op(nodes, edges, iters=3).collect())
+        assert n <= pin, (op.__name__, n)
+
+
 def test_graph_iteration_jobs(spark, count_jobs, monkeypatch):
     """Driver branch: the node and edge probes are the only Spark work
-    (collecting the local relation runs none). Forced distributed
-    (node bound -1, below any row count): the rejected node probe's
-    one job plus the unrolled rounds' 16 / 8."""
+    (collecting the local relation runs none). The distributed plan's
+    unrolled rounds, without the gate: 16 / 8."""
     nodes, edges = _graph(spark)
-    for max_nodes, pins in ((graph.DRIVER_GRAPH_MAX_NODES, (2, 2)),
-                            (-1, (1 + 16, 1 + 8))):
-        monkeypatch.setattr(graph, "DRIVER_GRAPH_MAX_NODES", max_nodes)
-        for op, pin in zip((graph.pagerank, graph.min_label_propagation),
-                           pins):
-            _, n = count_jobs(lambda: op(nodes, edges, iters=3).collect())
-            assert n <= pin, (op.__name__, max_nodes, n)
+    _assert_graph_op_jobs(count_jobs, nodes, edges, (2, 2))
+    monkeypatch.setattr(graph, "_driver_graph", lambda nodes, edges: None)
+    _assert_graph_op_jobs(count_jobs, nodes, edges, (16, 8))
+
+
+def test_graph_rejected_probe_jobs(spark, count_jobs, monkeypatch):
+    """A graph one edge above the edge bound pays both probes' jobs,
+    then the distributed plan's 16 / 8."""
+    nodes, edges = _graph(spark)
+    monkeypatch.setattr(graph, "DRIVER_GRAPH_MAX_EDGES", len(_EDGES) - 1)
+    _assert_graph_op_jobs(count_jobs, nodes, edges, (2 + 16, 2 + 8))

@@ -265,7 +265,7 @@ def test_graph_joins_stay_equi(spark, monkeypatch):
     hash/sort-merge equi-joins — BroadcastNestedLoopJoin or a
     CartesianProduct means a join key was lost and the plan is
     all-pairs (fatal at 10^9 edges). The LPA entry is built forced
-    distributed (node bound -1) so its message joins are planned.
+    distributed (no driver gate) so its message joins are planned.
     Inside the driver bounds both graph entries read their graph
     output as one local scan: pagerank_iter3 plans no join, and
     min_label_prop_iter3 only its two decode joins."""
@@ -276,9 +276,40 @@ def test_graph_joins_stay_equi(spark, monkeypatch):
         plan = _plan(contract.Q[name][0](spark, SF))
         assert "LocalTableScan" in plan, name
         assert _joins(plan) == n_joins, (name, plan)
-    monkeypatch.setattr(graph, "DRIVER_GRAPH_MAX_NODES", -1)
+    monkeypatch.setattr(graph, "_driver_graph", lambda nodes, edges: None)
     for name in ("triangle_counts_parts", "min_label_prop_iter3"):
         plan = _plan(contract.Q[name][0](spark, SF))
         assert "BroadcastNestedLoopJoin" not in plan, name
         assert "CartesianProduct" not in plan, name
     assert _joins(plan) == 2 + 3, plan
+
+
+def test_graph_distributed_plans_are_pinned(spark, monkeypatch):
+    """Above the driver bounds, pagerank and min_label_propagation
+    plan exactly what they planned before the driver gate existed:
+    the sha256 of each optimized logical plan (3 rounds on a small
+    graph, expression ids stripped) was taken from the code without
+    the gate and matches the gated code forced distributed. A change
+    to the distributed plan must re-derive these on purpose."""
+    import hashlib
+    import re
+
+    from pyspark.sql import functions as F
+
+    from kg.stages import graph
+
+    monkeypatch.setattr(graph, "_driver_graph", lambda nodes, edges: None)
+    nodes = spark.range(8).select(F.col("id").alias("node"))
+    edges = spark.createDataFrame([(0, 1), (1, 2), (3, 4), (5, 5), (6, 0)],
+                                  "src long, dst long")
+    for op, digest in (
+            (graph.pagerank, "ec3a7df1c70e2d09bb4e2dac3b7573eb"
+                             "ccf998759559e97dfa681e4e8f7f3628"),
+            (graph.min_label_propagation,
+             "1b8c7004345fee7112c144ea6653be5f"
+             "b9eae6d5bf4c80c1202bb05ea61eee8c")):
+        plan = (op(nodes, edges, iters=3)._jdf.queryExecution()
+                .optimizedPlan().toString())
+        plan = re.sub(r"#\d+L?", "", plan)
+        assert hashlib.sha256(plan.encode()).hexdigest() == digest, (
+            op.__name__, plan)
