@@ -7,24 +7,32 @@ Dataflow at scale (the plan you'd want on 1000 executors):
     scan T0 (pruned to conv_id, turn_idx, text)
       → mapInPandas extract+score+link (B1–B5 fused; narrow, no
         shuffle, broadcast model, Arrow-capped; the exact dictionary
-        resolves in-UDF)
+        resolves in-UDF). With cross_turn_k ≥ 1 it is instead ONE
+        (conv_id, chunk) exchange → a streaming mapInPandas that
+        tokenizes each turn once and scores its intra-turn pairs and
+        its ±k cross-turn pairs together (no exchange at all on a
+        clustered_input layout)
+      → [checkpointed runs: bucketed parquet commit; per-bucket stats
+         ride the write as an Observation]
       → [distinct dictionary-miss norms, collected when they fit the
-         driver bound → minhash/LSH/verify/union-find on the driver,
-         or the distributed minhash/LSH/CC plan above it]
+         driver bound → char-3-gram hashes, minhash/LSH/verify,
+         union-find and naming on the driver, or the distributed
+         minhash/LSH/CC plan above it]
       → groupBy(subj,pred,obj) agg (D2; the ONE unavoidable shuffle,
         map-side combined)
       → groupBy(subj) agg (D3; second shuffle, key-clustered sink)
 
-The extraction path is shuffle-free: per-turn work needs no
+The default extraction path is shuffle-free: per-turn work needs no
 co-location, so 10^12 turns parallelize embarrassingly; the only
 exchanges are the final aggregations over already-tiny triple
-occurrences.
+occurrences (plus the conv-keyed one of the cross-turn window).
 """
 
 from __future__ import annotations
 
 import hashlib
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from kg.stages import canon, checkpoint, link, metrics, score, triples
@@ -37,10 +45,13 @@ def resolve_entities(scored: DataFrame, dict_df: DataFrame) -> DataFrame:
     canonicalized via minhash/LSH + connected components.
 
     The distinct tail is collected once through Arrow, at most
-    ``canon.DRIVER_CANON_MAX_NODES`` + 1 norms. An empty tail returns
-    ``scored`` itself: every mention linked exactly, so the whole
-    canon side plan is skipped. A tail inside the bound goes to canon
-    as a driver-built frame; a larger one as its lazy plan.
+    ``canon.DRIVER_CANON_MAX_NODES`` + 1 norms: the only Spark work
+    before the final join. An empty tail returns ``scored`` itself:
+    every mention linked exactly, so the whole canon side plan is
+    skipped. A tail inside the node bound goes to canon as one
+    driver-built frame of the tail ∪ the dictionary norms, and inside
+    the other canon bounds C1–C4 then run on the driver with no
+    further Spark job; a larger tail goes as its lazy plan.
 
     Callers must pass a MATERIALIZED ``scored`` frame (checkpointed or
     parquet-backed): this function scans it more than once (the tail
@@ -59,16 +70,22 @@ def resolve_entities(scored: DataFrame, dict_df: DataFrame) -> DataFrame:
     tail = missed.limit(canon.DRIVER_CANON_MAX_NODES + 1).toPandas()
     if tail.empty:
         return scored
-    if len(tail) <= canon.DRIVER_CANON_MAX_NODES:
-        missed = scored.sparkSession.createDataFrame(tail, "norm string")
     # The cluster graph must CONTAIN the dictionary norms, or a typo
     # variant can never share a component with a linked member and
     # C4's "cluster inherits the canonical of its linked member" is
     # dead code — every miss would fall back to its cluster-min norm.
-    # The dictionary is a few hundred rows: unioning it into the node
-    # set costs nothing (node_features takes the distinct norms).
-    mapping = canon.canonicalize_norms(
-        missed.union(dict_df.select("norm")), dict_df)
+    # The dictionary is a few hundred rows: adding it to the node set
+    # costs nothing. Inside the bound the union is built here, as one
+    # local relation canon probes without a Spark job.
+    dict_norms = dict_df.select("norm")
+    if len(tail) <= canon.DRIVER_CANON_MAX_NODES:
+        norms = sorted(set(tail["norm"])
+                       | {r[0] for r in dict_norms.collect()})
+        node_set = scored.sparkSession.createDataFrame(
+            pd.DataFrame({"norm": norms}), "norm string")
+    else:
+        node_set = missed.union(dict_norms)
+    mapping = canon.canonicalize_norms(node_set, dict_df)
     # the mapping also names the dictionary norms; that is harmless: a
     # dictionary norm's slot is already resolved in `scored`, and the
     # coalesce below keeps that entity. The dictionary-miss tail plus
@@ -91,29 +108,35 @@ def extract_and_score(spark: SparkSession, transcripts: DataFrame,
                       clustered_input: bool = False) -> DataFrame:
     """B1–B5 extraction. ``cross_turn_k > 0`` additionally scores
     mention pairs spanning ≤ k turns within a conversation (B3's ±k
-    window, score.extract_and_score_cross_turn_fused): one extra
-    conv-keyed shuffle, with pairing/scoring/exact-linking fused into
-    that pass's single streaming mapInPandas; the frozen scorers were
-    trained on intra-turn instances, so cross-turn pairs score
-    conservatively (mostly NA) — the wiring is the capability, a
-    cross-turn-trained checkpoint is the tuning knob."""
+    window): the whole extraction then runs in one conv-keyed pass,
+    score.extract_and_score_cross_turn_fused with its intra-turn pairs,
+    pairing/scoring/exact-linking fused into that pass's single
+    streaming mapInPandas; the frozen scorers were trained on
+    intra-turn instances, so cross-turn pairs score conservatively
+    (mostly NA) — the wiring is the capability, a cross-turn-trained
+    checkpoint is the tuning knob."""
     if weights_bc is None:
         weights_bc = score.broadcast_weights(spark)
-    fused = score.extract_and_score_fused(transcripts, weights_bc)
     if not cross_turn_k:
-        return fused
-    # two independent stages Spark overlaps: measured ~25% faster on
-    # local[32] than one scan that tokenizes each turn once but puts
-    # ALL extraction CPU after the conv-keyed shuffle.
+        return score.extract_and_score_fused(transcripts, weights_bc)
+    # ONE pass tokenizes each turn once. The union of a shuffle-free
+    # intra-turn scan with the cross-turn pass was measured ~25% faster
+    # on local[32] while AQE coalesced the conv-keyed exchange to 3
+    # tasks; the exchange now keeps the configured fan-out
+    # (extract.cross_turn_prepared), so that no longer holds. On 4
+    # cores this pass alone took 4.2 / 4.8 s vs the union's 5.5 / 5.1 s
+    # on 65k turns (best of 3, two alternating pairs), and a resumed
+    # kg_noisy_resume pass gained 1.48k → 1.86k turns/s (10 of 10 ABBA
+    # pairs, with the commit's and canon's dropped jobs). On 260k
+    # turns (tools/stress_kg.py --cross-turn-k 1) the pairs were mixed.
     # clustered_input: the caller vouches the storage layout contains
     # each conversation in one scan partition (conv-bucketed write /
-    # Iceberg bucket(conv_id)); the cross-turn pass then runs with NO
-    # exchange at all — at 10^12 turns that is the whole corpus not
-    # shuffled. See extract.cross_turn_prepared for the contract.
-    xfused = score.extract_and_score_cross_turn_fused(
+    # Iceberg bucket(conv_id)); the pass then runs with NO exchange at
+    # all — at 10^12 turns that is the whole corpus not shuffled. See
+    # extract.cross_turn_prepared for the contract.
+    return score.extract_and_score_cross_turn_fused(
         transcripts, weights_bc, k=cross_turn_k,
-        clustered_input=clustered_input)
-    return fused.unionByName(xfused)
+        clustered_input=clustered_input, intra_turn=True)
 
 
 def run(spark: SparkSession, transcripts: DataFrame,

@@ -31,15 +31,16 @@
 
 Inside the driver bounds (``DRIVER_CANON_MAX_NODES`` nodes,
 ``DRIVER_CANON_MAX_FEATURES`` features in all,
-``DRIVER_CANON_MAX_EDGES`` distinct candidate pairs),
-:func:`near_duplicate_edges` and :func:`canonicalize_norms` collect
-the JVM feature table through one probe (:func:`_driver_probe`) and
-run C1–C2 on the driver: the same minhash function, a numpy replica of
-the JVM band hash, the same blocking cap and exact Jaccard — the same
-edges without the Spark stages' fixed cost. :func:`canonicalize_norms`
-then runs C3–C4 there too (a union-find and :func:`_name_cluster`),
-and :func:`components_auto` runs C3 on the driver inside the node and
-edge bounds. Above the bounds the steps above run distributed.
+``DRIVER_CANON_MAX_EDGES`` distinct candidate pairs), C1–C2 run on
+the driver: the same minhash function, a numpy replica of the JVM band
+hash, the same blocking cap and exact Jaccard — the same edges without
+the Spark stages' fixed cost. :func:`near_duplicate_edges` collects
+the JVM feature table through one probe (:func:`_driver_probe`);
+:func:`canonicalize_norms` collects only the norms and hashes their
+char-3-grams on the driver with a replica of the JVM string hash, then
+runs C3–C4 there too (a union-find and :func:`_name_cluster`).
+:func:`components_auto` runs C3 on the driver inside the node and edge
+bounds. Above the bounds the steps above run distributed.
 
 Node ids are ``xxhash64(norm)`` — deterministic across runs and
 partition layouts, unlike ``monotonically_increasing_id``.
@@ -261,6 +262,16 @@ def _rotl64(x: np.ndarray, r: int) -> np.ndarray:
     return (x << np.uint64(r)) | (x >> np.uint64(64 - r))
 
 
+def _fmix(h: np.ndarray) -> np.ndarray:
+    """XXH64's final avalanche, in place."""
+    h ^= h >> np.uint64(33)
+    h *= _XXH_P2
+    h ^= h >> np.uint64(29)
+    h *= _XXH_P3
+    h ^= h >> np.uint64(32)
+    return h
+
+
 def _xxhash64_longs(lanes: np.ndarray) -> np.ndarray:
     """Spark SQL's ``xxhash64(c1, …, ck)`` over k int64 columns,
     vectorized: (rows, k) int64 → (rows,) int64. Spark starts from
@@ -272,12 +283,82 @@ def _xxhash64_longs(lanes: np.ndarray) -> np.ndarray:
         h = h + _XXH_P5 + np.uint64(8)
         h ^= _rotl64(col * _XXH_P2, 31) * _XXH_P1
         h = _rotl64(h, 27) * _XXH_P1 + _XXH_P4
-        h ^= h >> np.uint64(33)
-        h *= _XXH_P2
-        h ^= h >> np.uint64(29)
-        h *= _XXH_P3
-        h ^= h >> np.uint64(32)
+        h = _fmix(h)
     return h.view(np.int64)
+
+
+def _xxhash64_utf8(strings: list[str]) -> np.ndarray:
+    """Spark SQL's ``xxhash64(s)`` of each string, vectorized → (n,)
+    int64: ``XXH64.hashUnsafeBytes`` over the UTF-8 bytes with seed
+    42 — 32-byte stripes of four little-endian lanes, then 8-byte
+    words, one 4-byte word and single bytes, then the avalanche. Each
+    string is padded with zero bytes to a whole number of words that
+    leaves room for its tail word; the padding is never hashed."""
+    enc = [x.encode() for x in strings]
+    n = len(enc)
+    lens = np.fromiter(map(len, enc), np.int64, n)
+    width = 8 * (int(lens.max(initial=0)) // 8 + 1)
+    words = np.frombuffer(b"".join(e.ljust(width, b"\0") for e in enc),
+                          dtype="<u8").reshape(n, width // 8) \
+        .astype(np.uint64)
+    rows = np.arange(n)
+    seed, mask = 42, (1 << 64) - 1
+    stripes = np.where(lens >= 32, (lens - 32) // 32 + 1, 0)
+    h = np.full(n, seed + int(_XXH_P5), dtype=np.uint64)
+    big = np.flatnonzero(stripes)
+    if len(big):
+        v = [np.full(len(big), x & mask, dtype=np.uint64) for x in (
+            seed + int(_XXH_P1) + int(_XXH_P2), seed + int(_XXH_P2),
+            seed, seed - int(_XXH_P1))]
+        for s in range(int(stripes.max())):
+            m = stripes[big] > s
+            for lane in range(4):
+                x = v[lane][m] + words[big[m], 4 * s + lane] * _XXH_P2
+                v[lane][m] = _rotl64(x, 31) * _XXH_P1
+        acc = (_rotl64(v[0], 1) + _rotl64(v[1], 7) + _rotl64(v[2], 12)
+               + _rotl64(v[3], 18))
+        for lane in range(4):
+            acc ^= _rotl64(v[lane] * _XXH_P2, 31) * _XXH_P1
+            acc = acc * _XXH_P1 + _XXH_P4
+        h[big] = acc
+    h += lens.astype(np.uint64)
+    first = 4 * stripes
+    n_words = lens // 8 - first
+    for w in range(int(n_words.max(initial=0))):
+        m = n_words > w
+        k1 = words[rows[m], first[m] + w]
+        x = h[m] ^ (_rotl64(k1 * _XXH_P2, 31) * _XXH_P1)
+        h[m] = _rotl64(x, 27) * _XXH_P1 + _XXH_P4
+    tail = words[rows, lens // 8]
+    rem = lens % 8
+    m = rem >= 4
+    x = h[m] ^ ((tail[m] & np.uint64(0xFFFFFFFF)) * _XXH_P1)
+    h[m] = _rotl64(x, 23) * _XXH_P2 + _XXH_P3
+    start = np.where(m, 4, 0)
+    for j in range(3):
+        m = rem - start > j
+        byte = (tail[m] >> ((start[m] + j) * 8).astype(np.uint64)) \
+            & np.uint64(0xFF)
+        h[m] = _rotl64(h[m] ^ (byte * _XXH_P5), 11) * _XXH_P1
+    return _fmix(h).view(np.int64)
+
+
+def _char_features(norms: list[str]) -> list[np.ndarray]:
+    """:func:`node_features`' char-3-gram ``f`` of each norm, on the
+    driver: the padded norm's distinct n-grams in first-seen order,
+    each hashed by :func:`_xxhash64_utf8` — equal to the JVM's arrays
+    (pinned in tests/test_canon.py). Each distinct gram is hashed
+    once."""
+    n = spec.CHAR_NGRAM
+    grams = []
+    for norm in norms:
+        p = f"^{norm}$"
+        grams.append(list(dict.fromkeys(
+            p[i:i + n] for i in range(max(len(p) - n, 0) + 1))))
+    uniq = list(dict.fromkeys(g for gs in grams for g in gs))
+    hashed = dict(zip(uniq, _xxhash64_utf8(uniq).tolist()))
+    return [np.array([hashed[g] for g in gs], dtype=np.int64)
+            for gs in grams]
 
 
 def _driver_band_hashes(sigs: np.ndarray) -> np.ndarray:
@@ -681,10 +762,10 @@ def _name_components(linked: DataFrame) -> DataFrame:
 
 
 def _driver_probe(feats: DataFrame, carry: str | None = None):
-    """The driver gate of :func:`near_duplicate_edges` and
-    :func:`canonicalize_norms`: at most ``DRIVER_CANON_MAX_NODES`` + 1
-    rows of a persisted (node, f[, carry]) feature table, collected
-    through Arrow as a ``pyarrow.Table`` — or None if they exceed
+    """The driver gate of :func:`near_duplicate_edges`: at most
+    ``DRIVER_CANON_MAX_NODES`` + 1 rows of a persisted (node, f[,
+    carry]) feature table, collected through Arrow as a
+    ``pyarrow.Table`` — or None if they exceed
     ``DRIVER_CANON_MAX_NODES`` rows or ``DRIVER_CANON_MAX_FEATURES``
     features in all. The Arrow batch is 8 bytes per feature; the
     bounds are checked before any of it becomes Python objects."""
@@ -770,22 +851,29 @@ def _local_edges(spark, probe, pairs: dict, carry: str | None) -> DataFrame:
 
 
 def canonicalize_norms(norms: DataFrame, dict_df: DataFrame) -> DataFrame:
-    """C1→C4 end-to-end over a distinct ``norm`` column → (norm,
-    entity): every norm named by the C4 rule over its component.
+    """C1→C4 end-to-end over a non-null ``norm`` column → (norm,
+    entity): every distinct norm named by the C4 rule over its
+    component.
 
-    :func:`node_features` runs in the JVM either way. One gate then
-    picks one of two whole branches:
+    One bounded probe collects at most ``DRIVER_CANON_MAX_NODES`` + 1
+    norm rows (the node bound counts rows before duplicate norms
+    collapse). A collect, not an Arrow batch: on a local relation it
+    runs no Spark job (Arrow's does), and plain strings pickle cheaply
+    (100k norms: 0.5 s vs 0.3 s warm on 4 cores). One gate then picks
+    one of two whole branches:
 
-    - Driver: if :func:`_driver_probe` fits the (node, f, norm) table
-      in the driver bounds, and the kept LSH blocks hold at most
-      ``DRIVER_CANON_MAX_EDGES`` distinct candidate pairs, C1–C2 are
+    - Driver: inside the node bound, ``DRIVER_CANON_MAX_FEATURES``
+      char-3-grams (counted from the norm lengths, before any hashing)
+      and ``DRIVER_CANON_MAX_EDGES`` distinct candidate pairs, the
+      features are :func:`_char_features`, C1–C2
       :func:`_driver_near_duplicates`, C3 :func:`_union_find` and C4
-      :func:`_name_cluster` per cluster on the driver, output sorted.
-      The banding is bit-identical to :func:`lsh_bands`, so both
-      branches compare the same pairs.
-    - Distributed: above any bound, C1–C2 are the steps of
-      :func:`near_duplicate_edges` over the probe's persisted feature
-      table, C3 the hash-to-min loop of
+      :func:`_name_cluster` per cluster, output sorted, with no Spark
+      job after the probe. Features and banding are bit-identical to
+      :func:`node_features` and :func:`lsh_bands`, so both branches
+      compare the same pairs.
+    - Distributed: above any bound, :func:`node_features` in the JVM,
+      C1–C2 the steps of :func:`near_duplicate_edges` over the
+      persisted feature table, C3 the hash-to-min loop of
       :func:`connected_components`, and C4 :func:`_name_components`,
       one window aggregate over the component-keyed exchange. Its
       window buffer spills to disk, so per-task memory stays bounded
@@ -794,30 +882,31 @@ def canonicalize_norms(norms: DataFrame, dict_df: DataFrame) -> DataFrame:
     Every DataFrame this function caches is released before it
     returns: the distributed branch's output is localCheckpointed
     first, because it reads the cached features."""
-    # persisted, so the distributed branch reuses the probe's scan. Not
-    # near_duplicate_edges: building its lazy plan up front costs the
-    # driver branch ~0.35 s per call (0.48 → 0.83 s on ~1k norms)
+    probe = norms.select("norm").limit(DRIVER_CANON_MAX_NODES + 1).collect()
+    rows = list(dict.fromkeys(r[0] for r in probe))
+    if None in rows:
+        raise ValueError("canonicalize_norms: null norm")
+    n = spec.CHAR_NGRAM
+    near = None
+    if len(probe) <= DRIVER_CANON_MAX_NODES and sum(
+            max(len(x) + 2 - n, 0) + 1 for x in rows) \
+            <= DRIVER_CANON_MAX_FEATURES:
+        near = _driver_near_duplicates(_char_features(rows))
+    if near is not None:
+        comp = _union_find(range(len(rows)), near[0])
+        entity_of = dict(dict_df.select("norm", "entity").collect())
+        clusters: dict[int, list] = {}
+        for i, norm in enumerate(rows):
+            clusters.setdefault(comp[i], []).append(
+                (norm, entity_of.get(norm)))
+        mapping = sorted(row for members in clusters.values()
+                         for row in _name_cluster(members))
+        return norms.sparkSession.createDataFrame(
+            pd.DataFrame(mapping, columns=["norm", "entity"]),
+            "norm string, entity string")
     feats = node_features(norms).persist()
-    handles = [feats]
+    banded = lsh_bands(minhash_signatures(feats)).persist()
     try:
-        probe = _driver_probe(feats, "norm")
-        near = None if probe is None else _driver_near_duplicates(
-            probe.column("f").to_numpy(zero_copy_only=False))
-        if near is not None:
-            comp = _union_find(range(probe.num_rows), near[0])
-            entity_of = dict(dict_df.select("norm", "entity").collect())
-            clusters: dict[int, list] = {}
-            for i, norm in enumerate(probe.column("norm").to_pylist()):
-                clusters.setdefault(comp[i], []).append(
-                    (norm, entity_of.get(norm)))
-            mapping = sorted(row for members in clusters.values()
-                             for row in _name_cluster(members))
-            return norms.sparkSession.createDataFrame(
-                pd.DataFrame(mapping, columns=["norm", "entity"]),
-                "norm string, entity string")
-
-        banded = lsh_bands(minhash_signatures(feats)).persist()
-        handles.append(banded)
         edges = verify_pairs(candidate_pairs(banded), feats)
         # an inner join keeps every norm: connected_components labels
         # every node it is given
@@ -828,5 +917,5 @@ def canonicalize_norms(norms: DataFrame, dict_df: DataFrame) -> DataFrame:
                         "norm", "left"))
         return _name_components(linked).localCheckpoint(eager=True)
     finally:
-        for h in handles:
-            h.unpersist()
+        banded.unpersist()
+        feats.unpersist()

@@ -10,14 +10,22 @@ without recomputing finished partitions"):
 - Buckets are computed and written in groups; after each group's data
   files land, the manifest JSON is atomically replaced (temp + fsync +
   rename) with the new committed-bucket set, per-bucket row counts and
-  checksums, and the input snapshot id. **The manifest rename is the
-  commit point** — data files without a manifest entry are garbage.
+  checksums, the committed schema and the input snapshot id. **The
+  manifest rename is the commit point** — data files without a
+  manifest entry are garbage.
+- The per-bucket stats come from the commit's own write: an
+  ``Observation`` in the write's result stage counts each written row
+  once, so no job re-reads the files, and the manifest describes the
+  rows the write committed, not a second execution of the stage.
 - Resume: read the manifest; if the ``snapshot_id`` (a hash of the
   input + stage version) matches, DELETE uncommitted bucket dirs
   (partial writes from the kill) and recompute ONLY missing buckets —
   committed buckets are never touched or recomputed. The input-side
   pruning is a bucket-id filter, i.e. the anti-join of finished work
-  happens on a tiny integer set, not on data rows.
+  happens on a tiny integer set, not on data rows. The committed
+  buckets are read back with the manifest's schema, without a
+  schema-inference job (manifests written without one are read by
+  inference).
 
 On a real Iceberg deployment the same class routes the group commit
 through ``writeTo(...).append()`` with the manifest in a table
@@ -30,7 +38,8 @@ import os
 import shutil
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql import types as T
 
 from kg import io
 
@@ -93,7 +102,11 @@ class StageCheckpoint:
         # a catch-all here would silently turn a genuine read error
         # (corrupt file, permissions) into an empty "success".
         if self._bucket_dirs():
-            return spark.read.parquet(self.dir).drop("_bucket")
+            reader = spark.read
+            if "schema" in manifest:
+                reader = reader.schema(
+                    T.StructType.fromJson(manifest["schema"]))
+            return reader.parquet(self.dir).drop("_bucket")
         return fn(input_df.where(F.lit(False)))
 
     def _bucket_dirs(self, only: list[int] | None = None) -> list[str]:
@@ -110,35 +123,34 @@ class StageCheckpoint:
         # fn must preserve the bucket key; recompute the bucket on the
         # output so the directory layout is self-describing
         out = fn(part.drop("_bucket"))
+        # Stats ride the write itself: a second execution of the stage
+        # plan would double the dominant scoring-UDF cost, and under a
+        # nondeterministic fn the manifest would describe other rows
+        # than the commit. Per bucket: the row count and a decimal
+        # xxhash64 sum (order-insensitive, overflow-proof under ANSI).
+        digest = F.xxhash64(*out.columns).cast("decimal(38,0)")
         out = out.withColumn("_bucket", bucket_of(bucket_key, self.n_buckets))
-        (out.write.mode("append").partitionBy("_bucket").parquet(self.dir))
-        # Stats come from the files ACTUALLY WRITTEN, not from
-        # re-executing the stage plan: a second execution doubles the
-        # dominant scoring-UDF cost, and under a nondeterministic fn
-        # the manifest would describe different rows than the commit.
-        by_bucket: dict[int, dict] = {}
-        written = self._bucket_dirs(only=batch)
-        if written:
-            spark = bucketed.sparkSession
-            committed = spark.read.option("basePath", self.dir) \
-                .parquet(*written)
-            data_cols = [c for c in committed.columns if c != "_bucket"]
-            # decimal accumulator: order-insensitive and overflow-proof
-            # under ANSI mode (Spark 4 default)
-            stats = (committed.groupBy("_bucket").agg(
-                F.count("*").alias("rows"),
-                F.sum(F.xxhash64(*data_cols).cast("decimal(38,0)"))
-                 .alias("checksum")).collect())
-            by_bucket = {int(r["_bucket"]): r for r in stats}
+        obs = Observation()
+        stats = [agg for b in batch for agg in (
+            F.count(F.when(F.col("_bucket") == b, 1)).alias(f"rows_{b}"),
+            F.sum(F.when(F.col("_bucket") == b, digest))
+             .alias(f"checksum_{b}"))]
+        (out.observe(obs, *stats).write.mode("append")
+         .partitionBy("_bucket").parquet(self.dir))
+        # A write that left no files has nothing to describe; once rows
+        # landed, an unreadable observation fails the commit before the
+        # manifest names them.
+        got = obs.get if self._bucket_dirs(only=batch) else {}
         now = datetime.now(timezone.utc).isoformat()
         for b in batch:
-            r = by_bucket.get(b)
+            checksum = got.get(f"checksum_{b}")
             manifest["buckets"][str(b)] = {
                 "partition_id": b,
-                "output_rows": int(r["rows"]) if r else 0,
-                "checksum": str(r["checksum"]) if r else "0",
+                "output_rows": int(got.get(f"rows_{b}", 0)),
+                "checksum": "0" if checksum is None else str(checksum),
                 "committed_at": now,
             }
+        manifest["schema"] = out.schema.jsonValue()
         io.atomic_write_json(self.manifest_path, manifest)
 
     def _gc_uncommitted(self, done: set[int]) -> None:

@@ -56,13 +56,21 @@ def intra_turn_pairs(pdf: pd.DataFrame) -> list[tuple]:
             pdf["conv_id"].to_numpy(), pdf["turn_idx"].to_numpy(),
             pdf["text"].to_numpy()):
         toks = spec.tokenize(text or "")
-        mens = nlp.find_mentions(toks)
-        if len(mens) < 2:
-            continue
-        key = (conv_id, int(turn_idx))
-        rows.extend(key + _PAIR_FIELDS(p)
-                    for p in nlp.pair_instances(toks, mens))
+        rows.extend(_turn_pairs(conv_id, turn_idx, toks,
+                                nlp.find_mentions(toks)))
     return rows
+
+
+def _turn_pairs(conv_id, turn_idx, toks: list[str],
+                mens: list[dict]) -> list[tuple]:
+    """One turn's intra-turn pairs over all its mentions
+    (``nlp.pair_instances``) as XT_PAIR_COLS tuples."""
+    from kg import nlp
+
+    if len(mens) < 2:
+        return []
+    key = (conv_id, int(turn_idx))
+    return [key + _PAIR_FIELDS(p) for p in nlp.pair_instances(toks, mens)]
 
 
 def _extract_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -141,21 +149,27 @@ def cross_turn_instances(transcripts: DataFrame, k: int = 1,
             .mapInPandas(stream, schema=schemas.MENTION_PAIRS))
 
 
-def xt_group_pairs(conv_id, items: list, k: int) -> list:
+def xt_group_pairs(conv_id, items: list, k: int,
+                   intra_turn: bool = False) -> list:
     """One conversation-chunk's cross-turn pairs (the stream_groups
     close function shared by cross_turn_instances and the fused
     scorer in kg/stages/score.py): tokenize each turn once, pair each
     turn's first XT_MENTION_CAP mentions across turns ≤ k apart, emit
-    XT_PAIR_COLS tuples."""
+    XT_PAIR_COLS tuples. ``intra_turn=True`` also emits each turn's
+    intra-turn pairs over all its mentions, as
+    :func:`intra_turn_pairs` does, from the same tokenize and mention
+    scan."""
     from kg import nlp, spec
 
     turns = []
+    rows = []
     for turn_idx, text in items:
         toks = spec.tokenize(text or "")
-        mens = nlp.find_mentions(toks)[:XT_MENTION_CAP]
+        mens = nlp.find_mentions(toks)
+        if intra_turn:
+            rows.extend(_turn_pairs(conv_id, turn_idx, toks, mens))
         if mens:
-            turns.append((int(turn_idx), toks, mens))
-    rows = []
+            turns.append((int(turn_idx), toks, mens[:XT_MENTION_CAP]))
     for i, (ti, toks_i, mens_i) in enumerate(turns):
         for tj, toks_j, mens_j in turns[i + 1:]:
             if tj - ti > k:

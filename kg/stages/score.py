@@ -128,11 +128,18 @@ def extract_and_score_cross_turn_fused(
     k: int = 1,
     threshold: float = spec.REL_THRESHOLD,
     clustered_input: bool = False,
+    intra_turn: bool = False,
 ) -> DataFrame:
     """B1–B5 for the ±k cross-turn window in ONE streaming
     mapInPandas: pairing, PCNN scoring and exact gazetteer linking
     fused into the same Python worker that walks the conversation
-    stream.
+    stream. ``intra_turn=True`` (the pipeline's cross-turn path) also
+    scores every turn's intra-turn pairs in the same pass: the close
+    function emits them from the same tokenize and mention scan that
+    feeds the ±k pairs, so each turn is tokenized once, and the output
+    is :func:`extract_and_score_fused` ∪ this scorer's cross-only
+    output (scores equal up to float32 rounding of the batch
+    composition).
 
     The pair stream never leaves Python before scoring, so token_ids
     (the widest column by far) never crosses the JVM↔Python Arrow
@@ -151,7 +158,7 @@ def extract_and_score_cross_turn_fused(
     out_cols = [f.name for f in FUSED_SCHEMA.fields]
 
     def close(key, items):
-        return extract.xt_group_pairs(key[0], items, k)
+        return extract.xt_group_pairs(key[0], items, k, intra_turn)
 
     def stream(it):
         state: dict = {}

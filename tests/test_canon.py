@@ -365,6 +365,69 @@ def test_lsh_hash_draw_is_pinned(spark):
                   for i, r in enumerate(rows) for b in range(3)) == pinned
 
 
+def test_driver_char_features_are_pinned(spark):
+    """The driver C1 hashes its char-3-grams with a replica of Spark's
+    ``xxhash64`` over UTF-8 bytes (seed 42). Its feature arrays equal
+    ``node_features(...).f`` element for element on the dictionary
+    norms, one-letter typos of them, "", 1–2-character norms,
+    40-character norms, non-ASCII norms and emoji; and the string hash
+    itself equals the JVM's at every byte length up to 80, across the
+    32-byte stripe path."""
+    from pyspark.sql import functions as F
+
+    norms = list(_DICT_NORMS)
+    norms += [_typo(n, i, ch) for i, n in enumerate(_DICT_NORMS)
+              for ch in "xé"]
+    norms += ["", "a", "ab", "é", "üï", "x" * 40,
+              "the quick brown fox jumps over the lazy", "müller ïsland",
+              "東京大学", "北京 清华大学", "café ☕", "🙂", "a🙂b", "🇩🇪 team",
+              "zoë 😀😀 straße 40 chars long norm text"]
+    norms = list(dict.fromkeys(norms))
+    jvm = {r["norm"]: list(r["f"]) for r in canon.node_features(
+        spark.createDataFrame([(n,) for n in norms], "norm string"))
+        .collect()}
+    assert len(jvm) == len(norms)
+    drv = canon._char_features(norms)
+    assert {n: f.tolist() for n, f in zip(norms, drv)} == jvm
+
+    strings = ["é" * (i // 2) + "a" * (i % 2) for i in range(81)] \
+        + ["🙂" * i for i in range(21)]
+    df = spark.createDataFrame([(x,) for x in strings], "s string")
+    assert [r[0] for r in df.select(F.xxhash64("s")).collect()] \
+        == canon._xxhash64_utf8(strings).tolist()
+
+
+def test_driver_canon_bounds_gate_before_hashing(spark, monkeypatch):
+    """DRIVER_CANON_MAX_NODES and DRIVER_CANON_MAX_FEATURES gate the
+    driver C1–C4: at each bound the driver branch runs, one under it
+    the distributed branch does, with the same mapping. The feature
+    count comes from the norm lengths (one gram per position of the
+    padded norm) before any gram is hashed."""
+    rows = ["acme corp", "acme corpp", "zzzz wobbleplex",
+            "zzzz wobbleplexx", "a"]
+    norms = spark.createDataFrame([(n,) for n in rows], "norm string")
+    d = dictionary_df(spark)
+    n_feats = sum(max(len(n) + 2 - spec.CHAR_NGRAM, 0) + 1 for n in rows)
+    calls = _distributed_spy(monkeypatch)
+    hashed: list = []
+    real = canon._char_features
+    monkeypatch.setattr(canon, "_char_features",
+                        lambda ns: hashed.append(1) or real(ns))
+    driver = _mapping(norms, d)
+    assert not calls and hashed
+    for bound, at in (("DRIVER_CANON_MAX_NODES", len(rows)),
+                      ("DRIVER_CANON_MAX_FEATURES", n_feats)):
+        with monkeypatch.context() as mp:
+            mp.setattr(canon, bound, at)
+            hashed.clear()
+            assert _mapping(norms, d) == driver and not calls, bound
+            mp.setattr(canon, bound, at - 1)
+            hashed.clear()
+            assert _mapping(norms, d) == driver and calls, bound
+            assert not hashed, bound
+            calls.clear()
+
+
 def test_near_duplicate_edges_matches_bruteforce(spark, monkeypatch):
     """The WHOLE dedup path (word-shingle features → minhash → LSH
     banding → id-dedup → verify join) against an exact all-pairs

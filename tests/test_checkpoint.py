@@ -104,3 +104,82 @@ def test_manifest_df_shape(spark, tmp_path):
     assert {r["partition_id"] for r in rows} == {0, 1, 2, 3}
     assert sum(r["output_rows"] for r in rows) == 100
     assert m["snapshot_id"] == "snap"
+
+
+def _manifest(root: str, stage: str) -> dict:
+    return io.read_json(os.path.join(root, stage, checkpoint.MANIFEST))
+
+
+def test_manifest_stats_equal_committed_files(spark, tmp_path):
+    """Each bucket's ``output_rows`` and ``checksum``, taken from the
+    commit's own write, equal a per-bucket read-back of the committed
+    files; a commit batch whose buckets get no rows writes no files
+    and records 0 and "0"."""
+    root = str(tmp_path / "ckpt5")
+    checkpoint.run_checkpointed(spark, root, "s", "snap", _input(spark),
+                                lambda df: df, bucket_key="conv_id",
+                                n_buckets=16, groups=16)
+    committed = spark.read.parquet(os.path.join(root, "s"))
+    data_cols = [c for c in committed.columns if c != "_bucket"]
+    files = {r["_bucket"]: (r["rows"], str(r["checksum"])) for r in
+             committed.groupBy("_bucket").agg(
+                 F.count("*").alias("rows"),
+                 F.sum(F.xxhash64(*data_cols).cast("decimal(38,0)"))
+                 .alias("checksum")).collect()}
+    buckets = _manifest(root, "s")["buckets"]
+    assert len(buckets) == 16 and 0 < len(files) < 16
+    for b, entry in buckets.items():
+        assert (entry["output_rows"], entry["checksum"]) \
+            == files.get(int(b), (0, "0")), b
+
+
+def test_manifest_schema_reads_back_without_inference(spark, tmp_path):
+    """The manifest records the committed schema, and the read-back
+    uses it; a manifest written without it (older commits) still
+    resumes, by inference, to the same frame."""
+    root = str(tmp_path / "ckpt6")
+    inp = _input(spark)
+
+    def fn(df):
+        return df.groupBy("conv_id").agg(F.sum("v").alias("total"))
+
+    out = checkpoint.run_checkpointed(spark, root, "agg", "snap", inp, fn,
+                                      bucket_key="conv_id", n_buckets=4)
+    m = _manifest(root, "agg")
+    assert [f["name"] for f in m["schema"]["fields"]] \
+        == ["conv_id", "total", "_bucket"]
+    del m["schema"]
+    io.atomic_write_json(os.path.join(root, "agg", checkpoint.MANIFEST), m)
+    again = checkpoint.run_checkpointed(spark, root, "agg", "snap", inp, fn,
+                                        bucket_key="conv_id", n_buckets=4)
+    assert again.schema == out.schema
+    assert sorted(again.collect()) == sorted(out.collect())
+
+
+class _BlindObservation(checkpoint.Observation):
+    """An Observation whose metrics cannot be read."""
+
+    @property
+    def get(self):
+        raise RuntimeError("observed metrics lost")
+
+
+def test_unreadable_stats_fail_the_commit(spark, tmp_path, monkeypatch):
+    """Rows written but their Observation unreadable: the commit raises
+    before the manifest names the bucket, never records zero stats.
+    A write with no rows needs no stats and commits."""
+    import pytest
+
+    monkeypatch.setattr(checkpoint, "Observation", _BlindObservation)
+    root = str(tmp_path / "ckpt7")
+    inp = _input(spark)
+    with pytest.raises(RuntimeError, match="observed metrics lost"):
+        checkpoint.run_checkpointed(spark, root, "s", "snap", inp,
+                                    lambda df: df, bucket_key="conv_id",
+                                    n_buckets=4, groups=1)
+    assert _manifest(root, "s") is None
+    checkpoint.run_checkpointed(spark, root, "e", "snap",
+                                inp.where(F.lit(False)), lambda df: df,
+                                bucket_key="conv_id", n_buckets=4, groups=1)
+    assert {(e["output_rows"], e["checksum"])
+            for e in _manifest(root, "e")["buckets"].values()} == {(0, "0")}

@@ -335,3 +335,62 @@ def test_clustered_layout_ok_guard(spark, tmp_path):
             spark.conf.unset("spark.sql.files.maxPartitionBytes")
         else:
             spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+
+
+def test_conv_fused_equals_intra_union_cross(spark, tmp_path):
+    """pipeline.extract_and_score with cross_turn_k ≥ 1 is ONE
+    conversation-grouped pass that scores each turn's intra-turn pairs
+    beside its ±k pairs. It returns the rows of the shuffle-free
+    intra-turn scorer ∪ the cross-only fused scorer: every column but
+    ``score`` exactly, ``score`` within float32 rounding (the two
+    sides batch the forward pass differently). For k ∈ {1, 2}, with
+    and without clustered_input, on a layout holding one conversation
+    longer than XT_CHUNK turns."""
+    import math
+
+    from kg import datagen, pipeline
+
+    pdf, _ = datagen.generate(n_conversations=80, seed=13, skew_factor=40,
+                              pct_cross_turn=0.3)
+    assert pdf.groupby("conv_id").size().max() > extract.XT_CHUNK
+    path = str(tmp_path / "bucketed")
+    spark.createDataFrame(pdf, schema=schemas.TRANSCRIPTS) \
+        .repartition(4, "conv_id").write.parquet(path)
+    t0 = spark.read.parquet(path)
+    bc = score.broadcast_weights(spark)
+    keys = [f.name for f in score.FUSED_SCHEMA.fields if f.name != "score"]
+
+    def rows(df):
+        # (is None, value): sortable with NULL entity slots
+        return sorted((tuple((r[c] is None, "" if r[c] is None else r[c])
+                             for c in keys),
+                       r["score"]) for r in df.collect())
+
+    intra = rows(score.extract_and_score_fused(t0, bc))
+    for k in (1, 2):
+        for clustered in (False, True):
+            cross = rows(score.extract_and_score_cross_turn_fused(
+                t0, bc, k=k, clustered_input=clustered))
+            want = sorted(intra + cross)
+            got = rows(pipeline.extract_and_score(
+                spark, t0, bc, cross_turn_k=k, clustered_input=clustered))
+            assert cross and len(got) == len(want), (k, clustered)
+            assert [g[0] for g in got] == [w[0] for w in want], (k, clustered)
+            for (key, g), (_, w) in zip(got, want):
+                assert math.isclose(g, w, rel_tol=1e-6), (k, key, g, w)
+
+
+def test_cross_turn_instances_stay_cross_only(spark):
+    """extract.cross_turn_instances keeps its cross-only MENTION_PAIRS
+    output: a turn with two mentions adds no intra-turn pair."""
+    rows = [
+        ("c1", 0, "user", "Ann Barard joined Acme Corp", None,
+         datetime(2024, 1, 1)),
+        ("c1", 1, "assistant", "she uses Dataquill daily", None,
+         datetime(2024, 1, 1)),
+    ]
+    df = spark.createDataFrame(rows, schema=schemas.TRANSCRIPTS)
+    out = extract.cross_turn_instances(df, k=1).collect()
+    assert {(r["head_norm"], r["tail_norm"]) for r in out} == {
+        ("ann barard", "dataquill"), ("acme corp", "dataquill")}
+    assert len(out) == 2

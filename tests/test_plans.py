@@ -197,6 +197,30 @@ def test_clustered_cross_turn_plan_has_no_exchange(spark, tmp_path):
     assert "Sort (" in plan  # the in-partition sort survives
 
 
+def test_cross_turn_pipeline_is_one_pass(spark, tmp_path):
+    """pipeline.extract_and_score with cross_turn_k=1 tokenizes each
+    turn once: ONE streaming MapInPandas after ONE exchange on
+    (conv_id, chunk), no Union with a second, shuffle-free intra-turn
+    scan. On a clustered layout the pass has no Exchange at all."""
+    from kg import datagen, pipeline, schemas
+    from kg.stages import score
+
+    pdf, _ = datagen.generate(n_conversations=10, seed=3)
+    t0 = spark.createDataFrame(pdf, schema=schemas.TRANSCRIPTS)
+    bc = score.broadcast_weights(spark)
+    plan = _plan(pipeline.extract_and_score(spark, t0, bc, cross_turn_k=1))
+    assert plan.count("MapInPandas (") == 1, plan
+    assert plan.count("Exchange (") == 1, plan
+    assert "Union" not in plan, plan
+    path = str(tmp_path / "bucketed")
+    t0.repartition(2, "conv_id").write.parquet(path)
+    plan = _plan(pipeline.extract_and_score(
+        spark, spark.read.parquet(path), bc, cross_turn_k=1,
+        clustered_input=True))
+    assert plan.count("MapInPandas (") == 1, plan
+    assert "Exchange (" not in plan and "Union" not in plan, plan
+
+
 def test_kmeans_assign_data_path_is_exchange_free(spark):
     """The Lloyd assignment must not shuffle the vector scan: an
     earlier draft's per-vector row_number window silently added
